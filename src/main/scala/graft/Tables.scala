@@ -20,18 +20,41 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val all: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")
 
-  /** REAL discovery (S1-S3): list `*.parquet` from the warehouse
-    * directory — a new file appears in the catalog without code changes.
+  /** REAL discovery (S1-S3): list `*.parquet` tables from the
+    * warehouse directory — a single file or a part-file directory, so
+    * a new table appears in the catalog without code changes.
     * Driver-side O(#tables) metadata, like the reference's SHOW walk. */
   def discover(dir: String): Seq[String] = {
     val d = new java.io.File(dir)
     val found = Option(d.listFiles())
       .getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .filter(_.getName.endsWith(".parquet"))
       .map(_.getName.stripSuffix(".parquet"))
       .toSeq
       .sorted
     if (found.nonEmpty) found else all // fallback: S1's literal-DF analog
+  }
+
+  /** The data files of a parquet path, as Spark's file index sees
+    * them: the path itself when it is a file, else its visible
+    * (non-`_`/`.`) files sorted by path; empty when the path is
+    * missing. A table is either form, so every per-file consumer
+    * (footer inventories, schema memo keys, split estimates) lists
+    * through here. */
+  private[graft] def dataFiles(spark: SparkSession, path: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = try fs.getFileStatus(p) catch {
+      case _: java.io.FileNotFoundException => return Nil
+    }
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(p)
+      .filter(f => f.isFile && {
+        val n = f.getPath.getName
+        !(n.startsWith("_") || n.startsWith("."))
+      })
+      .sortBy(_.getPath.toString).toSeq
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -55,26 +78,12 @@ object Tables {
 
   private[graft] def readParquetCachedSchema(
       spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val hconf = spark.sessionState.newHadoopConf()
     val sb = new StringBuilder
     paths.foreach { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(hconf)
-      val st = try fs.getFileStatus(path) catch {
-        case _: java.io.FileNotFoundException => null
-      }
-      if (st == null) sb.append(s"$p<missing>\n")
-      else if (!st.isDirectory)
-        sb.append(s"$p|${st.getLen}|${st.getModificationTime}\n")
-      else fs.listStatus(path)
-        .filter(f => f.isFile && {
-          val n = f.getPath.getName
-          !(n.startsWith("_") || n.startsWith("."))
-        })
-        .sortBy(_.getPath.toString)
-        .foreach(f => sb.append(
-          s"${f.getPath}|${f.getLen}|${f.getModificationTime}\n"))
+      val files = dataFiles(spark, p)
+      if (files.isEmpty) sb.append(s"$p<missing>\n")
+      else files.foreach(f => sb.append(
+        s"${f.getPath}|${f.getLen}|${f.getModificationTime}\n"))
     }
     val key = sb.toString()
     val cached = schemaCache.get(key)
@@ -145,14 +154,7 @@ object Tables {
     * scan fills the cluster anyway and the spread correctly no-ops. */
   private def estimatedSplits(
       spark: SparkSession, dir: String, name: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val path = new Path(s"$dir/$name.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val files =
-      if (fs.getFileStatus(path).isDirectory)
-        fs.listStatus(path).filter(f => f.isFile &&
-          !f.getPath.getName.startsWith("_"))
-      else Array(fs.getFileStatus(path))
+    val files = dataFiles(spark, s"$dir/$name.parquet")
     val conf = spark.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
     val totalBytes = files.map(_.getLen + openCost).sum

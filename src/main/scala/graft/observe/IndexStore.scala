@@ -328,7 +328,9 @@ object IndexStore {
     val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     if (bytes < compactBelowBytes && data.length > want) {
       val tmp2 = new Path(tmp.getParent, tmp.getName + "-compact")
-      s.read.parquet(tmp.toString).coalesce(want)
+      // the listed files, not the dot-prefixed staging root: Spark
+      // ignores a hidden root path and warns "All paths were ignored"
+      s.read.parquet(data.map(_.getPath.toString).toSeq: _*).coalesce(want)
         .write.mode("overwrite").parquet(tmp2.toString)
       f.delete(tmp, true)
       if (!f.rename(tmp2, tmp)) f.delete(tmp2, true)

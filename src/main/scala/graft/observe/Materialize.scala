@@ -47,7 +47,8 @@ object Materialize {
   def materializations(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val names = Tables.discover(dir)
-    val files = names.map(n => (n, s"$dir/$n.parquet"))
+    val files = names.flatMap(n => Tables.dataFiles(s, s"$dir/$n.parquet")
+      .map(f => (n, f.getPath.toString)))
     val nCols = names
       .map(n => (n, Tables.load(s, dir, n).schema.fields.length.toLong))
       .toDF("table_name", "n_columns")

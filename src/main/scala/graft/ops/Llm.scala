@@ -1126,7 +1126,8 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     }
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gates.declare(Gates.llm, Map(
     "q121_embedding_coverage" -> embeddingCoverage,
     "q122_fuzzy_name_pairs" -> fuzzyNamePairs,
     "q67_tfidf_top_terms" -> tfidfTopTerms,
@@ -1163,7 +1164,6 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     "q77_dup_clusters_bigstar" -> dupClustersBigStar,
     "q110_cluster_reps" -> clusterRepresentatives,
     "q64_kmeans_iteration" -> kmeansIteration,
-    "q49_admission_backfill" -> admissionBackfill,
     "q91_url_dedup" -> urlDedup,
     "q92_lm_rare_filter" -> lmRareFilter,
     "q93_quantized_topk" -> quantizedTopk,
@@ -1182,11 +1182,6 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     "q152_mix_shards" -> mixShards,
     "q153_ann_recall_report" -> annRecallReport,
     "q154_curated_mix_shards" -> curatedMixShards,
-    "q97_vector_admission" -> vectorAdmissionBackfill,
-    "q173_text_admission_decision" -> textAdmissionDecision,
-    "q174_vector_admission_decision" -> vectorAdmissionDecision,
-    "q179_text_audit_ledger" -> textAuditLedgerFace,
-    "q180_vector_audit_ledger" -> vectorAuditLedgerFace,
     "q98_semantic_dedup" -> semanticDedup,
     "q99_dsir_selection" -> dsirSelection,
     "q100_leakage_safe_split" -> leakageSafeSplit,
@@ -1204,7 +1199,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     "q141_vocab_stats" -> vocabStats,
     "q142_winnowing_pairs" -> winnowingPairs,
     "q143_mix_report" -> mixReport,
-  )
+  ))
 
   /** Char-bigram language-model rare-sequence filter — the integer-
     * exact cousin of the perplexity filters used for corpus cleaning
@@ -1951,54 +1946,6 @@ object Llm extends LlmCurationOps with LlmAnnOps {
       .orderBy(col("domain"), col("rank"))
   }
 
-  /** Batch-backfill face of [[nearDupAdmission]] (the streaming gate's
-    * oracle-gated twin): replay a synthetic incoming feed — every 50th
-    * corpus doc under a fresh id — through the SAME admission plan and
-    * report the flags. Every replayed copy must collide with (at
-    * least) its source at jaccard 1.0; the DuckDB oracle re-derives
-    * the full band-collision + exact-verify pipeline, giving the
-    * admission operator a correctness gate beyond the
-    * StreamingSpec parity tests. */
-  def admissionBackfill(s: SparkSession, dir: String): DataFrame = {
-    val incoming = docs(s, dir).filter(col("doc_id") % 50 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    nearDupAdmission(s, dir, incoming)
-      .orderBy(col("in_id"), col("corpus_id"))
-  }
-
-  /** The text gate's audit flags as the arrival-time segmented ledger
-    * (E205 — semantics at [[graft.ops.Multimodal.rasterAuditLedger]]:
-    * each segment records the flags its crawl batch earned against
-    * the corpus AS OF arrival; a batch's flags excise with its source
-    * file; the chain coincides with the batch backfill at a single
-    * corpus state, which is what the q179 oracle runs on). */
-  private[graft] def textAuditLedger(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "text_gate_audit", s"$dir/documents.parquet", version = 1)(
-      files => {
-        val incoming = s.read.parquet(files: _*)
-          .filter(col("doc_id") % 50 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        nearDupAdmission(s, dir, incoming)
-      })
-
-  /** q179: the text audit-ledger face. */
-  def textAuditLedgerFace(s: SparkSession, dir: String): DataFrame =
-    textAuditLedger(s, dir)
-      .orderBy(col("in_id"), col("corpus_id"))
-
-  /** q173: the text gate's DECISION face (the E193 plane extended to
-    * the crawler's first modality) — per incoming document, its best
-    * corpus match (highest Jaccard, ties to the smallest corpus_id);
-    * O(incoming) output, one stateful operator streamed. */
-  def textAdmissionDecision(s: SparkSession, dir: String): DataFrame = {
-    val incoming = docs(s, dir).filter(col("doc_id") % 50 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    nearDupAdmission(s, dir, incoming, decision = true)
-      .orderBy(col("in_id"))
-  }
-
   // DuckDB mirrors. Shared fragments keep the two engines' pipelines
   // textually aligned stage by stage.
   private val duckShingles =
@@ -2358,30 +2305,8 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     "q147_residual_ivf_adc_topk" -> duckRpqAdcSql,
   ) ++ oraclesMore
 
-  /** A gate DECISION oracle wraps its gate's own audit-face oracle —
-    * the Multimodal.decisionOracle pattern: the decision chain is
-    * re-derived bit-identically, then the winner picked per in_id
-    * exactly like the engine's min_by. */
-  private def decisionOracle(base: String, cols: String,
-      ord: String): String =
-    s"""SELECT in_id, $cols FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY in_id ORDER BY $ord) AS rn
-       |  FROM (${baseOracles(base)}))
-       |WHERE rn = 1 ORDER BY in_id""".stripMargin
-
-  val oracles: Map[String, String] = baseOracles ++ Map(
-    // the ledger faces serve the SAME relations as the backfills from
-    // the persisted artifacts (single-state coincidence — E205)
-    "q179_text_audit_ledger" -> baseOracles("q49_admission_backfill"),
-    "q180_vector_audit_ledger" -> baseOracles("q97_vector_admission"),
-    "q173_text_admission_decision" -> decisionOracle(
-      "q49_admission_backfill",
-      "corpus_id, jaccard", "jaccard DESC, corpus_id"),
-    "q174_vector_admission_decision" -> decisionOracle(
-      "q97_vector_admission",
-      "corpus_id, cos", "cos DESC, corpus_id"),
-  )
+  val oracles: Map[String, String] =
+    baseOracles ++ Gates.oracles(Gates.llm, baseOracles)
 
   /** The q145/q150 oracle chain, parameterized by the probe-budget
     * expression (evaluated over `cent`). */

@@ -440,52 +440,6 @@ trait LlmAnnOps {
     else flags.observe("vector_gate", count(lit(1)).as("flags"))
   }
 
-  /** Batch-backfill face of [[vectorAdmission]] (the q49 pattern for
-    * the vector modality): replay every 50th corpus vector under a
-    * fresh id through the SAME gate plan; every replayed copy must
-    * collide with (at least) its source at cosine 1.0, and the DuckDB
-    * oracle re-derives the full bucket + exact-verify pipeline. */
-  def vectorAdmissionBackfill(s: SparkSession, dir: String): DataFrame = {
-    val incoming = Llm.embs(s, dir).filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    vectorAdmission(s, dir, incoming)
-      .orderBy(col("in_id"), col("corpus_id"))
-  }
-
-  /** q174: the vector gate's DECISION face (the E193 plane on the
-    * embedding modality) — per incoming vector, its best corpus match
-    * (highest cosine, ties to the smallest corpus_id); O(incoming)
-    * output. */
-  def vectorAdmissionDecision(s: SparkSession, dir: String): DataFrame = {
-    val incoming = Llm.embs(s, dir).filter(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    vectorAdmission(s, dir, incoming, decision = true)
-      .orderBy(col("in_id"))
-  }
-
-  /** The vector gate's audit flags as the arrival-time segmented
-    * ledger (E205 — semantics at
-    * [[graft.ops.Multimodal.rasterAuditLedger]]). The source axis is
-    * `embeddings.parquet` — the ledger discipline is not
-    * documents-specific: an embedding batch's flags excise with ITS
-    * file. */
-  private[graft] def vectorAuditLedger(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "vector_gate_audit", s"$dir/embeddings.parquet", version = 1)(
-      files => {
-        val incoming = s.read.parquet(files: _*)
-          .filter(col("vec_id") % 50 === 0)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            col("embedding"))
-        vectorAdmission(s, dir, incoming)
-      })
-
-  /** q180: the vector audit-ledger face. */
-  def vectorAuditLedgerFace(s: SparkSession, dir: String): DataFrame =
-    vectorAuditLedger(s, dir)
-      .orderBy(col("in_id"), col("corpus_id"))
-
   /** Multi-probe LSH top-k (Lv, Josephson, Wang, Charikar & Li,
     * VLDB 2007) over the persisted [[hyperplaneBucketsIdx]] chain: a
     * query probes its OWN bucket plus the buckets reached by flipping

@@ -984,21 +984,14 @@ object Multimodal {
       commonCol = "common_fps", thresholdMicro = 600000L)
   }
 
-  /** Deterministic incoming-audio fixture for [[audioAdmission]]'s
-    * batch face (q163): for doc_id % 4 == 0 audio docs, a
-    * POLARITY-INVERTED re-master under a new id (energies exactly
-    * invariant — must flag its base at containment 1.0, and byte
-    * gates provably cannot); for doc_id % 4 == 1 audio docs, NOVEL
-    * audio (a WAV over the REVERSED text bytes — byte pairs regroup,
-    * so the sample stream and its profile differ). Both arms
-    * re-derivable in SQL sample by sample. */
-  private[graft] def audioIncomingFixture(
-      s: SparkSession, dir: String): DataFrame =
-    audioIncomingFixtureOf(Tables.load(s, dir, "documents"))
-
-  /** The q163 incoming arms over an explicit documents frame — the
-    * file-decomposable core the audio audit ledger builds per source
-    * segment (E205). */
+  /** Deterministic incoming-audio feed for [[audioAdmission]]
+    * ([[Gates.audio]]) over a documents frame: for doc_id % 4 == 0
+    * audio docs, a POLARITY-INVERTED re-master under a new id
+    * (energies exactly invariant — must flag its base at containment
+    * 1.0, and byte gates provably cannot); for doc_id % 4 == 1 audio
+    * docs, NOVEL audio (a WAV over the REVERSED text bytes — byte
+    * pairs regroup, so the sample stream and its profile differ).
+    * Both arms re-derivable in SQL sample by sample. */
   private[graft] def audioIncomingFixtureOf(docsDf: DataFrame): DataFrame = {
     val aud = docsDf
       .filter(pmod(col("doc_id"), lit(3)) === 1)
@@ -1013,12 +1006,6 @@ object Multimodal {
           .as("payload"))
     inv.unionByName(novel)
   }
-
-  /** q163: the audio gate's batch-backfill face over the
-    * deterministic incoming fixture. */
-  def audioAdmissionBackfill(s: SparkSession, dir: String): DataFrame =
-    audioAdmission(s, dir, audioIncomingFixture(s, dir))
-      .orderBy(col("in_id"), col("corpus_id"))
 
   /** q162: audio near-dup via gain-invariant energy-profile
     * fingerprints — the re-MASTER detector the byte-block path
@@ -1320,21 +1307,14 @@ object Multimodal {
       commonCol = "common_blocks", thresholdMicro = 800000L)
   }
 
-  /** Deterministic incoming-media fixture for [[mediaAdmission]]'s
-    * batch face (q160): for doc_id % 3 == 0, a PNG RE-WRAP of the
-    * first HALF of the document's body (a transcode+trim of corpus
-    * media — every block it carries is shared, so containment is
-    * exactly 1.0 against its base and that base's planted variants);
-    * for doc_id % 3 == 1, NOVEL media (a JPEG over the REVERSED text
-    * bytes — no 64-byte chunk matches any forward chunk). Both arms
-    * re-derivable in SQL. */
-  private[graft] def mediaIncomingFixture(
-      s: SparkSession, dir: String): DataFrame =
-    mediaIncomingFixtureOf(Tables.load(s, dir, "documents"))
-
-  /** The q160 incoming arms over an explicit documents frame — the
-    * file-decomposable core the media audit ledger builds per source
-    * segment (E205). */
+  /** Deterministic incoming-media feed for [[mediaAdmission]]
+    * ([[Gates.media]]) over a documents frame: for doc_id % 3 == 0, a
+    * PNG RE-WRAP of the first HALF of the document's body (a
+    * transcode+trim of corpus media — every block it carries is
+    * shared, so containment is exactly 1.0 against its base and that
+    * base's planted variants); for doc_id % 3 == 1, NOVEL media (a
+    * JPEG over the REVERSED text bytes — no 64-byte chunk matches any
+    * forward chunk). Both arms re-derivable in SQL. */
   private[graft] def mediaIncomingFixtureOf(docsDf: DataFrame): DataFrame = {
     val body = encode(col("text"), "UTF-8")
     val bodyLen = length(body).cast("bigint")
@@ -1361,14 +1341,6 @@ object Multimodal {
       .filter(col("v.keep"))
       .select(col("v.media_id").as("media_id"), col("v.payload").as("payload"))
   }
-
-  /** q160: the admission gate's batch-backfill face over the
-    * deterministic incoming fixture — the oracle re-derives incoming
-    * blocks, the stop filter, candidates, and containment from the
-    * reconstructed bytes. */
-  def mediaAdmissionBackfill(s: SparkSession, dir: String): DataFrame =
-    mediaAdmission(s, dir, mediaIncomingFixture(s, dir))
-      .orderBy(col("in_id"), col("corpus_id"))
 
   // ---- q159: REAL pixel resample over an uncompressed raster -------------
 
@@ -2298,21 +2270,13 @@ object Multimodal {
       .observe("raster_gate", count(lit(1)).as("flags"))
   }
 
-  /** Deterministic incoming-raster fixture for [[rasterAdmission]]'s
-    * batch face (q165): for doc_id % 9 == 0, a QUARTER-brightness
-    * re-master of the base raster under a new id (monotone exposure
-    * change — must flag its base); for doc_id % 9 == 1, NOVEL imagery
-    * (a different structural family: swapped row/col coefficients and
-    * a different cross term). Both re-derivable in SQL from
-    * arithmetic alone. */
-  private[graft] def rasterIncomingFixture(
-      s: SparkSession, dir: String): DataFrame =
-    rasterIncomingFixtureOf(Tables.load(s, dir, "documents"))
-
-  /** The q165 incoming arms over an explicit documents frame — the
-    * file-decomposable core the audit LEDGER builds per source
-    * segment (E205): an incoming row derives from one document row,
-    * so a crawl batch's flags excise with its file. */
+  /** Deterministic incoming-raster feed for [[rasterAdmission]]
+    * ([[Gates.raster]]) over a documents frame: for doc_id % 9 == 0, a
+    * QUARTER-brightness re-master of the base raster under a new id
+    * (monotone exposure change — must flag its base); for
+    * doc_id % 9 == 1, NOVEL imagery (a different structural family:
+    * swapped row/col coefficients and a different cross term). Both
+    * re-derivable in SQL from arithmetic alone. */
   private[graft] def rasterIncomingFixtureOf(docsDf: DataFrame): DataFrame = {
     // quarter-brightness base family and the novel family, both via
     // the pgm_synth byte-loop expression (byte-identity pinned by
@@ -2339,12 +2303,6 @@ object Multimodal {
       .select(col("v.raster_id").as("raster_id"),
         col("v.payload").as("payload"))
   }
-
-  /** q165: the raster gate's batch-backfill face over the
-    * deterministic incoming fixture. */
-  def rasterAdmissionBackfill(s: SparkSession, dir: String): DataFrame =
-    rasterAdmission(s, dir, rasterIncomingFixture(s, dir))
-      .orderBy(col("in_id"), col("corpus_id"))
 
   /** Deterministic PNG incoming fixture for the CROSS-CONTAINER face
     * (q167): for doc_id % 9 == 2, a real zlib PNG ([[pngOf]]) of the
@@ -2586,72 +2544,6 @@ object Multimodal {
     rasterAdmission(s, dir, mixedCorpusIncomingFixture(s, dir))
       .orderBy(col("in_id"), col("corpus_id"))
 
-  /** The raster gate's audit-face flags PERSISTED as a segmented
-    * artifact (`raster_gate_audit`, E205 — r12 verdict task 7): the
-    * all-pairs audit view is the relation that GROWS with corpus-side
-    * duplicate mass (551k rows at the 100× decade), so recomputing it
-    * per consumer is the q149 class one layer up; persisting it gives
-    * it the same retention/compaction/takedown semantics as every
-    * other corpus-derived relation. Segments are keyed by the SOURCE
-    * files the incoming rows derive from — an incoming row's flags
-    * excise with its crawl batch's file (takedown on the incoming
-    * axis), and a new crawl batch appends one delta segment gated
-    * against the corpus artifacts.
-    *
-    * SEMANTICS — an ARRIVAL-TIME ledger, stated explicitly: each
-    * segment records the flags its incoming batch earned against the
-    * corpus AS OF that batch's arrival (exactly what the streaming
-    * gate would have emitted). Corpus rows added LATER do not
-    * retro-flag an old batch — that is admission-ledger truth, not
-    * staleness; a from-scratch rebuild coincides with the incremental
-    * chain whenever all segments saw the same corpus state (the
-    * single-state fixture the oracle runs on; IndexStoreSpec pins
-    * both the coincidence and the takedown). */
-  private[graft] def rasterAuditLedger(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "raster_gate_audit", s"$dir/documents.parquet", version = 3)(
-      files =>
-        rasterAdmission(s, dir,
-          rasterIncomingFixtureOf(s.read.parquet(files: _*))))
-
-  /** q176: the audit ledger face — the q165 flag relation served FROM
-    * the persisted artifact instead of recomputed per consumer. */
-  def rasterAuditLedgerFace(s: SparkSession, dir: String): DataFrame =
-    rasterAuditLedger(s, dir)
-      .orderBy(col("in_id"), col("corpus_id"))
-
-  /** The media gate's audit flags as the same arrival-time segmented
-    * ledger (E205 — see [[rasterAuditLedger]] for the semantics; the
-    * ledger discipline covers all five admission modalities, not one). */
-  private[graft] def mediaAuditLedger(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "media_gate_audit", s"$dir/documents.parquet", version = 1)(
-      files =>
-        mediaAdmission(s, dir,
-          mediaIncomingFixtureOf(s.read.parquet(files: _*))))
-
-  /** q177: the media audit-ledger face. */
-  def mediaAuditLedgerFace(s: SparkSession, dir: String): DataFrame =
-    mediaAuditLedger(s, dir)
-      .orderBy(col("in_id"), col("corpus_id"))
-
-  /** The audio gate's audit flags as the arrival-time segmented
-    * ledger (E205). */
-  private[graft] def audioAuditLedger(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "audio_gate_audit", s"$dir/documents.parquet", version = 2)(
-      files =>
-        audioAdmission(s, dir,
-          audioIncomingFixtureOf(s.read.parquet(files: _*))))
-
-  /** q178: the audio audit-ledger face. */
-  def audioAuditLedgerFace(s: SparkSession, dir: String): DataFrame =
-    audioAuditLedger(s, dir)
-      .orderBy(col("in_id"), col("corpus_id"))
-
   /** The STREAMING half of the E205 ledgers (r13 verdict task 6): a
     * `foreachBatch` body that appends each micro-batch's gate output
     * (flags on an audit face, decisions on a decision face — the sink
@@ -2682,64 +2574,23 @@ object Multimodal {
       ()
     }
 
-  // ---- q170–q172: the gates' DECISION faces (r11 missing #2) -------------
-  //
-  // One row per incoming item — flag + best evidence — where
-  // q160/q163/q165 emit every flag pair. The pair face stays the audit
-  // view; these are what a crawler loop consumes: O(incoming) output
-  // at ANY corpus-side duplicate mass, same artifacts, same kernels,
-  // one partial-aggregable min_by per item, and on the streaming face
-  // exactly ONE stateful operator (StreamingSpec pins stream ≡ batch).
-
-  /** q170: the raster gate's decision face — per incoming raster, its
-    * best corpus match (smallest Hamming, ties to the smallest
-    * corpus_id). */
-  def rasterAdmissionDecision(s: SparkSession, dir: String): DataFrame =
-    rasterAdmission(s, dir, rasterIncomingFixture(s, dir),
-      decision = true)
-      .orderBy(col("in_id"))
-
-  /** q171: the audio gate's decision face — per incoming audio row,
-    * its best corpus match (highest containment, ties to the smallest
-    * corpus_id). */
-  def audioAdmissionDecision(s: SparkSession, dir: String): DataFrame =
-    audioAdmission(s, dir, audioIncomingFixture(s, dir),
-      decision = true)
-      .orderBy(col("in_id"))
-
-  /** q172: the media gate's decision face — per incoming media row,
-    * its best corpus match (highest containment, ties to the smallest
-    * corpus_id). */
-  def mediaAdmissionDecision(s: SparkSession, dir: String): DataFrame =
-    mediaAdmission(s, dir, mediaIncomingFixture(s, dir),
-      decision = true)
-      .orderBy(col("in_id"))
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gates.declare(Gates.multimodal, Map(
     "q40_multimodal_meta" -> mediaMeta,
     "q58_frame_hashes" -> frameHashes,
     "q155_media_resize" -> mediaResize,
     "q156_media_exact_dups" -> mediaExactDups,
     "q157_media_neardup" -> mediaNearDups,
     "q159_raster_thumbnail" -> rasterThumbnail,
-    "q160_media_admission" -> mediaAdmissionBackfill,
     "q161_audio_energy" -> audioEnergy,
     "q162_audio_gain_neardup" -> audioGainNearDups,
-    "q163_audio_admission" -> audioAdmissionBackfill,
     "q164_raster_phash_dups" -> rasterPerceptualDups,
-    "q165_raster_admission" -> rasterAdmissionBackfill,
     "q166_png_thumbnail" -> pngThumbnail,
     "q167_png_cross_container" -> pngCrossContainerAdmission,
     "q168_jpeg_decode" -> jpegDecode,
     "q169_jpeg_cross_container" -> jpegCrossContainerAdmission,
-    "q170_raster_admission_decision" -> rasterAdmissionDecision,
-    "q171_audio_admission_decision" -> audioAdmissionDecision,
-    "q172_media_admission_decision" -> mediaAdmissionDecision,
     "q175_mixed_corpus_admission" -> mixedCorpusAdmission,
-    "q176_raster_audit_ledger" -> rasterAuditLedgerFace,
-    "q177_media_audit_ledger" -> mediaAuditLedgerFace,
-    "q178_audio_audit_ledger" -> audioAuditLedgerFace,
-  )
+  ))
 
   /** DuckDB CTE chain turning a (id, i, s) sample relation `src` into
     * the capped fingerprint relation `<p>fps` (id, fp) — the SQL twin
@@ -3659,37 +3510,6 @@ object Multimodal {
          |FROM m ORDER BY doc_id""".stripMargin,
   )
 
-  /** A gate DECISION oracle wraps its gate's own audit-face oracle —
-    * the decision chain (signatures, stop filter, candidates, verify)
-    * is re-derived bit-identically, then the winner is picked per
-    * in_id exactly like the engine's min_by: by `ord`, ties included
-    * in `ord` via corpus_id. */
-  private def decisionOracle(base: String, cols: String,
-      ord: String): String =
-    s"""SELECT in_id, $cols FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY in_id ORDER BY $ord) AS rn
-       |  FROM (${baseOracles(base)}))
-       |WHERE rn = 1 ORDER BY in_id""".stripMargin
-
-  val oracles: Map[String, String] = baseOracles ++ Map(
-    // q176 serves the SAME relation as q165 from the persisted ledger
-    // (single-state fixture ⇒ the incremental chain coincides with the
-    // batch backfill — the arrival-time coincidence IndexStoreSpec
-    // pins), so the oracle is q165's verbatim
-    "q176_raster_audit_ledger" -> baseOracles("q165_raster_admission"),
-    "q177_media_audit_ledger" -> baseOracles("q160_media_admission"),
-    "q178_audio_audit_ledger" -> baseOracles("q163_audio_admission"),
-    "q170_raster_admission_decision" -> decisionOracle(
-      "q165_raster_admission",
-      "corpus_id, hamming", "hamming, corpus_id"),
-    "q171_audio_admission_decision" -> decisionOracle(
-      "q163_audio_admission",
-      "corpus_id, common_fps, n_in, n_corpus, containment_micro",
-      "containment_micro DESC, corpus_id"),
-    "q172_media_admission_decision" -> decisionOracle(
-      "q160_media_admission",
-      "corpus_id, common_blocks, n_in, n_corpus, containment_micro",
-      "containment_micro DESC, corpus_id"),
-  )
+  val oracles: Map[String, String] =
+    baseOracles ++ Gates.oracles(Gates.multimodal, baseOracles)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** The df-saturation probe as a FAILING TEST, not a manual runMain
@@ -34,7 +32,7 @@ class DfGuardSpec extends SparkSuite {
   test("saturation guard: every fingerprint family's natural p99 df " +
     "stays flat across a real 10x corpus decade (media blocks, audio " +
     "fps, raster bands, winnowing, MinHash bands)") {
-    val base = Files.createTempDirectory("graft-dfguard").toString
+    val base = tempDir("graft-dfguard").toString
     val d1 = s"$base/d1"; val d10 = s"$base/d10"
     // the decade dirs carry ONLY documents.parquet — all five
     // fingerprint families derive from it

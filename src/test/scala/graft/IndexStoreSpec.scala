@@ -23,7 +23,7 @@ class IndexStoreSpec extends SparkSuite {
   }
 
   private def scratch(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString + "/src"
+    tempDir(s"graft-$tag").toString + "/src"
 
   test("artifact builds once and is read back unchanged thereafter") {
     val name = freshName("once")
@@ -522,7 +522,7 @@ class IndexStoreSpec extends SparkSuite {
     val name = freshName("race2p")
     val src = scratch("race2p")
     writeSource(src, 1L to 10L)
-    val barrier = Files.createTempDirectory("graft_race_barrier").toString
+    val barrier = tempDir("graft_race_barrier").toString
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
@@ -776,7 +776,7 @@ class IndexStoreSpec extends SparkSuite {
     "chain: a takedown re-tokenizes only the touched segment") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-counts").toString
+    val wh = tempDir("graft-del-counts").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents")
     // three appends → a 3-segment chain
@@ -811,7 +811,7 @@ class IndexStoreSpec extends SparkSuite {
     "near-dup artifact") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-shingles").toString
+    val wh = tempDir("graft-del-shingles").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 60)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -902,7 +902,7 @@ class IndexStoreSpec extends SparkSuite {
     "segment, document frequencies re-derive from the fold") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-bm25").toString
+    val wh = tempDir("graft-del-bm25").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 90)
     all.filter(col("doc_id") % 3 === 0).coalesce(1)
@@ -937,7 +937,7 @@ class IndexStoreSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-sq8").toString
+    val wh = tempDir("graft-del-sq8").toString
     val embDir = s"$wh/embeddings.parquet"
     val src = s"$wh/embeddings.parquet"
     val all = s.read.parquet(s"$sf/embeddings.parquet")
@@ -1012,7 +1012,7 @@ class IndexStoreSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-shards").toString
+    val wh = tempDir("graft-del-shards").toString
     val docsDir = s"$wh/documents.parquet"
     def doc(id: Long, src: String, words: Int) =
       (id, (1 to words).map(i => s"w${id}x$i").mkString(" "),
@@ -1082,7 +1082,7 @@ class IndexStoreSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-torn-shards").toString
+    val wh = tempDir("graft-torn-shards").toString
     val docsDir = s"$wh/documents.parquet"
     def doc(id: Long, src: String, words: Int) =
       (id, (1 to words).map(i => s"t${id}x$i").mkString(" "),
@@ -1137,7 +1137,7 @@ class IndexStoreSpec extends SparkSuite {
     "from-scratch rebuild") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-msets").toString
+    val wh = tempDir("graft-del-msets").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 100)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -1165,7 +1165,7 @@ class IndexStoreSpec extends SparkSuite {
     "deleted crawl batch and equals the from-scratch rebuild") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-audio").toString
+    val wh = tempDir("graft-del-audio").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 120)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -1195,7 +1195,7 @@ class IndexStoreSpec extends SparkSuite {
     "the from-scratch rebuild") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-afsets").toString
+    val wh = tempDir("graft-del-afsets").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 120)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -1223,7 +1223,7 @@ class IndexStoreSpec extends SparkSuite {
     "deleted batch and equals the from-scratch rebuild") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-ahash").toString
+    val wh = tempDir("graft-del-ahash").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 100)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -1252,24 +1252,24 @@ class IndexStoreSpec extends SparkSuite {
     "recomputed backfill") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-ledger").toString
+    val wh = tempDir("graft-ledger").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 120)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
       .write.mode("append").parquet(docsDir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val ledger1 = rows(graft.ops.Multimodal.rasterAuditLedger(s, wh))
+    val ledger1 = rows(graft.ops.Gates.raster.ledger(s, wh))
     assert(ledger1.nonEmpty, "batch 1 must plant flags")
     // single corpus state: the ledger IS the recomputed backfill
     assert(ledger1 ===
-      rows(graft.ops.Multimodal.rasterAdmissionBackfill(s, wh)))
+      rows(graft.ops.Gates.raster.backfill(s, wh)))
     Thread.sleep(5)
     val before2 = dataFiles(docsDir).map(_.getName).toSet
     all.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("append").parquet(docsDir)
     val seg2File = (dataFiles(docsDir).map(_.getName).toSet -- before2).head
-    val ledger2 = rows(graft.ops.Multimodal.rasterAuditLedger(s, wh))
+    val ledger2 = rows(graft.ops.Gates.raster.ledger(s, wh))
     // ARRIVAL-TIME semantics: batch 1's recorded flags are retained
     // verbatim (corpus rows added later never retro-flag an old
     // batch), and every appended flag's INCOMING row derives from the
@@ -1285,10 +1285,10 @@ class IndexStoreSpec extends SparkSuite {
     }
     // takedown of the crawl batch excises exactly its segment
     assert(new java.io.File(docsDir, seg2File).delete())
-    assert(rows(graft.ops.Multimodal.rasterAuditLedger(s, wh)) === ledger1,
+    assert(rows(graft.ops.Gates.raster.ledger(s, wh)) === ledger1,
       "deleting a crawl batch must excise exactly its flags")
     IndexStore.invalidate(s, "raster_gate_audit")
-    assert(rows(graft.ops.Multimodal.rasterAuditLedger(s, wh)) === ledger1,
+    assert(rows(graft.ops.Gates.raster.ledger(s, wh)) === ledger1,
       "the from-scratch rebuild coincides at a single corpus state")
   }
 
@@ -1297,7 +1297,7 @@ class IndexStoreSpec extends SparkSuite {
     "arrival-time and excise with its file") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-vledger").toString
+    val wh = tempDir("graft-vledger").toString
     val embDir = s"$wh/embeddings.parquet"
     val all = Tables.load(s, sf, "embeddings")
       .filter(col("vec_id") < 400)
@@ -1305,17 +1305,17 @@ class IndexStoreSpec extends SparkSuite {
       .write.mode("append").parquet(embDir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val ledger1 = rows(graft.ops.Llm.vectorAuditLedger(s, wh))
+    val ledger1 = rows(graft.ops.Gates.vector.ledger(s, wh))
     assert(ledger1.nonEmpty, "batch 1 must plant flags")
     assert(ledger1 ===
-      rows(graft.ops.Llm.vectorAdmissionBackfill(s, wh)),
+      rows(graft.ops.Gates.vector.backfill(s, wh)),
       "single corpus state: the ledger IS the recomputed backfill")
     Thread.sleep(5)
     val before2 = dataFiles(embDir).map(_.getName).toSet
     all.filter(col("vec_id") % 100 >= 50).coalesce(1)
       .write.mode("append").parquet(embDir)
     val seg2File = (dataFiles(embDir).map(_.getName).toSet -- before2).head
-    val ledger2 = rows(graft.ops.Llm.vectorAuditLedger(s, wh))
+    val ledger2 = rows(graft.ops.Gates.vector.ledger(s, wh))
     assert(ledger1.subsetOf(ledger2),
       "an append must never rewrite recorded admission history")
     val delta = ledger2 -- ledger1
@@ -1325,8 +1325,40 @@ class IndexStoreSpec extends SparkSuite {
         s"delta flag for in_id $in must derive from the new batch")
     }
     assert(new java.io.File(embDir, seg2File).delete())
-    assert(rows(graft.ops.Llm.vectorAuditLedger(s, wh)) === ledger1,
+    assert(rows(graft.ops.Gates.vector.ledger(s, wh)) === ledger1,
       "deleting an embedding batch must excise exactly its flags")
+  }
+
+  test("every gate's audit LEDGER over part-file tables: equals the " +
+    "backfill at one corpus state, keeps its recorded flags across an " +
+    "append, and excises back to them when the appended file goes") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    graft.ops.Gates.all.foreach { g =>
+      val wh = tempDir(s"graft-${g.name}-ledger").toString
+      val srcDir = s"$wh/${g.source}.parquet"
+      val id = col(if (g.source == "embeddings") "vec_id" else "doc_id")
+      val all = Tables.load(s, sf, g.source).filter(id < 200)
+      all.filter(id % 100 < 50).coalesce(1)
+        .write.mode("append").parquet(srcDir)
+      val ledger1 = rows(g.ledger(s, wh))
+      assert(ledger1.nonEmpty, s"${g.name}: batch 1 must plant flags")
+      assert(ledger1 === rows(g.backfill(s, wh)),
+        s"${g.name}: at one corpus state the ledger IS the backfill")
+      Thread.sleep(5)
+      val before2 = dataFiles(srcDir).map(_.getName).toSet
+      all.filter(id % 100 >= 50).coalesce(1)
+        .write.mode("append").parquet(srcDir)
+      val seg2File = (dataFiles(srcDir).map(_.getName).toSet -- before2).head
+      val ledger2 = rows(g.ledger(s, wh))
+      assert(ledger1.subsetOf(ledger2) && ledger2 != ledger1,
+        s"${g.name}: an append adds flags and never rewrites history")
+      assert(new java.io.File(srcDir, seg2File).delete())
+      assert(rows(g.ledger(s, wh)) === ledger1,
+        s"${g.name}: deleting the appended batch must excise its flags")
+    }
   }
 
   // ---- build ledger + working-set retention (r13 verdict tasks 3-4) -----
@@ -1476,7 +1508,7 @@ class IndexStoreSpec extends SparkSuite {
     "deleted crawl batch and equals the from-scratch rebuild") {
     val s = spark
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-del-media").toString
+    val wh = tempDir("graft-del-media").toString
     val docsDir = s"$wh/documents.parquet"
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 80)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Layout
@@ -46,7 +44,7 @@ class LayoutSpec extends SparkSuite {
     val s = spark
     val li = s.read.parquet(s"$sf/lineitem.parquet")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    val base = Files.createTempDirectory("graft-layout").toString
+    val base = tempDir("graft-layout").toString
     val nFiles = 64
     // linear layout: the single-column sort a naive pipeline writes
     li.repartitionByRange(nFiles, col("l_partkey"))
@@ -99,7 +97,7 @@ class LayoutSpec extends SparkSuite {
   test("prunedScan: a range-clustered layout serves a narrow range " +
     "from a strict file subset, result identical to the full scan") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_prune")
+    val base = tempDir("graft_prune")
       .toString
     val out = s"$base/clustered"
     graft.observe.Compact.clusteredWrite(
@@ -136,8 +134,7 @@ class LayoutSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     // scoped index root so the layout builds fresh in this test
     val prevRoot = spark.conf.getOption("spark.graft.indexDir")
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_bloom").toString
+    val scratch = tempDir("graft_bloom").toString
     spark.conf.set("spark.graft.indexDir", scratch)
     try {
       val layout = Layout.bloomLayout(spark, sf, nFiles = 8)

@@ -70,7 +70,7 @@ class LineageSpec extends SparkSuite {
     import s.implicits._
     val fx = Lineage.edgeFixture(spark, sf)
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_edges")
+    val dir = tempDir("graft_pq_edges")
       .toString + "/edges"
     fx.toDF("src", "dst").write.parquet(dir)
     val got = Lineage.closure(spark.read.parquet(dir))

@@ -41,7 +41,7 @@ class LlmSpec extends SparkSuite {
     val s = spark
     // a scratch warehouse whose documents table is a directory of part
     // files, so an append adds files without touching existing ones
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val dir = tempDir("graft_incr").toString
     val all = graft.Tables.loadSpread(spark, sf, "documents")
     val tbl = s"$dir/documents.parquet"
     all.filter(col("doc_id") % 5 =!= 0)
@@ -86,7 +86,7 @@ class LlmSpec extends SparkSuite {
     "a drift-sized append retrains both artifacts") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     val all = graft.Tables.load(spark, sf, "embeddings")
     val tbl = s"$dir/embeddings.parquet"
     // 13 is coprime to the stride (40), so the base slice still
@@ -363,7 +363,7 @@ class LlmSpec extends SparkSuite {
     "whole cascade") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rpq").toString
+    val dir = tempDir("graft_rpq").toString
     val all = graft.Tables.load(spark, sf, "embeddings")
     val tbl = s"$dir/embeddings.parquet"
     all.filter(col("vec_id") % 13 =!= 0)
@@ -589,7 +589,7 @@ class LlmSpec extends SparkSuite {
       tag: String, centerScale: Double, sigma: Double): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    val dir = tempDir(tag).toString
     val rnd = new scala.util.Random(20260815L)
     val k = 8; val dim = 64; val n = 520
     val centers =
@@ -901,7 +901,7 @@ class LlmSpec extends SparkSuite {
     "index (global df order is append-unstable, so no delta chain) and " +
     "the join stays brute-force-exact over the grown corpus") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_pfx").toString
+    val dir = tempDir("graft_pfx").toString
     val all = graft.Tables.loadSpread(spark, sf, "documents")
     val tbl = s"$dir/documents.parquet"
     def brute(): Set[(Long, Long, Long)] = {
@@ -948,7 +948,7 @@ class LlmSpec extends SparkSuite {
     "a drift-sized append retrains") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     val all = graft.Tables.load(spark, sf, "embeddings")
     val tbl = s"$dir/embeddings.parquet"
     all.filter(col("vec_id") % 13 =!= 0)
@@ -994,7 +994,7 @@ class LlmSpec extends SparkSuite {
     "plane count signs only new vectors (chain ≡ rebuild); the " +
     "boundary rule re-signs everything") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_hpl").toString
+    val dir = tempDir("graft_hpl").toString
     val all = graft.Tables.load(spark, sf, "embeddings")
     val tbl = s"$dir/embeddings.parquet"
     all.filter(col("vec_id") % 13 =!= 0)
@@ -1149,7 +1149,7 @@ class LlmSpec extends SparkSuite {
     "scales and quantizes only new vectors (chain ≡ full rebuild); a " +
     "range-breaking append rebuilds both artifacts") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_sq8").toString
+    val dir = tempDir("graft_sq8").toString
     val all = graft.Tables.load(spark, sf, "embeddings")
     val tbl = s"$dir/embeddings.parquet"
     all.coalesce(1).write.mode("append").parquet(tbl)
@@ -1589,7 +1589,7 @@ class LlmSpec extends SparkSuite {
   test("incremental doc-count rollup: view after a corpus append " +
     "equals a full rebuild, via a chained partial-agg delta") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivm").toString
+    val dir = tempDir("graft_ivm").toString
     val all = graft.Tables.loadSpread(spark, sf, "documents")
     val tbl = s"$dir/documents.parquet"
     all.filter(col("doc_id") % 5 =!= 0)
@@ -1612,7 +1612,7 @@ class LlmSpec extends SparkSuite {
 
   test("incremental HLL distinct-token view: merged chain equals a " +
     "one-shot rebuild and tracks the exact distinct count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll").toString
+    val dir = tempDir("graft_hll").toString
     val all = graft.Tables.loadSpread(spark, sf, "documents")
     val tbl = s"$dir/documents.parquet"
     all.filter(col("doc_id") % 5 =!= 0)
@@ -1822,7 +1822,7 @@ class LlmSpec extends SparkSuite {
     "the documents wherever the run sits; disjoint docs don't pair") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_winnow")
+    val dir = tempDir("graft_winnow")
       .toString
     // a 20-token run shared by docs 1 and 2 at DIFFERENT offsets
     // (prefix vs suffix) — fixed-chunk q89-style hashing misses this
@@ -1849,7 +1849,7 @@ class LlmSpec extends SparkSuite {
     "after a corpus append equals a full rebuild, via a chained " +
     "partial-agg delta (q139/q141 served from the chain)") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_mix").toString
+    val dir = tempDir("graft_mix").toString
     val all = graft.Tables.loadSpread(spark, sf, "documents")
     val tbl = s"$dir/documents.parquet"
     all.filter(col("doc_id") % 5 =!= 0)
@@ -1885,7 +1885,7 @@ class LlmSpec extends SparkSuite {
   test("incremental winnowing: the fingerprint artifact after a " +
     "corpus append equals a full rebuild (monotone map-only delta)") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_winc").toString
+    val dir = tempDir("graft_winc").toString
     val all = graft.Tables.loadSpread(spark, sf, "documents")
     val tbl = s"$dir/documents.parquet"
     all.filter(col("doc_id") % 5 =!= 0)

@@ -17,7 +17,7 @@ class LowMemSpec extends SparkSuite {
     "mega-basket and a bot user owning ~99% of events") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lowmem")
+    val dir = tempDir("graft_lowmem")
       .toString
     // the planted warehouse: every table the five queries touch
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -83,7 +83,7 @@ class LowMemSpec extends SparkSuite {
     // simultaneously OPEN. State must stay one min_by struct per open
     // group (~224k tiny rows), never O(candidate pairs); a pair-
     // buffering regression dies in the 512m child
-    val rfeed = graft.ops.Multimodal.rasterIncomingFixture(s, sf)
+    val rfeed = graft.ops.Gates.raster.incoming(s, sf)
     rfeed.crossJoin(s.range(2000).select(col("id").as("rep")))
       .select((col("raster_id") * 10000L + col("rep")).as("raster_id"),
         col("payload"),

@@ -62,7 +62,7 @@ class ObserveSpec extends SparkSuite {
   }
 
   test("K2 sink: appendEvents appends with observation metadata") {
-    val out = Files.createTempDirectory("graft_events").toString + "/events"
+    val out = tempDir("graft_events").toString + "/events"
     val m = Materialize.materializations(spark, sf)
     Materialize.appendEvents(m, out)
     Materialize.appendEvents(m, out) // append, not overwrite
@@ -89,7 +89,7 @@ class ObserveSpec extends SparkSuite {
     assert(li("schema").startsWith("l_orderkey:bigint,"))
     assert(li("schema").endsWith("l_shipdate:timestamp"))
     // the dict survives the K2 sink: parquet serializes the map column
-    val out = Files.createTempDirectory("graft_md").toString + "/events"
+    val out = tempDir("graft_md").toString + "/events"
     Materialize.appendEvents(md, out)
     val back = spark.read.parquet(out)
       .filter(org.apache.spark.sql.functions.col("table_name") === "events")
@@ -117,6 +117,34 @@ class ObserveSpec extends SparkSuite {
   test("discovery reacts to directory contents (fallback on empty)") {
     assert(Tables.discover(sf).contains("lineitem"))
     assert(Tables.discover("/nonexistent_dir_xyz") === Tables.all)
+  }
+
+  test("materializations over part-file directory tables: discovery " +
+    "finds every table, and counts and freshness equal a scan") {
+    import org.apache.spark.sql.functions._
+    val s = spark
+    val wh = tempDir("graft-dir-tables")
+    // events holds two part files: the base and an appended copy
+    val parts = Map("events" -> 2, "orders" -> 1, "nation" -> 1)
+    parts.foreach { case (t, n) =>
+      val d = Files.createDirectories(wh.resolve(s"$t.parquet"))
+      (0 until n).foreach(i => Files.copy(
+        java.nio.file.Paths.get(sf, s"$t.parquet"),
+        d.resolve(f"part-$i%05d.parquet")))
+    }
+    val dir = wh.toString
+    assert(Tables.discover(dir) === parts.keys.toSeq.sorted)
+    val m = Materialize.materializations(s, dir).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), Option(r.getTimestamp(2))))
+      .toMap
+    def scanMax(t: String, c: String) = Option(Tables.load(s, dir, t)
+      .agg(max(col(c)).cast("timestamp")).head().getTimestamp(0))
+    assert(m.map { case (t, v) => t -> v._1 } ===
+      parts.map { case (t, _) => t -> Tables.load(s, dir, t).count() })
+    assert(m("events")._1 === 2 * Tables.load(s, sf, "events").count())
+    assert(m("events")._2 === scanMax("events", "ts"))
+    assert(m("orders")._2 === scanMax("orders", "o_orderdate"))
+    assert(m("nation")._2.isEmpty)
   }
 
   test("multimodal decode: genuine header parse — PNG/WAV/JPEG fields " +
@@ -798,7 +826,7 @@ class ObserveSpec extends SparkSuite {
     // code path that touches FileCacheImageInputStream/OutputStream
     // throws on temp-file creation (permission bits can't carry this
     // arm — the suite runs as root, which bypasses them)
-    val gone = Files.createTempDirectory("graft-imageio-gone").toFile
+    val gone = tempDir("graft-imageio-gone").toFile
     try {
       ImageIO.setUseCache(true)
       ImageIO.setCacheDirectory(gone)
@@ -921,7 +949,7 @@ class ObserveSpec extends SparkSuite {
   }
 
   test("observed write: metrics harvested from the write's single pass") {
-    val out = Files.createTempDirectory("graft_obs").toString + "/us"
+    val out = tempDir("graft_obs").toString + "/us"
     val m = graft.observe.Metrics.observedWrite(spark, sf, out)
     val written = spark.read.parquet(out)
     assert(m("row_count") === written.count())
@@ -1373,7 +1401,7 @@ class ObserveSpec extends SparkSuite {
   }
 
   test("flagship lifecycle: cache → write → count → preview (K1/A2/K4)") {
-    val out = Files.createTempDirectory("graft_flagship").toString + "/us"
+    val out = tempDir("graft_flagship").toString + "/us"
     val (rowCount, preview) = graft.ops.Relational.flagshipLifecycle(spark, sf, out)
     assert(rowCount > 0)
     assert(preview.size <= 5 && preview.nonEmpty)
@@ -1381,7 +1409,7 @@ class ObserveSpec extends SparkSuite {
   }
 
   test("compact: fragmented table rewritten into few even files, rows kept") {
-    val base = Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact").toString
     val frag = s"$base/frag"
     val tidy = s"$base/tidy"
     // fragment orders into 50 small files
@@ -1404,7 +1432,7 @@ class ObserveSpec extends SparkSuite {
   test("overwritePartitions: backfill rewrites only its partitions; " +
     "untouched partition files stay byte-identical") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_dpo").toString + "/t"
+    val dir = tempDir("graft_dpo").toString + "/t"
     val docs = Tables.load(spark, sf, "documents")
     docs.write.partitionBy("lang").parquet(dir)
     def files(lang: String) =
@@ -1431,7 +1459,7 @@ class ObserveSpec extends SparkSuite {
   }
 
   test("clusteredWrite: files hold disjoint key ranges (pruning layout)") {
-    val base = Files.createTempDirectory("graft_cluster").toString
+    val base = tempDir("graft_cluster").toString
     val in = s"$base/in"
     val out = s"$base/out"
     Tables.load(spark, sf, "orders").repartition(8) // destroy any order

@@ -283,7 +283,7 @@ class PlanSpec extends SparkSuite {
     // round-robin shuffled (at 100 TB that exchange moves the corpus)
     val key = "spark.sql.files.maxPartitionBytes"
     val saved = s.conf.get(key)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val dir = tempDir("graft_spread").toString
     Tables.load(s, sf, "documents")
       .repartition(cores).write.parquet(s"$dir/documents.parquet")
     s.conf.set(key, "16384") // force many small splits
@@ -298,7 +298,7 @@ class PlanSpec extends SparkSuite {
 
   test("partitioned write + read prunes partitions at the scan") {
     val s = spark
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString + "/docs"
+    val out = tempDir("graft_part").toString + "/docs"
     Tables.load(s, sf, "documents")
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     val read = s.read.parquet(out).filter(col("lang") === "en")
@@ -565,7 +565,7 @@ class PlanSpec extends SparkSuite {
   test("MV staleness: a base append makes the rule FALL BACK to the " +
     "base table (never a stale serve); re-registering re-serves") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvstale")
+    val dir = tempDir("graft_mvstale")
       .toString
     val basePath = s"$dir/lineitem.parquet"
     Tables.load(spark, sf, "lineitem")
@@ -624,7 +624,7 @@ class PlanSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvdec")
+    val dir = tempDir("graft_mvdec")
       .toString
     val basePath = s"$dir/dec.parquet"
     Seq(("a", "1.10"), ("a", "2.20"), ("b", "3.30"))

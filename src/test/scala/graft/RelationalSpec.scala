@@ -35,7 +35,7 @@ class RelationalSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_q66").toString
+    val dir = tempDir("graft_q66").toString
     Seq("customer", "orders", "lineitem").foreach { t =>
       Tables.load(s, sf, t).write.parquet(s"$dir/$t.parquet")
     }
@@ -214,8 +214,7 @@ class RelationalSpec extends SparkSuite {
     "no admitted basket exceeds the derived cap, normals untouched") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_megabasket").toString
+    val dir = tempDir("graft_megabasket").toString
     // 300 normal 2-item baskets + one 200-item bot/bulk basket.
     // cap = max(64, 8*floor(log2(301))) = 64, so the bot basket (200)
     // is excluded BEFORE any array is collected and every admitted
@@ -243,8 +242,7 @@ class RelationalSpec extends SparkSuite {
     "and is flagged in n_truncated; normal users fold unchanged") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_botuser").toString
+    val dir = tempDir("graft_botuser").toString
     val base = 1700000000000000L // epoch micros
     def ts(us: Long) = new Timestamp(us / 1000)
     // bot: 2000 relevant view events (cap floor = 1024 > 32*log2(n));
@@ -275,8 +273,7 @@ class RelationalSpec extends SparkSuite {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dayfold").toString
+    val dir = tempDir("graft_dayfold").toString
     val day = 86400000000L
     val base = (1700000000000000L / day) * day // exact UTC midnight
     def ts(us: Long) = new Timestamp(us / 1000)

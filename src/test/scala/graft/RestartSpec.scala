@@ -36,7 +36,7 @@ class RestartSpec extends SparkSuite {
     try body finally q.stop()
 
   private def ckpt(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_rs_$tag").toString
+    tempDir(s"graft_rs_$tag").toString
 
   /** Recoverable collecting sink: emissions land in `buf` per batch. */
   private def collectTo[T](ds: Dataset[T], cp: Option[String],
@@ -240,7 +240,7 @@ class RestartSpec extends SparkSuite {
     import s.implicits._
     import org.apache.spark.sql.functions._
     implicit val ctx = s.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_rs_cdc")
+    val root = tempDir("graft_rs_cdc")
       .toString
     val dir = s"$root/snap"
     val cp = s"$root/ckpt"
@@ -472,33 +472,33 @@ class RestartSpec extends SparkSuite {
     "candidate-dedup state recovers and a re-encode redelivered " +
     "across the crash boundary does not re-flag") {
     val s = spark
-    val flagged = graft.ops.Multimodal.mediaAdmissionBackfill(s, sf)
+    val flagged = graft.ops.Gates.media.backfill(s, sf)
       .collect().map(_.getLong(0)).toSet
     gateSurvivesRestart("media_gate", "media_id",
       graft.ops.Multimodal.mediaAdmission(s, sf, _),
-      graft.ops.Multimodal.mediaIncomingFixture(s, sf), flagged)
+      graft.ops.Gates.media.incoming(s, sf), flagged)
   }
 
   test("audio admission gate survives restart: the watermarked " +
     "candidate-dedup state recovers and a polarity re-master " +
     "redelivered across the crash boundary does not re-flag") {
     val s = spark
-    val flagged = graft.ops.Multimodal.audioAdmissionBackfill(s, sf)
+    val flagged = graft.ops.Gates.audio.backfill(s, sf)
       .collect().map(_.getLong(0)).toSet
     gateSurvivesRestart("audio_gate", "media_id",
       graft.ops.Multimodal.audioAdmission(s, sf, _),
-      graft.ops.Multimodal.audioIncomingFixture(s, sf), flagged)
+      graft.ops.Gates.audio.incoming(s, sf), flagged)
   }
 
   test("raster admission gate survives restart: the watermarked " +
     "candidate-dedup state recovers and an exposure re-master " +
     "redelivered across the crash boundary does not re-flag") {
     val s = spark
-    val flagged = graft.ops.Multimodal.rasterAdmissionBackfill(s, sf)
+    val flagged = graft.ops.Gates.raster.backfill(s, sf)
       .collect().map(_.getLong(0)).toSet
     gateSurvivesRestart("raster_gate", "raster_id",
       graft.ops.Multimodal.rasterAdmission(s, sf, _),
-      graft.ops.Multimodal.rasterIncomingFixture(s, sf), flagged)
+      graft.ops.Gates.raster.incoming(s, sf), flagged)
   }
 
   test("raster admission DECISION face survives restart: open decision " +
@@ -509,9 +509,9 @@ class RestartSpec extends SparkSuite {
     import s.implicits._
     import org.apache.spark.sql.functions._
     implicit val ctx = s.sqlContext
-    val flagged = graft.ops.Multimodal.rasterAdmissionDecision(s, sf)
+    val flagged = graft.ops.Gates.raster.decision(s, sf)
       .collect().map(_.getLong(0)).toSet
-    val feedAll = graft.ops.Multimodal.rasterIncomingFixture(s, sf)
+    val feedAll = graft.ops.Gates.raster.incoming(s, sf)
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
       .sortBy(_._1)
     val flagger = feedAll.find(t => flagged.contains(t._1))
@@ -574,7 +574,7 @@ class RestartSpec extends SparkSuite {
     s.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val root = java.nio.file.Files.createTempDirectory("graft_rs_conc")
+      val root = tempDir("graft_rs_conc")
         .toString
       val feed = s"$root/events"
       // the reference runs its hourly materialization cron NEXT TO the

@@ -67,7 +67,7 @@ class RetrievalSpec extends SparkSuite {
     "full rebuild, via a chained postings delta") {
     val s = spark
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25").toString
+    val dir = tempDir("graft_bm25").toString
     val all = graft.Tables.loadSpread(spark, sf, "documents")
     val tbl = s"$dir/documents.parquet"
     all.filter(col("doc_id") % 5 =!= 0)

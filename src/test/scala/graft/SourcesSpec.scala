@@ -14,8 +14,7 @@ class SourcesSpec extends SparkSuite {
   private val schema = StructType.fromDDL("job_id BIGINT, name STRING")
 
   private def tmpWrite(ext: String, lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory(s"graft-src-$ext").toFile
-    dir.deleteOnExit()
+    val dir = tempDir(s"graft-src-$ext").toFile
     val f = new java.io.File(dir, s"data.$ext")
     Files.write(f.toPath, String.join("\n", lines: _*).getBytes)
     f.getAbsolutePath
@@ -102,7 +101,7 @@ class SourcesSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_evolve").toString + "/t"
+    val dir = tempDir("graft_evolve").toString + "/t"
     // generation 1: two columns
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.parquet(dir)

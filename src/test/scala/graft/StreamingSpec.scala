@@ -253,7 +253,7 @@ class StreamingSpec extends SparkSuite {
     // watermarked tumbling agg, AvailableNow-style full drain.
     val batchEvents = Tables.load(s, sf, "events")
     // file-stream source wants a directory: stage the table file into one
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_replay")
+    val streamDir = tempDir("graft_replay")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -289,7 +289,7 @@ class StreamingSpec extends SparkSuite {
     // scheduled drain): AvailableNow processes everything staged at
     // start, then stops the query ON ITS OWN — self-termination after
     // a full drain IS the cadence property under test.
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_avnow")
+    val streamDir = tempDir("graft_avnow")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -616,8 +616,7 @@ class StreamingSpec extends SparkSuite {
     val s = spark
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_gate_an").toString
+    val tmp = tempDir("graft_gate_an").toString
     val feedDir = s"$tmp/feed"
     Tables.load(s, sf, "documents")
       .select(col("doc_id"), col("source"), col("text"))
@@ -703,8 +702,7 @@ class StreamingSpec extends SparkSuite {
     val (seen, fresh) = docs.splitAt(docs.length / 2)
     // the "already ingested" warehouse: first half persisted where the
     // text-hash artifact expects the documents table
-    val seenDir = java.nio.file.Files
-      .createTempDirectory("graft_curadm_seen").toString
+    val seenDir = tempDir("graft_curadm_seen").toString
     seen.toSeq.toDF("doc_id", "source", "text", "n_chars")
       .write.mode("overwrite").parquet(s"$seenDir/documents.parquet")
     val in = MemoryStream[(Long, String, String, Long, Timestamp)]
@@ -811,7 +809,7 @@ class StreamingSpec extends SparkSuite {
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.functions._
-    val feed = graft.ops.Multimodal.mediaIncomingFixture(s, sf)
+    val feed = graft.ops.Gates.media.incoming(s, sf)
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
       .sortBy(_._1)
     assert(feed.exists(_._1 >= 4000000L), "fixture must carry novel media")
@@ -829,8 +827,7 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     }
-    val batch = graft.ops.Multimodal
-      .mediaAdmissionBackfill(s, sf).collect()
+    val batch = graft.ops.Gates.media.backfill(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     assert(streamed === batch,
@@ -856,7 +853,7 @@ class StreamingSpec extends SparkSuite {
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.functions._
-    val feed = graft.ops.Multimodal.audioIncomingFixture(s, sf)
+    val feed = graft.ops.Gates.audio.incoming(s, sf)
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
       .sortBy(_._1)
     assert(feed.exists(_._1 >= 7000000L), "fixture must carry novel audio")
@@ -885,8 +882,7 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     }
-    val batch = graft.ops.Multimodal
-      .audioAdmissionBackfill(s, sf).collect()
+    val batch = graft.ops.Gates.audio.backfill(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSet
     assert(streamed === batch,
@@ -930,7 +926,7 @@ class StreamingSpec extends SparkSuite {
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.functions._
-    val feed = graft.ops.Multimodal.rasterIncomingFixture(s, sf)
+    val feed = graft.ops.Gates.raster.incoming(s, sf)
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
       .sortBy(_._1)
     assert(feed.exists(_._1 >= 9500000L), "fixture must carry novel imagery")
@@ -965,8 +961,7 @@ class StreamingSpec extends SparkSuite {
         "per-batch observedMetrics flag counts must sum to the ledger")
       out
     }
-    val batch = graft.ops.Multimodal
-      .rasterAdmissionBackfill(s, sf).collect()
+    val batch = graft.ops.Gates.raster.backfill(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed === batch,
       s"streamed flags must equal the batch plan " +
@@ -998,7 +993,7 @@ class StreamingSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val feed = graft.ops.Multimodal.rasterIncomingFixture(s, sf)
+    val feed = graft.ops.Gates.raster.incoming(s, sf)
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
       .sortBy(_._1)
     val in = MemoryStream[(Long, Array[Byte], Timestamp)]
@@ -1036,7 +1031,7 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
     val batch = graft.ops.Multimodal.rasterAdmission(s, sf,
-      graft.ops.Multimodal.rasterIncomingFixture(s, sf), decision = true)
+      graft.ops.Gates.raster.incoming(s, sf), decision = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed === batch,
       s"streamed decisions must equal the batch plan " +
@@ -1048,7 +1043,7 @@ class StreamingSpec extends SparkSuite {
       "the decision face must emit exactly one row per in_id")
     // the decision IS the argmin over the audit-face pairs: smallest
     // Hamming, ties to the smallest corpus_id
-    val pairs = graft.ops.Multimodal.rasterAdmissionBackfill(s, sf)
+    val pairs = graft.ops.Gates.raster.backfill(s, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val best = pairs.groupBy(_._1).map { case (inId, ps) =>
       val w = ps.minBy(p => (p._3, p._2)); (inId, w._2, w._3) }.toSet
@@ -1092,7 +1087,7 @@ class StreamingSpec extends SparkSuite {
       s.table("text_dec_out").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     }
-    val batch = graft.ops.Llm.textAdmissionDecision(s, sf)
+    val batch = graft.ops.Gates.text.decision(s, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     assert(streamed === batch,
@@ -1104,7 +1099,7 @@ class StreamingSpec extends SparkSuite {
       "one decision row per in_id")
     // decision ≡ argmax over the audit face (max jaccard, ties to the
     // smallest corpus_id)
-    val pairs = graft.ops.Llm.admissionBackfill(s, sf).collect()
+    val pairs = graft.ops.Gates.text.backfill(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val best = pairs.groupBy(_._1).map { case (inId, ps) =>
       val w = ps.minBy(p => (-p._3, p._2)); (inId, w._2, w._3) }.toSet
@@ -1114,9 +1109,9 @@ class StreamingSpec extends SparkSuite {
   test("vector admission DECISION face (batch): one row per incoming " +
     "vector, the argmax-cosine row of the audit face") {
     val s = spark
-    val dec = graft.ops.Llm.vectorAdmissionDecision(s, sf).collect()
+    val dec = graft.ops.Gates.vector.decision(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val pairs = graft.ops.Llm.vectorAdmissionBackfill(s, sf).collect()
+    val pairs = graft.ops.Gates.vector.backfill(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val best = pairs.groupBy(_._1).map { case (inId, ps) =>
       val w = ps.minBy(p => (-p._3, p._2)); (inId, w._2, w._3) }.toSet
@@ -1140,10 +1135,10 @@ class StreamingSpec extends SparkSuite {
       assert(dec.nonEmpty)
       assert(dec.map(_._1).size === dec.size)
     }
-    check(graft.ops.Multimodal.audioAdmissionDecision(s, sf).collect(),
-      graft.ops.Multimodal.audioAdmissionBackfill(s, sf).collect())
-    check(graft.ops.Multimodal.mediaAdmissionDecision(s, sf).collect(),
-      graft.ops.Multimodal.mediaAdmissionBackfill(s, sf).collect())
+    check(graft.ops.Gates.audio.decision(s, sf).collect(),
+      graft.ops.Gates.audio.backfill(s, sf).collect())
+    check(graft.ops.Gates.media.decision(s, sf).collect(),
+      graft.ops.Gates.media.backfill(s, sf).collect())
   }
 
   test("exact-Jaccard admission: a streamed feed gated against the " +
@@ -1476,7 +1471,7 @@ class StreamingSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_k2").toString + "/events"
+    val out = tempDir("graft_k2").toString + "/events"
     val in = MemoryStream[UpdateEvent]
     val q = Sensors.risingEdge(in.toDS()).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[SensorEmit], _: Long) =>
@@ -1505,7 +1500,7 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.functions.col
     val ledger = "spec_raster_gate_stream_" +
       java.util.UUID.randomUUID().toString.take(8)
-    val feed = graft.ops.Multimodal.rasterIncomingFixture(s, sf)
+    val feed = graft.ops.Gates.raster.incoming(s, sf)
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
       .sortBy(_._1)
     val in = MemoryStream[(Long, Array[Byte])]
@@ -1525,8 +1520,7 @@ class StreamingSpec extends SparkSuite {
     val streamed = led.get
       .select("in_id", "corpus_id", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batchFlags = graft.ops.Multimodal
-      .rasterAdmissionBackfill(s, sf).collect()
+    val batchFlags = graft.ops.Gates.raster.backfill(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed === batchFlags,
       s"the streamed ledger must equal the batch gate " +
@@ -1641,7 +1635,7 @@ class StreamingSpec extends SparkSuite {
     import s.implicits._
     import org.apache.spark.sql.functions._
     implicit val ctx = s.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_upsert")
+    val root = tempDir("graft_upsert")
       .toString
     val dir = s"$root/snap"
     val base = (0L until 64L).map(k => (k, s"v$k")).toDF("k", "v")
@@ -1681,7 +1675,7 @@ class StreamingSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_replay")
+    val dir = tempDir("graft_replay")
       .toString + "/snap"
     val base = (0L until 32L).map(k => (k, s"v$k")).toDF("k", "v")
     graft.stream.Upsert.initSnapshot(spark, dir, base, "k", 4)
