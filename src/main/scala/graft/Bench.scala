@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The contention verdict, factored pure so the r8 incident is a
@@ -139,7 +138,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Entry load average, BEFORE Spark spins up its own threads: the
     // spread tripwire below only catches BURSTY contention (uneven
     // runs); a steady co-tenant inflates all three runs uniformly and
@@ -165,14 +163,7 @@ object Bench {
         case _ => 0.0
       }
     val stat0 = cpuStat()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(logLevel = "WARN")
     // Warm-up: JVM/codegen/parquet-footer caches, so the first timed
     // query doesn't absorb ~4s of one-time JIT cost (VERDICT r1 noted
     // q02 was really warm-up, not query time).
@@ -229,12 +220,9 @@ object Bench {
     // legs. Nothing is cached in-process: each timed run still
     // computes from the parquet inputs through the full plan; artifact
     // builds still run (ledger-attributed to run 0) and their cost is
-    // published per query. SPARK_GRAFT_PREWARM=0 restores the old
-    // cold-run-1 behavior.
-    val prewarm = sys.env.get("SPARK_GRAFT_PREWARM").forall(_ != "0")
+    // published per query.
     val prewarmTimes: Seq[(String, Double)] =
-      if (!prewarm) Nil
-      else selected.toSeq.map { case (name, fn) =>
+      selected.toSeq.map { case (name, fn) =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
         catch { case e: Throwable =>

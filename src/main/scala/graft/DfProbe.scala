@@ -118,15 +118,7 @@ object DfProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: DfProbe <dir1,dir2,..>")
     val dirs = args(0).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     for (dir <- dirs; s <- probe(spark, dir)) {
       println(s"""{"probe":"df","family":"${s.family}","dir":"$dir",""" +
         s""""keys":${s.keys},"postings":${s.postings},""" +

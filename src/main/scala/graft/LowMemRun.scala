@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Memory-pressure gate child process (`runMain graft.LowMemRun <dir>`
   * — but normally spawned by LowMemSpec with `-Xmx512m`): executes the
   * bounded-state queries — the ones whose 100 TB story is "per-key
@@ -15,14 +13,7 @@ object LowMemRun {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: LowMemRun <sfDir>")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(cores = Some(2))
     val queries = Seq(
       "q134_copurchase_triangles", // capped basket pair projection
       "q137_association_rules",    // capped baskets, decimal partials
@@ -31,7 +22,7 @@ object LowMemRun {
       "q49_admission_backfill")    // banded admission, bounded shingles
     queries.foreach { name =>
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, dir).count()
+      val n = SparkEntry.query(name)(spark, dir).count()
       println(s"[lowmem] $name rows=$n sec=${(System.nanoTime() - t0) / 1e9}")
       require(n > 0, s"$name returned 0 rows under memory pressure")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Two-process IndexStore race child (`RaceRun <srcDir> <name> <id>
@@ -19,13 +18,7 @@ object RaceRun {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: RaceRun <srcDir> <name> <id> <barrierDir>")
     val (src, name, id, barrier) = (args(0), args(1), args(2), args(3))
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(cores = Some(2))
     val res = graft.observe.IndexStore.readOrBuild(spark, name, src) {
       // barrier: publish own in-build marker, wait for the sibling's —
       // both processes are now PAST the no-published-artifact check

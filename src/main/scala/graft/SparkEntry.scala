@@ -31,6 +31,13 @@ object SparkEntry {
       ops.Cdc.queries ++
       observe.Expectations.queries
 
+  /** The declared query `name`; an unknown name fails with the list of
+    * valid ones instead of a bare `NoSuchElementException`. */
+  def query(name: String): (SparkSession, String) => DataFrame =
+    queries.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown query $name; valid: " +
+        queries.keys.toSeq.sorted.mkString(", ")))
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Synthesize an N× scale fixture from an existing sf dir by unioning
@@ -63,14 +63,7 @@ object SynthScale {
     // skew must be global, or 10 copies would dilute one 30% key into
     // ten 3% keys and measure nothing.
     val zipf = args.length > 3 && args(3) == "zipf"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     def off(c: Column, i: Int): Column = c + lit(i * stride)
     def cp(name: String)(f: (DataFrame, Int) => DataFrame): Unit =

@@ -192,10 +192,10 @@ object Tables {
     }
   }
 
-  /** The legacy nanos flag is set at session build in Verify/Bench/test
-    * fixtures; the set below is an idempotent safety net (same constant
-    * value, so a concurrent duplicate set is harmless) for callers that
-    * hand us a session built without it. */
+  /** The legacy nanos flag is set at session build by [[graft.Session]];
+    * the set below is an idempotent safety net (same constant value, so
+    * a concurrent duplicate set is harmless) for callers that hand us a
+    * session built elsewhere. */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTs(

@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` Column ↔ Expression conversion for the
@@ -28,6 +30,19 @@ object GraftBridge {
   def lastExecutedPlan(q: org.apache.spark.sql.streaming.StreamingQuery): String =
     q.asInstanceOf[execution.streaming.runtime.StreamingQueryWrapper]
       .streamingQuery.lastExecution.executedPlan.toString
+
+  /** Block until every event already posted to the context's listener
+    * bus has been delivered, so a listener's tallies (including a
+    * `QueryExecutionListener`'s, which rides the same bus) are complete
+    * for the actions that have returned. The bus is spark-private. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Every SparkListener on the context's bus and QueryExecutionListener
+    * on the session — lets a test assert a tool left none of its own. */
+  def listeners(spark: SparkSession): Seq[AnyRef] =
+    spark.sparkContext.listenerBus.listeners.asScala.toSeq ++
+      spark.listenerManager.listListeners().toSeq
 
   /** Session-local function registration (the non-extensions path). */
   def registerFunction(

@@ -814,4 +814,20 @@ class PlanSpec extends SparkSuite {
     assert(readSchema.nonEmpty && !readSchema.contains("value:"),
       s"untouched columns (value) must be pruned from the scan:\n$readSchema")
   }
+
+  test("Trace plans: each section is its query's formatted explain") {
+    import org.apache.spark.sql.execution.FormattedMode
+    // expression ids and plan ids are fresh per DataFrame build
+    def mask(s: String): String =
+      s.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+    val names = Seq("q01_flagship_us_customers", "q02_pricing_summary")
+    val sections = Trace.plans(spark, sf, names).split("\n## ").toSeq.tail
+    assert(sections.map(_.takeWhile(_ != '\n')) === names)
+    sections.zip(names).foreach { case (section, name) =>
+      val body = section.substring(section.indexOf("```\n") + 4,
+        section.lastIndexOf("```"))
+      assert(mask(body) === mask(SparkEntry.query(name)(spark, sf)
+        .queryExecution.explainString(FormattedMode)))
+    }
+  }
 }

@@ -7,8 +7,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM — `Test / fork`),
-  * configured like the driver harness: UTC, small shuffle width, the
-  * events-table nanos flag. */
+  * built by the same [[Session]] factory as the mains, pinned to a
+  * small width. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   def sf: String = "/root/testdata/sf0.001"
@@ -59,16 +59,5 @@ object SparkSuite {
       case _: java.io.IOException | _: java.io.UncheckedIOException => ()
     }
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session(cores = Some(4), logLevel = "WARN")
 }
