@@ -5,10 +5,13 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution,
+  ReusedSubqueryExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev tool: what a declared query costs and which plan it runs — the
@@ -21,15 +24,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * query's steady-state cost. Runs 2–3 go through the noop sink, which
   * evaluates every output expression where `count()` lets Catalyst
   * prune them; `warm_sec` is their min. For the last run it prints
-  * every job's seconds and callsite — eager construction work
-  * (localCheckpoint materializations, model collects, IndexStore
-  * reads) runs as jobs the final plan never shows — and the executed
-  * plan with each node's SQL metrics. A JSON line closes each pair.
+  * every job's seconds, SQL execution id, operation scope and callsite
+  * — eager construction work (localCheckpoint materializations, model
+  * collects, IndexStore reads) runs as jobs the final plan never shows
+  * — and the executed plan with each node's SQL metrics. A JSON line
+  * closes each pair.
   *
   * `runMain graft.Trace plans <out.md> <dir> [query...]` writes the
   * formatted physical plans of the named queries, or of [[headline]]
   * when none are named, at local[4]; `PLANS.md` is its output on
-  * sf0.001. */
+  * sf0.001. IndexStore locations are printed as `fp=<fp>`. */
 object Trace {
 
   /** The queries PLANS.md covers, each with what its plan evidences. */
@@ -46,7 +50,7 @@ object Trace {
     "q79_lang_source_pivot",     // pinned pivot single pass
     "q81_sequence_packing",      // sharded rows-frame running sum
     "q93_quantized_topk",        // SQ8 codes, broadcast queries
-    "q96_pq_topk",               // PQ-ADC broadcast-LUT scan
+    "q96_pq_topk",               // bcast-LUT scan, one qid exchange
     "q38_ivf_topk",              // probe side pinned as build side
     "q104_gopher_repetition",    // in-row folds: no Generate, no agg
     "q105_zorder_keys",          // normalized Morton + TakeOrdered
@@ -68,7 +72,7 @@ object Trace {
     "q136_funnel_stages",        // bounded earliest-k heap + fold
     "q137_association_rules",    // 3 partial aggs + item-sized join
     "q138_event_transitions",    // day-fold + boundary stitch
-    "q144_pq_rerank_topk",       // ADC cut + bcast-bounded exact refine
+    "q144_pq_rerank_topk",       // q96 ADC tail, cut, bcast exact refine
     "q145_ivf_adc_topk",         // probed-cell ADC + refine
     "q146_prefix_jaccard_pairs", // prefix postings + exact verify
     "q147_residual_ivf_adc_topk",// per-(q,cell) residual LUT + refine
@@ -81,7 +85,14 @@ object Trace {
     "q170_raster_admission_decision", // partial-agg min_by decision face
     "q175_mixed_corpus_admission") // container-agnostic corpus index gate
 
-  final case class Job(id: Int, sec: Double, callsite: String)
+  /** One job of a traced run. A job inside a SQL execution — AQE
+    * query-stage and broadcast jobs included, which Spark submits from
+    * its own stage-materialization threads — is labelled with the call
+    * site of the action that started the execution; `scope` names what
+    * the job computes (the operation scope of its final stage's last
+    * RDD, e.g. `Exchange`, `BroadcastExchange`). */
+  final case class Job(id: Int, sec: Double, callsite: String,
+      executionId: Option[Long], scope: Option[String])
 
   /** One traced (dir, query) pair: `noopSec` holds runs 2–3, `jobs` and
     * `plan` (the executed plan with SQL metrics) come from the last. */
@@ -96,26 +107,44 @@ object Trace {
       Seq(s"== $query @ $dir", f"  run 1 count: $firstSec%.2f s, $rows rows") ++
         noopSec.zipWithIndex.map { case (s, i) => f"  run ${i + 2} noop: $s%.2f s" } ++
         Seq(s"  last run: ${jobs.size} jobs") ++
-        jobs.map(j => f"  job ${j.id}%4d  ${j.sec}%6.3f s  ${j.callsite}") ++
+        jobs.map(j => f"  job ${j.id}%4d  ${j.sec}%6.3f s  " +
+          j.executionId.fold("")(e => s"exec $e  ") +
+          j.scope.fold("")(sc => s"$sc  ") + j.callsite) ++
         Seq("  executed plan:", plan.stripSuffix("\n"), json)
   }
 
   def run(spark: SparkSession, dir: String, name: String): Result = {
     val q = SparkEntry.query(name)
-    val starts = new ConcurrentHashMap[Int, (Long, String)]()
+    val starts = new ConcurrentHashMap[Int, (Long, Job)]()
     val jobs = new ConcurrentLinkedQueue[Job]()
+    // SQL execution id → call site of the action that started it
+    val actions = new ConcurrentHashMap[Long, String]()
     // df.write runs its own QueryExecution (the noop command), so the
     // metrics live there, not on the DataFrame's plan
     @volatile var lastQe: QueryExecution = null
     val jobListener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts.put(js.jobId, (js.time, Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          actions.put(x.executionId, x.description)
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        val exec = props
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .map(_.toLong)
+        val site = exec.flatMap(e => Option(actions.get(e)))
+          .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
           .orElse(js.stageInfos.lastOption.map(_.name))
-          .getOrElse("?")))
+          .getOrElse("?")
+        val scope = js.stageInfos.maxByOption(_.stageId)
+          .flatMap(_.rddInfos.maxByOption(_.id))
+          .flatMap(GraftBridge.scopeName)
+        starts.put(js.jobId, (js.time, Job(js.jobId, 0, site, exec, scope)))
+      }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        Option(starts.remove(je.jobId)).foreach { case (t0, site) =>
-          jobs.add(Job(je.jobId, (je.time - t0) / 1e3, site))
+        Option(starts.remove(je.jobId)).foreach { case (t0, job) =>
+          jobs.add(job.copy(sec = (je.time - t0) / 1e3))
         }
     }
     val qeListener = new QueryExecutionListener {
@@ -203,7 +232,10 @@ object Trace {
     names.foreach { name =>
       val df = SparkEntry.query(name)(spark, dir)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(FormattedMode))
+      // an IndexStore location's fingerprint covers the fixture files'
+      // mtimes, so a fresh checkout moves it while the plan stays put
+      sb.append(df.queryExecution.explainString(FormattedMode)
+        .replaceAll("fp=[0-9a-f]{32}", "fp=<fp>"))
       sb.append("```\n")
     }
     sb.toString

@@ -38,6 +38,12 @@ object GraftBridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The operation scope of an RDD a listener event describes — the
+    * name of the plan node or RDD operation that created it (e.g.
+    * `Exchange`, `BroadcastExchange`). The scope type is spark-private. */
+  def scopeName(rdd: org.apache.spark.storage.RDDInfo): Option[String] =
+    rdd.scope.map(_.name)
+
   /** Every SparkListener on the context's bus and QueryExecutionListener
     * on the session — lets a test assert a tool left none of its own. */
   def listeners(spark: SparkSession): Seq[AnyRef] =

@@ -236,18 +236,34 @@ trait LlmAnnOps {
       }).withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
   }
 
-  /** Map-only frozen-quantizer assignment: fold-argmax over the
-    * broadcast centroid model (same expression as [[vectorRouting]],
-    * which LlmSpec proves tie-break-identical to the window-rank
-    * [[assignToCentroids]]), emitting the cluster-table schema
-    * (vec_id, v, nrm, cid) so delta segments union with full builds. */
-  protected def routeFrozen(s: SparkSession, vecs: DataFrame, cent: DataFrame): DataFrame = {
+  /** The coarse-quantizer model, COLLECTED in ascending cid order —
+    * the [[collectPqModel]] discipline applied to the centroid
+    * table: O(nlist · dim) doubles, model-sized at any corpus scale
+    * (~16 MB at the 10⁹-vector operating point's nlist ≈ 31 k). It
+    * goes back to the executors as a broadcast single-row relation
+    * ([[routeFrozen]], [[probesInRow]]), never as a plan literal. The
+    * one collect of the centroid model: routing, the assignment
+    * artifact and every IVF serve leg read it from here. */
+  private[graft] def ivfModelOf(
+      s: SparkSession, dir: String): Seq[(Long, Seq[Double], Double)] = {
+    val sess = s
+    import sess.implicits._
+    ivfCentroids(s, dir).select(col("cid"), col("cv"), col("cn"))
+      .as[(Long, Seq[Double], Double)].collect().sortBy(_._1).toSeq
+  }
+
+  /** Map-only frozen-quantizer routing: fold-argmax of each vector
+    * (vec_id, v, nrm, …) over the broadcast centroid model, appending
+    * the winner's `cid` and `cos`. Window- and state-free, so the same
+    * plan routes a batch frame or a `readStream` feed. The fold visits
+    * centroids in ascending cid order with strict-greater replacement,
+    * which reproduces the window-rank [[assignToCentroids]]' (cos DESC,
+    * cid ASC) tie-break exactly (LlmSpec asserts routing ≡
+    * [[ivfClusters]] on the corpus). */
+  protected def routeFrozen(s: SparkSession, vecs: DataFrame,
+      model: Seq[(Long, Seq[Double], Double)]): DataFrame = {
     import s.implicits._
-    val model = Seq(Tuple1(
-      cent.select(col("cid"), col("cv"), col("cn"))
-        .as[(Long, Seq[Double], Double)]
-        .collect().sortBy(_._1).toSeq)).toDF("cs")
-    vecs.crossJoin(broadcast(model))
+    vecs.crossJoin(broadcast(Seq(Tuple1(model)).toDF("cs")))
       .withColumn("best", aggregate(
         col("cs"),
         struct(lit(-1L).as("cid"), lit(-2.0).as("cos")),
@@ -258,7 +274,8 @@ trait LlmAnnOps {
             struct(c.getField("_1").as("cid"), cos.as("cos")))
             .otherwise(acc)
         }))
-      .select(col("vec_id"), col("v"), col("nrm"), col("best.cid").as("cid"))
+      .select(vecs.columns.toSeq.map(col) ++ Seq(
+        col("best.cid").as("cid"), col("best.cos").as("cos")): _*)
   }
 
   /** IVF cluster assignment against the TRAINED centroids — the
@@ -296,7 +313,7 @@ trait LlmAnnOps {
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v"))
           .withColumn("nrm", sqrt(dot(col("v"), col("v")))),
-        ivfCentroids(s, dir)))(
+        ivfModelOf(s, dir)).drop("cos"))(
       (_, _) => {
         ivfCentroids(s, dir) // run the model's lifecycle at this state
         modelCarried(s, "ivf_centroids", Llm.embsSrc(dir), ivfArtifactVersion)
@@ -841,13 +858,16 @@ trait LlmAnnOps {
   private[graft] val pqKsub = 16
   private[graft] val pqIters = 4
 
-  /** Explode (vec_id, v) into per-subspace rows (vec_id, j, x) —
-    * map-only. */
-  protected def pqSubvectors(e: DataFrame): DataFrame =
-    e.select(col("vec_id"),
-      explode(sequence(lit(0), lit(pqNsub - 1))).as("j"), col("v"))
+  /** Explode (keys…, v) into per-subspace rows (keys…, j, x) —
+    * map-only; every column but `v` is a key (vec_id for the corpus,
+    * qid[, pcid] for an ADC query). */
+  protected def pqSubvectors(e: DataFrame): DataFrame = {
+    val keys = e.columns.toSeq.filter(_ != "v").map(col)
+    e.select(keys ++ Seq(
+      explode(sequence(lit(0), lit(pqNsub - 1))).as("j"), col("v")): _*)
       .withColumn("x", expr(s"slice(v, j * $pqDsub + 1, $pqDsub)"))
-      .select(col("vec_id"), col("j"), col("x"))
+      .select(keys ++ Seq(col("j"), col("x")): _*)
+  }
 
   /** Squared L2 distance via dot products, written in the exact
     * operation order the oracle uses (`a − 2b + c` left to right) so
@@ -1004,41 +1024,120 @@ trait LlmAnnOps {
         modelCarried(s, "pq_codebooks", Llm.embsSrc(dir), pqArtifactVersion)
       })
 
-  /** PQ-ADC top-k (X3 compressed scale path): per query, precompute a
-    * lookup table of micro-unit INTEGER distances from each query
-    * subvector to every sub-codebook entry (nsub × ksub = 128 values
-    * per query — broadcast-sized), then score every corpus vector by
-    * summing 8 table lookups joined on (j, code). The corpus side
-    * never touches float vectors — the scan reads 8 tinyints per
-    * vector, the LUT join is a broadcast hash join, and the per-
-    * (query, vector) sum is a partial aggregation; this is exactly how
-    * ADC scans run over in-memory codes at 10⁹-vector scale. Distances
-    * round to integer micro-units BEFORE the sum, so the total is an
-    * exact integer on both engines (no summation-order drift class).
-    * LlmSpec gates recall vs the float brute force. */
-  def pqTopk(s: SparkSession, dir: String): DataFrame = {
-    val cb = pqCodebooks(s, dir)
-    val q = pqSubvectors(
-      vectors(s, dir).filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("v")))
-      .select(col("vec_id").as("qid"), col("j"), col("x"))
-    val lut = q.join(cb, "j")
+  // ---- The compressed-ANN serve pipeline -------------------------------
+  //
+  // Every PQ/IVF serve below composes the same single-definition
+  // stages: the 10-row query frame (`queryVectors`/`qvecOf`), the
+  // integer-micro LUT (`lutOf`), the ADC sum-and-rank (`adcRanked`),
+  // the candidate cut (`adcCut`) and the exact-L2 refine (`adcRefine`);
+  // the IVF legs add the in-row probe ranker (`topProbesInRow`) over
+  // the one collected centroid model (`ivfModelOf`).
+
+  /** The 10-row query-vector frame (vec_id, v, nrm) the serves and the
+    * recall audit rank for. Lazy; [[qvecOf]] checkpoints it where
+    * several legs share it. */
+  private def queryVectors(s: SparkSession, dir: String): DataFrame =
+    vectors(s, dir).filter(col("vec_id") < 10)
+
+  /** The checkpointed query frame shared by a serve's probe, LUT, and
+    * refine legs — one tiny eager job instead of one per leg. */
+  private def qvecOf(s: SparkSession, dir: String): DataFrame =
+    queryVectors(s, dir).localCheckpoint()
+
+  private def queriesOf(qvec: DataFrame): DataFrame =
+    qvec.select(col("vec_id").as("qid"), col("v").as("qv"),
+      col("nrm").as("qn"))
+
+  /** The ADC lookup table of a query-subvector frame (keys…, j, x): the
+    * distance from every query subvector to every sub-codebook entry
+    * (nsub × ksub = 128 values per key — broadcast-sized) as (keys…, j,
+    * code, idist). Distances round to integer micro-units BEFORE any
+    * sum, so an ADC total is an exact integer on both engines (no
+    * summation-order drift class). The key is qid for plain codes and
+    * (qid, pcid) for residual codes, whose query residual differs per
+    * probed cell. */
+  private def lutOf(qsub: DataFrame, cb: DataFrame): DataFrame = {
+    val keys = qsub.columns.toSeq.filterNot(Set("j", "x")).map(col)
+    qsub.join(cb, "j")
       .withColumn("idist",
         round(l2sq(col("x"), col("c")) * lit(1e6), 0).cast("bigint"))
-      .select(col("qid"), col("j"), col("cid").as("code"), col("idist"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("idist"), col("vec_id"))
-    pqCodes(s, dir)
-      .join(broadcast(lut), Seq("j", "code"))
-      .filter(col("vec_id") =!= col("qid"))
+      .select(keys ++ Seq(col("j"), col("cid").as("code"), col("idist")): _*)
+  }
+
+  /** The plain-code LUT (qid, j, code, idist) of a query frame. */
+  private def plainLutOf(qvec: DataFrame, cb: DataFrame): DataFrame =
+    lutOf(pqSubvectors(qvec.select(col("vec_id").as("qid"), col("v"))), cb)
+
+  /** The ADC rank every compressed serve ends its code scan with:
+    * `scored` holds a (qid, vec_id, idist) row per matched (query,
+    * vector, subspace) LUT entry. The query's own vector drops out, the
+    * per-(query, vector) sum is the ADC distance, and `crank` is its
+    * (idist, vec_id) rank within the query. One exchange serves agg and
+    * rank: hash-clustering by qid once satisfies both the (qid, vec_id)
+    * aggregation and the per-qid window, where a bare groupBy plans an
+    * Exchange(qid, vec_id) AND an Exchange(qid) back-to-back. */
+  private def adcRanked(scored: DataFrame): DataFrame =
+    scored.filter(col("vec_id") =!= col("qid"))
+      .repartition(col("qid"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(sum(col("idist")).as("idist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+      .withColumn("crank", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("idist"), col("vec_id"))))
+
+  /** The candidate cut: the top `k` (qid, vec_id) of an ADC ranking. */
+  private def adcCut(ranked: DataFrame, k: Int): DataFrame =
+    ranked.filter(col("crank") <= k).select(col("qid"), col("vec_id"))
+
+  /** Full-scan plain-PQ ADC ranking (q96/q144): every corpus vector is
+    * scored by summing 8 LUT lookups joined on (j, code). The corpus
+    * side never touches float vectors — the scan reads 8 tinyints per
+    * vector from the persisted [[pqCodes]] artifact and the LUT join is
+    * a broadcast hash join; this is how ADC scans run over in-memory
+    * codes at 10⁹-vector scale. */
+  private def pqAdcRanked(
+      s: SparkSession, dir: String, qvec: DataFrame): DataFrame =
+    adcRanked(pqCodes(s, dir)
+      .join(broadcast(plainLutOf(qvec, pqCodebooks(s, dir))),
+        Seq("j", "code")))
+
+  /** Shared exact-L2 refine of the compressed serves: the broadcast
+    * candidate set fetches its raw float vectors and reranks each query
+    * to [[pqRerankK]] results. The candidate relation is (queries × k′)
+    * rows of two ids — broadcast-sized at ANY corpus scale — so the
+    * exact leg is one broadcast-hash semi-probe of the float table (the
+    * scan streams once, columnar-pruned to (vec_id, v)), never a second
+    * O(corpus × query) float pass. It ranks on the raw L2 double
+    * computed `a − 2b + c` left to right — bit-identical across engines
+    * by the q31 fold-order discipline, rounded to 6 dp only at output.
+    * `qref` is the caller's query frame (vec_id, v, …), shared with its
+    * LUT instead of re-scanned. */
+  protected def adcRefine(s: SparkSession, dir: String, cand: DataFrame,
+      qref: DataFrame): DataFrame = {
+    val qr = qref.select(col("vec_id").as("qid"), col("v").as("qv"))
+    val wk = Window.partitionBy(col("qid"))
+      .orderBy(col("d2"), col("vec_id"))
+    vectors(s, dir).select(col("vec_id"), col("v"))
+      .join(broadcast(cand), "vec_id")
+      .join(broadcast(qr), "qid")
+      .withColumn("d2", l2sq(col("v"), col("qv")))
+      .withColumn("rank", row_number().over(wk))
+      .filter(col("rank") <= pqRerankK)
       .select(col("qid"), col("rank").cast("bigint").as("rank"),
-        col("vec_id"), col("idist"))
+        col("vec_id"), round(col("d2"), 6).as("d2"))
       .orderBy(col("qid"), col("rank"))
   }
+
+  /** PQ-ADC top-k (X3 compressed scale path): per query, a lookup
+    * table of micro-unit INTEGER distances from each query subvector to
+    * every sub-codebook entry, then the full-scan [[pqAdcRanked]] score
+    * of every corpus vector; the top 5 per query by (idist, vec_id).
+    * LlmSpec gates recall vs the float brute force. */
+  def pqTopk(s: SparkSession, dir: String): DataFrame =
+    pqAdcRanked(s, dir, queryVectors(s, dir))
+      .filter(col("crank") <= 5)
+      .select(col("qid"), col("crank").cast("bigint").as("rank"),
+        col("vec_id"), col("idist"))
+      .orderBy(col("qid"), col("rank"))
 
   /** Final k and candidate width of the rerank refine (the IVF-PQ +
     * rerank recipe — Jégou et al., "Product Quantization for Nearest
@@ -1060,58 +1159,14 @@ trait LlmAnnOps {
 
   /** q144: PQ-ADC + EXACT-RERANK top-k — the refine step that lifts
     * compressed-ANN recall from the ADC scan's ~0.6 to ≳0.9 without
-    * giving up the compressed scan: stage 1 runs the q96 ADC scan
-    * (corpus side reads 8 tinyints per vector from the persisted
-    * [[pqCodes]] artifact) but keeps the top-k′ = [[pqRerankCand]]
-    * CANDIDATES per query; stage 2 re-scores ONLY those candidates
-    * with exact float L2 against the raw vectors and re-ranks to the
-    * final k.
-    *
-    * Scale shape: the candidate relation is (queries × k′) rows of
-    * two ids — broadcast-sized at ANY corpus scale — so the exact leg
-    * is one broadcast-hash semi-probe of the float table (the scan
-    * streams once, columnar-pruned to (vec_id, v); only k′ rows per
-    * query survive into the window), never a second O(corpus × query)
-    * float pass. The ADC leg ranks on exact integer micro-unit sums
-    * (the q96 discipline); the refine ranks on the raw L2 double
-    * computed `a − 2b + c` left to right — bit-identical across
-    * engines by the q31 fold-order discipline, rounded to 6 dp only
-    * at output. */
+    * giving up the compressed scan: stage 1 runs the q96 ADC scan but
+    * keeps the top-k′ = [[pqRerankCand]] CANDIDATES per query; stage 2
+    * ([[adcRefine]]) re-scores ONLY those candidates with exact float
+    * L2 against the raw vectors and re-ranks to the final k. One
+    * checkpointed query frame feeds both the LUT and the refine. */
   def pqRerankTopk(s: SparkSession, dir: String): DataFrame = {
-    val cb = pqCodebooks(s, dir)
-    // one 10-row query frame shared by the LUT build and the refine —
-    // checkpointed so the pruned query scan runs once structurally
-    val qvec = vectors(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"))
-      .localCheckpoint()
-    val q = pqSubvectors(qvec)
-      .select(col("vec_id").as("qid"), col("j"), col("x"))
-    val lut = q.join(cb, "j")
-      .withColumn("idist",
-        round(l2sq(col("x"), col("c")) * lit(1e6), 0).cast("bigint"))
-      .select(col("qid"), col("j"), col("cid").as("code"), col("idist"))
-    val wAdc = Window.partitionBy(col("qid"))
-      .orderBy(col("idist"), col("vec_id"))
-    val cand = pqCodes(s, dir)
-      .join(broadcast(lut), Seq("j", "code"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("idist")).as("idist"))
-      .withColumn("crank", row_number().over(wAdc))
-      .filter(col("crank") <= pqRerankCand)
-      .select(col("qid"), col("vec_id"))
-    val qv = qvec.select(col("vec_id").as("qid"), col("v").as("qv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("d2"), col("vec_id"))
-    vectors(s, dir).select(col("vec_id"), col("v"))
-      .join(broadcast(cand), "vec_id")
-      .join(broadcast(qv), "qid")
-      .withColumn("d2", l2sq(col("v"), col("qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= pqRerankK)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"),
-        col("vec_id"), round(col("d2"), 6).as("d2"))
-      .orderBy(col("qid"), col("rank"))
+    val qvec = qvecOf(s, dir)
+    adcRefine(s, dir, adcCut(pqAdcRanked(s, dir, qvec), pqRerankCand), qvec)
   }
 
   /** ADC-candidate width of the IVF-ADC refine: the probed cells
@@ -1120,75 +1175,48 @@ trait LlmAnnOps {
     * 256 — the recall knob here is nprobe × k′ jointly. */
   private[graft] val ivfAdcCand = 64
 
-  /** The checkpointed 10-row query-vector frame shared by a composed
-    * serve's probe, LUT, and refine legs — one tiny eager job instead
-    * of one per leg. */
-  private def qvecOf(s: SparkSession, dir: String): DataFrame =
-    vectors(s, dir).filter(col("vec_id") < 10).localCheckpoint()
-
-  private def queriesOf(qvec: DataFrame): DataFrame =
-    qvec.select(col("vec_id").as("qid"), col("v").as("qv"),
-      col("nrm").as("qn"))
-
-  /** The coarse-quantizer model COLLECTED to the driver, ascending
-    * cid — the [[collectPqModel]] discipline applied to the centroid
-    * table: O(nlist · dim) doubles, model-sized at any corpus scale
-    * (~16 MB at the 10⁹-vector operating point's nlist ≈ 31 k). Shipped
-    * back as a broadcast single-row relation by [[probesInRow]], never
-    * as a plan literal (the [[vectorRouting]] rule). One collect
-    * replaces, per serve leg, a count() job over the centroid chain
-    * plus a broadcast build of its scan — and a composed report's legs
-    * share the single collect. */
-  private[graft] def ivfModelOf(
-      s: SparkSession, dir: String): Seq[(Long, Seq[Double], Double)] = {
+  /** MAP-ONLY per-query probe ranking (r15: guide §2.4 "remove
+    * shuffles outright"), the one scorer and comparator of both probe
+    * rules: every centroid of the broadcast single-row model is scored
+    * in-row against the query row (qid, qv, qn, …), ranked with an
+    * `array_sort` comparator, and the top `n` kept as `top`, an array
+    * of (score, cid). `score` maps the coarse cosine to the ranked
+    * value — the double itself, or integer micro-cosines. The
+    * comparator has SQL comparison semantics, so the (score DESC, cid
+    * ASC) tie-break is identical to the window-rank formulation it
+    * replaces (LlmSpec pins equality on the corpus and on a model with
+    * duplicate centroids). Replaces, per serve leg: the centroid-scan
+    * broadcast build, one probe-side exchange, a sort, and a Window.
+    * Work per query row is O(nlist · dim + nlist log nlist) — trivial
+    * against the probed-cell ADC scan it gates at any scale. */
+  private def topProbesInRow(s: SparkSession, q: DataFrame,
+      model: Seq[(Long, Seq[Double], Double)], n: Long)(
+      score: Column => Column): DataFrame = {
     val sess = s
     import sess.implicits._
-    ivfCentroids(s, dir).select(col("cid"), col("cv"), col("cn"))
-      .as[(Long, Seq[Double], Double)].collect().sortBy(_._1).toSeq
-  }
-
-  /** MAP-ONLY per-query probe sets (r15: guide §2.4 "remove shuffles
-    * outright"): score every centroid of the broadcast single-row
-    * model in-row, rank with an `array_sort` comparator — SQL
-    * comparison semantics, so the (pcos DESC, cid ASC) tie-break is
-    * identical to the window-rank formulation it replaces (LlmSpec
-    * pins equality on the corpus) — and explode the top `nprobe`.
-    * Replaces, per serve leg: the centroid-scan broadcast build, one
-    * probe-side exchange, a sort, and a Window. The q side's columns
-    * ride through, so callers needing (qv, qn) keep them. Work per
-    * query row is O(nlist · dim + nlist log nlist) — trivial against
-    * the probed-cell ADC scan it gates at any scale. */
-  private[graft] def probesInRow(s: SparkSession, q: DataFrame,
-      model: Seq[(Long, Seq[Double], Double)], nprobe: Long): DataFrame = {
-    val sess = s
-    import sess.implicits._
-    val m = Seq(Tuple1(model)).toDF("cs")
-    q.crossJoin(broadcast(m))
+    q.crossJoin(broadcast(Seq(Tuple1(model)).toDF("cs")))
       .withColumn("scored", transform(col("cs"), c =>
-        struct((dot(c.getField("_2"), col("qv")) /
-          (c.getField("_3") * col("qn"))).as("pcos"),
+        struct(score(dot(c.getField("_2"), col("qv")) /
+          (c.getField("_3") * col("qn"))).as("score"),
           c.getField("_1").as("cid"))))
       .withColumn("top", slice(array_sort(col("scored"),
-        (l, r) => when(l.getField("pcos") > r.getField("pcos"), lit(-1))
-          .when(l.getField("pcos") < r.getField("pcos"), lit(1))
+        (l, r) => when(l.getField("score") > r.getField("score"), lit(-1))
+          .when(l.getField("score") < r.getField("score"), lit(1))
           .when(l.getField("cid") < r.getField("cid"), lit(-1))
           .when(l.getField("cid") > r.getField("cid"), lit(1))
           .otherwise(lit(0))),
-        1, nprobe.toInt))
+        1, n.toInt))
       .drop("cs", "scored")
-      .withColumn("cid", explode(col("top").getField("cid")))
-      .drop("top")
   }
 
-  /** Per-query integer-micro-cosine LUT of the plain-PQ serves:
-    * (qid, j, code, idist), broadcast onto the probed code scan. */
-  private def lutOf(qvec: DataFrame, cb: DataFrame): DataFrame =
-    pqSubvectors(qvec.select(col("vec_id"), col("v")))
-      .select(col("vec_id").as("qid"), col("j"), col("x"))
-      .join(cb, "j")
-      .withColumn("idist",
-        round(l2sq(col("x"), col("c")) * lit(1e6), 0).cast("bigint"))
-      .select(col("qid"), col("j"), col("cid").as("code"), col("idist"))
+  /** The fixed-budget probe set: the top `nprobe` centroids by coarse
+    * cosine, one row per probe with the q side's columns riding through
+    * (callers needing (qv, qn) keep them). */
+  private[graft] def probesInRow(s: SparkSession, q: DataFrame,
+      model: Seq[(Long, Seq[Double], Double)], nprobe: Long): DataFrame =
+    topProbesInRow(s, q, model, nprobe)(identity)
+      .withColumn("cid", explode(col("top").getField("cid")))
+      .drop("top")
 
   /** The cid-partitioned code layout: codes pick up their cluster id
     * from the assignment artifact — at 100 TB the codes are STORED
@@ -1198,6 +1226,69 @@ trait LlmAnnOps {
     pqCodes(s, dir)
       .join(ivfClusters(s, dir).select(col("vec_id"), col("cid")),
         "vec_id")
+
+  /** What the composed IVF serves share: the checkpointed query frame,
+    * the collected centroid model with its base and capped probe
+    * budgets, and (plain codes only) the sub-codebooks and the codes by
+    * cell. Built once per query, so q153's three legs ride one query
+    * checkpoint, one model collect and one code relation (r15: each leg
+    * used to re-run its own checkpoint, centroid count and chain
+    * scans). */
+  private final class IvfServe(val s: SparkSession, val dir: String) {
+    val qvec: DataFrame = qvecOf(s, dir)
+    val model: Seq[(Long, Seq[Double], Double)] = ivfModelOf(s, dir)
+    val base: Long = ivfNprobe(model.size.toLong)
+    val cap: Long = math.min(model.size.toLong, base * ivfMultiProbeBoost)
+    lazy val cb: DataFrame = pqCodebooks(s, dir)
+    lazy val codes: DataFrame = codesByCellOf(s, dir)
+    def probes(nprobe: Long): DataFrame =
+      probesInRow(s, queriesOf(qvec), model, nprobe)
+  }
+
+  /** One probe leg of the composed plain-code serve: its probe
+    * relation (qid, cid), its ADC candidate cut, and its fixed
+    * per-query probe budget (None for the adaptive leg, whose volume is
+    * whatever the margin rule spends). */
+  private final class IvfLeg(val path: String, val probes: DataFrame,
+      val cand: Int, val budget: Option[Long])
+
+  private def baseLeg(c: IvfServe): IvfLeg =
+    new IvfLeg("base", c.probes(c.base), ivfAdcCand, Some(c.base))
+
+  // the refine budget scales WITH the probe budget (the FAISS
+  // nprobe/k' discipline): at a fixed 64-candidate cut the extra cells'
+  // ADC impostors crowd out true neighbors and the wider probe can
+  // measurably LOSE recall (observed 0.93 → 0.92 on the straddling
+  // fixture) — still O(1) float rows per query
+  private def multiprobeLeg(c: IvfServe): IvfLeg =
+    new IvfLeg("multiprobe", c.probes(c.cap), ivfAdcCand * ivfMultiProbeBoost,
+      Some(c.cap))
+
+  private def adaptiveLeg(c: IvfServe): IvfLeg =
+    new IvfLeg("adaptive",
+      probesAdaptiveInRow(c.s, queriesOf(c.qvec), c.model, c.base, c.cap),
+      ivfAdcCand * ivfMultiProbeBoost, None)
+
+  /** The probed-cell ADC ranking (qid, vec_id, idist, crank) under a
+    * probe relation (qid, cid): ONLY vectors assigned to a probed cell
+    * are scored, from their plain codes. */
+  private def ivfAdcRankedWith(c: IvfServe, probes: DataFrame): DataFrame =
+    adcRanked(broadcast(probes.select(col("qid"), col("cid")))
+      .join(c.codes, "cid")
+      .join(broadcast(plainLutOf(c.qvec, c.cb)), Seq("qid", "j", "code")))
+
+  /** A leg served end to end: probed-cell ADC rank, the leg's candidate
+    * cut, exact-L2 refine. */
+  private def served(c: IvfServe, leg: IvfLeg): DataFrame =
+    adcRefine(c.s, c.dir,
+      adcCut(ivfAdcRankedWith(c, leg.probes), leg.cand),
+      c.qvec)
+
+  private def serve(s: SparkSession, dir: String,
+      leg: IvfServe => IvfLeg): DataFrame = {
+    val c = new IvfServe(s, dir)
+    served(c, leg(c))
+  }
 
   /** q145: the COMPOSED compressed-ANN serve path — IVF-ADC + exact
     * rerank, the full FAISS `IVFx,PQy` recipe (Jégou 2011 §V): the
@@ -1215,15 +1306,8 @@ trait LlmAnnOps {
     * exactly the pieces' native metrics. Integer ADC sums and
     * fold-order-exact refine doubles keep the oracle exact (the
     * q96/q144 discipline). */
-  def ivfAdcTopk(s: SparkSession, dir: String): DataFrame = {
-    val qvec = qvecOf(s, dir)
-    adcRefine(s, dir,
-      ivfAdcRankedWith(s, qvec, ivfModelOf(s, dir), pqCodebooks(s, dir),
-        codesByCellOf(s, dir), probeBoost = 1)
-        .filter(col("crank") <= ivfAdcCand)
-        .select(col("qid"), col("vec_id")),
-      qref = qvec)
-  }
+  def ivfAdcTopk(s: SparkSession, dir: String): DataFrame =
+    serve(s, dir, baseLeg)
 
   /** Probe-budget multiplier of the MULTI-PROBE composed serve (q150):
     * probes stay ranked by coarse-centroid distance (the q145 routing)
@@ -1238,20 +1322,8 @@ trait LlmAnnOps {
     * broadcast-sized at any corpus scale). LlmSpec pins the recall
     * curve on the clustered fixture: boosted recall@10 ≥ 0.8 and
     * strictly above the single-budget path. */
-  def ivfAdcMultiprobeTopk(s: SparkSession, dir: String): DataFrame = {
-    val qvec = qvecOf(s, dir)
-    adcRefine(s, dir,
-      ivfAdcRankedWith(s, qvec, ivfModelOf(s, dir), pqCodebooks(s, dir),
-        codesByCellOf(s, dir), probeBoost = ivfMultiProbeBoost)
-        // the refine budget scales WITH the probe budget (the FAISS
-        // nprobe/k' discipline): at a fixed 64-candidate cut the extra
-        // cells' ADC impostors crowd out true neighbors and the wider
-        // probe can measurably LOSE recall (observed 0.93 → 0.92 on the
-        // straddling fixture) — still O(1) float rows per query
-        .filter(col("crank") <= ivfAdcCand * ivfMultiProbeBoost)
-        .select(col("qid"), col("vec_id")),
-      qref = qvec)
-  }
+  def ivfAdcMultiprobeTopk(s: SparkSession, dir: String): DataFrame =
+    serve(s, dir, multiprobeLeg)
 
   /** Ambiguity margin of the ADAPTIVE probe budget (integer
     * micro-cosine): a centroid within this much of the query's best
@@ -1267,62 +1339,34 @@ trait LlmAnnOps {
     * on the target corpus, exactly like nprobe itself. */
   private[graft] val ivfAdaptiveMarginMicro = 350000L
 
-  /** Per-query ADAPTIVE probe set (qid, cid): every query gets the
-    * base nprobe; EXTRA probes — up to q150's 3× cap — go only to
-    * centroids whose coarse similarity sits within
+  /** Per-query ADAPTIVE probe set (qid, cid) of the corpus: every
+    * query gets the base nprobe; EXTRA probes — up to q150's 3× cap —
+    * go only to centroids whose coarse similarity sits within
     * [[ivfAdaptiveMarginMicro]] of the query's best (the low-|margin|
-    * planes where the true neighbor may live across the boundary).
-    * Similarities round to integer micro units BEFORE ranking and the
-    * margin test, so both engines pick byte-identical probe sets.
-    * O(queries × nlist) scored rows — model-sized at any corpus
-    * scale; computed in-row against the broadcast model
-    * ([[probesAdaptiveInRow]]) so best and rank come off one sorted
-    * array instead of a checkpoint + groupBy + window + join. */
+    * planes where the true neighbor may live across the boundary). */
   private[graft] def ivfAdaptiveProbes(
-      s: SparkSession, dir: String): DataFrame = {
-    val model = ivfModelOf(s, dir)
-    val nlist = model.size.toLong
-    val base = ivfNprobe(nlist)
-    val cap = math.min(nlist, base * ivfMultiProbeBoost)
-    probesAdaptiveInRow(s,
-      queriesOf(vectors(s, dir).filter(col("vec_id") < 10)),
-      model, base, cap)
-  }
+      s: SparkSession, dir: String): DataFrame =
+    adaptiveLeg(new IvfServe(s, dir)).probes
 
-  /** The adaptive probe rule of [[ivfAdaptiveProbes]] computed MAP-ONLY
-    * in-row (r15, the [[probesInRow]] shape): integer micro-cosines
-    * against the broadcast model, comparator-ranked (ipcos DESC, cid
-    * ASC), top `cap` sliced, and the margin test read off the sorted
-    * array's own head (`best` = element 1) — rank ≤ base ∨
-    * best − ipcos ≤ margin, byte-identical probe sets to the
-    * window+groupBy+join formulation it replaces (which cost a
-    * localCheckpoint job, two exchanges, and a broadcast per call). */
+  /** The adaptive probe rule on the [[topProbesInRow]] ranking:
+    * similarities round to integer micro units BEFORE ranking and the
+    * margin test, so both engines pick byte-identical probe sets; the
+    * top `cap` are kept and the margin test reads the sorted array's
+    * own head (`best` = element 1) — rank ≤ base ∨ best − ipcos ≤
+    * margin. Byte-identical probe sets to the window+groupBy+join
+    * formulation it replaces (which cost a localCheckpoint job, two
+    * exchanges, and a broadcast per call). */
   private[graft] def probesAdaptiveInRow(s: SparkSession, q: DataFrame,
       model: Seq[(Long, Seq[Double], Double)],
-      base: Long, cap: Long): DataFrame = {
-    val sess = s
-    import sess.implicits._
-    val m = Seq(Tuple1(model)).toDF("cs")
-    q.crossJoin(broadcast(m))
-      .withColumn("scored", transform(col("cs"), c =>
-        struct(round(dot(c.getField("_2"), col("qv")) /
-          (c.getField("_3") * col("qn")) * lit(1e6), 0).cast("bigint")
-          .as("ipcos"),
-          c.getField("_1").as("cid"))))
-      .withColumn("top", slice(array_sort(col("scored"),
-        (l, r) => when(l.getField("ipcos") > r.getField("ipcos"), lit(-1))
-          .when(l.getField("ipcos") < r.getField("ipcos"), lit(1))
-          .when(l.getField("cid") < r.getField("cid"), lit(-1))
-          .when(l.getField("cid") > r.getField("cid"), lit(1))
-          .otherwise(lit(0))),
-        1, cap.toInt))
-      .withColumn("best", element_at(col("top"), 1).getField("ipcos"))
+      base: Long, cap: Long): DataFrame =
+    topProbesInRow(s, q, model, cap)(
+      pcos => round(pcos * lit(1e6), 0).cast("bigint"))
+      .withColumn("best", element_at(col("top"), 1).getField("score"))
       .select(col("qid"), col("best"),
         posexplode(col("top")).as(Seq("pos", "p")))
       .filter(col("pos") < base ||
-        col("best") - col("p.ipcos") <= ivfAdaptiveMarginMicro)
+        col("best") - col("p.score") <= ivfAdaptiveMarginMicro)
       .select(col("qid"), col("p.cid").as("cid"))
-  }
 
   /** q158: the composed serve under the ADAPTIVE probe budget — the
     * knob q150 turns uniformly, turned per query by the margin
@@ -1348,41 +1392,8 @@ trait LlmAnnOps {
     * straddling fixture — recall equal to the fixed 3× path at a
     * strictly lower mean probe count — as a fixture-pinned result,
     * not a data-independent guarantee. */
-  def ivfAdcAdaptiveTopk(s: SparkSession, dir: String): DataFrame = {
-    val qvec = qvecOf(s, dir)
-    val model = ivfModelOf(s, dir)
-    val nlist = model.size.toLong
-    val base = ivfNprobe(nlist)
-    val cap = math.min(nlist, base * ivfMultiProbeBoost)
-    val probes = probesAdaptiveInRow(s, queriesOf(qvec), model, base, cap)
-    adcRefine(s, dir,
-      adaptiveCandWith(s, probes, qvec, pqCodebooks(s, dir),
-        codesByCellOf(s, dir)),
-      qref = qvec)
-  }
-
-  /** The ADC candidate stage under an explicit probe relation — the
-    * q158 pipeline body, shared with [[annRecallReport]]'s adaptive
-    * leg so the report reuses one probe set, one LUT, and one code
-    * scan across its legs. */
-  private def adaptiveCandWith(s: SparkSession, probes: DataFrame,
-      qvec: DataFrame, cb: DataFrame, codesByCell: DataFrame): DataFrame = {
-    val wAdc = Window.partitionBy(col("qid"))
-      .orderBy(col("idist"), col("vec_id"))
-    broadcast(probes).join(codesByCell, "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(lutOf(qvec, cb)), Seq("qid", "j", "code"))
-      // one exchange for agg + rank: hash-cluster by qid once — the
-      // (qid, vec_id) aggregation and the per-qid rank window both
-      // accept that partitioning, where the bare groupBy planned an
-      // Exchange(qid, vec_id) AND an Exchange(qid) back-to-back
-      .repartition(col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("idist")).as("idist"))
-      .withColumn("crank", row_number().over(wAdc))
-      .filter(col("crank") <= ivfAdcCand * ivfMultiProbeBoost)
-      .select(col("qid"), col("vec_id"))
-  }
+  def ivfAdcAdaptiveTopk(s: SparkSession, dir: String): DataFrame =
+    serve(s, dir, adaptiveLeg)
 
   /** The ADC candidate stage of the composed serve, probe budget =
     * min(nlist, boost · base): (qid, vec_id, idist, crank) for every
@@ -1391,56 +1402,9 @@ trait LlmAnnOps {
     * ITSELF (pre-refine) — the leg where plain vs residual codes
     * differ. */
   private[graft] def ivfAdcRanked(
-      s: SparkSession, dir: String, probeBoost: Int): DataFrame =
-    ivfAdcRankedWith(s, qvecOf(s, dir), ivfModelOf(s, dir),
-      pqCodebooks(s, dir), codesByCellOf(s, dir), probeBoost)
-
-  /** [[ivfAdcRanked]] over explicit shared inputs (r15): the composed
-    * report (q153) builds ONE query checkpoint, ONE collected centroid
-    * model, and ONE code-by-cell relation, and every leg rides them —
-    * where each leg used to re-run its own count/checkpoint jobs and
-    * chain scans. Probe sets come from the map-only [[probesInRow]];
-    * the ADC agg + rank share a single qid exchange. */
-  private[graft] def ivfAdcRankedWith(s: SparkSession, qvec: DataFrame,
-      model: Seq[(Long, Seq[Double], Double)], cb: DataFrame,
-      codesByCell: DataFrame, probeBoost: Int): DataFrame = {
-    val nlist = model.size.toLong
-    val nprobe = math.min(nlist, ivfNprobe(nlist) * probeBoost)
-    val probes = probesInRow(s, queriesOf(qvec), model, nprobe)
-      .select(col("qid"), col("cid"))
-    val wAdc = Window.partitionBy(col("qid"))
-      .orderBy(col("idist"), col("vec_id"))
-    broadcast(probes).join(codesByCell, "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(lutOf(qvec, cb)), Seq("qid", "j", "code"))
-      // one exchange for agg + rank (see adaptiveCandWith)
-      .repartition(col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("idist")).as("idist"))
-      .withColumn("crank", row_number().over(wAdc))
-  }
-
-  /** Shared exact-L2 refine of the composed serves (q145/q147/q150):
-    * the broadcast candidate set fetches its raw float vectors and
-    * reranks per query — [[pqRerankK]] results, fold-order-exact
-    * doubles (the q144 discipline). `qref` lets a caller that already
-    * checkpointed the query frame share it instead of re-scanning. */
-  protected def adcRefine(s: SparkSession, dir: String, cand: DataFrame,
-      qref: DataFrame = null): DataFrame = {
-    val qr = (if (qref != null) qref
-      else vectors(s, dir).filter(col("vec_id") < 10))
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val wk = Window.partitionBy(col("qid"))
-      .orderBy(col("d2"), col("vec_id"))
-    vectors(s, dir).select(col("vec_id"), col("v"))
-      .join(broadcast(cand), "vec_id")
-      .join(broadcast(qr), "qid")
-      .withColumn("d2", l2sq(col("v"), col("qv")))
-      .withColumn("rank", row_number().over(wk))
-      .filter(col("rank") <= pqRerankK)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"),
-        col("vec_id"), round(col("d2"), 6).as("d2"))
-      .orderBy(col("qid"), col("rank"))
+      s: SparkSession, dir: String, probeBoost: Int): DataFrame = {
+    val c = new IvfServe(s, dir)
+    ivfAdcRankedWith(c, c.probes(c.base * probeBoost))
   }
 
   // ---- Residual product quantization (true FAISS IVFADC) ----------
@@ -1542,10 +1506,10 @@ trait LlmAnnOps {
     * corpus); the fixture documents the floor, LlmSpec pins
     * non-inferiority at equal probe/rerank budget. */
   def residualIvfAdcTopk(s: SparkSession, dir: String): DataFrame = {
-    val qvec = qvecOf(s, dir)
-    adcRefine(s, dir, rpqAdcRankedWith(s, dir, qvec, probeBoost = 1)
-      .filter(col("crank") <= ivfAdcCand).select(col("qid"), col("vec_id")),
-      qref = qvec)
+    val c = new IvfServe(s, dir)
+    adcRefine(s, dir,
+      adcCut(rpqAdcRankedWith(s, dir, c.probes(c.base)), ivfAdcCand),
+      c.qvec)
   }
 
   /** The RESIDUAL ADC candidate stage (q147's pre-refine leg), probe
@@ -1553,115 +1517,70 @@ trait LlmAnnOps {
     * cluster) LUT form; exposed like [[ivfAdcRanked]] so the specs can
     * grade residual-vs-plain at the ADC ordering itself. */
   private[graft] def rpqAdcRanked(
-      s: SparkSession, dir: String, probeBoost: Int): DataFrame =
-    rpqAdcRankedWith(s, dir, qvecOf(s, dir), probeBoost)
+      s: SparkSession, dir: String, probeBoost: Int): DataFrame = {
+    val c = new IvfServe(s, dir)
+    rpqAdcRankedWith(s, dir, c.probes(c.base * probeBoost))
+  }
 
-  private[graft] def rpqAdcRankedWith(s: SparkSession, dir: String,
-      qvec: DataFrame, probeBoost: Int): DataFrame = {
-    val clustered = ivfClusters(s, dir)
-    val model = ivfModelOf(s, dir)
-    val nlist = model.size.toLong
-    val nprobe = math.min(nlist, ivfNprobe(nlist) * probeBoost)
-    val cb = rpqCodebooks(s, dir)
-    // in-row probe ranking (probesInRow); the residual LUT needs each
-    // probed centroid's vector back, so the map-only probe set joins
-    // the broadcast centroid scan for cv — still O(queries · nprobe)
-    val probes = probesInRow(s, queriesOf(qvec), model, nprobe)
+  private def rpqAdcRankedWith(
+      s: SparkSession, dir: String, probes: DataFrame): DataFrame = {
+    // the residual LUT needs each probed centroid's vector back, so the
+    // map-only probe set joins the broadcast centroid scan for cv —
+    // still O(queries · nprobe)
+    val qres = probes
       .join(broadcast(ivfCentroids(s, dir)
         .select(col("cid"), col("cv"))), "cid")
-      .select(col("qid"), col("qv"), col("cid"), col("cv"))
-    val qrsv = probes
-      .withColumn("qr", zip_with(col("qv"), col("cv"), (a, b) => a - b))
       .select(col("qid"), col("cid").as("pcid"),
-        explode(sequence(lit(0), lit(pqNsub - 1))).as("j"), col("qr"))
-      .withColumn("x", expr(s"slice(qr, j * $pqDsub + 1, $pqDsub)"))
-      .select(col("qid"), col("pcid"), col("j"), col("x"))
-    val lut = qrsv.join(cb, "j")
-      .withColumn("idist",
-        round(l2sq(col("x"), col("c")) * lit(1e6), 0).cast("bigint"))
-      .select(col("qid"), col("pcid"), col("j"),
-        col("cid").as("code"), col("idist"))
-    val codesByCell = rpqCodes(s, dir)
-      .join(clustered.select(col("vec_id"), col("cid").as("pcid")),
+        zip_with(col("qv"), col("cv"), (a, b) => a - b).as("v"))
+    adcRanked(rpqCodes(s, dir)
+      .join(ivfClusters(s, dir).select(col("vec_id"), col("cid").as("pcid")),
         "vec_id")
-    val wAdc = Window.partitionBy(col("qid"))
-      .orderBy(col("idist"), col("vec_id"))
-    codesByCell.join(broadcast(lut), Seq("pcid", "j", "code"))
-      .filter(col("vec_id") =!= col("qid"))
-      // one exchange for agg + rank (see adaptiveCandWith)
-      .repartition(col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("idist")).as("idist"))
-      .withColumn("crank", row_number().over(wAdc))
+      .join(broadcast(lutOf(pqSubvectors(qres), rpqCodebooks(s, dir))),
+        Seq("pcid", "j", "code")))
   }
 
   /** q153: ANN RECALL REPORT — the serve paths' recall@10 as an
     * oracle-gated RELATION: the exact brute-force L2 top-10 (the q31
     * discipline, self-excluded, (d2, vec_id) tie-break) joins each
-    * composed serve's output (q145 base budget, q150 multiprobe) and
-    * reports hits + recall in integer micro units. This turns the
-    * probe/recall trade from a test-log number into engine-queryable
-    * observability — the knob's effect is data.
+    * composed serve leg's output (q145 base budget, q150 multiprobe,
+    * q158 adaptive) and reports hits + recall in integer micro units.
+    * This turns the probe/recall trade from a test-log number into
+    * engine-queryable observability — the knob's effect is data.
     *
     * Scale shape: the exact leg is the AUDIT cost — O(queries × corpus)
     * distance math, run on a sampled query set exactly like any recall
     * audit of a production ANN index (queries are a broadcast handful;
     * the corpus streams once per audit). The serve legs are the
-    * candidate-bounded q145/q150 plans; all joins downstream of them
-    * touch O(queries × k) rows. */
+    * candidate-bounded q145/q150/q158 plans over ONE shared
+    * [[IvfServe]] (one probe model, one LUT, one code scan); all joins
+    * downstream of them touch O(queries × k) rows. */
   def annRecallReport(s: SparkSession, dir: String): DataFrame = {
-    val e = vectors(s, dir)
-    // ONE query checkpoint, ONE collected centroid model, ONE
-    // codebook/code-by-cell relation for every leg (r15): each leg
-    // used to rebuild its own — 3 extra checkpoint jobs, 3 centroid
-    // count jobs, and per-leg chain scans that exchange reuse could
-    // not always dedupe across the union
-    val qvec = qvecOf(s, dir)
-    val model = ivfModelOf(s, dir)
-    val cb = pqCodebooks(s, dir)
-    val codes = codesByCellOf(s, dir)
+    val c = new IvfServe(s, dir)
     val wx = Window.partitionBy(col("qid"))
       .orderBy(col("d2"), col("vec_id"))
-    val exact = e.select(col("vec_id"), col("v"))
+    val exact = vectors(s, dir).select(col("vec_id"), col("v"))
       .crossJoin(broadcast(
-        qvec.select(col("vec_id").as("qid"), col("v").as("qv"))))
+        c.qvec.select(col("vec_id").as("qid"), col("v").as("qv"))))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("d2", l2sq(col("v"), col("qv")))
       .withColumn("rank", row_number().over(wx))
       .filter(col("rank") <= pqRerankK)
       .select(col("qid"), col("vec_id"))
-      .localCheckpoint() // O(queries × k) rows, consumed by both legs
-    val nq = qvec.count()
-    // probe volumes make the report the probe/recall TRADE relation:
-    // fixed budgets are nq × budget by construction; the adaptive
-    // path's is whatever the margin rule actually spent
-    val nlist = model.size.toLong
-    val baseNp = ivfNprobe(nlist)
-    val capNp = math.min(nlist, baseNp * ivfMultiProbeBoost)
-    def cut(ranked: DataFrame, k: Int): DataFrame =
-      ranked.filter(col("crank") <= k).select(col("qid"), col("vec_id"))
-    val adProbes = probesAdaptiveInRow(s, queriesOf(qvec), model,
-      baseNp, capNp)
-    def leg(served: DataFrame, path: String, probes: Long): DataFrame =
-      served.select(col("qid"), col("vec_id"))
+      .localCheckpoint() // O(queries × k) rows, consumed by every leg
+    val nq = c.qvec.count()
+    Seq(baseLeg(c), multiprobeLeg(c), adaptiveLeg(c)).map { leg =>
+      // probe volumes make the report the probe/recall TRADE relation:
+      // fixed budgets are nq × budget by construction; the adaptive
+      // path's is whatever the margin rule actually spent
+      val probes = leg.budget.fold(leg.probes.count())(nq * _)
+      served(c, leg).select(col("qid"), col("vec_id"))
         .join(exact, Seq("qid", "vec_id"))
         .agg(count(lit(1)).as("hits"))
-        .select(lit(path).as("path"), lit(probes).as("probes"),
+        .select(lit(leg.path).as("path"), lit(probes).as("probes"),
           col("hits"),
           expr(s"hits * 1000000L div (${pqRerankK}L * ${nq}L)")
             .as("recall_micro"))
-    leg(adcRefine(s, dir,
-        cut(ivfAdcRankedWith(s, qvec, model, cb, codes, 1), ivfAdcCand),
-        qref = qvec),
-      "base", nq * baseNp)
-      .unionByName(leg(adcRefine(s, dir,
-          cut(ivfAdcRankedWith(s, qvec, model, cb, codes,
-            ivfMultiProbeBoost), ivfAdcCand * ivfMultiProbeBoost),
-          qref = qvec),
-        "multiprobe", nq * capNp))
-      .unionByName(leg(adcRefine(s, dir,
-          adaptiveCandWith(s, adProbes, qvec, cb, codes), qref = qvec),
-        "adaptive", adProbes.count()))
+    }.reduce(_ unionByName _)
       .orderBy(col("path"))
   }
 
@@ -1699,7 +1618,7 @@ trait LlmAnnOps {
     val vecs = incoming.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val res = routeFrozen(s, vecs, cent)
+    val res = routeFrozen(s, vecs, ivfModelOf(s, dir))
       .join(broadcast(cent.select(col("cid"), col("cv"))), "cid")
       .select(col("vec_id"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
@@ -1709,8 +1628,8 @@ trait LlmAnnOps {
   /** Route vectors to their IVF cluster with a MAP-ONLY argmax over
     * the centroid model — no window, no shuffle, no state.
     * [[assignToCentroids]]'s window-rank formulation cannot run under
-    * Structured Streaming (append mode forbids non-time windows); this
-    * fold-argmax projection runs identically over a batch frame and a
+    * Structured Streaming (append mode forbids non-time windows); the
+    * [[routeFrozen]] fold runs identically over a batch frame and a
     * `readStream` ingestion feed, so the vector half of a crawler
     * pipeline routes into the persisted IVF index online.
     *
@@ -1719,36 +1638,17 @@ trait LlmAnnOps {
     * map-only, still stream-static-safe), NOT as a plan literal: at
     * nlist ≈ 31 k (1e9 vectors) the literal is ~16 MB of doubles
     * re-serialized into every micro-batch's plan, while the broadcast
-    * ships once per executor and the plan stays O(1). The fold visits
-    * centroids in ascending cid order with strict-greater replacement,
-    * reproducing the window's (cos DESC, cid ASC) tie-break exactly
-    * (LlmSpec asserts routing ≡ ivfClusters on the corpus AND that the
-    * plan carries no centroid literal; StreamingSpec proves the
-    * streamed plan emits the batch answer). */
-  def vectorRouting(s: SparkSession, dir: String, incoming: DataFrame): DataFrame = {
-    import s.implicits._
-    val cent = ivfCentroids(s, dir)
-      .select(col("cid"), col("cv"), col("cn"))
-      .as[(Long, Seq[Double], Double)]
-      .collect().sortBy(_._1).toSeq
-    val model = Seq(Tuple1(cent)).toDF("cs")
-    val e = incoming
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    e.crossJoin(broadcast(model))
-      .withColumn("best", aggregate(
-        col("cs"),
-        struct(lit(-1L).as("cid"), lit(-2.0).as("cos")),
-        (acc, c) => {
-          val cos = dot(c.getField("_2"), col("v")) /
-            (c.getField("_3") * col("nrm"))
-          when(cos > acc.getField("cos"),
-            struct(c.getField("_1").as("cid"), cos.as("cos")))
-            .otherwise(acc)
-        }))
-      .select(col("vec_id"), col("best.cid").as("cid"),
-        round(col("best.cos"), 6).as("cos"))
-  }
+    * ships once per executor and the plan stays O(1) (LlmSpec asserts
+    * routing ≡ ivfClusters on the corpus AND that the plan carries no
+    * centroid literal; StreamingSpec proves the streamed plan emits the
+    * batch answer). */
+  def vectorRouting(s: SparkSession, dir: String, incoming: DataFrame): DataFrame =
+    routeFrozen(s,
+      incoming
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        .withColumn("nrm", sqrt(dot(col("v"), col("v")))),
+      ivfModelOf(s, dir))
+      .select(col("vec_id"), col("cid"), round(col("cos"), 6).as("cos"))
 
   /** IVF approximate top-k (X3 scale path): probe the [[ivfNprobe]]
     * nearest centroids per query, rank candidates only inside those

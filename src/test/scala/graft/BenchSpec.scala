@@ -213,6 +213,13 @@ class BenchSpec extends AnyFunSuite {
     assert(r.jobs.nonEmpty)
     assert(r.jobs.forall(j => j.callsite.nonEmpty && j.callsite != "?"))
     assert(r.plan.nonEmpty)
+    // AQE query-stage and broadcast jobs run on Spark's own threads;
+    // each still names its SQL execution and what it computes
+    assert(r.plan.contains("Exchange"))
+    assert(r.jobs.forall(j => j.executionId.nonEmpty && j.scope.nonEmpty),
+      r.report.mkString("\n"))
+    assert(!r.jobs.exists(_.callsite.contains("CompletableFuture")),
+      r.report.mkString("\n"))
   }
 
   test("an unknown query name fails with the list of valid names") {

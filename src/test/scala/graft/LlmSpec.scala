@@ -806,6 +806,19 @@ class LlmSpec extends SparkSuite {
     info(s"path -> (probes, recall_micro): $byPath")
   }
 
+  test("ann recall report (q153): each leg's hits equal its standalone " +
+    "serve's (q145 / q150 / q158) overlap with the exact top-10") {
+    val (_, exact) = exactTop10(sf)
+    def hitsOf(served: org.apache.spark.sql.DataFrame): Long =
+      served.collect().count(r => exact(r.getLong(0))(r.getLong(2))).toLong
+    val report = Llm.annRecallReport(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(report === Map(
+      "base" -> hitsOf(Llm.ivfAdcTopk(spark, sf)),
+      "multiprobe" -> hitsOf(Llm.ivfAdcMultiprobeTopk(spark, sf)),
+      "adaptive" -> hitsOf(Llm.ivfAdcAdaptiveTopk(spark, sf))))
+  }
+
   test("mix shards (q152): the persisted sink equals q149's reported " +
     "fills; a plan change moves the artifact fingerprint and " +
     "re-extracts; the original plan round-trips") {
@@ -1959,5 +1972,65 @@ class LlmSpec extends SparkSuite {
         col("best") - col("ipcos") <= Llm.ivfAdaptiveMarginMicro))
     val gotAdaptive = setOf(Llm.ivfAdaptiveProbes(spark, dir))
     assert(gotAdaptive === refAdaptive, "adaptive probe set diverged")
+  }
+
+  test("shared probe ranker: on duplicate centroids under different " +
+    "cids the pcos and the ipcos rankings both keep the smaller cid, " +
+    "and both equal the window-rank reference") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    val s = spark
+    import s.implicits._
+    val vecs = graft.Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("nrm", sqrt(GraftFx.dot(col("v"), col("v"))))
+    val q = vecs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("v").as("qv"),
+        col("nrm").as("qn"))
+    // four centroid directions, each under a (smaller, larger) cid pair;
+    // listed in descending cid order, so the comparator and not the
+    // input order has to break every tie
+    val pairs = Seq((2L, 7L), (5L, 9L), (1L, 4L), (3L, 8L))
+    val dirs = vecs.filter(col("vec_id").between(100, 103))
+      .orderBy(col("vec_id")).select(col("v"), col("nrm"))
+      .as[(Seq[Double], Double)].collect().toSeq
+    assert(dirs.size === pairs.size)
+    val model = pairs.zip(dirs).flatMap { case ((lo, hi), (v, n)) =>
+      Seq((lo, v, n), (hi, v, n)) }.sortBy(-_._1)
+    val cent = model.toDF("cid", "cv", "cn")
+    def setOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select(col("qid"), col("cid")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def smallerCidKept(got: Set[(Long, Long)]): Boolean =
+      got.forall { case (qid, cid) =>
+        pairs.forall { case (lo, hi) => cid != hi || got((qid, lo)) } }
+    def scored(score: Column => Column) = q.crossJoin(broadcast(cent))
+      .withColumn("score", score(
+        GraftFx.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
+    def windowTop(score: Column => Column, n: Long) = scored(score)
+      .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("score").desc, col("cid"))))
+      .filter(col("rn") <= n)
+    // odd budgets cut between the two cids of a direction
+    for (n <- Seq(1L, 3L, 5L)) {
+      val got = setOf(Llm.probesInRow(spark, q, model, n))
+      assert(got === setOf(windowTop(identity, n)),
+        s"pcos ranking diverged from the window rank at nprobe $n")
+      assert(smallerCidKept(got), s"pcos tie kept the larger cid: $got")
+    }
+    val micro: Column => Column = c => round(c * lit(1e6), 0).cast("bigint")
+    val (base, cap) = (1L, 3L)
+    val best = scored(micro).groupBy(col("qid"))
+      .agg(max(col("score")).as("best"))
+    val refAdaptive = setOf(windowTop(micro, cap)
+      .join(broadcast(best), "qid")
+      .filter(col("rn") <= base ||
+        col("best") - col("score") <= Llm.ivfAdaptiveMarginMicro))
+    val gotAdaptive =
+      setOf(Llm.probesAdaptiveInRow(spark, q, model, base, cap))
+    assert(gotAdaptive === refAdaptive,
+      "ipcos ranking diverged from the window rank")
+    assert(smallerCidKept(gotAdaptive),
+      s"ipcos tie kept the larger cid: $gotAdaptive")
   }
 }
