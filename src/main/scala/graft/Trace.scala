@@ -33,7 +33,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * `runMain graft.Trace plans <out.md> <dir> [query...]` writes the
   * formatted physical plans of the named queries, or of [[headline]]
   * when none are named, at local[4]; `PLANS.md` is its output on
-  * sf0.001. IndexStore locations are printed as `fp=<fp>`. */
+  * sf0.001. Each plan goes through [[masked]], so two runs over the
+  * same tree write the same file. */
 object Trace {
 
   /** The queries PLANS.md covers, each with what its plan evidences. */
@@ -232,14 +233,27 @@ object Trace {
     names.foreach { name =>
       val df = SparkEntry.query(name)(spark, dir)
       sb.append(s"\n## $name\n\n```\n")
-      // an IndexStore location's fingerprint covers the fixture files'
-      // mtimes, so a fresh checkout moves it while the plan stays put
-      sb.append(df.queryExecution.explainString(FormattedMode)
-        .replaceAll("fp=[0-9a-f]{32}", "fp=<fp>"))
+      sb.append(masked(df.queryExecution.explainString(FormattedMode)))
       sb.append("```\n")
     }
     sb.toString
   }
+
+  /** A formatted plan with what moves between two builds of the same
+    * plan masked: expression ids and plan ids (fresh per DataFrame
+    * build), an IndexStore location's fingerprint (it covers the
+    * fixture files' mtimes), the folded `current_timestamp()` literal,
+    * JVM lambda and object hashes, and RDD ids (a localCheckpoint's
+    * RDD is numbered by the SparkContext's RDD counter). */
+  def masked(plan: String): String = plan
+    .replaceAll("#\\d+", "#N")
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll("fp=[0-9a-f]{32}", "fp=<fp>")
+    .replaceAll("\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}(\\.\\d+)? AS ",
+      "<now> AS ")
+    .replaceAll("\\$\\$Lambda[^@\\s]*", "\\$\\$Lambda")
+    .replaceAll("@[0-9a-f]+\\b", "@<hash>")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
 
   def main(args: Array[String]): Unit = args.toList match {
     case "plans" :: out :: dir :: names =>

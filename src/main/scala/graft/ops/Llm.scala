@@ -300,6 +300,14 @@ object Llm extends LlmCurationOps with LlmAnnOps {
          sequence(1, greatest(size(ws) - 2, 1)),
          i -> concat_ws(' ', slice(ws, i, 3))))"""
 
+  /** The text admission gates' per-item stage: an incoming doc's
+    * shingle set, keeping `arr_ts` (a join back onto the feed would be
+    * a stream-stream self-join). */
+  private def shingleStage(fed: DataFrame): DataFrame =
+    fed.withColumn("ws", split(col("text"), " "))
+      .withColumn("in_sh", expr(shingleSetExpr))
+      .select(col("doc_id").as("in_id"), col("arr_ts"), col("in_sh"))
+
   /** [[shingled]] over an arbitrary documents frame (the incremental
     * path shingles only appended files). */
   private def shingledOf(docsDf: DataFrame): DataFrame =
@@ -416,61 +424,23 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * instead of accreting one row per flagged pair forever. */
   def nearDupAdmission(s: SparkSession, dir: String, incoming: DataFrame,
       decision: Boolean = false): DataFrame = {
-    val fed0 = if (incoming.columns.contains("arr_ts")) incoming
-      else incoming.withColumn("arr_ts", current_timestamp())
-    // the decision face's watermark is declared SHINGLE-adjacent (the
-    // Multimodal.gateDecision contract): the shingle projection keeps
-    // every row, so an all-novel trigger still advances event time
-    val fed =
-      if (decision && incoming.isStreaming)
-        fed0.withWatermark("arr_ts", "10 minutes")
-      else fed0
-    // map-only shingle projection that KEEPS arr_ts (a join back onto
-    // the feed would be a stream-stream self-join)
-    val inSh = fed
-      .withColumn("ws", split(col("text"), " "))
-      .withColumn("in_sh", expr(
-        """array_distinct(transform(
-             sequence(1, greatest(size(ws) - 2, 1)),
-             i -> concat_ws(' ', slice(ws, i, 3))))"""))
-      .select(col("doc_id").as("in_id"), col("arr_ts"), col("in_sh"))
-    val inBands = inSh.select(col("in_id"), col("arr_ts"), col("in_sh"),
-      posexplode(GraftFx.minhashBands(col("in_sh"))).as(Seq("b", "bh")))
     val corpus = minhashBandsIdx(s, dir)
     val corpSh = corpusShinglesIdx(s, dir)
       .select(col("doc_id").as("corpus_id"), col("shingles").as("sh2"))
-    val cand = inBands.join(corpus, Seq("b", "bh"))
-      .select(col("in_id"), col("arr_ts"), col("in_sh"),
-        col("doc_id").as("corpus_id"))
-    // the STREAMING decision face skips the pair dedup (min_by is
-    // duplicate-insensitive; multi-band collisions repeat a pair at
-    // most 12×) — one stateful operator on the plan; the batch
-    // decision keeps the dedup, which there is a plain exchange that
-    // pays for itself against the shingle-set join it feeds
-    val deduped =
-      if (decision && incoming.isStreaming) cand
-      else if (incoming.isStreaming)
-        cand.withWatermark("arr_ts", "10 minutes")
-          .dropDuplicatesWithinWatermark("in_id", "corpus_id")
-      else cand.dropDuplicates("in_id", "corpus_id")
-    val verified = deduped
-      .join(corpSh, "corpus_id")
-      .withColumn("common", GraftFx.intersectCount(col("in_sh"), col("sh2")))
-      .withColumn("jaccard", round(
-        col("common") /
-          (size(col("in_sh")) + size(col("sh2")) - col("common")), 6))
-      .filter(col("jaccard") >= 0.5)
-    // gate observability: the E167 counters (see Multimodal's
-    // containmentGate)
-    if (decision)
-      Multimodal.gateDecision(incoming.isStreaming, verified,
-        // highest Jaccard wins; ties break to the smallest corpus_id
-        ordering = struct((col("jaccard") * -1.0d).as("neg_j"),
-          col("corpus_id")),
-        outCols = Seq("corpus_id", "jaccard"))
-        .observe("text_gate_decisions", count(lit(1)).as("decisions"))
-    else verified.select(col("in_id"), col("corpus_id"), col("jaccard"))
-      .observe("text_gate", count(lit(1)).as("flags"))
+    Gates.text.admit(incoming, decision)(
+      stage = shingleStage,
+      candidates = Candidates.Probes(_
+        .select(col("in_id"), col("arr_ts"), col("in_sh"),
+          posexplode(GraftFx.minhashBands(col("in_sh"))).as(Seq("b", "bh")))
+        .join(corpus, Seq("b", "bh"))
+        .select(col("in_id"), col("arr_ts"), col("in_sh"),
+          col("doc_id").as("corpus_id"))),
+      verify = Verify.SetJoin(corpSh, _
+        .withColumn("common", GraftFx.intersectCount(col("in_sh"), col("sh2")))
+        .withColumn("jaccard", round(
+          col("common") /
+            (size(col("in_sh")) + size(col("sh2")) - col("common")), 6))
+        .filter(col("jaccard") >= 0.5)))
   }
 
   /** Cross-source contamination matrix: for every source pair, the
@@ -693,35 +663,28 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * artifacts — no corpus rescan per micro-batch. */
   def prefixJaccardAdmission(s: SparkSession, dir: String,
       incoming: DataFrame): DataFrame = {
-    val fed = if (incoming.columns.contains("arr_ts")) incoming
-      else incoming.withColumn("arr_ts", current_timestamp())
-    val inSh = fed
-      .withColumn("ws", split(col("text"), " "))
-      .withColumn("in_sh", expr(shingleSetExpr)) // the ONE kernel def
-      .select(col("doc_id").as("in_id"), col("arr_ts"), col("in_sh"))
-      .withColumn("sh", explode(col("in_sh")))
     val corpusPrefix = prefixIndexIdx(s, dir)
       .select(col("sh"), col("doc_id").as("corpus_id"))
-    val cand = inSh.join(corpusPrefix, "sh")
-      .filter(col("in_id") =!= col("corpus_id"))
-      .select(col("in_id"), col("arr_ts"), col("in_sh"), col("corpus_id"))
-    val deduped =
-      if (incoming.isStreaming)
-        cand.withWatermark("arr_ts", "10 minutes")
-          .dropDuplicatesWithinWatermark("in_id", "corpus_id")
-      else cand.dropDuplicates("in_id", "corpus_id")
     val corpusSets = corpusShinglesIdx(s, dir)
       .select(col("doc_id").as("corpus_id"), col("shingles"))
-    deduped
-      .join(corpusSets, "corpus_id")
-      .withColumn("common",
-        GraftFx.intersectCount(col("in_sh"), col("shingles")).cast("bigint"))
-      .withColumn("n1", size(col("in_sh")))
-      .withColumn("n2", size(col("shingles")))
-      .filter(col("common") * 3 >= col("n1") + col("n2"))
-      .select(col("in_id"), col("corpus_id"), col("common"),
-        round(col("common") / (col("n1") + col("n2") - col("common")), 6)
-          .as("jaccard"))
+    Gates.admit("prefix", Seq("corpus_id", "common", "jaccard"),
+      incoming, decide = None)(
+      stage = shingleStage,
+      candidates = Candidates.Probes(_
+        .withColumn("sh", explode(col("in_sh")))
+        .join(corpusPrefix, "sh")
+        .filter(col("in_id") =!= col("corpus_id"))
+        .select(col("in_id"), col("arr_ts"), col("in_sh"),
+          col("corpus_id"))),
+      verify = Verify.SetJoin(corpusSets, _
+        .withColumn("common",
+          GraftFx.intersectCount(col("in_sh"), col("shingles"))
+            .cast("bigint"))
+        .withColumn("n1", size(col("in_sh")))
+        .withColumn("n2", size(col("shingles")))
+        .filter(col("common") * 3 >= col("n1") + col("n2"))
+        .withColumn("jaccard",
+          round(col("common") / (col("n1") + col("n2") - col("common")), 6))))
   }
 
   /** Winnowed fingerprint projection (Schleimer–Wilkerson–Aiken 2003,
@@ -847,16 +810,6 @@ object Llm extends LlmCurationOps with LlmAnnOps {
       incoming: DataFrame): DataFrame = {
     val nDocs = docs(s, dir).count() // parquet-metadata count
     val cap = math.min(stopDfThreshold(nDocs), winnowDfCap)
-    val fed = if (incoming.columns.contains("arr_ts")) incoming
-      else incoming.withColumn("arr_ts", current_timestamp())
-    // map-only fingerprint projection that KEEPS arr_ts and the per-doc
-    // fingerprint set (a join back onto the feed would be stream-stream)
-    val inFps = fed
-      .withColumn("ws", split(col("text"), " "))
-      .withColumn("kg", expr(winnowKgramsExpr)) // the ONE kernel def
-      .withColumn("in_fps", expr(winnowMinsExpr))
-      .select(col("doc_id").as("in_id"), col("arr_ts"), col("in_fps"))
-      .withColumn("fp", explode(col("in_fps")))
     val corpus = winnowFpsIdx(s, dir)
     // the stop list and the per-doc set fold are PINNED at gate build
     // (localCheckpoint): Spark re-executes the STATIC side of a
@@ -880,21 +833,25 @@ object Llm extends LlmCurationOps with LlmAnnOps {
       .agg(collect_set(col("fp")).as("corpus_fps"))
       .select(col("doc_id").as("corpus_id"), col("corpus_fps"))
       .localCheckpoint()
-    val cand = inFps
-      .join(pruned.select(col("fp"), col("doc_id").as("corpus_id")), "fp")
-      .select(col("in_id"), col("arr_ts"), col("in_fps"), col("corpus_id"))
-    val deduped =
-      if (incoming.isStreaming)
-        cand.withWatermark("arr_ts", "10 minutes")
-          .dropDuplicatesWithinWatermark("in_id", "corpus_id")
-      else cand.dropDuplicates("in_id", "corpus_id")
-    deduped
-      .join(corpusSets, "corpus_id")
-      .withColumn("shared",
-        GraftFx.intersectCount(col("in_fps"), col("corpus_fps"))
-          .cast("bigint"))
-      .filter(col("shared") >= 2)
-      .select(col("in_id"), col("corpus_id"), col("shared"))
+    Gates.admit("winnow", Seq("corpus_id", "shared"),
+      incoming, decide = None)(
+      // map-only fingerprint projection that KEEPS arr_ts and the
+      // per-doc fingerprint set (a join back onto the feed would be
+      // stream-stream)
+      stage = _.withColumn("ws", split(col("text"), " "))
+        .withColumn("kg", expr(winnowKgramsExpr)) // the ONE kernel def
+        .withColumn("in_fps", expr(winnowMinsExpr))
+        .select(col("doc_id").as("in_id"), col("arr_ts"), col("in_fps")),
+      candidates = Candidates.Probes(_
+        .withColumn("fp", explode(col("in_fps")))
+        .join(pruned.select(col("fp"), col("doc_id").as("corpus_id")), "fp")
+        .select(col("in_id"), col("arr_ts"), col("in_fps"),
+          col("corpus_id"))),
+      verify = Verify.SetJoin(corpusSets, _
+        .withColumn("shared",
+          GraftFx.intersectCount(col("in_fps"), col("corpus_fps"))
+            .cast("bigint"))
+        .filter(col("shared") >= 2)))
   }
 
   /** Near-dup clusters (the step after X2's pair verification): connected

@@ -420,41 +420,24 @@ trait LlmAnnOps {
     * colliding candidates are exact-cosine-verified at ≥ 0.4. Unlike
     * the 12-band MinHash gate, a vector has exactly ONE bucket, so a
     * (incoming, corpus) pair can collide at most once — no dedup
-    * state, no watermark, zero streaming state at all. */
+    * state, so the audit face carries zero streaming state at all. */
   def vectorAdmission(s: SparkSession, dir: String, incoming: DataFrame,
       decision: Boolean = false): DataFrame = {
     val nPlanes = hyperplaneCount(Llm.embs(s, dir).count())
-    // the decision face needs an ingest clock for its event-time
-    // aggregation; the audit face is stateless and carries none
-    val fed =
-      if (!decision) incoming
-      else {
-        val f0 = if (incoming.columns.contains("arr_ts")) incoming
-          else incoming.withColumn("arr_ts", current_timestamp())
-        if (incoming.isStreaming) f0.withWatermark("arr_ts", "10 minutes")
-        else f0
-      }
-    val keep = if (decision) Seq(col("arr_ts")) else Nil
-    val inV = fed
-      .select(Seq(col("vec_id").as("in_id"),
-        col("embedding").cast("array<double>").as("iv")) ++ keep: _*)
-      .withColumn("inrm", sqrt(dot(col("iv"), col("iv"))))
-      .withColumn("bucket", hyperplaneBucket(hyperplanes(nPlanes), col("iv")))
-    val flags = inV.join(hyperplaneBucketsIdx(s, dir), "bucket")
-      .withColumn("cos", dot(col("iv"), col("v")) / (col("inrm") * col("nrm")))
-      .filter(col("cos") >= 0.4)
-      .select(Seq(col("in_id")) ++ keep ++ Seq(
-        col("vec_id").as("corpus_id"), round(col("cos"), 6).as("cos")): _*)
-    // gate observability: the E167 counters (see Multimodal's
-    // containmentGate)
-    if (decision)
-      Multimodal.gateDecision(incoming.isStreaming, flags,
-        // highest cosine wins; ties break to the smallest corpus_id
-        ordering = struct((col("cos") * -1.0d).as("neg_c"),
-          col("corpus_id")),
-        outCols = Seq("corpus_id", "cos"))
-        .observe("vector_gate_decisions", count(lit(1)).as("decisions"))
-    else flags.observe("vector_gate", count(lit(1)).as("flags"))
+    val corpus = hyperplaneBucketsIdx(s, dir)
+    Gates.vector.admit(incoming, decision)(
+      stage = _.select(col("vec_id").as("in_id"),
+          col("embedding").cast("array<double>").as("iv"), col("arr_ts"))
+        .withColumn("inrm", sqrt(dot(col("iv"), col("iv"))))
+        .withColumn("bucket",
+          hyperplaneBucket(hyperplanes(nPlanes), col("iv"))),
+      candidates = Candidates.Bucket(_.join(corpus, "bucket")),
+      verify = Verify.InRow(_
+        .withColumn("cos",
+          dot(col("iv"), col("v")) / (col("inrm") * col("nrm")))
+        .filter(col("cos") >= 0.4)
+        .select(col("in_id"), col("arr_ts"), col("vec_id").as("corpus_id"),
+          round(col("cos"), 6).as("cos"))))
   }
 
   /** Multi-probe LSH top-k (Lv, Josephson, Wang, Charikar & Li,

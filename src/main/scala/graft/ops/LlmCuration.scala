@@ -920,9 +920,7 @@ trait LlmCurationOps extends LlmAnnOps {
       .filter(col("keep") === 1)
     val deduped =
       if (incoming.isStreaming) {
-        val fed = if (kept.columns.contains("arr_ts")) kept
-          else kept.withColumn("arr_ts", current_timestamp())
-        val hashed = fed.withColumn("h", md5(col("text")))
+        val hashed = Gates.clocked(kept).withColumn("h", md5(col("text")))
         // plane 1: the persisted seen-corpus hash set, stream-static —
         // no state, re-resolved per micro-batch
         val novel = seenCorpus.fold(hashed)(seen =>
@@ -942,8 +940,7 @@ trait LlmCurationOps extends LlmAnnOps {
         // exactly as before. `arr_ts` is the declared output
         // event-time column — the legal stateful-chain form.
         val winMs = 10L * 60L * 1000L
-        novel
-          .withWatermark("arr_ts", "10 minutes")
+        Gates.watermarked(novel)
           .select(col("h"), col("source"),
             col("doc_id").cast("long").as("doc_id"),
             col("n_words").cast("bigint").as("n_tok"), col("arr_ts"))

@@ -970,8 +970,7 @@ object Multimodal {
       incoming: DataFrame, decision: Boolean = false): DataFrame = {
     val stop = audioStopFps(s, dir)
     val stopCol = typedLit(stop)
-    containmentGate(s, incoming, decision = decision,
-      metricsName = "audio_gate",
+    containmentGate(Gates.audio, s, incoming, decision,
       // codec chain captured at plan time, shipped in the closure
       sigsOf = audioFpSeqWith(AudioCodecs.registered),
       stop = stop,
@@ -981,7 +980,7 @@ object Multimodal {
         .select(col("media_id").as("corpus_id"),
           size(col("corpus_fps")).cast("bigint").as("n_corpus"),
           array_except(col("corpus_fps"), stopCol).as("corpus_rare")),
-      commonCol = "common_fps", thresholdMicro = 600000L)
+      thresholdMicro = 600000L)
   }
 
   /** Deterministic incoming-audio feed for [[audioAdmission]]
@@ -1057,171 +1056,60 @@ object Multimodal {
   case class InMediaRow(media_id: Long, payload: Array[Byte],
       arr_ts: java.sql.Timestamp)
 
-  // ---- the shared admission-gate core (r10 verdict task 7) ---------------
+  // ---- the set-containment kernel (media q160, audio q163) --------------
   //
-  // All three multimodal gates (media blocks q160, audio fingerprints
-  // q163, raster perceptual bands q165) are ONE shape: map-side
-  // signature extraction, bounded-stop-list prune on both sides,
-  // stream-static collide against a persisted artifact, watermark
-  // candidate dedup, in-row verify, observe-able quarantine. The shape
-  // lives here ONCE; each modality contributes its signature kernel,
-  // its artifacts, and its verify — so the E173/E174 static-side
-  // discipline (persisted or pinned folds, never per-trigger) is
-  // structural for the next modality, not re-audited prose.
+  // The multimodal gates run on the admission core [[Gates.admit]],
+  // which owns the feed clock, watermark, candidate dedup, decision
+  // tail and counters. Each modality contributes its signature
+  // kernel, its artifacts, and its verify — so the E173/E174
+  // static-side discipline (persisted or pinned folds, never
+  // per-trigger) is structural for the next modality, not re-audited
+  // prose.
 
-  /** Normalize an incoming gate feed: default the `arr_ts` ingest
-    * clock (batch backfills carry none) and slim to (id, payload,
-    * arr_ts). */
-  private def gateFeed(incoming: DataFrame, idCol: String): DataFrame =
-    (if (incoming.columns.contains("arr_ts")) incoming
-    else incoming.withColumn("arr_ts", current_timestamp()))
-      .select(col(idCol).cast("long").as(idCol),
-        col("payload"), col("arr_ts"))
-
-  /** The candidate-dedup stage shared by every gate: a (in_id,
-    * corpus_id) pair flags once — within the watermark window on the
-    * streaming face (bounded state, RestartSpec-proven recovery),
-    * exactly on the batch face. */
-  private def gateDedup(streaming: Boolean, cand0: DataFrame): DataFrame =
-    if (streaming)
-      cand0.withWatermark("arr_ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("in_id", "corpus_id")
-    else cand0.dropDuplicates("in_id", "corpus_id")
-
-  /** The DECISION face shared by every gate (r11 missing #2): ONE row
-    * per incoming item — the flag bit plus its best evidence — where
-    * the all-pairs face emits every (in_id, corpus_id) flag. The
-    * all-pairs face is the right AUDIT view, but its row count per
-    * incoming item grows with the corpus-side duplicate mass (at the
-    * 100× decade the gates spend their time materializing flag rows,
-    * not finding them), which is the wrong default for a crawler loop
-    * that needs an admit/reject per item: this face is O(incoming)
-    * output BY CONSTRUCTION at any corpus.
-    *
-    * `flags` is the VERIFIED candidate relation WITH `arr_ts`,
-    * PRE-dedup: `min_by` is duplicate-insensitive, so the pair-dedup
-    * stage (whose streaming form is its own stateful operator) is
-    * skipped entirely — the streaming face runs exactly ONE stateful
-    * operator, the event-time aggregation itself. Every candidate
-    * pair of one incoming row carries that row's own `arr_ts`, so
-    * grouping by (arr_ts, in_id) closes one group per item when the
-    * watermark passes — the formal bound on "all evidence for this
-    * item has been seen". `ordering` picks the winner (smallest
-    * wins — negate score columns for max semantics); `outCols` are
-    * carried from the winning row.
-    *
-    * DELIVERY SEMANTICS: the streaming face decides per DELIVERY —
-    * a redelivered item (same id, later arrival inside the watermark)
-    * opens a fresh (arr_ts, in_id) group and gets a fresh decision,
-    * which is CONTENT-IDENTICAL against unchanged corpus artifacts
-    * (RestartSpec pins both properties), so a crawler loop keyed on
-    * in_id upserts idempotently. The batch face is per-ITEM — a batch
-    * frame has no delivery axis. Suppressing redeliveries entirely
-    * would re-introduce the dedup stateful operator this face exists
-    * to avoid; the audit faces carry that dedup where it pays for
-    * itself.
-    *
-    * The streaming caller must have declared the watermark UPSTREAM,
-    * right after the decode stage — not here: candidates that verify
-    * below threshold are filtered out before this aggregation, and a
-    * watermark declared after the filter would never advance on a
-    * trigger of all-novel rows, stalling every open group. Decoded
-    * rows reach the decode-adjacent watermark node whether or not
-    * they ever become candidates. */
-  private[ops] def gateDecision(streaming: Boolean, flags: DataFrame,
-      ordering: Column, outCols: Seq[String]): DataFrame = {
-    val best = min_by(struct(outCols.map(col): _*), ordering).as("best")
-    val agg =
-      if (streaming)
-        flags.groupBy(col("arr_ts"), col("in_id")).agg(best)
-      else flags.groupBy(col("in_id")).agg(best)
-    agg.select(col("in_id") +: outCols.map(c => col(s"best.$c").as(c)): _*)
-  }
-
-  /** The set-containment admission core (media q160, audio q163; the
-    * raster gate q165 shares [[gateFeed]]/[[gateDedup]] but verifies
-    * with an in-row Hamming distance): incoming payloads decode
-    * MAP-SIDE to signature arrays via `sigsOf`, the collected bounded
-    * stop list prunes both sides, surviving signatures collide
-    * stream-static against `posts` (the persisted posting artifact,
-    * normalized to (sig, corpus_id)), candidates dedup, and the
-    * verify is an in-row `array_intersect` against `corpusSets` (the
+  /** The set-containment kernel on `gate`'s admission core: incoming
+    * payloads decode MAP-SIDE to signature arrays via `sigsOf`, the
+    * collected bounded stop list prunes both sides, surviving
+    * signatures collide stream-static against `posts` (the persisted
+    * posting artifact, normalized to (sig, corpus_id)), and the verify
+    * is an in-row `array_intersect` against `corpusSets` (the
     * persisted per-media signature sets, normalized to (corpus_id,
     * n_corpus, corpus_rare) — per trigger a columnar artifact scan
-    * plus map-only array ops, never a re-fold). Emits (in_id,
-    * corpus_id, <commonCol>, n_in, n_corpus, containment_micro ≥
+    * plus map-only array ops, never a re-fold). The gate's second
+    * evidence column is the common-signature count. Emits (in_id,
+    * corpus_id, <common>, n_in, n_corpus, containment_micro ≥
     * threshold). */
-  private def containmentGate(s: SparkSession, incoming: DataFrame,
+  private def containmentGate(gate: GateSpec, s: SparkSession,
+      incoming: DataFrame, decision: Boolean,
       sigsOf: Array[Byte] => Seq[String], stop: Seq[String],
       posts: DataFrame, corpusSets: DataFrame,
-      commonCol: String, thresholdMicro: Long,
-      decision: Boolean = false,
-      metricsName: String = "media_gate"): DataFrame = {
+      thresholdMicro: Long): DataFrame = {
     import s.implicits._
-    val dec0 = gateFeed(incoming, "media_id").as[InMediaRow]
-      .mapPartitions(rows =>
-        rows.map(r => (r.media_id, r.arr_ts, sigsOf(r.payload))))
-      .toDF("in_id", "arr_ts", "in_all")
-    // the decision face's watermark is declared HERE, decode-adjacent
-    // (see gateDecision's contract); the all-pairs face declares its
-    // own inside gateDedup
-    val dec =
-      if (decision && incoming.isStreaming)
-        dec0.withWatermark("arr_ts", "10 minutes")
-      else dec0
+    val commonCol = gate.evidence(1)
     val stopCol = typedLit(stop)
-    val inR = dec
-      .withColumn("n_in", size(col("in_all")).cast("bigint"))
-      .withColumn("in_sigs", array_except(col("in_all"), stopCol))
     val postsRare =
       if (stop.isEmpty) posts
       else posts.filter(!col("sig").isin(stop: _*))
-    val cand0 = inR
-      .select(col("in_id"), col("arr_ts"), col("in_sigs"), col("n_in"),
-        explode(col("in_sigs")).as("sig"))
-      .join(postsRare, "sig")
-      .select(col("in_id"), col("arr_ts"), col("in_sigs"), col("n_in"),
-        col("corpus_id"))
-    // the all-pairs face dedups candidates BEFORE the set join (the
-    // dedup trims the join fan-in). The decision face skips the dedup
-    // ONLY where it must — the streaming plan, where a second
-    // stateful operator is the cost (min_by is duplicate-insensitive,
-    // and the multi-sig fan-in is bounded by the per-item signature
-    // cap); the batch decision keeps the dedup, because there it is a
-    // plain exchange that pays for itself against the corpus-set join
-    // it feeds
-    val cand =
-      if (!decision) gateDedup(incoming.isStreaming, cand0)
-      else if (incoming.isStreaming) cand0
-      else cand0.dropDuplicates("in_id", "corpus_id")
-    val verified = cand
-      .join(corpusSets, "corpus_id")
-      .withColumn(commonCol,
-        graft.functions.GraftFx.intersectCount(
-          col("in_sigs"), col("corpus_rare")).cast("bigint"))
-      .withColumn("containment_micro",
-        expr(s"$commonCol * 1000000L div least(n_in, n_corpus)"))
-      .filter(col("containment_micro") >= thresholdMicro)
-    // GATE OBSERVABILITY (the E167 discipline, extended from the mix
-    // gates to every admission gate): per-micro-batch flag/decision
-    // counters ride the query's own observedMetrics (a CollectMetrics
-    // node — map-side accumulators, zero extra pass), so a corpus
-    // under duplicate attack shows on the monitoring plane the moment
-    // the batch commits, without anyone scanning the flag output.
-    if (decision)
-      gateDecision(incoming.isStreaming, verified,
-        // highest containment wins; ties break to the smallest
-        // corpus_id for determinism
-        ordering = struct((col("containment_micro") * -1L)
-          .as("neg_cm"), col("corpus_id")),
-        outCols = Seq("corpus_id", commonCol, "n_in", "n_corpus",
-          "containment_micro"))
-        .observe(s"${metricsName}_decisions",
-          count(lit(1)).as("decisions"))
-    else verified
-      .select(col("in_id"), col("corpus_id"), col(commonCol),
-        col("n_in"), col("n_corpus"), col("containment_micro"))
-      .observe(metricsName, count(lit(1)).as("flags"))
+    gate.admit(incoming, decision)(
+      stage = _.select(col("media_id").cast("long").as("media_id"),
+          col("payload"), col("arr_ts")).as[InMediaRow]
+        .mapPartitions(rows =>
+          rows.map(r => (r.media_id, r.arr_ts, sigsOf(r.payload))))
+        .toDF("in_id", "arr_ts", "in_all")
+        .withColumn("n_in", size(col("in_all")).cast("bigint"))
+        .withColumn("in_sigs", array_except(col("in_all"), stopCol)),
+      candidates = Candidates.Probes(_
+        .select(col("in_id"), col("arr_ts"), col("in_sigs"), col("n_in"),
+          explode(col("in_sigs")).as("sig"))
+        .join(postsRare, "sig")
+        .select(col("in_id"), col("arr_ts"), col("in_sigs"), col("n_in"),
+          col("corpus_id"))),
+      verify = Verify.SetJoin(corpusSets, _
+        .withColumn(commonCol,
+          graft.functions.GraftFx.intersectCount(
+            col("in_sigs"), col("corpus_rare")).cast("bigint"))
+        .withColumn("containment_micro",
+          expr(s"$commonCol * 1000000L div least(n_in, n_corpus)"))
+        .filter(col("containment_micro") >= thresholdMicro)))
   }
 
   /** The corpus-relative stop-block list, COLLECTED: ≤ 5 × blockCap =
@@ -1288,7 +1176,7 @@ object Multimodal {
       incoming: DataFrame, decision: Boolean = false): DataFrame = {
     val stop = mediaStopBlocks(s, dir)
     val stopCol = typedLit(stop)
-    containmentGate(s, incoming, decision = decision,
+    containmentGate(Gates.media, s, incoming, decision,
       sigsOf = p => {
         val md = java.security.MessageDigest.getInstance("MD5")
         blockSigsOf(md, p, parseContainer(p)._4).distinct
@@ -1304,7 +1192,7 @@ object Multimodal {
         .select(col("media_id").as("corpus_id"),
           size(col("corpus_blocks")).cast("bigint").as("n_corpus"),
           array_except(col("corpus_blocks"), stopCol).as("corpus_rare")),
-      commonCol = "common_blocks", thresholdMicro = 800000L)
+      thresholdMicro = 800000L)
   }
 
   /** Deterministic incoming-media feed for [[mediaAdmission]]
@@ -2218,16 +2106,6 @@ object Multimodal {
   def rasterAdmission(s: SparkSession, dir: String,
       incoming: DataFrame, decision: Boolean = false): DataFrame = {
     import s.implicits._
-    val dec0 = gateFeed(incoming, "raster_id").as[InRasterRow]
-      .mapPartitions(rows =>
-        rows.flatMap(r => rasterAHashAnyOf(r.payload).iterator.map(hsh =>
-          (r.raster_id, r.arr_ts, hsh))))
-      .toDF("in_id", "arr_ts", "in_hash")
-    // decision face: decode-adjacent watermark (gateDecision contract)
-    val dec =
-      if (decision && incoming.isStreaming)
-        dec0.withWatermark("arr_ts", "10 minutes")
-      else dec0
     val hashes = rasterAHashIdx(s, dir)
     def bandsOf(df: DataFrame, idc: String, hc: String): DataFrame =
       df.select(col("*"), explode(expr(rasterBandExpr(hc))).as("e"))
@@ -2241,33 +2119,28 @@ object Multimodal {
     val stop = rasterBandStops(s, dir)
     val corpusRare = corpusBands
       .join(broadcast(stop), Seq("b", "bh"), "left_anti")
-    val inBands = dec.select(col("in_id"), col("arr_ts"), col("in_hash"),
-      explode(expr(rasterBandExpr("in_hash"))).as("e"))
-      .select(col("in_id"), col("arr_ts"), col("in_hash"),
-        col("e.b").as("b"), col("e.bh").as("bh"))
-      .join(broadcast(stop), Seq("b", "bh"), "left_anti")
-    val cand0 = inBands.join(corpusRare, Seq("b", "bh"))
-      .select(col("in_id"), col("arr_ts"), col("in_hash"),
-        col("corpus_id"), col("corpus_hash"))
-    // the decision face skips the pair dedup (min_by is
-    // duplicate-insensitive; a pair matching on both bands appears
-    // at most twice) — one stateful operator on the streaming plan
-    val cand =
-      if (decision) cand0 else gateDedup(incoming.isStreaming, cand0)
-    val verified = cand
-      .withColumn("hamming",
-        bit_count(col("in_hash").bitwiseXOR(col("corpus_hash")))
-          .cast("bigint"))
-      .filter(col("hamming") <= 1)
-    // gate observability: the E167 counters (see containmentGate)
-    if (decision)
-      gateDecision(incoming.isStreaming, verified,
-        // smallest Hamming wins; ties break to the smallest corpus_id
-        ordering = struct(col("hamming"), col("corpus_id")),
-        outCols = Seq("corpus_id", "hamming"))
-        .observe("raster_gate_decisions", count(lit(1)).as("decisions"))
-    else verified.select(col("in_id"), col("corpus_id"), col("hamming"))
-      .observe("raster_gate", count(lit(1)).as("flags"))
+    Gates.raster.admit(incoming, decision)(
+      stage = _.select(col("raster_id").cast("long").as("raster_id"),
+          col("payload"), col("arr_ts")).as[InRasterRow]
+        .mapPartitions(rows =>
+          rows.flatMap(r => rasterAHashAnyOf(r.payload).iterator.map(hsh =>
+            (r.raster_id, r.arr_ts, hsh))))
+        .toDF("in_id", "arr_ts", "in_hash"),
+      // a pair matching on both bands appears twice
+      candidates = Candidates.Probes(_
+        .select(col("in_id"), col("arr_ts"), col("in_hash"),
+          explode(expr(rasterBandExpr("in_hash"))).as("e"))
+        .select(col("in_id"), col("arr_ts"), col("in_hash"),
+          col("e.b").as("b"), col("e.bh").as("bh"))
+        .join(broadcast(stop), Seq("b", "bh"), "left_anti")
+        .join(corpusRare, Seq("b", "bh"))
+        .select(col("in_id"), col("arr_ts"), col("in_hash"),
+          col("corpus_id"), col("corpus_hash"))),
+      verify = Verify.InRow(_
+        .withColumn("hamming",
+          bit_count(col("in_hash").bitwiseXOR(col("corpus_hash")))
+            .cast("bigint"))
+        .filter(col("hamming") <= 1)))
   }
 
   /** Deterministic incoming-raster feed for [[rasterAdmission]]

@@ -241,4 +241,25 @@ class BenchSpec extends AnyFunSuite {
     }
     assert(hits.map(_.toString) === Seq("src/main/scala/graft/Session.scala"))
   }
+
+  test("the gate face policy is spelled only in graft.ops.Gates") {
+    val policy = Seq(
+      "the gate watermark" -> """withWatermark\("arr_ts"""",
+      "the candidate dedup" ->
+        """dropDuplicates\w*\("in_id",\s*"corpus_id"\)""",
+      "the ingest clock" ->
+        """withColumn\("arr_ts",\s*current_timestamp\(\)\)""")
+    val root = Paths.get("src/main/scala/graft/ops")
+    val files = Files.walk(root)
+    val sources =
+      try files.iterator.asScala.toList
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> Files.readString(p))
+      finally files.close()
+    policy.foreach { case (what, pattern) =>
+      val hits = sources.filter(f => pattern.r.findFirstIn(f._2).nonEmpty)
+      assert(hits.map(_._1) === Seq("src/main/scala/graft/ops/Gates.scala"),
+        s"$what may appear only in Gates.scala")
+    }
+  }
 }

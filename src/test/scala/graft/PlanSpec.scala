@@ -817,22 +817,21 @@ class PlanSpec extends SparkSuite {
 
   test("Trace plans: each section is its query's formatted explain") {
     import org.apache.spark.sql.execution.FormattedMode
-    // expression ids and plan ids are fresh per DataFrame build, and
-    // an IndexStore location's fingerprint moves with the fixture files
-    def mask(s: String): String =
-      s.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
-        .replaceAll("fp=[0-9a-f]{32}", "fp=<fp>")
     val names = Seq("q01_flagship_us_customers", "q02_pricing_summary")
     val sections = Trace.plans(spark, sf, names).split("\n## ").toSeq.tail
     assert(sections.map(_.takeWhile(_ != '\n')) === names)
     sections.zip(names).foreach { case (section, name) =>
       val body = section.substring(section.indexOf("```\n") + 4,
         section.lastIndexOf("```"))
-      assert(mask(body) === mask(SparkEntry.query(name)(spark, sf)
-        .queryExecution.explainString(FormattedMode)))
+      assert(Trace.masked(body) === Trace.masked(
+        SparkEntry.query(name)(spark, sf)
+          .queryExecution.explainString(FormattedMode)))
     }
     val indexed = Trace.plans(spark, sf, Seq("q96_pq_topk"))
     assert(indexed.contains("/fp=<fp>"), indexed)
     assert("fp=[0-9a-f]{32}".r.findFirstIn(indexed).isEmpty, indexed)
+    // two regenerations of the same tree write the same text
+    val twice = Seq("q01_flagship_us_customers", "q96_pq_topk")
+    assert(Trace.plans(spark, sf, twice) === Trace.plans(spark, sf, twice))
   }
 }

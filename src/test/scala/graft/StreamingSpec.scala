@@ -1141,6 +1141,75 @@ class StreamingSpec extends SparkSuite {
       graft.ops.Gates.media.backfill(s, sf).collect())
   }
 
+  test("vector, media and audio admission DECISION faces under " +
+    "readStream: the stream equals the batch face with exactly one " +
+    "stateful operator and no dedup, and a flag-nothing sentinel " +
+    "closes the open groups") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    // streams `feed` in two event-time chunks, then `sentinel` far in
+    // the future; returns the decision rows
+    def streamed[T](gate: graft.ops.GateSpec, idCol: String,
+        payloadCol: String, in: MemoryStream[(Long, T, Timestamp)],
+        feed: Seq[(Long, T)], sentinel: T): Set[Seq[Any]] = {
+      val q = gate.kernel(s, sf,
+        in.toDF().toDF(idCol, payloadCol, "arr_ts"), true)
+        .writeStream.format("memory").queryName(s"${gate.name}_dec_out")
+        .outputMode("append").start()
+      withQuery(q) {
+        feed.grouped(math.max(feed.length / 2, 1)).zipWithIndex.foreach {
+          case (chunk, i) =>
+            in.addData(chunk.map(c => (c._1, c._2, ts((i + 1) * 3600L))): _*)
+            q.processAllAvailable()
+        }
+        in.addData((999999999L, sentinel, ts(10000000L)))
+        q.processAllAvailable()
+        val microPlan = org.apache.spark.sql.GraftBridge.lastExecutedPlan(q)
+        assert(!microPlan.contains("DropDuplicates"),
+          s"${gate.name}: the decision face must not chain a dedup")
+        assert(q.lastProgress.stateOperators.length === 1,
+          s"${gate.name}: the decision plan must run EXACTLY one " +
+            "stateful operator")
+        s.table(s"${gate.name}_dec_out").collect().map(_.toSeq).toSet
+      }
+    }
+    def check(gate: graft.ops.GateSpec, got: Set[Seq[Any]]): Unit = {
+      val batch = gate.decision(s, sf).collect().map(_.toSeq).toSet
+      assert(got === batch,
+        s"${gate.name}: streamed decisions must equal the batch face " +
+          s"(missing=${(batch -- got).take(3)}, " +
+          s"extra=${(got -- batch).take(3)})")
+      assert(got.nonEmpty, s"${gate.name}: the planted copies must decide")
+    }
+    // every replayed vector collides with its source; the sentinel is
+    // a pseudo-random vector far below cos 0.4 against its bucket
+    val vectors = graft.ops.Gates.vector.incoming(s, sf).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    val dims = vectors.head._2.length
+    check(graft.ops.Gates.vector, streamed(graft.ops.Gates.vector,
+      "vec_id", "embedding", MemoryStream[(Long, Seq[Float], Timestamp)],
+      vectors, Seq.tabulate(dims)(d =>
+        ((d * 2654435761L % 1000003L).toFloat / 1000003f) - 0.5f)))
+    // media and audio: the sentinel re-sends a feed payload that the
+    // batch face does not decide and that carries signatures (an audio
+    // clip shorter than four frames has no fingerprints, and the
+    // candidate join's inferred non-empty filter drops it below the
+    // watermark)
+    Seq[(graft.ops.GateSpec, Array[Byte] => Boolean)](
+      graft.ops.Gates.media -> (_ => true),
+      graft.ops.Gates.audio -> (graft.ops.Multimodal.audioFpSeqOf(_).nonEmpty)
+    ).foreach { case (gate, signed) =>
+      val feed = gate.incoming(s, sf).collect()
+        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).sortBy(_._1).toSeq
+      val decided = gate.decision(s, sf).collect().map(_.getLong(0)).toSet
+      val quiet = feed.find(f => !decided.contains(f._1) && signed(f._2))
+        .getOrElse(fail(s"${gate.name}: the feed must carry novel items"))
+      check(gate, streamed(gate, "media_id", "payload",
+        MemoryStream[(Long, Array[Byte], Timestamp)], feed, quiet._2))
+    }
+  }
+
   test("exact-Jaccard admission: a streamed feed gated against the " +
     "persisted prefix index equals the batch plan; exact copies flag " +
     "at J=1, novel docs pass — zero recall loss, unlike the banded gate") {
