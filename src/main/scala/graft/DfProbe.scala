@@ -20,17 +20,16 @@ import org.apache.spark.sql.functions._
   * next such defect a one-command in-tree diagnosis instead of a
   * judge finding.
   *
-  * Families: media content blocks (q157/q160), audio energy
-  * fingerprints (q162/q163), raster perceptual bands (q164/q165),
-  * winnowing fingerprints (q142), MinHash bands (q30 — no engine
-  * stop list: LSH candidates ride band df directly, so its natural
-  * df IS the health signal). `stop_rows` counts the keys the
-  * corpus-relative threshold prunes — bounded by construction;
-  * `keys` and the df stats describe what survives.
+  * Families: the [[graft.ops.SigFamilies]] registry — media content
+  * blocks (q157/q160), audio energy fingerprints (q162/q163), raster
+  * perceptual bands (q164/q165), winnowing fingerprints (q142),
+  * MinHash bands (q30 — no engine stop list: LSH candidates ride band
+  * df directly, so its natural df IS the health signal). `stop_rows`
+  * counts the keys the family's corpus-relative threshold prunes —
+  * bounded by construction; `keys` and the df stats describe what
+  * survives.
   */
 object DfProbe {
-  private case class Fam(name: String, posts: DataFrame,
-      keyCols: Seq[String], threshold: Long)
 
   /** One family's natural-df snapshot at one corpus state. */
   case class DfStat(family: String, keys: Long, postings: Long,
@@ -41,9 +40,7 @@ object DfProbe {
     * any family (including a test-planted one). */
   def statsOf(name: String, posts: DataFrame, keyCols: Seq[String],
       threshold: Long): DfStat = {
-    val df = posts
-      .groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("df"))
+    val df = graft.ops.SigFamily.dfOf(posts, keyCols)
     val stopRows =
       if (threshold == Long.MaxValue) 0L
       else df.filter(col("df") > threshold).count()
@@ -62,37 +59,9 @@ object DfProbe {
   }
 
   /** All five fingerprint families' stats over one fixture dir. */
-  def probe(spark: SparkSession, dir: String): Seq[DfStat] = {
-    import graft.ops.{Llm, Multimodal}
-    val nDocs = Tables.load(spark, dir, "documents").count()
-    val fams = Seq(
-      Fam("media_blocks",
-        Multimodal.mediaBlockPostingsIdx(spark, dir),
-        Seq("block_hash"),
-        Multimodal.mediaBlockDfThreshold(
-          Multimodal.mediaCorpus(spark, dir).count())),
-      Fam("audio_fps",
-        Multimodal.audioFpIdx(spark, dir),
-        Seq("fp"),
-        Multimodal.audioFpDfThreshold(
-          Multimodal.nAudioCorpus(spark, dir))),
-      Fam("raster_bands",
-        Multimodal.rasterAHashIdx(spark, dir)
-          .select(explode(expr(
-            Multimodal.rasterBandExpr("ahash"))).as("e"))
-          .select(col("e.b").as("b"), col("e.bh").as("bh")),
-        Seq("b", "bh"),
-        math.max(64L, Multimodal.nRasterCorpus(spark, dir) / 5)),
-      Fam("winnow_fps",
-        Llm.winnowFpsIdx(spark, dir),
-        Seq("fp"),
-        math.min(Llm.stopDfThreshold(nDocs), Llm.winnowDfCap)),
-      Fam("minhash_bands",
-        Llm.minhashBandsIdx(spark, dir),
-        Seq("b", "bh"),
-        Long.MaxValue))
-    fams.map(f => statsOf(f.name, f.posts, f.keyCols, f.threshold))
-  }
+  def probe(spark: SparkSession, dir: String): Seq[DfStat] =
+    graft.ops.SigFamilies.all.map(f => statsOf(f.name,
+      f.postings(spark, dir), f.keys, f.threshold(spark, dir)))
 
   /** The SATURATION GUARD (r11 missing #3 — the probe as a gate, not
     * a manual runMain): given the same families probed at consecutive

@@ -243,8 +243,9 @@ object Trace {
     * plan masked: expression ids and plan ids (fresh per DataFrame
     * build), an IndexStore location's fingerprint (it covers the
     * fixture files' mtimes), the folded `current_timestamp()` literal,
-    * JVM lambda and object hashes, and RDD ids (a localCheckpoint's
-    * RDD is numbered by the SparkContext's RDD counter). */
+    * JVM lambda and object hashes, RDD ids (a localCheckpoint's RDD is
+    * numbered by the SparkContext's RDD counter) and the source line of
+    * an RDD's call site (it moves with any edit above the call). */
   def masked(plan: String): String = plan
     .replaceAll("#\\d+", "#N")
     .replaceAll("plan_id=\\d+", "plan_id=N")
@@ -254,6 +255,7 @@ object Trace {
     .replaceAll("\\$\\$Lambda[^@\\s]*", "\\$\\$Lambda")
     .replaceAll("@[0-9a-f]+\\b", "@<hash>")
     .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+    .replaceAll("\\.scala:\\d+", ".scala:N")
 
   def main(args: Array[String]): Unit = args.toList match {
     case "plans" :: out :: dir :: names =>

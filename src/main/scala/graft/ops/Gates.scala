@@ -285,10 +285,11 @@ object Gates {
     // are filtered out before the decision aggregation, and a watermark
     // declared there would never advance on a trigger of all-novel
     // items, stalling every open group. A staged item reaches this node
-    // whether or not it ever verifies — but the optimizer may push a
-    // filter that does not read arr_ts below it: the candidate join's
-    // inferred non-empty filter drops a media or audio item with no
-    // signatures here.
+    // whether or not it ever verifies, as long as the candidate join
+    // lets the optimizer infer no filter that it can push below it (a
+    // filter that does not read arr_ts passes a watermark): an inner
+    // explode of an item's signatures infers a non-empty filter, so
+    // the set-containment kernel explodes outer.
     val fed =
       if (decide.nonEmpty && streaming) watermarked(staged) else staged
     val cand = candidates.join(fed)

@@ -185,7 +185,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * the Jaccard (q33) and containment (q68) pair pipelines.
     *
     * Shape decisions, all scale-driven:
-    *  - Stop-shingles (df > [[stopDfThreshold]]) are few by
+    *  - Stop-shingles (df > the relative threshold, floor 100) are few by
     *    construction — broadcast the SMALL exclusion list and
     *    anti-join, instead of equi-joining the O(corpus) rare set; at
     *    100 TB the stop list stays driver-sized.
@@ -221,20 +221,11 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     graft.observe.IndexStore.readOrBuild(s, "sized_postings", docsSrc(dir))(
       computeSizedPostings(s, dir))
 
-  /** Stop-shingle threshold as a document-frequency FRACTION of the
-    * corpus (a shingle in > 20% of documents is "stop"), floored at an
-    * absolute 100 so tiny fixtures keep stable semantics. An absolute
-    * constant alone silently redefines Jaccard as the corpus grows: at
-    * 10⁹ docs `df > 100` prunes essentially every shingle. The fraction
-    * keeps "ubiquitous" meaning ubiquitous at any scale; posting lists
-    * between the floor and the fraction are vanishing for natural-text
-    * 3-gram df (Zipf-squared decay), and the LSH pipeline (q30) — whose
-    * candidate volume is independent of df — remains the designated
-    * pair generator at 100 TB. The DuckDB oracles embed the same
-    * formula, so both engines derive the threshold from the corpus. */
-  private[graft] def stopDfThreshold(nDocs: Long): Long =
-    math.max(100L, nDocs / 5)
-
+  /** The stop-shingle threshold: [[SigFamily.relative]] floored at
+    * 100. Posting lists between the floor and the fraction are
+    * vanishing for natural-text 3-gram df (Zipf-squared decay), and the
+    * LSH pipeline (q30) — whose candidate volume is independent of df —
+    * remains the designated pair generator at 100 TB. */
   private val stopDfThresholdSql: String =
     "greatest(100, (SELECT count(*) // 5 FROM documents))"
 
@@ -242,9 +233,8 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     val nDocs = docs(s, dir).count() // parquet-metadata count: index-build stat
     val inv = corpusShinglesIdx(s, dir) // shared artifact, not a re-tokenize
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val stops = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > stopDfThreshold(nDocs))
-      .select(col("sh"))
+    val stops =
+      SigFamily.stopsOf(inv, Seq("sh"), SigFamily.relative(100L)(nDocs))
     val pruned = inv.join(broadcast(stops), Seq("sh"), "left_anti")
       .localCheckpoint()
     val sizes = pruned.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -447,7 +437,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * number of rare (stop-pruned) shingles they share — the "is my
     * benchmark source leaking into my training sources" view that
     * doc-level pair mining (q33) can't give directly. Same corpus-
-    * relative [[stopDfThreshold]] as the pair pipelines, so
+    * relative stop threshold as the pair pipelines, so
     * "shared" means shared RARE content, not boilerplate.
     *
     * Plan: reads the PERSISTED [[sizedPostings]] index (which holds
@@ -510,10 +500,10 @@ object Llm extends LlmCurationOps with LlmAnnOps {
 
   /** Exact n-gram Jaccard near-dup via inverted shingle index: explode
     * shingles, drop stop-shingles above the corpus-relative
-    * [[stopDfThreshold]] (skew guard — at 100 TB a handful of
-    * ubiquitous shingles would otherwise square the join; Jaccard is
-    * then defined over the pruned sets, standard stop-shingle
-    * practice), then group the index by shingle and emit doc pairs from
+    * threshold ([[SigFamily.relative]], floor 100; skew guard — at
+    * 100 TB a handful of ubiquitous shingles would otherwise square
+    * the join; Jaccard is then defined over the pruned sets, standard
+    * stop-shingle practice), then group the index by shingle and emit doc pairs from
     * each posting list map-side — ONE shuffle of the index instead of
     * the two a self-join would plan, with the pair blow-up bounded by
     * the stop-shingle cap. Intersection sizes are a count over the emitted
@@ -581,7 +571,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
       val sets = corpusShinglesIdx(s, dir)
       val inv = sets.select(col("doc_id"),
         explode(col("shingles")).as("sh"))
-      val dfreq = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      val dfreq = SigFamily.dfOf(inv, Seq("sh"))
       val sizes = sets.select(col("doc_id"), size(col("shingles")).as("n"))
       val wOrd = Window.partitionBy(col("doc_id"))
         .orderBy(col("df"), col("sh"))
@@ -737,11 +727,12 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * any real near-dup relation — such lists are dropped here and the
     * LSH/banded pipeline (q30), whose candidate volume is df-
     * independent, remains the designated pair generator for them. An
-    * ABSOLUTE bound (unlike the corpus-fraction [[stopDfThreshold]],
+    * ABSOLUTE bound (unlike the corpus-fraction stop threshold,
     * which still admits nDocs/5-sized lists at scale): with it the
     * widest emitted row is C(256, 2) pair structs no matter the
     * corpus size. The effective cap is
-    * `least(stopDfThreshold, 256)` on both engines. */
+    * `least(max(100, nDocs / 5), 256)` on both engines
+    * ([[SigFamilies.winnowFps]]). */
   private[graft] val winnowDfCap = 256L
 
   /** q142: winnowing fingerprint pairs — docs sharing ≥ 2 winnowed
@@ -756,20 +747,15 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * ever; both consumers below are parquet scans of 16 B keys). The
     * posting build follows the q33 [[sizedPostings]] discipline —
     * ubiquitous fingerprints (df past the ABSOLUTE [[winnowDfCap]])
-    * are identified by a cheap partial-agg count and anti-joined away
-    * as a broadcast stop list BEFORE any doc list is collected, so
+    * are the persisted `winnow_stop_fps` list, anti-joined away as a
+    * broadcast BEFORE any doc list is collected, so
     * both the collect buffer and the in-row pair emission are bounded
     * by the constant cap (≤ C(256,2) structs per row), and the
     * emission is one shuffle of the pruned index, never a self-join. */
   def winnowingPairs(s: SparkSession, dir: String): DataFrame = {
-    val nDocs = docs(s, dir).count() // parquet-metadata count
-    val cap = math.min(stopDfThreshold(nDocs), winnowDfCap)
-    val fps = winnowFpsIdx(s, dir)
-    val stops = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap)
-      .select(col("fp"))
-    val postings = fps
-      .join(broadcast(stops), Seq("fp"), "left_anti")
+    val postings = winnowFpsIdx(s, dir)
+      .join(broadcast(SigFamilies.winnowFps.stops(s, dir)), Seq("fp"),
+        "left_anti")
       .groupBy(col("fp"))
       .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) >= 2)
@@ -800,33 +786,22 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * streaming aggregation, so append mode works; candidate dedup is
     * watermarked, so state stays bounded on a long feed; the corpus
     * side reads only index-store artifacts, never the documents
-    * table. The corpus fingerprint-set relation and the stop list
-    * are static-side AGGREGATES of the persisted chain — allowed in
-    * a stream-static join, and PINNED (localCheckpoint) at gate
-    * build: one corpus pass per gate start, never per trigger (the
-    * per-doc set fold is corpus-sized, and Spark re-executes
-    * unpinned static sides every micro-batch). */
+    * table. The stop list is the persisted `winnow_stop_fps`
+    * artifact. The corpus fingerprint-set relation is a static-side
+    * AGGREGATE of the persisted chain — allowed in a stream-static
+    * join, and PINNED (localCheckpoint) at gate build: one corpus pass
+    * per gate start, never per trigger (the per-doc set fold is
+    * corpus-sized, and Spark re-executes unpinned static sides every
+    * micro-batch; StreamingSpec asserts the micro-batch plan carries
+    * no collect_set fold). The sets fold cannot move into the
+    * segmented store like media's (E173): it is PRUNED by the
+    * global-df stop list, and globally-df-dependent artifacts are not
+    * file-decomposable (a deletion shifts df everywhere — the
+    * sized_postings/prefix_index class). */
   def winnowAdmission(s: SparkSession, dir: String,
       incoming: DataFrame): DataFrame = {
-    val nDocs = docs(s, dir).count() // parquet-metadata count
-    val cap = math.min(stopDfThreshold(nDocs), winnowDfCap)
     val corpus = winnowFpsIdx(s, dir)
-    // the stop list and the per-doc set fold are PINNED at gate build
-    // (localCheckpoint): Spark re-executes the STATIC side of a
-    // stream-static join every micro-batch, so unpinned these two
-    // grouped passes over the fingerprint chain would re-run per
-    // trigger — a corpus-sized shuffle+fold each batch (the E173
-    // class). Pinned, each is one pass per gate START; every trigger
-    // reads the materialized relations (StreamingSpec asserts the
-    // micro-batch plan carries no collect_set fold). The sets fold
-    // cannot move into the segmented store like media's (E173):
-    // it is PRUNED by the global-df stop list, and globally-df-
-    // dependent artifacts are not file-decomposable (a deletion
-    // shifts df everywhere — the sized_postings/prefix_index class).
-    val stops = corpus.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap)
-      .select(col("fp"))
-      .localCheckpoint()
+    val stops = SigFamilies.winnowFps.stops(s, dir)
     val pruned = corpus.join(broadcast(stops), Seq("fp"), "left_anti")
     val corpusSets = pruned
       .groupBy(col("doc_id"))

@@ -440,23 +440,6 @@ object Multimodal {
       .orderBy(col("media_id"))
   }
 
-  /** Stop-block document-frequency threshold, CORPUS-RELATIVE like the
-    * text twin [[Llm.stopDfThreshold]] (r9 verdict's weak item): a
-    * block signature in more than 1/5 of the media corpus is
-    * boilerplate (a common intro/leader), not identity — floored at an
-    * absolute 64 so tiny fixtures keep stable semantics. The fraction
-    * is what makes the broadcast stop list PROVABLY bounded: total
-    * postings ≤ nMedia × [[blockCap]], so blocks with df > nMedia/5
-    * number at most 5 × blockCap = 80 — a constant, independent of
-    * corpus size. The previous ABSOLUTE cap (df > 64) let the stop
-    * list grow as postings/64 ≈ nMedia/4 on a boilerplate-heavy corpus
-    * (every file sharing an intro leader), and the broadcast hint then
-    * forced a corpus-linear relation through the driver. The DuckDB
-    * oracle embeds the same formula, so both engines prune
-    * identically. */
-  private[graft] def mediaBlockDfThreshold(nMedia: Long): Long =
-    math.max(64L, nMedia / 5)
-
   /** q157: media NEAR-dup via content-block overlap — the q68
     * containment discipline over the decode stage's content-defined
     * block signatures: two media rows pair when they share blocks, and
@@ -465,51 +448,14 @@ object Multimodal {
     * container, truncated tail — shares every block it still carries,
     * so containment hits 1.0 even though the payloads (and the
     * positional frame hashes) differ byte-for-byte; q156's exact hash
-    * can never pair it.
-    *
-    * Scale shape: candidates come from a BUCKETED self-join of the
-    * (media_id, block_hash) postings — never all pairs; block hashes
-    * hotter than [[mediaBlockDfThreshold]] are removed by a broadcast
-    * stop-list anti-join before pair emission (the stop list is
-    * ≤ 5 × blockCap = 80 rows by the threshold's construction when
-    * the fraction binds — broadcast-safe at ANY corpus size), and
-    * each row carries at most [[blockCap]] blocks, so a media row
-    * meets at most blockCap × df-threshold candidates by
-    * construction. The postings relation is the persisted
-    * [[mediaBlockPostingsIdx]] artifact (decode + hashing once per
-    * document ever; delete-aware via the segmented store),
-    * localCheckpoint-pinned for its four consumers (per-media counts,
-    * the stop list, both join roles) — the E123 one-derivation
-    * rule. */
-  def mediaNearDups(s: SparkSession, dir: String): DataFrame = {
-    // served from the persisted postings artifact (decode/hash paid
-    // once per document ever); the chain fold is pinned once for the
-    // four consumers below (per-media counts, df stop list, both
-    // self-join roles)
-    val posts = mediaBlockPostingsIdx(s, dir).localCheckpoint()
-    val nPer = posts.groupBy(col("media_id"))
-      .agg(count(lit(1)).as("n_blocks"))
-    // the stop list is the persisted ≤ 80-row fold (shared with the
-    // q160 gate) — an artifact read, not a per-run postings groupBy
-    val stop = mediaStopBlocksDf(s, dir)
-    val rare = posts.join(broadcast(stop), Seq("block_hash"), "left_anti")
-    val pairs = rare.as("a").join(rare.as("b"), Seq("block_hash"))
-      .filter(col("a.media_id") < col("b.media_id"))
-      .groupBy(col("a.media_id").as("media_a"),
-        col("b.media_id").as("media_b"))
-      .agg(count(lit(1)).as("common_blocks"))
-    pairs
-      .join(nPer.withColumnRenamed("media_id", "media_a")
-        .withColumnRenamed("n_blocks", "n_a"), "media_a")
-      .join(nPer.withColumnRenamed("media_id", "media_b")
-        .withColumnRenamed("n_blocks", "n_b"), "media_b")
-      .withColumn("containment_micro",
-        expr("common_blocks * 1000000L div least(n_a, n_b)"))
-      .filter(col("containment_micro") >= 800000L)
-      .select(col("media_a"), col("media_b"), col("common_blocks"),
-        col("n_a"), col("n_b"), col("containment_micro"))
-      .orderBy(col("media_a"), col("media_b"))
-  }
+    * can never pair it. The report is [[mediaContainment]]'s: a
+    * bucketed self-join of the persisted [[mediaBlockPostingsIdx]]
+    * artifact (decode + hashing once per document ever; delete-aware
+    * via the segmented store) with the ≤ 5 × [[blockCap]] = 80-row
+    * stop list anti-joined out, so a media row meets at most
+    * blockCap × df-threshold candidates by construction. */
+  def mediaNearDups(s: SparkSession, dir: String): DataFrame =
+    mediaContainment.pairs(s, dir)
 
   // ---- q161: REAL PCM feature extraction (audio analog of q159) ----------
 
@@ -623,15 +569,6 @@ object Multimodal {
     * SAME profile keeps the SAME subset). Bounds the per-row posting
     * contribution the way [[blockCap]] bounds the block path. */
   private[graft] val audioFpCap = 256
-
-  /** Stop-fingerprint df threshold, corpus-RELATIVE (the E161
-    * discipline): total fp rows ≤ nAudio × [[audioFpCap]], so fps with
-    * df > nAudio/5 number ≤ 5 × audioFpCap — a constant at any corpus
-    * size, broadcast-safe by construction. Floored low (16) so tiny
-    * fixtures still prune boilerplate profiles (e.g. near-silence)
-    * whose identical shingles digest to identical fingerprints. */
-  private[graft] def audioFpDfThreshold(nAudio: Long): Long =
-    math.max(16L, nAudio / 5)
 
   /** WAV container around an arbitrary PCM body — byte-identical to
     * the audio arm of [[basePayload]] (RIFF size, PCM fmt chunk,
@@ -913,75 +850,28 @@ object Multimodal {
     cnt.getLong(0) + cnt.getLong(1) + cnt.getLong(2)
   }
 
-  /** The per-media fingerprint SET — the audio gate's containment
-    * side, PERSISTED segmented (the E173 discipline: an unpinned
-    * fold on a stream-static join's static side re-runs every
-    * micro-batch). Legal as a segmented artifact because the sets are
-    * UNPRUNED — no global-df dependence — and per-media rows never
-    * span source files; stop pruning happens map-side per trigger
-    * against the collected bounded stop list. Derives from the
-    * shared fingerprint chain restricted per window by the id-only
-    * semi-join (decode+fold paid once per row ever). */
-  private[graft] def audioFpSetsIdx(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "audio_fp_sets", s"$dir/documents.parquet", version = 5)(
-      files => audioFpIdx(s, dir)
-        .join(audioVariantIdsOf(s.read.parquet(files: _*)),
-          Seq("media_id"), "left_semi")
-        .groupBy(col("media_id"))
-        .agg(sort_array(collect_set(col("fp"))).as("corpus_fps")))
+  /** The audio set-containment modality: the [[audioFpIdx]] postings,
+    * per-media fingerprint sets persisted as `audio_fp_sets` v5
+    * (`corpus_fps`), gain-invariant fingerprints map-side and
+    * containment ≥ 0.6. */
+  private[graft] val audioContainment: SetContainment = SetContainment(
+    SigFamilies.audioFps, Gates.audio, "audio_fp_sets", 5, "corpus_fps",
+    audioVariantIdsOf,
+    // codec chain captured at plan time, shipped in the closure
+    () => audioFpSeqWith(AudioCodecs.registered), 600000L)
 
-  /** The corpus-relative stop-fingerprint list, PERSISTED then
-    * COLLECTED: bounded ≤ 5 × [[audioFpCap]] rows by
-    * [[audioFpDfThreshold]]'s construction at any corpus size (the
-    * E161 bound). Persisting the ≤ 1,280-row fold result
-    * (`readOrBuild`, content-addressed at the source fingerprint)
-    * means a gate START reads a tiny parquet instead of re-paying the
-    * corpus-sized df groupBy over the postings chain — at 100 TB the
-    * df fold is the dominant gate-start stage (measured as the bulk
-    * of q163's 0.79 third-decade exponent), and it only changes when
-    * the corpus does, which is exactly what the fingerprint keys. */
-  private def audioStopFpsDf(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(
-      s, "audio_stop_fps", s"$dir/documents.parquet", version = 6)(
-      audioFpIdx(s, dir)
-        .groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > audioFpDfThreshold(nAudioCorpus(s, dir)))
-        .select(col("fp")))
-      .select(col("fp"))
-
-  private def audioStopFps(s: SparkSession, dir: String): Seq[String] = {
-    val sess = s
-    import sess.implicits._
-    audioStopFpsDf(s, dir).as[String].collect().toSeq.sorted
-  }
-
-  /** Audio near-dup ADMISSION CONTROL — [[containmentGate]] over the
-    * q162 fingerprint discipline: gain-invariant energy-profile
-    * fingerprints map-side (a polarity flip or exact gain change at
-    * the crawler cannot evade the gate, and byte-level gates provably
-    * cannot catch it), the persisted [[audioFpIdx]]/[[audioFpSetsIdx]]
-    * artifacts, the ≤ 5×256-row relative-threshold stop list, and
+  /** Audio near-dup ADMISSION CONTROL — [[audioContainment]]'s gate
+    * over the q162 fingerprint discipline: gain-invariant energy-
+    * profile fingerprints map-side (a polarity flip or exact gain
+    * change at the crawler cannot evade the gate, and byte-level gates
+    * provably cannot catch it), the persisted fingerprint postings and
+    * sets, the ≤ 5×256-row relative-threshold stop list, and
     * containment ≥ 0.6. The SAME plan serves the q163 batch backfill
     * and a `readStream` gate (StreamingSpec proves identical flags,
     * RestartSpec proves recovery). */
   def audioAdmission(s: SparkSession, dir: String,
-      incoming: DataFrame, decision: Boolean = false): DataFrame = {
-    val stop = audioStopFps(s, dir)
-    val stopCol = typedLit(stop)
-    containmentGate(Gates.audio, s, incoming, decision,
-      // codec chain captured at plan time, shipped in the closure
-      sigsOf = audioFpSeqWith(AudioCodecs.registered),
-      stop = stop,
-      posts = audioFpIdx(s, dir)
-        .select(col("fp").as("sig"), col("media_id").as("corpus_id")),
-      corpusSets = audioFpSetsIdx(s, dir)
-        .select(col("media_id").as("corpus_id"),
-          size(col("corpus_fps")).cast("bigint").as("n_corpus"),
-          array_except(col("corpus_fps"), stopCol).as("corpus_rare")),
-      thresholdMicro = 600000L)
-  }
+      incoming: DataFrame, decision: Boolean = false): DataFrame =
+    audioContainment.admit(s, dir, incoming, decision)
 
   /** Deterministic incoming-audio feed for [[audioAdmission]]
     * ([[Gates.audio]]) over a documents frame: for doc_id % 4 == 0
@@ -1014,186 +904,44 @@ object Multimodal {
     * profile — and hence the fingerprint set — survives. Pairs are
     * reported at `common·10⁶ div least(n_a, n_b) ≥ 600000`.
     *
-    * Scale shape mirrors q157: candidates come from a bucketed
-    * self-join of the persisted fingerprint postings; fps hotter than
-    * [[audioFpDfThreshold]] (corpus-relative — the stop list is
-    * ≤ 5 × audioFpCap rows by construction at any corpus size) are
-    * removed by a broadcast anti-join before pair emission; each row
-    * carries ≤ [[audioFpCap]] fps, so candidate volume per row is
-    * ≤ audioFpCap × df-threshold by construction. The postings fold
-    * is pinned once for its four consumers (E123). */
-  def audioGainNearDups(s: SparkSession, dir: String): DataFrame = {
-    val fps = audioFpIdx(s, dir).localCheckpoint()
-    val nPer = fps.groupBy(col("media_id"))
-      .agg(count(lit(1)).as("n_fps"))
-    // the stop list is the persisted ≤ 5×cap-row fold (shared with
-    // the q163 gate) — an artifact read, not a per-run postings
-    // groupBy
-    val stop = audioStopFpsDf(s, dir)
-    val rare = fps.join(broadcast(stop), Seq("fp"), "left_anti")
-    val pairs = rare.as("a").join(rare.as("b"), Seq("fp"))
-      .filter(col("a.media_id") < col("b.media_id"))
-      .groupBy(col("a.media_id").as("media_a"),
-        col("b.media_id").as("media_b"))
-      .agg(count(lit(1)).as("common_fps"))
-    pairs
-      .join(nPer.withColumnRenamed("media_id", "media_a")
-        .withColumnRenamed("n_fps", "n_a"), "media_a")
-      .join(nPer.withColumnRenamed("media_id", "media_b")
-        .withColumnRenamed("n_fps", "n_b"), "media_b")
-      .withColumn("containment_micro",
-        expr("common_fps * 1000000L div least(n_a, n_b)"))
-      .filter(col("containment_micro") >= 600000L)
-      .select(col("media_a"), col("media_b"), col("common_fps"),
-        col("n_a"), col("n_b"), col("containment_micro"))
-      .orderBy(col("media_a"), col("media_b"))
-  }
+    * The report is [[audioContainment]]'s, q157's shape over the
+    * persisted fingerprint postings: the stop list is ≤ 5 × audioFpCap
+    * rows by construction at any corpus size, and each row carries
+    * ≤ [[audioFpCap]] fps, so candidate volume per row is
+    * ≤ audioFpCap × df-threshold by construction. */
+  def audioGainNearDups(s: SparkSession, dir: String): DataFrame =
+    audioContainment.pairs(s, dir)
 
   // ---- media admission gate (E36/E41 discipline, media modality) ---------
 
-  /** One incoming media row of [[mediaAdmission]]'s typed decode
-    * stage. */
+  /** One incoming media row of a [[SetContainment]] gate's typed
+    * decode stage. */
   case class InMediaRow(media_id: Long, payload: Array[Byte],
       arr_ts: java.sql.Timestamp)
 
-  // ---- the set-containment kernel (media q160, audio q163) --------------
-  //
-  // The multimodal gates run on the admission core [[Gates.admit]],
-  // which owns the feed clock, watermark, candidate dedup, decision
-  // tail and counters. Each modality contributes its signature
-  // kernel, its artifacts, and its verify — so the E173/E174
-  // static-side discipline (persisted or pinned folds, never
-  // per-trigger) is structural for the next modality, not re-audited
-  // prose.
+  /** The media set-containment modality: the
+    * [[mediaBlockPostingsIdx]] postings, per-media block sets
+    * persisted as `media_block_sets` (`corpus_blocks`), content-defined
+    * block signatures map-side (the same digest and container parse as
+    * the batch decode) and containment ≥ 0.8. */
+  private[graft] val mediaContainment: SetContainment = SetContainment(
+    SigFamilies.mediaBlocks, Gates.media, "media_block_sets", 1,
+    "corpus_blocks", df => mediaCorpusOf(df).select(col("media_id")),
+    () => p => {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      blockSigsOf(md, p, parseContainer(p)._4).distinct
+    }, 800000L)
 
-  /** The set-containment kernel on `gate`'s admission core: incoming
-    * payloads decode MAP-SIDE to signature arrays via `sigsOf`, the
-    * collected bounded stop list prunes both sides, surviving
-    * signatures collide stream-static against `posts` (the persisted
-    * posting artifact, normalized to (sig, corpus_id)), and the verify
-    * is an in-row `array_intersect` against `corpusSets` (the
-    * persisted per-media signature sets, normalized to (corpus_id,
-    * n_corpus, corpus_rare) — per trigger a columnar artifact scan
-    * plus map-only array ops, never a re-fold). The gate's second
-    * evidence column is the common-signature count. Emits (in_id,
-    * corpus_id, <common>, n_in, n_corpus, containment_micro ≥
-    * threshold). */
-  private def containmentGate(gate: GateSpec, s: SparkSession,
-      incoming: DataFrame, decision: Boolean,
-      sigsOf: Array[Byte] => Seq[String], stop: Seq[String],
-      posts: DataFrame, corpusSets: DataFrame,
-      thresholdMicro: Long): DataFrame = {
-    import s.implicits._
-    val commonCol = gate.evidence(1)
-    val stopCol = typedLit(stop)
-    val postsRare =
-      if (stop.isEmpty) posts
-      else posts.filter(!col("sig").isin(stop: _*))
-    gate.admit(incoming, decision)(
-      stage = _.select(col("media_id").cast("long").as("media_id"),
-          col("payload"), col("arr_ts")).as[InMediaRow]
-        .mapPartitions(rows =>
-          rows.map(r => (r.media_id, r.arr_ts, sigsOf(r.payload))))
-        .toDF("in_id", "arr_ts", "in_all")
-        .withColumn("n_in", size(col("in_all")).cast("bigint"))
-        .withColumn("in_sigs", array_except(col("in_all"), stopCol)),
-      candidates = Candidates.Probes(_
-        .select(col("in_id"), col("arr_ts"), col("in_sigs"), col("n_in"),
-          explode(col("in_sigs")).as("sig"))
-        .join(postsRare, "sig")
-        .select(col("in_id"), col("arr_ts"), col("in_sigs"), col("n_in"),
-          col("corpus_id"))),
-      verify = Verify.SetJoin(corpusSets, _
-        .withColumn(commonCol,
-          graft.functions.GraftFx.intersectCount(
-            col("in_sigs"), col("corpus_rare")).cast("bigint"))
-        .withColumn("containment_micro",
-          expr(s"$commonCol * 1000000L div least(n_in, n_corpus)"))
-        .filter(col("containment_micro") >= thresholdMicro)))
-  }
-
-  /** The corpus-relative stop-block list, COLLECTED: ≤ 5 × blockCap =
-    * 80 rows by the threshold's construction at any corpus size (the
-    * E161 bound) — the engine's model-sized-collect discipline, same
-    * class as Lloyd centroids and BPE merges. */
-  // persisted fold result (≤ 80 rows): a gate start reads a tiny
-  // parquet instead of re-paying the corpus-sized df groupBy — the
-  // audioStopFps rationale
-  private def mediaStopBlocksDf(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(
-      s, "media_stop_blocks", s"$dir/documents.parquet", version = 1)(
-      mediaBlockPostingsIdx(s, dir)
-        .groupBy(col("block_hash")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > mediaBlockDfThreshold(mediaCorpus(s, dir).count()))
-        .select(col("block_hash")))
-      .select(col("block_hash"))
-
-  private def mediaStopBlocks(s: SparkSession, dir: String): Seq[String] = {
-    val sess = s
-    import sess.implicits._
-    mediaStopBlocksDf(s, dir).as[String].collect().toSeq.sorted
-  }
-
-  /** The per-media block SET — the containment verify's in-row side —
-    * PERSISTED as a segmented delete-aware artifact
-    * (`media_block_sets`). Without it the grouped fold over the
-    * postings chain sits on the STATIC side of the admission gate's
-    * stream-static join, and Spark re-executes static sides per
-    * micro-batch — a corpus-sized shuffle+fold per trigger at 100 TB.
-    * As an artifact, the per-batch cost is a plain columnar scan.
-    * Per-media rows never span source files → file-decomposable
-    * (takedown excises one segment); each window's sets derive from
-    * the SHARED postings artifact restricted to the window's media
-    * (an id-only column scan of the window files + one semi-join
-    * against the chain — decode+hash stays paid once per document
-    * ever, the E163 band-index discipline). `sort_array` pins the
-    * set's order so excised chains compare byte-stable against
-    * rebuilds. */
-  private[graft] def mediaBlockSetsIdx(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "media_block_sets", s"$dir/documents.parquet")(
-      files => {
-        val winMedia = mediaCorpusOf(s.read.parquet(files: _*))
-          .select(col("media_id"))
-        mediaBlockPostingsIdx(s, dir)
-          .join(winMedia, Seq("media_id"), "left_semi")
-          .groupBy(col("media_id"))
-          .agg(sort_array(collect_set(col("block_hash")))
-            .as("corpus_blocks"))
-      })
-
-  /** Media NEAR-DUP ADMISSION CONTROL — [[containmentGate]] over the
-    * q157 block discipline: content-defined block signatures (the
-    * same digest and container parse as the batch decode), the
-    * persisted [[mediaBlockPostingsIdx]]/[[mediaBlockSetsIdx]]
-    * artifacts, the ≤ 80-row relative-threshold stop list, and
-    * containment ≥ 0.8. Candidate volume per incoming media is
-    * ≤ blockCap × df-threshold by construction; the SAME plan serves
-    * the q160 batch backfill and a `readStream` gate (StreamingSpec
-    * proves identical flags, RestartSpec proves recovery). */
+  /** Media NEAR-DUP ADMISSION CONTROL — [[mediaContainment]]'s gate
+    * over the q157 block discipline: the persisted block postings and
+    * sets, the ≤ 80-row relative-threshold stop list, and containment
+    * ≥ 0.8. Candidate volume per incoming media is ≤ blockCap ×
+    * df-threshold by construction; the SAME plan serves the q160 batch
+    * backfill and a `readStream` gate (StreamingSpec proves identical
+    * flags, RestartSpec proves recovery). */
   def mediaAdmission(s: SparkSession, dir: String,
-      incoming: DataFrame, decision: Boolean = false): DataFrame = {
-    val stop = mediaStopBlocks(s, dir)
-    val stopCol = typedLit(stop)
-    containmentGate(Gates.media, s, incoming, decision,
-      sigsOf = p => {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        blockSigsOf(md, p, parseContainer(p)._4).distinct
-      },
-      stop = stop,
-      posts = mediaBlockPostingsIdx(s, dir)
-        .select(col("block_hash").as("sig"),
-          col("media_id").as("corpus_id")),
-      // the corpus-side sets come from the PERSISTED fold — per
-      // micro-batch this static side is a columnar artifact scan plus
-      // map-only array ops, never a re-fold of the postings chain
-      corpusSets = mediaBlockSetsIdx(s, dir)
-        .select(col("media_id").as("corpus_id"),
-          size(col("corpus_blocks")).cast("bigint").as("n_corpus"),
-          array_except(col("corpus_blocks"), stopCol).as("corpus_rare")),
-      thresholdMicro = 800000L)
-  }
+      incoming: DataFrame, decision: Boolean = false): DataFrame =
+    mediaContainment.admit(s, dir, incoming, decision)
 
   /** Deterministic incoming-media feed for [[mediaAdmission]]
     * ([[Gates.media]]) over a documents frame: for doc_id % 3 == 0, a
@@ -1983,19 +1731,6 @@ object Multimodal {
           .toDF("raster_id", "ahash")
       })
 
-  /** The 2 × 32-bit band decomposition of a 64-bit signature as a SQL
-    * transform expression (an array of (b, bh) structs) — band k is
-    * bits [32k, 32k+32). Two bands are pigeonhole-exact at Hamming
-    * ≤ 1, and the 32-bit band universe (4.3×10⁹) keeps chance band
-    * collisions of UNRELATED signatures negligible past 10⁹ rasters —
-    * the E176 fix: a 16-bit band universe (65,536) saturates on
-    * low-entropy structured imagery and its coincidence candidates
-    * grow linearly with n. */
-  private[graft] def rasterBandExpr(hc: String): String =
-    s"""transform(sequence(0, 1),
-         k -> struct(k AS b,
-           shiftright($hc, CAST(32 * k AS INT)) & 4294967295 AS bh))"""
-
   /** Raster corpus size for the relative band-stop threshold — ONE
     * metadata-cheap count over the persisted signature artifact
     * (shared by q164, the q165 gate, and the df probe). The threshold
@@ -2041,35 +1776,10 @@ object Multimodal {
     * boilerplate cannot name a near-dup relation (the q157/q162
     * rule), documented as the one exactness trade. Signatures are
     * the persisted [[rasterAHashIdx]] artifact. */
-  /** The corpus-relative band stop list (≤ 10 rows BY CONSTRUCTION —
-    * the E176 bound), PERSISTED (`raster_band_stops`, content-
-    * addressed at the source fingerprint) and shared by q164 and the
-    * q165 gate: a gate START reads a tiny parquet instead of
-    * re-folding the band relation — the audioStopFps rationale. */
-  private def rasterBandStops(s: SparkSession, dir: String): DataFrame =
-    // CO-VERSIONED with rasterAHashIdx (the stop list derives from the
-    // signature artifact, so every upstream bump moves this version
-    // too, or the store serves stops folded over a stale signature
-    // population): v2 = the container-agnostic AnyOf switch
-    // (raster_ahash v3), v3-v4 = the two E206 fixture-entropy bumps
-    // (raster_ahash v4-v5)
-    graft.observe.IndexStore.readOrBuild(
-      s, "raster_band_stops", s"$dir/documents.parquet", version = 4)(
-      rasterAHashIdx(s, dir)
-        .select(explode(expr(rasterBandExpr("ahash"))).as("e"))
-        .select(col("e.b").as("b"), col("e.bh").as("bh"))
-        .groupBy(col("b"), col("bh")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > math.max(64L, nRasterCorpus(s, dir) / 5))
-        .select(col("b"), col("bh")))
-      .select(col("b"), col("bh"))
-
   def rasterPerceptualDups(s: SparkSession, dir: String): DataFrame = {
     val hashes = rasterAHashIdx(s, dir).localCheckpoint()
-    val bands = hashes.select(col("raster_id"), col("ahash"),
-      explode(expr(rasterBandExpr("ahash"))).as("e"))
-      .select(col("raster_id"), col("ahash"),
-        col("e.b").as("b"), col("e.bh").as("bh"))
-    val stop = rasterBandStops(s, dir)
+    val bands = SigFamily.bands(hashes, "ahash", "raster_id", "ahash")
+    val stop = SigFamilies.rasterBands.stops(s, dir)
     val rare = bands.join(broadcast(stop), Seq("b", "bh"), "left_anti")
     rare.as("x").join(rare.as("y"), Seq("b", "bh"))
       .filter(col("x.raster_id") < col("y.raster_id"))
@@ -2096,7 +1806,7 @@ object Multimodal {
     * byte-level gates provably cannot catch it), its 2 × 32-bit bands
     * collide stream-static against the persisted [[rasterAHashIdx]]
     * band relation (pigeonhole-lossless at Hamming ≤ 1, chance band
-    * collisions negligible — [[rasterBandExpr]]), candidates dedup
+    * collisions negligible — [[SigFamily.bands]]), candidates dedup
     * within a watermark, and the verify is IN-ROW `bit_count(xor)` —
     * the corpus hash rides the posting, so this gate needs no set
     * artifact at all. Stop buckets (≤ 10 rows BY CONSTRUCTION, the
@@ -2107,16 +1817,13 @@ object Multimodal {
       incoming: DataFrame, decision: Boolean = false): DataFrame = {
     import s.implicits._
     val hashes = rasterAHashIdx(s, dir)
-    def bandsOf(df: DataFrame, idc: String, hc: String): DataFrame =
-      df.select(col("*"), explode(expr(rasterBandExpr(hc))).as("e"))
-        .select(col(idc), col(hc), col("e.b").as("b"), col("e.bh").as("bh"))
-    val corpusBands = bandsOf(
+    val corpusBands = SigFamily.bands(
       hashes.withColumnRenamed("raster_id", "corpus_id")
         .withColumnRenamed("ahash", "corpus_hash"),
-      "corpus_id", "corpus_hash")
+      "corpus_hash", "corpus_id", "corpus_hash")
     // persisted stop artifact: never re-folded per trigger (E174) and
     // never re-folded per gate START either — an artifact read
-    val stop = rasterBandStops(s, dir)
+    val stop = SigFamilies.rasterBands.stops(s, dir)
     val corpusRare = corpusBands
       .join(broadcast(stop), Seq("b", "bh"), "left_anti")
     Gates.raster.admit(incoming, decision)(
@@ -2127,11 +1834,8 @@ object Multimodal {
             (r.raster_id, r.arr_ts, hsh))))
         .toDF("in_id", "arr_ts", "in_hash"),
       // a pair matching on both bands appears twice
-      candidates = Candidates.Probes(_
-        .select(col("in_id"), col("arr_ts"), col("in_hash"),
-          explode(expr(rasterBandExpr("in_hash"))).as("e"))
-        .select(col("in_id"), col("arr_ts"), col("in_hash"),
-          col("e.b").as("b"), col("e.bh").as("bh"))
+      candidates = Candidates.Probes(
+        SigFamily.bands(_, "in_hash", "in_id", "arr_ts", "in_hash")
         .join(broadcast(stop), Seq("b", "bh"), "left_anti")
         .join(corpusRare, Seq("b", "bh"))
         .select(col("in_id"), col("arr_ts"), col("in_hash"),

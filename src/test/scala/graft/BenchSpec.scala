@@ -262,4 +262,24 @@ class BenchSpec extends AnyFunSuite {
         s"$what may appear only in Gates.scala")
     }
   }
+
+  test("each signature family is declared only in graft.ops.SigFamily") {
+    val declarations = Seq(
+      "a relative df threshold" -> """math\.max\(\d+L,[^\n]*/\s*5\)""",
+      "a band projection" -> """explode\(expr\([\w.\s]*[bB]andExpr\(""",
+      "a persisted stop list" ->
+        """readOrBuild\w*\(\s*\w+,\s*"[^"]*stop[^"]*"""")
+    val registry = "src/main/scala/graft/ops/SigFamily.scala"
+    val files = Files.walk(Paths.get("src/main/scala/graft"))
+    val sources =
+      try files.iterator.asScala.toList
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> Files.readString(p))
+      finally files.close()
+    declarations.foreach { case (what, pattern) =>
+      val hits = sources.filter(f => pattern.r.findFirstIn(f._2).nonEmpty)
+      assert(hits.map(_._1).filter(_ != registry) === Nil,
+        s"$what may appear only in SigFamily.scala")
+    }
+  }
 }

@@ -1142,19 +1142,19 @@ class IndexStoreSpec extends SparkSuite {
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 100)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
       .write.mode("append").parquet(docsDir)
-    graft.ops.Multimodal.mediaBlockSetsIdx(s, wh).count()
+    graft.ops.Multimodal.mediaContainment.sets(s, wh).count()
     Thread.sleep(5)
     val before2 = dataFiles(docsDir).map(_.getName).toSet
     all.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("append").parquet(docsDir)
     val seg2File = (dataFiles(docsDir).map(_.getName).toSet -- before2).head
-    graft.ops.Multimodal.mediaBlockSetsIdx(s, wh).count() // delta segment
+    graft.ops.Multimodal.mediaContainment.sets(s, wh).count() // delta segment
     assert(new java.io.File(docsDir, seg2File).delete())
-    val excised = graft.ops.Multimodal.mediaBlockSetsIdx(s, wh)
+    val excised = graft.ops.Multimodal.mediaContainment.sets(s, wh)
       .collect().map(_.toString).toSet
     IndexStore.invalidate(s, "media_block_sets")
     IndexStore.invalidate(s, "media_block_postings")
-    val rebuilt = graft.ops.Multimodal.mediaBlockSetsIdx(s, wh)
+    val rebuilt = graft.ops.Multimodal.mediaContainment.sets(s, wh)
       .collect().map(_.toString).toSet
     assert(excised === rebuilt,
       "excised media block sets must equal the from-scratch rebuild")
@@ -1200,19 +1200,19 @@ class IndexStoreSpec extends SparkSuite {
     val all = Tables.load(s, sf, "documents").filter(col("doc_id") < 120)
     all.filter(col("doc_id") % 2 === 0).coalesce(1)
       .write.mode("append").parquet(docsDir)
-    graft.ops.Multimodal.audioFpSetsIdx(s, wh).count()
+    graft.ops.Multimodal.audioContainment.sets(s, wh).count()
     Thread.sleep(5)
     val before2 = dataFiles(docsDir).map(_.getName).toSet
     all.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("append").parquet(docsDir)
     val seg2File = (dataFiles(docsDir).map(_.getName).toSet -- before2).head
-    graft.ops.Multimodal.audioFpSetsIdx(s, wh).count() // delta segment
+    graft.ops.Multimodal.audioContainment.sets(s, wh).count() // delta segment
     assert(new java.io.File(docsDir, seg2File).delete())
-    val excised = graft.ops.Multimodal.audioFpSetsIdx(s, wh)
+    val excised = graft.ops.Multimodal.audioContainment.sets(s, wh)
       .collect().map(_.toString).toSet
     IndexStore.invalidate(s, "audio_fp_sets")
     IndexStore.invalidate(s, "audio_fps")
-    val rebuilt = graft.ops.Multimodal.audioFpSetsIdx(s, wh)
+    val rebuilt = graft.ops.Multimodal.audioContainment.sets(s, wh)
       .collect().map(_.toString).toSet
     assert(excised === rebuilt,
       "excised audio fingerprint sets must equal the from-scratch rebuild")

@@ -1444,9 +1444,9 @@ class LlmSpec extends SparkSuite {
   test("derived constants respond to corpus size (no fixture tuning)") {
     // Stop-shingle threshold: absolute floor at fixture scale, a
     // document-frequency fraction (n/5) as the corpus grows.
-    assert(Llm.stopDfThreshold(500) === 100L)
-    assert(Llm.stopDfThreshold(5000) === 1000L)
-    assert(Llm.stopDfThreshold(1000000000L) === 200000000L)
+    assert(graft.ops.SigFamily.relative(100L)(500) === 100L)
+    assert(graft.ops.SigFamily.relative(100L)(5000) === 1000L)
+    assert(graft.ops.SigFamily.relative(100L)(1000000000L) === 200000000L)
     // Bloom sizing: m tracks ~10 bits/key (next pow2), k stays in
     // [2, 8], and both respect the floor/cap bounds.
     val (m1, k1) = Llm.bloomParams(1000)

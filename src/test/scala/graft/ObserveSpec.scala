@@ -600,7 +600,7 @@ class ObserveSpec extends SparkSuite {
     }
     // expected pairs, re-derived from ground truth + the documented
     // semantics (corpus-relative stop prune, containment >= 0.6)
-    val thr = Multimodal.audioFpDfThreshold(nCorpus)
+    val thr = graft.ops.SigFamilies.audioFps.stop.get.threshold(nCorpus)
     val df = fpsOf.values.toSeq.flatten.groupBy(identity)
       .map { case (fp, v) => fp -> v.size.toLong }
     def rare(id: Long): Set[String] = fpsOf(id).filter(df(_) <= thr)

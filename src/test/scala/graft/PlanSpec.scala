@@ -830,6 +830,10 @@ class PlanSpec extends SparkSuite {
     val indexed = Trace.plans(spark, sf, Seq("q96_pq_topk"))
     assert(indexed.contains("/fp=<fp>"), indexed)
     assert("fp=[0-9a-f]{32}".r.findFirstIn(indexed).isEmpty, indexed)
+    // a localCheckpoint scan names its call site without a line number
+    val pinned = Trace.plans(spark, sf, Seq("q157_media_neardup"))
+    assert(pinned.contains("at localCheckpoint at "), pinned)
+    assert("\\.scala:\\d+".r.findFirstIn(pinned).isEmpty, pinned)
     // two regenerations of the same tree write the same text
     val twice = Seq("q01_flagship_us_customers", "q96_pq_topk")
     assert(Trace.plans(spark, sf, twice) === Trace.plans(spark, sf, twice))

@@ -1192,10 +1192,8 @@ class StreamingSpec extends SparkSuite {
       vectors, Seq.tabulate(dims)(d =>
         ((d * 2654435761L % 1000003L).toFloat / 1000003f) - 0.5f)))
     // media and audio: the sentinel re-sends a feed payload that the
-    // batch face does not decide and that carries signatures (an audio
-    // clip shorter than four frames has no fingerprints, and the
-    // candidate join's inferred non-empty filter drops it below the
-    // watermark)
+    // batch face does not decide and that carries signatures (the next
+    // arm closes the audio groups with a clip that has none)
     Seq[(graft.ops.GateSpec, Array[Byte] => Boolean)](
       graft.ops.Gates.media -> (_ => true),
       graft.ops.Gates.audio -> (graft.ops.Multimodal.audioFpSeqOf(_).nonEmpty)
@@ -1208,6 +1206,39 @@ class StreamingSpec extends SparkSuite {
       check(gate, streamed(gate, "media_id", "payload",
         MemoryStream[(Long, Array[Byte], Timestamp)], feed, quiet._2))
     }
+  }
+
+  test("audio admission DECISION face under readStream: a sentinel " +
+    "clip with no fingerprints still advances the watermark and closes " +
+    "every open group") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val gate = graft.ops.Gates.audio
+    val feed = gate.incoming(s, sf).collect()
+      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).sortBy(_._1).toSeq
+    // a clip shorter than four frames has no fingerprints, so nothing
+    // of it survives to the candidate join
+    val silent = feed.map(_._2)
+      .find(graft.ops.Multimodal.audioFpSeqOf(_).isEmpty)
+      .getOrElse(fail("the feed must carry a clip with no fingerprints"))
+    val in = MemoryStream[(Long, Array[Byte], Timestamp)]
+    val q = gate.kernel(s, sf,
+      in.toDF().toDF("media_id", "payload", "arr_ts"), true)
+      .writeStream.format("memory").queryName("audio_silent_dec_out")
+      .outputMode("append").start()
+    val got = withQuery(q) {
+      in.addData(feed.map(f => (f._1, f._2, ts(3600L))): _*)
+      q.processAllAvailable()
+      in.addData((999999999L, silent, ts(10000000L)))
+      q.processAllAvailable()
+      s.table("audio_silent_dec_out").collect().map(_.toSeq).toSet
+    }
+    val batch = gate.decision(s, sf).collect().map(_.toSeq).toSet
+    assert(batch.nonEmpty, "the planted re-masters must decide")
+    assert(got === batch,
+      s"streamed decisions must equal the batch face " +
+        s"(missing=${(batch -- got).size}, extra=${(got -- batch).size})")
   }
 
   test("exact-Jaccard admission: a streamed feed gated against the " +
