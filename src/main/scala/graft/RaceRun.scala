@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
+
 /** Two-process IndexStore race child (`RaceRun <srcDir> <name> <id>
   * <barrierDir>` — normally spawned in PAIRS by IndexStoreSpec):
-  * each process calls `readOrBuild` on the SAME artifact name +
+  * each process reads the SAME ad-hoc artifact spec +
   * source + store, and its build thunk holds at a FILE BARRIER until
   * the sibling's marker appears — so both processes are provably
   * inside the build window together (both saw no published artifact),
@@ -19,7 +21,7 @@ object RaceRun {
     require(args.length >= 4, "usage: RaceRun <srcDir> <name> <id> <barrierDir>")
     val (src, name, id, barrier) = (args(0), args(1), args(2), args(3))
     val spark = Session(cores = Some(2))
-    val res = graft.observe.IndexStore.readOrBuild(spark, name, src) {
+    val spec = ArtifactSpec(name, 1, "", Decomp.Full { (_, _) =>
       // barrier: publish own in-build marker, wait for the sibling's —
       // both processes are now PAST the no-published-artifact check
       val dir = java.nio.file.Paths.get(barrier)
@@ -39,7 +41,8 @@ object RaceRun {
       val out = spark.read.parquet(src).agg(sum(col("x")).as("s"))
       println(s"[race] built sum=${out.head().getLong(0)}")
       out
-    }
+    })
+    val res = IndexStore.read(spark, spec, src)
     println(s"[race] served sum=${res.head().getLong(0)}")
     spark.stop()
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Persisted index-artifact lifecycle — build / persist / invalidate,
-  * with optional INCREMENTAL maintenance on corpus append.
+  * with INCREMENTAL maintenance on corpus append and deletion.
   *
   * Derived artifacts (near-dup pair graphs, inverted shingle postings,
   * IVF centroids and cluster assignments, the FK-edge catalog) are
@@ -19,6 +19,11 @@ import org.apache.spark.sql.functions.col
   *
   * This store makes the lifecycle explicit and content-addressed:
   *
+  *  - **Declare**: each artifact is one [[ArtifactSpec]] — name,
+  *    version, source table, upstream specs and decomposition — and
+  *    [[read]] is the one build-or-read entry point. A read lists its
+  *    source once and computes the fingerprint once; every lifecycle
+  *    step below works from that resolution.
   *  - **Persist**: an artifact is a parquet table under
   *    `<indexDir>/<name>/fp=<fingerprint>`, where the fingerprint hashes
   *    the artifact version and every source file's (path, length, mtime)
@@ -32,16 +37,20 @@ import org.apache.spark.sql.functions.col
   *    drops an artifact explicitly (forcing the next read to rebuild).
   *  - **Version**: the `version` component covers the build LOGIC —
   *    bump it when an artifact's semantics change so old files from a
-  *    previous code revision are never served.
+  *    previous code revision are never served. An artifact derived from
+  *    upstream artifacts folds their `name@version` identities
+  *    (recursively) into its preimage, so an upstream bump rebuilds
+  *    exactly its dependents.
   *  - **Incremental (snapshot chain)**: when the source change is a
   *    pure APPEND (every old file byte-identical by (path, len, mtime),
-  *    only new files added), [[readOrBuildIncremental]] writes a DELTA
-  *    segment computed from just the added files and links it to the
-  *    previous artifact with a parent pointer — the table-format
+  *    only new files added), an append-aware decomposition writes a
+  *    DELTA segment computed from just the added files and links it to
+  *    the previous artifact with a parent pointer — the table-format
   *    snapshot-lineage pattern. A read unions the chain's segments in
   *    one multi-path parquet scan. At 100 TB this is the difference
   *    between re-indexing the corpus on every append and indexing only
-  *    the appended slice.
+  *    the appended slice. Deletions excise, carry or re-link per
+  *    [[Decomp]].
   *
   * At 100 TB the same layout holds with `indexDir` on the object store
   * next to the warehouse: build-once cost is amortized across every
@@ -49,8 +58,10 @@ import org.apache.spark.sql.functions.col
   */
 object IndexStore {
 
-  /** Artifact root: `spark.graft.indexDir` or a JVM-tmp default. */
-  private def root(s: SparkSession): String =
+  /** Artifact root: `spark.graft.indexDir` or a JVM-tmp default — the
+    * one root every persisted layout (artifacts, bucketed twins, the
+    * bloom layout) lives under. */
+  private[graft] def root(s: SparkSession): String =
     s.conf.getOption("spark.graft.indexDir").getOrElse(
       sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index")
 
@@ -113,11 +124,11 @@ object IndexStore {
       extra: String = ""): String =
     fingerprintOf(version, extra, sourceManifest(s, srcDir))
 
-  /** [[fingerprint]] over EXPLICIT manifest lines — the excision path
-    * ([[readOrBuildSegmented]]) computes the SYNTHETIC fingerprint of
-    * each historical source state minus its deleted files, which is a
-    * state that never existed on disk to be listed. */
-  private def fingerprintOf(version: Int, extra: String,
+  /** [[fingerprint]] over EXPLICIT manifest lines — a read computes it
+    * once from its one listing, and the excision path computes the
+    * SYNTHETIC fingerprint of each historical source state minus its
+    * deleted files, a state that never existed on disk to be listed. */
+  private[graft] def fingerprintOf(version: Int, extra: String,
       manifest: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(s"v$version".getBytes(StandardCharsets.UTF_8))
@@ -243,13 +254,17 @@ object IndexStore {
     }
   }
 
-  /** Any non-hidden data file directly under `p` — the "could a scan
-    * actually read this dir" check [[resolved]]'s fallback needs. */
-  private def hasDataFiles(f: FileSystem, p: Path): Boolean =
-    f.exists(p) && f.listStatus(p).exists(st => !st.isDirectory && {
+  /** The non-hidden data files directly under `p`. */
+  private def dataFiles(f: FileSystem, p: Path): Seq[FileStatus] =
+    f.listStatus(p).toSeq.filter(st => !st.isDirectory && {
       val n = st.getPath.getName
       !(n.startsWith("_") || n.startsWith("."))
     })
+
+  /** Could a scan actually read `p` — the check [[resolved]]'s
+    * fallback needs. */
+  private def hasDataFiles(f: FileSystem, p: Path): Boolean =
+    f.exists(p) && dataFiles(f, p).nonEmpty
 
   /** Parent fingerprint of the segment at `fp`, honoring the two
     * pointer flavors: a REUSE segment (excision path — `_REUSE` marker
@@ -270,13 +285,8 @@ object IndexStore {
 
   /** Segment DATA paths of the chain rooted at `fp`, child first —
     * each fingerprint resolved through its `_HEAD` pointer. */
-  private def chainPaths(f: FileSystem, base: Path, fp: String): Seq[Path] = {
-    val dir = resolved(f, base, fp)
-    segParent(f, base, fp) match {
-      case Some(parent) => dir +: chainPaths(f, base, parent)
-      case None => Seq(dir)
-    }
-  }
+  private def chainPaths(f: FileSystem, base: Path, fp: String): Seq[Path] =
+    chainFps(f, base, fp).map(resolved(f, base, _))
 
   /** Fingerprints of the chain rooted at `fp`, child first — the
     * retention pass protects by fingerprint name, which [[chainPaths]]
@@ -319,10 +329,7 @@ object IndexStore {
     * shuffle, row content and relative order preserved. */
   private def compactStaged(s: SparkSession, f: FileSystem,
       tmp: Path): Unit = {
-    val data = f.listStatus(tmp).filter(st => !st.isDirectory && {
-      val n = st.getPath.getName
-      !(n.startsWith("_") || n.startsWith("."))
-    })
+    val data = dataFiles(f, tmp)
     if (data.isEmpty) return
     val bytes = data.map(_.getLen).sum
     val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
@@ -347,160 +354,237 @@ object IndexStore {
     * builds at their native write parallelism. */
   private val compactBelowBytes = 256L * 1024 * 1024
 
-  /** Read artifact `name` for source `srcDir`, building and persisting
-    * it first if no artifact matches the current source fingerprint.
-    * `build` runs at most once per (source state, version) per store —
-    * across sessions and JVMs, since the artifact lives on disk. */
-  def readOrBuild(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1, extra: String = "")(build: => DataFrame): DataFrame =
-    readOrBuildIncremental(s, name, srcDir, version, extra)(build)(null)
+  // ---- one read per artifact ---------------------------------------------
 
-  /** [[readOrBuild]] with an append-aware incremental path: when a
-    * previous artifact's saved manifest is a strict subset of the
-    * current source manifest (pure append — old files byte-stable by
-    * (path, len, mtime)), `incr(previous, addedFiles)` builds only the
-    * DELTA segment, which is chained to the previous artifact via a
-    * parent pointer; otherwise `full` rebuilds from scratch. The delta
-    * contract is the caller's: `union(previous, delta)` must equal the
-    * full rebuild (true for monotone indexes like band tables and
-    * pair graphs, where appended docs only ADD entries).
-    *
-    * `incr` may return null to DECLINE the delta for this particular
-    * append — the build then falls back to `full`. This is how an
-    * index with a model component (e.g. a trained quantizer) applies a
-    * drift threshold: small appends extend the chain against the
-    * frozen model, a too-large append retrains from scratch. */
-  def readOrBuildIncremental(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1, extra: String = "")(full: => DataFrame)(
-      incr: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
-    val manifest = sourceManifest(s, srcDir)
-    val fp = fingerprint(s, srcDir, version, extra)
-    val base = new Path(s"${root(s)}/$name")
-    val dest = new Path(base, s"fp=$fp")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
-      val f = fs(s, dest)
-      // Servable = published head AND every chain ancestor still present;
-      // a head orphaned by ancestor reclamation is rebuilt here instead
-      // of failing path-not-found at scan time forever.
-      val servable = f.exists(new Path(dest, "_SUCCESS")) &&
-        chainIntact(f, base, fp)
-      if (!servable) {
-        if (f.exists(dest)) { // incomplete or orphaned
-          readSmall(f, new Path(dest, "_HEAD")).map(_.trim)
-            .filter(_.startsWith("seg-"))
-            .foreach(g => f.delete(new Path(base, g), true))
-          f.delete(dest, true)
-        }
-        // candidate parent: a finished artifact whose manifest is the
-        // largest strict subset of ours (pure append since its build)
-        val parent: Option[(String, Seq[String])] =
-          if (incr == null) None
-          else if (!f.exists(base)) None
-          else {
-            val mset = manifest.toSet
-            f.listStatus(base).toSeq
-              .filter(_.getPath.getName.startsWith("fp="))
-              .filter(st => chainIntact(f, base,
-                st.getPath.getName.stripPrefix("fp=")))
-              .flatMap { st =>
-                readSmall(f, new Path(st.getPath, "_MANIFEST")).flatMap { m =>
-                  val lines = m.split("\n").toSeq.filter(_.nonEmpty)
-                  val ok = lines.nonEmpty && lines.forall(mset) &&
-                    lines.size < manifest.size
-                  if (ok)
-                    Some((st.getPath.getName.stripPrefix("fp="), lines))
-                  else None
-                }
-              }
-              .sortBy(-_._2.size)
-              .headOption
-          }
-        // Build into a hidden staging dir, then publish with one atomic
-        // rename: the JVM lock above doesn't cover OTHER processes
-        // (driver verify + a local run share the store), and two
-        // writers into the final path would interleave their task
-        // commits. With rename-commit the loser just reads the
-        // winner's finished artifact.
-        val tmp = new Path(base, s".build-$fp-${System.nanoTime()}")
-        val tBuild = System.nanoTime()
-        val delta: Option[(String, DataFrame)] = parent.flatMap {
-          case (pfp, plines) =>
-            val added = manifest.filterNot(plines.toSet)
-              .map(_.split('|').head)
-            Option(incr(readChain(s, base, pfp), added)).map((pfp, _))
-        }
-        delta match {
-          case Some((pfp, d)) =>
-            d.write.mode("overwrite").parquet(tmp.toString)
-            compactStaged(s, f, tmp)
-            writeSmall(f, new Path(tmp, "_PARENT"), pfp)
-          case None => // no parent, or incr declined (e.g. drift retrain)
-            full.write.mode("overwrite").parquet(tmp.toString)
-            compactStaged(s, f, tmp)
-        }
-        recordBuild(name, fp,
-          if (delta.isDefined) "delta" else "full", tBuild)
-        writeSmall(f, new Path(tmp, "_MANIFEST"), manifest.mkString("\n"))
-        // Publish. If a concurrent builder in ANOTHER process finished
-        // first (its _SUCCESS appeared since our check above), its
-        // artifact is by construction equivalent — discard ours instead
-        // of delete+rename, which (a) could yank files from under that
-        // session's in-flight scan and (b) is not atomic: a crash
-        // between the delete and the rename leaves no artifact at all.
-        if (f.exists(new Path(dest, "_SUCCESS"))) f.delete(tmp, true)
-        else if (!f.rename(tmp, dest)) f.delete(tmp, true) // lost the race
-        // Reclaim superseded source states beyond the retention bound.
-        // Retention counts chain HEADS; the ancestor closure of EVERY
-        // retained head is protected, not just the live chain —
-        // deleting a retained head's parent would leave a published
-        // head whose read throws path-not-found until a manual
-        // invalidate (the multi-warehouse coexistence hazard).
-        val all = f.listStatus(base).toSeq
-          .filter(_.getPath.getName.startsWith("fp="))
-        val liveChain = chainFps(f, base, fp).map(h => s"fp=$h").toSet
-        val retainedHeads = all
-          .filterNot(st => liveChain(st.getPath.getName))
-          .sortBy(-_.getModificationTime)
-          .take(keepFingerprints - 1)
-          .map(_.getPath.getName.stripPrefix("fp="))
-        val chainProtected = liveChain ++ retainedHeads.flatMap(h =>
-          chainFps(f, base, h).map(a => s"fp=$a"))
-        // REUSE segments borrow another fingerprint's DATA dir via
-        // _HEAD — that donor must live as long as any protected chain
-        // references it, even after its own head expired from the
-        // retention window (seg-* donors are already safe: they are
-        // reclaimed only through their referencing head or by the
-        // vacuum's no-referencing-_HEAD rule).
-        val protectedNames = chainProtected ++ chainProtected.flatMap { n =>
-          val d = new Path(base, n)
-          if (f.exists(new Path(d, "_REUSE")))
-            readSmall(f, new Path(d, "_HEAD")).map(_.trim)
-              .filter(_.startsWith("fp="))
-          else None
-        }
-        all.filterNot(st => protectedNames.contains(st.getPath.getName))
-          .foreach { st =>
-            // a compacted head's data lives in its _HEAD target —
-            // reclaim that sibling too, or it leaks unreferenced
-            readSmall(f, new Path(st.getPath, "_HEAD"))
-              .map(_.trim).filter(_.startsWith("seg-"))
-              .foreach(g => f.delete(new Path(base, g), true))
-            f.delete(st.getPath, true)
-          }
-        // AUTO-COMPACTION: each pure append deepens the chain by one
-        // segment and a read is a chain-length multi-path scan, so
-        // read amplification is O(depth) until something folds the
-        // history. Fold when the live chain exceeds the bound: the
-        // fold costs one rewrite of the live state per ≥maxChainDepth
-        // appends (amortized O(1/depth) per append), and ancestors
-        // stay behind for retained as-of readers exactly as a manual
-        // [[compactChain]] leaves them.
-        if (chainPaths(f, base, fp).size > maxChainDepth)
-          compactChain(s, name, srcDir, version)
-      }
+  /** One resolved read: the source listed ONCE and the fingerprint
+    * computed once, shared by every lifecycle step the read runs.
+    * `param` is the read's own parameterization verbatim; `extra` is
+    * the preimage block (upstream identities ahead of `param`). */
+  private final case class Resolved(spec: ArtifactSpec, dir: String,
+      manifest: Seq[String], param: String, base: Path) {
+    val extra: String = spec.keyExtra(param)
+    val fp: String = fingerprintOf(spec.version, extra, manifest)
+    val dest: Path = new Path(base, s"fp=$fp")
+    def paths: Seq[String] = manifest.map(_.split('|').head)
+  }
+
+  /** Resolve `spec` for warehouse `dir`, reusing `listed`'s manifest
+    * when it was listed from the same source directory. */
+  private def resolve(s: SparkSession, spec: ArtifactSpec, dir: String,
+      param: String = "", listed: Option[Resolved] = None): Resolved = {
+    val src = spec.source(dir)
+    val manifest = listed.filter(r => r.spec.source(r.dir) == src)
+      .map(_.manifest).getOrElse(sourceManifest(s, src))
+    Resolved(spec, dir, manifest, param, new Path(s"${root(s)}/${spec.name}"))
+  }
+
+  private def lockOf(name: String): Object =
+    locks.getOrElseUpdate(name, new Object)
+
+  /** Read artifact `spec` for warehouse `dir`, first building and
+    * persisting it if no artifact matches the current source
+    * fingerprint. A build runs at most once per (source state, spec
+    * identity, `extra`) per store — across sessions and JVMs, since the
+    * artifact lives on disk. `extra` is a read's own parameterization
+    * (a shard sink's plan), folded verbatim into the fingerprint. */
+  def read(s: SparkSession, spec: ArtifactSpec, dir: String,
+      extra: String = ""): DataFrame = {
+    val r = resolve(s, spec, dir, extra)
+    lockOf(spec.name).synchronized(maintain(s, r))
+    spec.decomp match {
+      case p: Decomp.Partitioned => readPartitioned(s, r.base, r.fp, p.partCol)
+      case _ => readChain(s, r.base, r.fp)
     }
-    readChain(s, base, fp)
+  }
+
+  /** Run `r`'s lifecycle under its artifact lock: nothing when the
+    * current state is servable, else the decomposition's steps —
+    * carry or excise on deletion, then a delta or full build. */
+  private def maintain(s: SparkSession, r: Resolved): Unit = {
+    val f = fs(s, r.base)
+    val dir = r.dir
+    r.spec.decomp match {
+      case p: Decomp.Partitioned =>
+        if (!partServable(f, r.base, r.dest)) buildPartitioned(s, f, r, p)
+      case _ if servable(f, r.base, r.fp) => ()
+      case Decomp.Full(full) => buildChained(s, f, r, () => full(s, dir), null)
+      case Decomp.Append(full, incr) =>
+        buildChained(s, f, r, () => full(s, dir), incr(s, dir))
+      case Decomp.Model(full, incr, accept) =>
+        carryOnDelete(s, f, r, accept(s, dir))
+        if (!servable(f, r.base, r.fp))
+          buildChained(s, f, r, () => full(s, dir), incr(s, dir))
+      case Decomp.Segmented(perFiles, gate) =>
+        val per = perFiles(s, dir)
+        val carry: (Seq[String], Seq[String]) => Boolean = gate match {
+          case Decomp.Gate.Open => (_, _) => true
+          case Decomp.Gate.Model => (_, _) => modelCarried(s, r)
+          case Decomp.Gate.When(c) => c(s, dir)
+        }
+        exciseOnDelete(s, f, r, per, carry)
+        if (!servable(f, r.base, r.fp))
+          buildChained(s, f, r, () => per(r.paths),
+            (_, added) => if (carry(Nil, added)) per(added) else null)
+    }
+  }
+
+  /** A head is servable when it is published and EVERY chain segment
+    * still is — a head whose ancestor was reclaimed must not be served
+    * or reused as a parent; it rebuilds instead of throwing
+    * path-not-found forever. */
+  private def servable(f: FileSystem, base: Path, fp: String): Boolean =
+    f.exists(new Path(new Path(base, s"fp=$fp"), "_SUCCESS")) &&
+      chainIntact(f, base, fp)
+
+  /** Every servable head with its recorded manifest — the candidate
+    * parents, deletion donors and carry donors. */
+  private def heads(f: FileSystem, base: Path): Seq[(String, Seq[String])] =
+    fpDirs(f, base).map(_.getPath.getName.stripPrefix("fp="))
+      .filter(servable(f, base, _))
+      .flatMap(g => manifestOf(f, new Path(base, s"fp=$g")).map((g, _)))
+
+  private def fpDirs(f: FileSystem, base: Path): Seq[FileStatus] =
+    if (!f.exists(base)) Nil
+    else f.listStatus(base).toSeq.filter(_.getPath.getName.startsWith("fp="))
+
+  private def manifestOf(f: FileSystem, d: Path): Option[Seq[String]] =
+    readSmall(f, new Path(d, "_MANIFEST"))
+      .map(_.split("\n").toSeq.filter(_.nonEmpty))
+
+  /** The head sharing the most files with the current state while
+    * having LOST at least one (a strict-subset manifest is the append
+    * case, not a deletion). */
+  private def deletionDonor(f: FileSystem,
+      r: Resolved): Option[(String, Seq[String])] = {
+    val mset = r.manifest.toSet
+    heads(f, r.base)
+      .filter { case (_, lines) => lines.exists(l => !mset(l)) && lines.exists(mset) }
+      .sortBy { case (_, lines) => -lines.count(mset) }
+      .headOption
+  }
+
+  /** Stage `write` into a hidden dir, compact it, add the marker files,
+    * record the build and publish it as `fp=<fp>` with one atomic
+    * rename. The JVM lock doesn't cover OTHER processes (driver verify
+    * and a local run share the store); if a concurrent builder
+    * published first, its artifact is by construction equivalent, so
+    * ours is discarded rather than swapped in — a delete+rename could
+    * yank files from under that session's in-flight scan, and is not
+    * atomic. */
+  private def publish(s: SparkSession, f: FileSystem, r: Resolved,
+      fp: String, mode: String, t0: Long, write: Path => Unit,
+      markers: (String, String)*): Unit = {
+    val tmp = new Path(r.base, s".build-$fp-${System.nanoTime()}")
+    write(tmp)
+    compactStaged(s, f, tmp)
+    markers.foreach { case (n, v) => writeSmall(f, new Path(tmp, n), v) }
+    recordBuild(r.spec.name, fp, mode, t0)
+    val dest = new Path(r.base, s"fp=$fp")
+    if (f.exists(new Path(dest, "_SUCCESS"))) f.delete(tmp, true)
+    else if (!f.rename(tmp, dest)) f.delete(tmp, true)
+  }
+
+  private def parquetTo(df: DataFrame): Path => Unit =
+    p => df.write.mode("overwrite").parquet(p.toString)
+
+  /** A marker-only segment: no data files, published by `_SUCCESS`. */
+  private def markerDir(f: FileSystem): Path => Unit =
+    p => { f.mkdirs(p); writeSmall(f, new Path(p, "_SUCCESS"), "") }
+
+  /** The append-aware build: when a published artifact's manifest is
+    * the largest strict subset of the current one (a pure append since
+    * its build — old files byte-stable by (path, len, mtime)),
+    * `incr(previous, addedFiles)` builds only the DELTA segment,
+    * chained to it by a parent pointer; otherwise (no parent, `incr`
+    * null, or `incr` declining with null — how a model applies its
+    * drift threshold) `full` rebuilds from scratch. Then retention and
+    * the auto-fold. */
+  private def buildChained(s: SparkSession, f: FileSystem, r: Resolved,
+      full: () => DataFrame, incr: (DataFrame, Seq[String]) => DataFrame): Unit = {
+    if (f.exists(r.dest)) { // incomplete or orphaned
+      readSmall(f, new Path(r.dest, "_HEAD")).map(_.trim)
+        .filter(_.startsWith("seg-"))
+        .foreach(g => f.delete(new Path(r.base, g), true))
+      f.delete(r.dest, true)
+    }
+    val mset = r.manifest.toSet
+    val parent =
+      if (incr == null) None
+      else heads(f, r.base)
+        .filter { case (_, lines) =>
+          lines.nonEmpty && lines.forall(mset) && lines.size < r.manifest.size }
+        .sortBy(-_._2.size)
+        .headOption
+    val t0 = System.nanoTime()
+    val delta = parent.flatMap { case (pfp, plines) =>
+      val added = r.manifest.filterNot(plines.toSet).map(_.split('|').head)
+      Option(incr(readChain(s, r.base, pfp), added)).map((pfp, _))
+    }
+    val manifest = "_MANIFEST" -> r.manifest.mkString("\n")
+    delta match {
+      case Some((pfp, d)) =>
+        publish(s, f, r, r.fp, "delta", t0, parquetTo(d), "_PARENT" -> pfp, manifest)
+      case None =>
+        publish(s, f, r, r.fp, "full", t0, parquetTo(full()), manifest)
+    }
+    retainChains(f, r.base, r.fp)
+    // AUTO-COMPACTION: each pure append deepens the chain by one
+    // segment and a read is a chain-length multi-path scan, so read
+    // amplification is O(depth) until something folds the history.
+    // Fold when the live chain exceeds the bound: one rewrite of the
+    // live state per ≥maxChainDepth appends, and ancestors stay behind
+    // for retained as-of readers exactly as [[compactChain]] leaves
+    // them. The fold works from this read's resolved fingerprint.
+    if (chainPaths(f, r.base, r.fp).size > maxChainDepth) fold(s, f, r)
+  }
+
+  /** Reclaim superseded source states beyond the retention bound.
+    * Retention counts chain HEADS; the ancestor closure of EVERY
+    * retained head is protected, not just the live chain — deleting a
+    * retained head's parent would leave a published head whose read
+    * throws path-not-found until a manual invalidate. REUSE segments
+    * borrow another fingerprint's DATA dir via `_HEAD`, so that donor
+    * lives as long as any protected chain references it (seg-* donors
+    * are reclaimed only through their referencing head or by vacuum). */
+  private def retainChains(f: FileSystem, base: Path, fp: String): Unit = {
+    val all = fpDirs(f, base)
+    val liveChain = chainFps(f, base, fp).map(h => s"fp=$h").toSet
+    val retainedHeads = all
+      .filterNot(st => liveChain(st.getPath.getName))
+      .sortBy(-_.getModificationTime)
+      .take(keepFingerprints - 1)
+      .map(_.getPath.getName.stripPrefix("fp="))
+    val chainProtected = liveChain ++ retainedHeads.flatMap(h =>
+      chainFps(f, base, h).map(a => s"fp=$a"))
+    val protectedNames = chainProtected ++ chainProtected.flatMap { n =>
+      val d = new Path(base, n)
+      if (f.exists(new Path(d, "_REUSE")))
+        readSmall(f, new Path(d, "_HEAD")).map(_.trim).filter(_.startsWith("fp="))
+      else None
+    }
+    all.filterNot(st => protectedNames.contains(st.getPath.getName))
+      .foreach { st =>
+        // a compacted head's data lives in its _HEAD target — reclaim
+        // that sibling too, or it leaks unreferenced
+        readSmall(f, new Path(st.getPath, "_HEAD"))
+          .map(_.trim).filter(_.startsWith("seg-"))
+          .foreach(g => f.delete(new Path(base, g), true))
+        f.delete(st.getPath, true)
+      }
+  }
+
+  /** Keep the [[keepFingerprints]] newest `fp=` dirs under `base` plus
+    * the dirs they `linked` to; delete the rest. The retention rule of
+    * the partitioned sinks and the non-registry layouts (bucketed
+    * twins, the bloom layout). */
+  private[graft] def retainNewest(f: FileSystem, base: Path,
+      linked: Path => Seq[String] = _ => Nil): Unit = {
+    val all = fpDirs(f, base)
+    val kept = all.sortBy(-_.getModificationTime).take(keepFingerprints)
+      .map(_.getPath)
+    val keep = kept.map(_.getName).toSet ++ kept.flatMap(linked)
+    all.filterNot(st => keep(st.getPath.getName))
+      .foreach(st => f.delete(st.getPath, true))
   }
 
   /** Live chains deeper than this auto-fold at the end of the next
@@ -508,330 +592,242 @@ object IndexStore {
     * fold cost amortized well under one full rebuild per append). */
   private val maxChainDepth = 8
 
-  /** [[readOrBuildIncremental]] for FILE-DECOMPOSABLE artifacts — ones
-    * whose content is a union of independent per-source-file
-    * contributions (`union over a partition of the files of
-    * perFiles(part) ≡ full build`; true for partial-aggregate count
-    * chains read through a SUM fold, and for per-document rows like
-    * shingle sets and band indexes, since documents never span source
-    * files). ONE build function covers every lifecycle event:
-    *
-    *  - first sight: full build = `perFiles(every file)`;
-    *  - pure APPEND: delta segment = `perFiles(added)`, chained —
-    *    exactly the existing incremental path;
-    *  - DELETION (with or without concurrent appends): the chain is
-    *    EXCISED instead of rebuilt. Each historical segment whose file
-    *    window lost members is rebuilt as `perFiles(window \ deleted)`
-    *    — the deleted files' segment contributions are the ONLY
-    *    recompute; every untouched segment above the first touched one
-    *    re-links at its synthetic fingerprint as a zero-copy `_REUSE`
-    *    pointer to the donor segment's data, and the untouched root
-    *    prefix is shared outright (its synthetic fingerprints equal
-    *    the donor's, so the dirs already exist). A GDPR takedown or
-    *    bad-crawl retraction at 100 TB therefore re-pays one segment's
-    *    build, not the corpus-sized artifact — previously ANY deletion
-    *    moved the fingerprint with no subset parent and triggered the
-    *    full rebuild.
-    *
-    * Artifacts whose rows SPAN segments (the verified pair graph — a
-    * pair's endpoints live in different appends) are NOT
-    * file-decomposable; they keep [[readOrBuildIncremental]], where a
-    * deletion still falls back to the full rebuild by design — the
-    * documented "unsplittable" case. */
-  def readOrBuildSegmented(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1, extra: String = "")(
-      perFiles: Seq[String] => DataFrame): DataFrame =
-    readOrBuildSegmentedGated(s, name, srcDir, version, extra)(perFiles)(
-      (_, _) => true)
-
-  /** [[readOrBuildSegmented]] with a CARRY GATE for artifacts whose
-    * per-file contribution depends on a MODEL artifact (quantizer
-    * scales, centroids, codebooks): `carry(deletedLines, addedPaths)`
-    * is consulted before the excision path AND before an append
-    * delta. `deletedLines` are the MANIFEST LINES (`path|len|mtime`)
-    * of the files the source state lost — the files themselves are
-    * gone, so byte sizes for drift math must come from the recorded
-    * line; `addedPaths` are plain paths (added files exist and can be
-    * read). Returning true asserts the model the contributions were
-    * computed against is UNCHANGED at the current source state
-    * (frozen chain or delete-carry), so reused segments and rebuilt
-    * segments encode against the same model; returning false declines
-    * both shortcuts and the artifact rebuilds in full — the retrain
-    * cascade. The gate should resolve the model artifact (so its own
-    * lifecycle runs at the current fingerprint) and then check
-    * [[isChained]]/[[frozenFrom]]. */
-  def readOrBuildSegmentedGated(s: SparkSession, name: String,
-      srcDir: String, version: Int = 1, extra: String = "")(
-      perFiles: Seq[String] => DataFrame)(
-      carry: (Seq[String], Seq[String]) => Boolean): DataFrame = {
-    exciseOnDelete(s, name, srcDir, version, extra)(perFiles)(carry)
-    readOrBuildIncremental(s, name, srcDir, version, extra)(
-      perFiles(sourceManifest(s, srcDir).map(_.split('|').head)))(
-      (_, added) => if (carry(Nil, added)) perFiles(added) else null)
+  /** The [[Decomp.Gate.Model]] carry: run the
+    * model's (first upstream's) lifecycle at this source state, then
+    * report whether it carried — reusing this read's listing when the
+    * model is keyed on the same table. */
+  private def modelCarried(s: SparkSession, r: Resolved): Boolean = {
+    val m = resolve(s, r.spec.upstreams.head, r.dir, listed = Some(r))
+    lockOf(m.spec.name).synchronized(maintain(s, m))
+    carried(fs(s, m.base), m)
   }
 
-  /** The deletion path of [[readOrBuildSegmented]]: if the current
-    * source state is not servable and some finished artifact's
-    * manifest shares files with ours while having LOST at least one,
-    * build the current fingerprint's chain by per-segment excision of
-    * that donor. No-op otherwise — the caller falls through to the
-    * append/full machinery. Idempotent and crash-safe per segment
-    * (stage + atomic rename, the build discipline); a crash mid-chain
-    * leaves the head unpublished, so the next attempt resumes segment
-    * by segment (finished synthetic dirs are found by their
-    * `_SUCCESS`). */
-  private def exciseOnDelete(s: SparkSession, name: String, srcDir: String,
-      version: Int, extra: String)(
-      perFiles: Seq[String] => DataFrame)(
-      carry: (Seq[String], Seq[String]) => Boolean): Unit = {
-    val manifest = sourceManifest(s, srcDir)
-    val fp = fingerprintOf(version, extra, manifest)
-    val base = new Path(s"${root(s)}/$name")
-    val dest = new Path(base, s"fp=$fp")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
-      val f = fs(s, dest)
-      if (f.exists(new Path(dest, "_SUCCESS")) && chainIntact(f, base, fp))
-        return // current state already servable
-      if (!f.exists(base)) return
-      val mset = manifest.toSet
-      // donor: the finished, intact artifact sharing the most files
-      // with the current state while having lost at least one (a
-      // strict-subset manifest is the APPEND case — not ours)
-      val donor = f.listStatus(base).toSeq
-        .filter(_.getPath.getName.startsWith("fp="))
-        .map(_.getPath.getName.stripPrefix("fp="))
-        .filter(g =>
-          f.exists(new Path(new Path(base, s"fp=$g"), "_SUCCESS")) &&
-            chainIntact(f, base, g))
-        .flatMap { g =>
-          readSmall(f, new Path(new Path(base, s"fp=$g"), "_MANIFEST"))
-            .map(m => (g, m.split("\n").toSeq.filter(_.nonEmpty)))
-        }
-        .filter { case (_, lines) =>
-          lines.exists(l => !mset(l)) && lines.exists(mset)
-        }
-        .sortBy { case (_, lines) => -lines.count(mset) }
-        .headOption
-      donor match {
-        case None => ()
-        case Some((afp, aLines)) =>
-          val deleted = aLines.filterNot(mset).toSet
-          val added = manifest.filterNot(aLines.toSet)
-          // model-consistency gate: a declined carry (the model
-          // retrained at this transition) falls through to the full
-          // rebuild instead of mixing old-model reused segments with
-          // new-model rebuilt ones
-          if (!carry(deleted.toSeq.sorted, added.map(_.split('|').head)))
-            return
-          val fpsRootFirst = chainFps(f, base, afp).reverse
-          val segManifests = fpsRootFirst.map { g =>
-            readSmall(f, new Path(new Path(base, s"fp=$g"), "_MANIFEST"))
-              .map(_.split("\n").toSeq.filter(_.nonEmpty))
-          }
-          if (segManifests.forall(_.isDefined)) {
-            var donorCum = Set.empty[String]
-            var newLines = Seq.empty[String]
-            var parentNew: Option[String] = None
-            fpsRootFirst.zip(segManifests.map(_.get)).zipWithIndex
-              .foreach { case ((g, mI), idx) =>
-                val window = mI.filterNot(donorCum)
-                val isHead = idx == fpsRootFirst.size - 1
-                val windowNew = window.filterNot(deleted) ++
-                  (if (isHead) added else Nil)
-                val mNew = (newLines ++ windowNew).sorted
-                val fpNew = fingerprintOf(version, extra, mNew)
-                // fpNew == g ⇔ nothing below or inside this segment
-                // changed — the shared root prefix, no new dir at all
-                if (fpNew != g) {
-                  val newDir = new Path(base, s"fp=$fpNew")
-                  if (!f.exists(new Path(newDir, "_SUCCESS"))) {
-                    if (f.exists(newDir)) f.delete(newDir, true) // debris
-                    val tmp = new Path(base,
-                      s".build-$fpNew-${System.nanoTime()}")
-                    val tBuild = System.nanoTime()
-                    val mode =
-                      if (windowNew == window) "excise-reuse"
-                      else if (windowNew.isEmpty) "excise-empty"
-                      else "excise-rebuild"
-                    if (windowNew == window) {
-                      // window intact, only the lineage below changed:
-                      // borrow the donor segment's data, zero copy
-                      f.mkdirs(tmp)
-                      writeSmall(f, new Path(tmp, "_HEAD"),
-                        resolved(f, base, g).getName)
-                      writeSmall(f, new Path(tmp, "_REUSE"), "")
-                      writeSmall(f, new Path(tmp, "_SUCCESS"), "")
-                    } else if (windowNew.isEmpty) {
-                      // the whole window was deleted. A marker-only dir
-                      // keeps the chain arithmetic flat, but if EVERY
-                      // chain segment ended up file-less the multi-path
-                      // scan would have no footer to infer a schema
-                      // from (ADVICE r9) — so carry the artifact schema
-                      // as a zero-row parquet file cloned from the
-                      // donor segment's own data when it has any.
-                      val donorData = resolved(f, base, g)
-                      if (hasDataFiles(f, donorData))
-                        s.read.parquet(donorData.toString).limit(0)
-                          .write.mode("overwrite").parquet(tmp.toString)
-                      else {
-                        f.mkdirs(tmp)
-                        writeSmall(f, new Path(tmp, "_SUCCESS"), "")
-                      }
-                    } else {
-                      perFiles(windowNew.map(_.split('|').head))
-                        .write.mode("overwrite").parquet(tmp.toString)
-                      compactStaged(s, f, tmp)
-                    }
-                    writeSmall(f, new Path(tmp, "_MANIFEST"),
-                      mNew.mkString("\n"))
-                    parentNew.foreach(p =>
-                      writeSmall(f, new Path(tmp, "_PARENT"), p))
-                    recordBuild(name, fpNew, mode, tBuild)
-                    if (f.exists(new Path(newDir, "_SUCCESS")))
-                      f.delete(tmp, true) // concurrent equivalent build
-                    else if (!f.rename(tmp, newDir)) f.delete(tmp, true)
-                  }
-                }
-                parentNew = Some(fpNew)
-                donorCum ++= mI
-                newLines = mNew
-              }
-          }
-      }
-    }
-  }
+  /** The artifact serving `m`'s state is the previous state's model:
+    * append-frozen (a delta chained to a parent) or delete-carried (a
+    * `_FROZEN` republish). */
+  private def carried(f: FileSystem, m: Resolved): Boolean =
+    segParent(f, m.base, m.fp).nonEmpty || frozen(f, m).nonEmpty
 
-  /** PARTITION-DECOMPOSABLE sinks (the q152/q154 shard artifacts):
-    * the artifact's rows cluster by a partition column (`source`) and
-    * a partition's content depends only on (that partition's input
-    * rows, that partition's slice of the `extra` parameterization) —
-    * NOT file-decomposable (a source's cumulative cutoff spans every
-    * input file carrying that source) but cleanly decomposable one
-    * level up. Lifecycle:
-    *
-    *  - the artifact is written `partitionBy(partCol)` under `data/`,
-    *    with a `_PARTMAP` recording which INPUT FILES carry which
-    *    partition values (one columnar scan at build time) and the
-    *    verbatim `extra` in `_EXTRA`;
-    *  - on a source change, the TOUCHED partitions are (values in
-    *    deleted files, from the donor's recorded `_PARTMAP` — the
-    *    files themselves are gone) ∪ (values in added files, scanned)
-    *    ∪ (values whose `extra` slice changed, from
-    *    `extraDiffParts(donorExtra, extra)` — `None` means the diff
-    *    is not attributable and the whole artifact rebuilds);
-    *  - `build(Some(touched))` re-extracts ONLY the touched
-    *    partitions; every untouched partition re-links ZERO-COPY via
-    *    a `_PARTS` pointer file naming the donor's `part=` dir — a
-    *    takedown at 100 TB re-pays the touched sources' extraction,
-    *    never the full sink, and untouched sources' shard files stay
-    *    byte-identical (they are literally the same files).
-    *
-    * Reads resolve `_PARTS`: one scan over the head's own `data/`
-    * plus one basePath-scan over the linked donor dirs — O(2) scans
-    * regardless of partition count. A torn link (donor reclaimed)
-    * fails servability and the next read rebuilds. Retention: heads
-    * referenced by a `_PARTS` file are protected like `_REUSE`
-    * donors. */
-  def readOrBuildPartitioned(s: SparkSession, name: String,
-      srcDir: String, partCol: String, version: Int = 1,
-      extra: String = "")(build: Option[Set[String]] => DataFrame)(
-      extraDiffParts: (String, String) => Option[Set[String]]): DataFrame = {
-    val manifest = sourceManifest(s, srcDir)
-    val fp = fingerprintOf(version, extra, manifest)
-    val base = new Path(s"${root(s)}/$name")
-    val dest = new Path(base, s"fp=$fp")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
-      val f = fs(s, dest)
-      if (!partServable(f, base, dest)) {
-        if (f.exists(dest)) f.delete(dest, true) // unfinished or torn
-        // donor: the finished artifact sharing the most files
-        val mset = manifest.toSet
-        val donor = (if (f.exists(base)) f.listStatus(base).toSeq else Nil)
-          .filter(_.getPath.getName.startsWith("fp="))
-          .map(_.getPath.getName.stripPrefix("fp="))
-          .filter(g => partServable(f, base, new Path(base, s"fp=$g")))
-          .flatMap { g =>
-            val d = new Path(base, s"fp=$g")
-            for {
-              m <- readSmall(f, new Path(d, "_MANIFEST"))
-              pm <- readSmall(f, new Path(d, "_PARTMAP"))
-              ex = readSmall(f, new Path(d, "_EXTRA")).getOrElse("")
-              lines = m.split("\n").toSeq.filter(_.nonEmpty)
-              if lines.exists(mset)
-            } yield (g, lines, parsePartMap(pm), ex)
-          }
-          .sortBy { case (_, lines, _, _) => -lines.count(mset) }
-          .headOption
-        val touched: Option[(String, Set[String])] = donor.flatMap {
-          case (g, dLines, dMap, dExtra) =>
-            val deleted = dLines.filterNot(mset)
-              .map(_.split('|').head.split('/').last)
-            val added = manifest.filterNot(dLines.toSet)
-              .map(_.split('|').head)
-            extraDiffParts(dExtra, extra).map { extraParts =>
-              val delParts = deleted.flatMap(fn =>
-                dMap.getOrElse(fn, Set.empty)).toSet
-              val addParts =
-                if (added.isEmpty) Set.empty[String]
-                else partsOfFiles(s, added, partCol)
-              (g, delParts ++ addParts ++ extraParts)
+  private def frozen(f: FileSystem, m: Resolved): Option[String] =
+    readSmall(f, new Path(m.dest, "_FROZEN")).map(_.trim).filter(_.nonEmpty)
+
+  /** The deletion path of a [[Decomp.Segmented]] artifact (ONE build
+    * function covers every lifecycle event — its rows are a union of
+    * per-file contributions, and documents never span files): if a
+    * donor LOST files, the current fingerprint's chain is built by
+    * per-segment excision of it. Each historical segment whose file
+    * window lost members is rebuilt as `perFiles(window \ deleted)` —
+    * the only recompute; every untouched segment above the first
+    * touched one re-links at its synthetic fingerprint as a zero-copy
+    * `_REUSE` pointer to the donor segment's data, and the untouched
+    * root prefix is shared outright (its synthetic fingerprints equal
+    * the donor's). A takedown at 100 TB therefore re-pays one
+    * segment's build, not the corpus-sized artifact. `carry` declining
+    * (a model retrained at this transition) skips excision, so the
+    * caller rebuilds in full instead of mixing old-model reused
+    * segments with new-model rebuilt ones. Idempotent and crash-safe
+    * per segment; a crash mid-chain leaves the head unpublished and
+    * the next attempt resumes. Artifacts whose rows SPAN segments (the
+    * verified pair graph) are [[Decomp.Append]], where a deletion
+    * falls back to the full rebuild by design. */
+  private def exciseOnDelete(s: SparkSession, f: FileSystem, r: Resolved,
+      perFiles: Seq[String] => DataFrame,
+      carry: (Seq[String], Seq[String]) => Boolean): Unit =
+    deletionDonor(f, r).foreach { case (afp, aLines) =>
+      val mset = r.manifest.toSet
+      val deleted = aLines.filterNot(mset).toSet
+      val added = r.manifest.filterNot(aLines.toSet)
+      val fpsRootFirst = chainFps(f, r.base, afp).reverse
+      val segManifests = fpsRootFirst.map(g =>
+        manifestOf(f, new Path(r.base, s"fp=$g")))
+      if (carry(deleted.toSeq.sorted, added.map(_.split('|').head)) &&
+          segManifests.forall(_.isDefined)) {
+        var donorCum = Set.empty[String]
+        var newLines = Seq.empty[String]
+        var parentNew: Option[String] = None
+        fpsRootFirst.zip(segManifests.map(_.get)).zipWithIndex
+          .foreach { case ((g, mI), idx) =>
+            val window = mI.filterNot(donorCum)
+            val isHead = idx == fpsRootFirst.size - 1
+            val windowNew = window.filterNot(deleted) ++
+              (if (isHead) added else Nil)
+            val mNew = (newLines ++ windowNew).sorted
+            val fpNew = fingerprintOf(r.spec.version, r.extra, mNew)
+            val newDir = new Path(r.base, s"fp=$fpNew")
+            // fpNew == g ⇔ nothing below or inside this segment
+            // changed — the shared root prefix, no new dir at all
+            if (fpNew != g && !f.exists(new Path(newDir, "_SUCCESS"))) {
+              if (f.exists(newDir)) f.delete(newDir, true) // debris
+              val t0 = System.nanoTime()
+              val donorData = resolved(f, r.base, g)
+              val markers = Seq("_MANIFEST" -> mNew.mkString("\n")) ++
+                parentNew.map("_PARENT" -> _)
+              if (windowNew == window)
+                // window intact, only the lineage below changed:
+                // borrow the donor segment's data, zero copy
+                publish(s, f, r, fpNew, "excise-reuse", t0, markerDir(f),
+                  Seq("_HEAD" -> donorData.getName, "_REUSE" -> "") ++ markers: _*)
+              else if (windowNew.isEmpty)
+                // the whole window was deleted. A marker-only dir keeps
+                // the chain arithmetic flat, but if EVERY segment ended
+                // up file-less the multi-path scan would have no footer
+                // to infer a schema from (ADVICE r9) — so carry the
+                // schema as a zero-row file cloned from the donor
+                publish(s, f, r, fpNew, "excise-empty", t0,
+                  if (hasDataFiles(f, donorData))
+                    parquetTo(s.read.parquet(donorData.toString).limit(0))
+                  else markerDir(f), markers: _*)
+              else
+                publish(s, f, r, fpNew, "excise-rebuild", t0,
+                  parquetTo(perFiles(windowNew.map(_.split('|').head))),
+                  markers: _*)
             }
-        }
-        val tmp = new Path(base, s".build-$fp-${System.nanoTime()}")
-        val data = new Path(tmp, "data")
-        val tBuild = System.nanoTime()
-        touched match {
-          case Some((g, parts)) =>
-            if (parts.nonEmpty)
-              build(Some(parts))
-                .write.mode("overwrite").partitionBy(partCol)
-                .parquet(data.toString)
-            else f.mkdirs(data)
-            // zero-copy links for every untouched donor partition
-            val donorData = new Path(new Path(base, s"fp=$g"), "data")
-            val donorParts = f.listStatus(donorData).toSeq
-              .filter(st => st.isDirectory &&
-                st.getPath.getName.contains("="))
-              .map(_.getPath.getName)
-            val links = donorParts.filterNot(p =>
-              parts.contains(partValueOf(p)))
-              .map(p => s"fp=$g/data/$p")
-            writeSmall(f, new Path(tmp, "_PARTS"), links.mkString("\n"))
-          case None =>
-            build(None)
-              .write.mode("overwrite").partitionBy(partCol)
-              .parquet(data.toString)
-            writeSmall(f, new Path(tmp, "_PARTS"), "")
-        }
-        writeSmall(f, new Path(tmp, "_PARTMAP"), renderPartMap(
-          partMapOf(s, manifest.map(_.split('|').head), partCol)))
-        writeSmall(f, new Path(tmp, "_EXTRA"), extra)
-        writeSmall(f, new Path(tmp, "_MANIFEST"), manifest.mkString("\n"))
-        writeSmall(f, new Path(tmp, "_SUCCESS"), "")
-        recordBuild(name, fp,
-          if (touched.isDefined) "part-delta" else "part-full", tBuild)
-        if (f.exists(new Path(dest, "_SUCCESS"))) f.delete(tmp, true)
-        else if (!f.rename(tmp, dest)) f.delete(tmp, true)
-        // retention: same bounded-head policy as the chain store,
-        // protecting link donors like _REUSE donors
-        val all = f.listStatus(base).toSeq
-          .filter(_.getPath.getName.startsWith("fp="))
-        val retained = all.sortBy(-_.getModificationTime)
-          .take(keepFingerprints).map(_.getPath.getName)
-        val protectedNames: Set[String] = retained.toSet ++
-          retained.flatMap { n =>
-            readSmall(f, new Path(new Path(base, n), "_PARTS")).toSeq
-              .flatMap(_.split("\n").toSeq)
-              .filter(_.nonEmpty)
-              .map(_.split('/').head)
+            parentNew = Some(fpNew)
+            donorCum ++= mI
+            newLines = mNew
           }
-        all.filterNot(st => protectedNames.contains(st.getPath.getName))
-          .foreach(st => f.delete(st.getPath, true))
       }
     }
-    readPartitioned(s, base, fp, partCol)
+
+  /** Freeze-on-delete for a [[Decomp.Model]] artifact (quantizer
+    * scales, centroid tables, codebooks — tiny, model-sized relations):
+    * when a donor LOST files and `accept(deletedLines, addedPaths)` says
+    * the frozen model remains valid for the surviving corpus, the
+    * donor's FOLDED content is republished at the current fingerprint
+    * as a standalone segment carrying a `_FROZEN` marker naming the
+    * donor — the deletion analog of the append-freeze chain
+    * (`prev.limit(0)` deltas). Downstream code chains then EXCISE
+    * instead of re-encoding; a drift-sized deletion declines and the
+    * model retrains. The copy is one model-sized write. */
+  private def carryOnDelete(s: SparkSession, f: FileSystem, r: Resolved,
+      accept: (Seq[String], Seq[String]) => Boolean): Unit =
+    deletionDonor(f, r).foreach { case (afp, aLines) =>
+      val deleted = aLines.filterNot(r.manifest.toSet).sorted
+      val added = r.manifest.filterNot(aLines.toSet).map(_.split('|').head)
+      if (accept(deleted, added)) {
+        if (f.exists(r.dest)) f.delete(r.dest, true) // unfinished debris
+        publish(s, f, r, r.fp, "carry", System.nanoTime(),
+          parquetTo(readChain(s, r.base, afp)),
+          "_MANIFEST" -> r.manifest.mkString("\n"), "_FROZEN" -> afp)
+      }
+    }
+
+  /** A [[Decomp.Partitioned]] build (the q152/q154 shard sinks): the
+    * artifact is written `partitionBy(partCol)` under `data/`, with a
+    * `_PARTMAP` recording which INPUT FILES carry which partition
+    * values and the read's verbatim `extra` in `_EXTRA`. On a source
+    * change the TOUCHED partitions are (values in deleted files, from
+    * the donor's `_PARTMAP` — the files are gone) ∪ (values in added
+    * files, scanned) ∪ (values whose `extra` slice changed); only those
+    * re-extract, and every untouched partition re-links ZERO-COPY via
+    * a `_PARTS` pointer to the donor's `part=` dir — a takedown at
+    * 100 TB re-pays the touched sources' extraction, never the full
+    * sink. A torn link fails servability and the next read rebuilds;
+    * retention protects link donors like `_REUSE` donors. */
+  private def buildPartitioned(s: SparkSession, f: FileSystem, r: Resolved,
+      p: Decomp.Partitioned): Unit = {
+    if (f.exists(r.dest)) f.delete(r.dest, true) // unfinished or torn
+    val mset = r.manifest.toSet
+    val donor = fpDirs(f, r.base)
+      .map(_.getPath)
+      .filter(d => partServable(f, r.base, d))
+      .flatMap { d =>
+        for {
+          lines <- manifestOf(f, d)
+          pm <- readSmall(f, new Path(d, "_PARTMAP"))
+          if lines.exists(mset)
+        } yield (d.getName.stripPrefix("fp="), lines, parsePartMap(pm),
+          readSmall(f, new Path(d, "_EXTRA")).getOrElse(""))
+      }
+      .sortBy { case (_, lines, _, _) => -lines.count(mset) }
+      .headOption
+    val touched: Option[(String, Set[String])] = donor.flatMap {
+      case (g, dLines, dMap, dExtra) =>
+        val deleted = dLines.filterNot(mset).map(_.split('|').head.split('/').last)
+        val added = r.manifest.filterNot(dLines.toSet).map(_.split('|').head)
+        p.extraDiff(dExtra, r.param).map { extraParts =>
+          val delParts = deleted.flatMap(fn => dMap.getOrElse(fn, Set.empty)).toSet
+          val addParts =
+            if (added.isEmpty) Set.empty[String] else partsOfFiles(s, added, p.partCol)
+          (g, delParts ++ addParts ++ extraParts)
+        }
+    }
+    val t0 = System.nanoTime()
+    val build = p.build(s, r.dir, r.param)
+    def extract(parts: Option[Set[String]])(data: Path): Unit =
+      build(parts).write.mode("overwrite").partitionBy(p.partCol)
+        .parquet(data.toString)
+    val (write, links) = touched match {
+      case Some((g, parts)) =>
+        // zero-copy links for every untouched donor partition
+        val donorParts = f.listStatus(new Path(new Path(r.base, s"fp=$g"), "data"))
+          .toSeq.filter(st => st.isDirectory && st.getPath.getName.contains("="))
+          .map(_.getPath.getName)
+        val links = donorParts.filterNot(d => parts.contains(partValueOf(d)))
+          .map(d => s"fp=$g/data/$d")
+        ((tmp: Path) => {
+          val data = new Path(tmp, "data")
+          if (parts.nonEmpty) extract(Some(parts))(data) else f.mkdirs(data)
+          ()
+        }, links)
+      case None => ((tmp: Path) => extract(None)(new Path(tmp, "data")), Nil)
+    }
+    publish(s, f, r, r.fp, if (touched.isDefined) "part-delta" else "part-full",
+      t0, write,
+      "_PARTS" -> links.mkString("\n"),
+      "_PARTMAP" -> renderPartMap(partMapOf(s, r.paths, p.partCol)),
+      "_EXTRA" -> r.param,
+      "_MANIFEST" -> r.manifest.mkString("\n"),
+      "_SUCCESS" -> "")
+    retainNewest(f, r.base, d =>
+      readSmall(f, new Path(d, "_PARTS")).toSeq.flatMap(_.split("\n").toSeq)
+        .filter(_.nonEmpty).map(_.split('/').head))
+  }
+
+  // ---- read-only probes: never build -------------------------------------
+
+  /** The fingerprint `spec` serves for `dir`'s current source state. */
+  def fingerprint(s: SparkSession, spec: ArtifactSpec, dir: String): String =
+    resolve(s, spec, dir).fp
+
+  /** The artifact at `dir`'s CURRENT fingerprint, if one is already
+    * published and chain-intact — a read-only probe that NEVER builds.
+    * Costs one `ls -R` of the source dir plus O(chain) metadata stats.
+    * This is the plan-time consumer's entry point
+    * ([[graft.plans.MvRewrite]] re-resolves its artifact here on every
+    * candidate rewrite): a consumer that must fall back rather than
+    * trigger a build inside the optimizer, and that must never hold a
+    * resolved handle across a source change. */
+  def readIfCurrent(s: SparkSession, spec: ArtifactSpec,
+      dir: String): Option[DataFrame] = {
+    val r = resolve(s, spec, dir)
+    if (servable(fs(s, r.base), r.base, r.fp)) Some(readChain(s, r.base, r.fp))
+    else None
+  }
+
+  /** True when the artifact serving `dir`'s CURRENT state is a delta
+    * segment chained to a parent (vs a standalone full build) — lets a
+    * dependent check that its upstream took the incremental path
+    * before it commits a delta of its own. */
+  def isChained(s: SparkSession, spec: ArtifactSpec, dir: String): Boolean = {
+    val r = resolve(s, spec, dir)
+    segParent(fs(s, r.base), r.base, r.fp).nonEmpty
+  }
+
+  /** The donor fingerprint recorded by a delete-carry freeze at `dir`'s
+    * CURRENT fingerprint, if the artifact serving it is a carried
+    * frozen model — the deletion analog of [[isChained]]. */
+  def frozenFrom(s: SparkSession, spec: ArtifactSpec,
+      dir: String): Option[String] = {
+    val r = resolve(s, spec, dir)
+    frozen(fs(s, r.base), r)
+  }
+
+  /** [[isChained]] or [[frozenFrom]] in one listing: the model serving
+    * `dir`'s current state is the previous state's model. */
+  def carried(s: SparkSession, spec: ArtifactSpec, dir: String): Boolean = {
+    val r = resolve(s, spec, dir)
+    carried(fs(s, r.base), r)
   }
 
   /** A partitioned head is servable when its `_SUCCESS` is published
@@ -911,119 +907,6 @@ object IndexStore {
   private def partValueOf(dirName: String): String = {
     val raw = dirName.substring(dirName.indexOf('=') + 1)
     java.net.URLDecoder.decode(raw, "UTF-8")
-  }
-
-  /** Freeze-on-delete for MODEL artifacts (quantizer scales, centroid
-    * tables, codebooks — tiny, model-sized relations): when the
-    * current source state is not servable and a finished donor
-    * artifact LOST at least one file, and `accept(deletedLines,
-    * addedPaths)` says the frozen model remains valid for the
-    * surviving corpus, the donor's FOLDED content is republished at
-    * the current fingerprint as a standalone segment carrying a
-    * `_FROZEN` marker naming the donor. This is the deletion analog
-    * of the append-freeze chain (`prev.limit(0)` deltas): a takedown
-    * below the drift threshold keeps serving the trained model —
-    * every downstream code stays valid and the code chains can EXCISE
-    * instead of re-encoding ([[readOrBuildSegmentedGated]] checks
-    * [[frozenFrom]]) — while a drift-sized deletion declines and the
-    * next read retrains from scratch. The copy is one model-sized
-    * write (KBs at any corpus scale), never a recompute. No-op when
-    * the current state is already servable or no donor qualifies. */
-  def carryOnDelete(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1, extra: String = "")(
-      accept: (Seq[String], Seq[String]) => Boolean): Unit = {
-    val manifest = sourceManifest(s, srcDir)
-    val fp = fingerprintOf(version, extra, manifest)
-    val base = new Path(s"${root(s)}/$name")
-    val dest = new Path(base, s"fp=$fp")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
-      val f = fs(s, dest)
-      if (f.exists(new Path(dest, "_SUCCESS")) && chainIntact(f, base, fp))
-        return // current state already servable
-      if (!f.exists(base)) return
-      val mset = manifest.toSet
-      val donor = f.listStatus(base).toSeq
-        .filter(_.getPath.getName.startsWith("fp="))
-        .map(_.getPath.getName.stripPrefix("fp="))
-        .filter(g =>
-          f.exists(new Path(new Path(base, s"fp=$g"), "_SUCCESS")) &&
-            chainIntact(f, base, g))
-        .flatMap { g =>
-          readSmall(f, new Path(new Path(base, s"fp=$g"), "_MANIFEST"))
-            .map(m => (g, m.split("\n").toSeq.filter(_.nonEmpty)))
-        }
-        .filter { case (_, lines) =>
-          lines.exists(l => !mset(l)) && lines.exists(mset)
-        }
-        .sortBy { case (_, lines) => -lines.count(mset) }
-        .headOption
-      donor.foreach { case (afp, aLines) =>
-        val deleted = aLines.filterNot(mset).toSeq.sorted
-        val added = manifest.filterNot(aLines.toSet)
-          .map(_.split('|').head)
-        if (accept(deleted, added)) {
-          if (f.exists(dest)) f.delete(dest, true) // unfinished debris
-          val tmp = new Path(base, s".build-$fp-${System.nanoTime()}")
-          val tBuild = System.nanoTime()
-          readChain(s, base, afp)
-            .write.mode("overwrite").parquet(tmp.toString)
-          compactStaged(s, f, tmp)
-          writeSmall(f, new Path(tmp, "_MANIFEST"), manifest.mkString("\n"))
-          writeSmall(f, new Path(tmp, "_FROZEN"), afp)
-          recordBuild(name, fp, "carry", tBuild)
-          if (f.exists(new Path(dest, "_SUCCESS"))) f.delete(tmp, true)
-          else if (!f.rename(tmp, dest)) f.delete(tmp, true)
-        }
-      }
-    }
-  }
-
-  /** The donor fingerprint recorded by a [[carryOnDelete]] freeze at
-    * `srcDir`'s CURRENT fingerprint, if the artifact serving it is a
-    * delete-carried frozen model — the deletion analog of
-    * [[isChained]], and the other half of the code-chain consistency
-    * check ([[readOrBuildSegmentedGated]]). */
-  def frozenFrom(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1, extra: String = ""): Option[String] = {
-    val fp = fingerprint(s, srcDir, version, extra)
-    val base = new Path(s"${root(s)}/$name")
-    val f = fs(s, base)
-    readSmall(f, new Path(new Path(base, s"fp=$fp"), "_FROZEN"))
-      .map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** The artifact at `srcDir`'s CURRENT fingerprint, if one is
-    * already published and chain-intact — a read-only probe that
-    * NEVER builds. Costs one `ls -R` of the source dir (the
-    * fingerprint) plus O(chain) metadata stats. This is the plan-time
-    * consumer's entry point ([[graft.plans.MvRewrite]] re-resolves its
-    * artifact here on every candidate rewrite): a consumer that must
-    * fall back rather than trigger a build inside the optimizer, and
-    * that must never hold a resolved handle across a source change. */
-  def readIfCurrent(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1): Option[DataFrame] = {
-    val fp = fingerprint(s, srcDir, version)
-    val base = new Path(s"${root(s)}/$name")
-    val f = fs(s, base)
-    val dest = new Path(base, s"fp=$fp")
-    if (f.exists(new Path(dest, "_SUCCESS")) && chainIntact(f, base, fp))
-      Some(readChain(s, base, fp))
-    else None
-  }
-
-  /** True when the artifact serving `srcDir`'s CURRENT state is a
-    * delta segment chained to a parent (vs a standalone full build) —
-    * lets a dependent artifact check that its upstream took the
-    * incremental path before it commits a delta of its own (the IVF
-    * assignment must not chain a frozen-quantizer delta onto a
-    * retrained quantizer). */
-  def isChained(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1): Boolean = {
-    val fp = fingerprint(s, srcDir, version)
-    val base = new Path(s"${root(s)}/$name")
-    val f = fs(s, base)
-    segParent(f, base, fp).nonEmpty
   }
 
   /** Time-travel read: artifact `name` AS OF the source state whose
@@ -1206,39 +1089,35 @@ object IndexStore {
     * a multi-segment chain was folded (or a concurrent compactor beat
     * us to an equivalent fold), false when there was nothing to do
     * (absent, torn, or already standalone). */
-  def compactChain(s: SparkSession, name: String, srcDir: String,
-      version: Int = 1): Boolean = {
-    val fp = fingerprint(s, srcDir, version)
-    val base = new Path(s"${root(s)}/$name")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
-      val f = fs(s, base)
-      val dest = new Path(base, s"fp=$fp")
-      val servable = f.exists(new Path(dest, "_SUCCESS")) &&
-        chainIntact(f, base, fp)
-      val chain = if (servable) chainPaths(f, base, fp) else Seq.empty
-      if (chain.size <= 1) false
-      else {
-        val manifest = readSmall(f, new Path(dest, "_MANIFEST"))
-          .getOrElse(sourceManifest(s, srcDir).mkString("\n"))
-        val seg = new Path(base, s"seg-$fp-${System.nanoTime()}")
-        val tBuild = System.nanoTime()
-        // the committer writes _SUCCESS last, so a half-written segment
-        // is never resolvable even if a pointer somehow named it
-        s.read.parquet(chain.map(_.toString): _*)
-          .write.mode("overwrite").parquet(seg.toString)
-        compactStaged(s, f, seg)
-        writeSmall(f, new Path(seg, "_MANIFEST"), manifest)
-        recordBuild(name, fp, "compact", tBuild)
-        // atomic pointer swap: temp file + one rename
-        val headTmp = new Path(dest, s"_HEAD.tmp-${System.nanoTime()}")
-        writeSmall(f, headTmp, seg.getName)
-        if (f.rename(headTmp, new Path(dest, "_HEAD"))) true
-        else { // a concurrent compactor published first — equivalent fold
-          f.delete(headTmp, false)
-          f.delete(seg, true)
-          f.exists(new Path(dest, "_HEAD"))
-        }
+  def compactChain(s: SparkSession, spec: ArtifactSpec, dir: String): Boolean = {
+    val r = resolve(s, spec, dir)
+    lockOf(spec.name).synchronized(fold(s, fs(s, r.base), r))
+  }
+
+  private def fold(s: SparkSession, f: FileSystem, r: Resolved): Boolean = {
+    val chain =
+      if (servable(f, r.base, r.fp)) chainPaths(f, r.base, r.fp) else Seq.empty
+    if (chain.size <= 1) false
+    else {
+      val manifest = readSmall(f, new Path(r.dest, "_MANIFEST"))
+        .getOrElse(r.manifest.mkString("\n"))
+      val seg = new Path(r.base, s"seg-${r.fp}-${System.nanoTime()}")
+      val tBuild = System.nanoTime()
+      // the committer writes _SUCCESS last, so a half-written segment
+      // is never resolvable even if a pointer somehow named it
+      s.read.parquet(chain.map(_.toString): _*)
+        .write.mode("overwrite").parquet(seg.toString)
+      compactStaged(s, f, seg)
+      writeSmall(f, new Path(seg, "_MANIFEST"), manifest)
+      recordBuild(r.spec.name, r.fp, "compact", tBuild)
+      // atomic pointer swap: temp file + one rename
+      val headTmp = new Path(r.dest, s"_HEAD.tmp-${System.nanoTime()}")
+      writeSmall(f, headTmp, seg.getName)
+      if (f.rename(headTmp, new Path(r.dest, "_HEAD"))) true
+      else { // a concurrent compactor published first — equivalent fold
+        f.delete(headTmp, false)
+        f.delete(seg, true)
+        f.exists(new Path(r.dest, "_HEAD"))
       }
     }
   }
@@ -1273,8 +1152,7 @@ object IndexStore {
       batch: DataFrame): Boolean = {
     val base = new Path(s"${root(s)}/$name")
     val dest = new Path(base, s"epoch=$epochId")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
+    lockOf(name).synchronized {
       val f = fs(s, dest)
       // a FOLDED epoch is as committed as a published one: its dir may
       // already be vacuumed, so the replay no-op must consult the fold
@@ -1375,32 +1253,8 @@ object IndexStore {
     * fold: [[appendEpoch]] consults the fold watermark, so a
     * redelivered folded epoch appends nothing even after its dir is
     * vacuumed. Returns true when a fold was written. */
-  def compactEpochs(s: SparkSession, name: String): Boolean = {
-    val base = new Path(s"${root(s)}/$name")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
-      val f = fs(s, base)
-      val fold = latestFold(f, base)
-      val upTo = fold.map(_._1).getOrElse(Long.MinValue)
-      val segs = epochSegs(f, base, upTo)
-      if (segs.isEmpty) false
-      else {
-        val newUpTo = segs.map(_._1).max
-        val tBuild = System.nanoTime()
-        val segDf = s.read.option("basePath", base.toString)
-          .parquet(segs.map(_._2.toString): _*)
-          .withColumn("epoch", col("epoch").cast("long"))
-        val all = fold.map { case (_, d) =>
-          s.read.parquet(new Path(base, d).toString).unionByName(segDf)
-        }.getOrElse(segDf)
-        val seg = new Path(base, s"fold-$newUpTo-${System.nanoTime()}")
-        // parquet commit writes _SUCCESS last — publication is atomic
-        all.write.mode("overwrite").parquet(seg.toString)
-        recordBuild(name, s"fold<=$newUpTo", "compact", tBuild)
-        true
-      }
-    }
-  }
+  def compactEpochs(s: SparkSession, name: String): Boolean =
+    refold(s, name, None)
 
   /** Takedown on the STREAMING ledger (the epoch axis of the batch
     * ledgers' per-source-file excision): epoch segments have no
@@ -1415,22 +1269,29 @@ object IndexStore {
     * rewritten (rows dropped or segments folded); false on an empty
     * or untouched ledger. */
   def exciseEpochs(s: SparkSession, name: String,
-      drop: org.apache.spark.sql.Column): Boolean = {
+      drop: org.apache.spark.sql.Column): Boolean =
+    refold(s, name, Some(drop))
+
+  /** Republish the ledger's live history, minus `drop` rows, as one
+    * fold covering every committed epoch. */
+  private def refold(s: SparkSession, name: String,
+      drop: Option[org.apache.spark.sql.Column]): Boolean = {
     val base = new Path(s"${root(s)}/$name")
-    val lock = locks.getOrElseUpdate(name, new Object)
-    lock.synchronized {
+    lockOf(name).synchronized {
       val f = fs(s, base)
-      val fold = latestFold(f, base)
-      val upTo = fold.map(_._1).getOrElse(Long.MinValue)
-      val segs = epochSegs(f, base, upTo)
-      if (fold.isEmpty && segs.isEmpty) false
+      val upTo = latestFold(f, base).map(_._1)
+      val segs = epochSegs(f, base, upTo.getOrElse(Long.MinValue))
+      if (segs.isEmpty && (drop.isEmpty || upTo.isEmpty)) false
       else {
-        val newUpTo = math.max(upTo, segs.map(_._1).foldLeft(Long.MinValue)(math.max))
+        val newUpTo = (upTo.toSeq ++ segs.map(_._1)).max
         val tBuild = System.nanoTime()
-        val all = readEpochs(s, name).get.filter(!drop)
+        val live = readEpochs(s, name).get
         val seg = new Path(base, s"fold-$newUpTo-${System.nanoTime()}")
-        all.write.mode("overwrite").parquet(seg.toString)
-        recordBuild(name, s"fold<=$newUpTo", "excise-rebuild", tBuild)
+        // parquet commit writes _SUCCESS last — publication is atomic
+        drop.fold(live)(d => live.filter(!d))
+          .write.mode("overwrite").parquet(seg.toString)
+        recordBuild(name, s"fold<=$newUpTo",
+          if (drop.isEmpty) "compact" else "excise-rebuild", tBuild)
         true
       }
     }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 
 /** One admission gate's registry entry: everything the gate's three
   * declared faces and their oracles need besides the kernel's own
@@ -20,31 +21,33 @@ import graft.Tables
   *  - the LEDGER face serves the backfill's flag relation from the
   *    persisted arrival-time segmented ledger [[GateSpec.ledger]].
   *
-  * @param source        warehouse table the incoming feed derives from
-  *                      (`documents` or `embeddings`)
   * @param read          the source read the backfill and decision
   *                      faces scan the table with
   * @param incomingOf    the incoming feed over a source frame; one
   *                      incoming row derives from one source row, so
   *                      a crawl batch's flags excise with its file
   * @param kernel        the gate: `(session, dir, incoming, decision)`
+  * @param ledgerSpec    the persisted audit ledger; its table is the
+  *                      warehouse table the incoming feed derives from
+  *                      (`documents` or `embeddings`)
   * @param evidence      both faces' columns after `in_id`
   * @param rank          the decision face's winner ranking; the engine's
   *                      `min_by` and the decision oracle's `ORDER BY`
   *                      are both generated from it */
 final case class GateSpec(
     name: String,
-    source: String,
     read: (SparkSession, String, String) => DataFrame,
     incomingOf: DataFrame => DataFrame,
     kernel: (SparkSession, String, DataFrame, Boolean) => DataFrame,
-    ledgerName: String,
-    ledgerVersion: Int,
+    ledgerSpec: ArtifactSpec,
     backfillQuery: String,
     decisionQuery: String,
     ledgerQuery: String,
     evidence: Seq[String],
     rank: Rank) {
+
+  /** The warehouse table the incoming feed derives from. */
+  def source: String = ledgerSpec.table
 
   /** The incoming feed over the whole source table. */
   def incoming(s: SparkSession, dir: String): DataFrame =
@@ -77,9 +80,7 @@ final case class GateSpec(
     * single-state fixture the oracle runs on, where the ledger face's
     * oracle is the backfill's verbatim. */
   def ledger(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, ledgerName, s"$dir/$source.parquet", version = ledgerVersion)(
-      files => kernel(s, dir, incomingOf(s.read.parquet(files: _*)), false))
+    IndexStore.read(s, ledgerSpec, dir)
 
   def ledgerFace(s: SparkSession, dir: String): DataFrame =
     ledger(s, dir).orderBy(col("in_id"), col("corpus_id"))
@@ -155,47 +156,63 @@ object Gates {
     df.filter(col(id) % 50 === 0)
       .select((col(id) + 1000000L).as(id), col(payload))
 
-  val text: GateSpec = GateSpec("text", "documents",
+  /** A gate's audit ledger over `table`: the audit flags segmented by
+    * the source files its incoming rows derive from, keyed on the
+    * corpus artifacts its kernel reads. */
+  private def ledgerOf(gate: => GateSpec, name: String, version: Int,
+      table: String, deps: => Seq[ArtifactSpec]): ArtifactSpec =
+    ArtifactSpec(name, version, table, Decomp.Segmented((s, dir) => files =>
+      gate.kernel(s, dir, gate.incomingOf(s.read.parquet(files: _*)), false)),
+      deps)
+
+  val text: GateSpec = GateSpec("text",
     (s, d, t) => Tables.loadSpread(s, d, t), replay("doc_id", "text"),
     (s, d, in, dec) => Llm.nearDupAdmission(s, d, in, dec),
-    "text_gate_audit", 1,
+    ledgerOf(text, "text_gate_audit", 1, "documents",
+      Seq(Llm.minhashBandsSpec, Llm.shingleSetsSpec)),
     "q49_admission_backfill", "q173_text_admission_decision",
     "q179_text_audit_ledger",
     Seq("corpus_id", "jaccard"), Rank("jaccard", descending = true))
 
-  val vector: GateSpec = GateSpec("vector", "embeddings",
+  val vector: GateSpec = GateSpec("vector",
     (s, d, t) => Tables.loadSpread(s, d, t), replay("vec_id", "embedding"),
     (s, d, in, dec) => Llm.vectorAdmission(s, d, in, dec),
-    "vector_gate_audit", 1,
+    ledgerOf(vector, "vector_gate_audit", 1, "embeddings",
+      Seq(Llm.hyperplaneBucketsSpec)),
     "q97_vector_admission", "q174_vector_admission_decision",
     "q180_vector_audit_ledger",
     Seq("corpus_id", "cos"), Rank("cos", descending = true))
 
-  val raster: GateSpec = GateSpec("raster", "documents",
+  val raster: GateSpec = GateSpec("raster",
     (s, d, t) => Tables.load(s, d, t),
     df => Multimodal.rasterIncomingFixtureOf(df),
     (s, d, in, dec) => Multimodal.rasterAdmission(s, d, in, dec),
-    "raster_gate_audit", 3,
+    ledgerOf(raster, "raster_gate_audit", 3, "documents",
+      Seq(Multimodal.rasterAHashSpec, SigFamilies.rasterBands.stopSpec)),
     "q165_raster_admission", "q170_raster_admission_decision",
     "q176_raster_audit_ledger",
     Seq("corpus_id", "hamming"), Rank("hamming", descending = false))
 
-  val media: GateSpec = GateSpec("media", "documents",
+  val media: GateSpec = GateSpec("media",
     (s, d, t) => Tables.load(s, d, t),
     df => Multimodal.mediaIncomingFixtureOf(df),
     (s, d, in, dec) => Multimodal.mediaAdmission(s, d, in, dec),
-    "media_gate_audit", 1,
+    ledgerOf(media, "media_gate_audit", 1, "documents",
+      Seq(Multimodal.mediaBlockPostingsSpec, SigFamilies.mediaBlocks.stopSpec,
+        Multimodal.mediaContainment.setSpec)),
     "q160_media_admission", "q172_media_admission_decision",
     "q177_media_audit_ledger",
     Seq("corpus_id", "common_blocks", "n_in", "n_corpus",
       "containment_micro"),
     Rank("containment_micro", descending = true))
 
-  val audio: GateSpec = GateSpec("audio", "documents",
+  val audio: GateSpec = GateSpec("audio",
     (s, d, t) => Tables.load(s, d, t),
     df => Multimodal.audioIncomingFixtureOf(df),
     (s, d, in, dec) => Multimodal.audioAdmission(s, d, in, dec),
-    "audio_gate_audit", 2,
+    ledgerOf(audio, "audio_gate_audit", 2, "documents",
+      Seq(Multimodal.audioFpsSpec, SigFamilies.audioFps.stopSpec,
+        Multimodal.audioContainment.setSpec)),
     "q163_audio_admission", "q171_audio_admission_decision",
     "q178_audio_audit_ledger",
     Seq("corpus_id", "common_fps", "n_in", "n_corpus",

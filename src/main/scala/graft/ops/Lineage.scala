@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 
 /** Lineage graph operators — SURVEY.md §2.6, the reference's most
   * distinctive computation (`dlt_assets.py:59-77` recursive upstream
@@ -42,10 +43,14 @@ object Lineage {
     * source tables' fingerprint changes (a process-lifetime memo served
     * stale edges after a dir rewrite). */
   def edgesFromSchema(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(s, "fk_edges", dir) {
+    IndexStore.read(s, fkEdgesSpec, dir)
+
+  /** Keyed on the whole warehouse dir (the empty table). */
+  private[graft] val fkEdgesSpec: ArtifactSpec = ArtifactSpec(
+    "fk_edges", 1, "", Decomp.Full { (s, dir) =>
       import s.implicits._
       computeEdges(s, dir).toDF("src", "dst")
-    }
+    })
 
   private def computeEdges(s: SparkSession, dir: String): Seq[(String, String)] = {
     def suffix(c: String): Option[String] =

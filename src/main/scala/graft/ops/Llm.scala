@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
   TimerValues, ValueState}
 import graft.Tables
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 import graft.functions.GraftFx
 
 /** LLM-training-data pipeline operators — SURVEY.md §2.9 (north-star
@@ -217,9 +218,12 @@ object Llm extends LlmCurationOps with LlmAnnOps {
   private[ops] def docsSrc(dir: String): String = s"$dir/documents.parquet"
   private[ops] def embsSrc(dir: String): String = s"$dir/embeddings.parquet"
 
+  private[graft] val sizedPostingsSpec: ArtifactSpec = ArtifactSpec(
+    "sized_postings", 1, "documents",
+    Decomp.Full(computeSizedPostings), Seq(shingleSetsSpec))
+
   private def sizedPostings(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(s, "sized_postings", docsSrc(dir))(
-      computeSizedPostings(s, dir))
+    IndexStore.read(s, sizedPostingsSpec, dir)
 
   /** The stop-shingle threshold: [[SigFamily.relative]] floored at
     * 100. Posting lists between the floor and the fraction are
@@ -327,14 +331,16 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * snapshot chain, delta = shingles of the added files), and the
     * MinHash band index derives from the artifact rather than from a
     * second tokenize pass. */
-  private[graft] def corpusShinglesIdx(s: SparkSession, dir: String): DataFrame =
-    // per-document rows never span source files → file-decomposable:
-    // deletion excises the touched segments instead of re-shingling
-    // the corpus (the near-dup family's takedown path)
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "shingle_sets", docsSrc(dir))(
+  // per-document rows never span source files → file-decomposable:
+  // deletion excises the touched segments instead of re-shingling the
+  // corpus (the near-dup family's takedown path)
+  private[graft] val shingleSetsSpec: ArtifactSpec = ArtifactSpec(
+    "shingle_sets", 1, "documents", Decomp.Segmented((s, _) =>
       files => shingledOf(s.read.parquet(files: _*)
-        .repartition(s.sparkContext.defaultParallelism)))
+        .repartition(s.sparkContext.defaultParallelism))))
+
+  private[graft] def corpusShinglesIdx(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, shingleSetsSpec, dir)
 
   /** The (b, bh, doc_id) MinHash band index — SEGMENTED (E157):
     * per-doc band rows never span source files, so a takedown excises
@@ -346,12 +352,14 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * lifecycle event. The shingle artifact resolves at the CURRENT
     * source state (itself delete-aware), so an excised window's bands
     * are consistent with the excised shingle sets by construction. */
-  private[graft] def minhashBandsIdx(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "minhash_bands", docsSrc(dir))(
+  private[graft] val minhashBandsSpec: ArtifactSpec = ArtifactSpec(
+    "minhash_bands", 1, "documents", Decomp.Segmented((s, dir) =>
       files => bandsOf(corpusShinglesIdx(s, dir).join(
         s.read.parquet(files: _*).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")))
+        Seq("doc_id"), "left_semi"))), Seq(shingleSetsSpec))
+
+  private[graft] def minhashBandsIdx(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, minhashBandsSpec, dir)
 
   /** The verified near-dup pair graph — persisted per warehouse state
     * via [[graft.observe.IndexStore]]: it is the shared artifact of the
@@ -368,10 +376,13 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * exact-Jaccard verify (selective doc_id semi-join, never a corpus
     * re-read). */
   private def verifiedPairs(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildIncremental(
-      s, "neardup_pairs", docsSrc(dir))(
-      pairsFromCandidates(s, dir, bandCandidates(minhashBandsIdx(s, dir))))(
-      (_, added) => {
+    IndexStore.read(s, neardupPairsSpec, dir)
+
+  private[graft] val neardupPairsSpec: ArtifactSpec = ArtifactSpec(
+    "neardup_pairs", 1, "documents", Decomp.Append(
+      (s, dir) =>
+        pairsFromCandidates(s, dir, bandCandidates(minhashBandsIdx(s, dir))),
+      (s, dir) => (_, added) => {
         val bands = minhashBandsIdx(s, dir) // chain incl. the new segment
         // no broadcast hint: an appended batch can itself be huge; let
         // AQE pick the strategy from the delta's actual size
@@ -387,7 +398,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
             greatest(col("a.doc_id"), col("b.doc_id")).as("d2"))
           .distinct()
         pairsFromCandidates(s, dir, cand)
-      })
+      }), Seq(minhashBandsSpec, shingleSetsSpec))
 
   /** Near-dup ADMISSION CONTROL for incoming documents — the production
     * face of the persisted index: band the incoming docs map-side,
@@ -566,8 +577,10 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * it is index-build-sized (the exactness lives in the verify step,
     * which always reads the current shingle artifact). */
   private[graft] def prefixIndexIdx(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(
-      s, "prefix_index", docsSrc(dir), version = 2) {
+    IndexStore.read(s, prefixIndexSpec, dir)
+
+  private[graft] val prefixIndexSpec: ArtifactSpec = ArtifactSpec(
+    "prefix_index", 2, "documents", Decomp.Full { (s, dir) =>
       val sets = corpusShinglesIdx(s, dir)
       val inv = sets.select(col("doc_id"),
         explode(col("shingles")).as("sh"))
@@ -583,7 +596,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
         // along for the join-time positional/length filters
         .filter(expr("rn <= n - (n + 1) div 2 + 1"))
         .select(col("doc_id"), col("sh"), col("rn"), col("n"))
-    }
+    }, Seq(shingleSetsSpec))
 
   def prefixJaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val sets = corpusShinglesIdx(s, dir) // persisted (doc_id, shingles)
@@ -715,11 +728,13 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * plain parquet scan. Per-doc rows never span source files →
     * file-decomposable → SEGMENTED (E157): a takedown excises the
     * touched segments instead of re-fingerprinting the corpus. */
-  private[graft] def winnowFpsIdx(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "winnow_fps", docsSrc(dir))(
+  private[graft] val winnowFpsSpec: ArtifactSpec = ArtifactSpec(
+    "winnow_fps", 1, "documents", Decomp.Segmented((s, _) =>
       files => winnowFpsOf(s.read.parquet(files: _*)
-        .repartition(s.sparkContext.defaultParallelism)))
+        .repartition(s.sparkContext.defaultParallelism))))
+
+  private[graft] def winnowFpsIdx(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, winnowFpsSpec, dir)
 
   /** Absolute document-frequency cap for winnowing PAIR EMISSION: a
     * fingerprint in more documents than this is boilerplate whose
@@ -1371,10 +1386,11 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * codebooks); every later call, session, or JVM reads the 6-row
     * parquet. No incremental rule: a sample-trained tokenizer retrains
     * on any corpus change. */
+  private[graft] val bpeMergesSpec: ArtifactSpec =
+    ArtifactSpec("bpe_merges", 1, "documents", Decomp.Full(trainBpe))
+
   private[graft] def bpeModel(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(s, "bpe_merges", docsSrc(dir)) {
-      trainBpe(s, dir)
-    }
+    IndexStore.read(s, bpeMergesSpec, dir)
 
   def bpeMerges(s: SparkSession, dir: String): DataFrame =
     bpeModel(s, dir).orderBy(col("round"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 import graft.Tables
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 import graft.functions.GraftFx
 
 /** The SIMILARITY-SEARCH families of [[Llm]] (SURVEY §2.9 X3), split
@@ -159,7 +160,7 @@ trait LlmAnnOps {
     nAdded.toDouble > 0.2 * math.max(1L, nOld).toDouble
 
   /** Deletion analog of [[ivfDriftRetrain]], shared by every trained
-    * model's `carryOnDelete` accept rule: a PURE takedown whose byte
+    * model's delete-carry accept rule: a PURE takedown whose byte
     * mass stays within 20% of the surviving corpus freezes the model
     * at the new source state (the trained quantizer remains a valid
     * quantizer of the survivors — for SQ8 scales exactly: a max can
@@ -168,26 +169,16 @@ trait LlmAnnOps {
     * read retrains. Deleted rows cannot be COUNTED — the files are
     * gone — so the manifest's recorded byte sizes are the drift proxy
     * (parquet bytes scale with rows at fixed schema). */
-  protected def modelCarryAccept(s: SparkSession, src: String)(
+  protected def modelCarryAccept(s: SparkSession, dir: String)(
       deleted: Seq[String], added: Seq[String]): Boolean =
     added.isEmpty && {
       val deletedBytes = deleted.map(_.split('|')(1).toLong).sum
-      val p = new org.apache.hadoop.fs.Path(src)
+      val p = new org.apache.hadoop.fs.Path(Llm.embsSrc(dir))
       val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       val surviving =
         if (f.exists(p)) f.getContentSummary(p).getLength else 0L
       deletedBytes.toDouble <= 0.2 * math.max(1L, surviving).toDouble
     }
-
-  /** True when the model artifact serving `src`'s CURRENT state is
-    * the SAME trained model as the previous state's — append-frozen
-    * (delta chain) or delete-carried (`_FROZEN`). The code chains'
-    * carry gate: excising/appending per-vector codes is sound only
-    * under an unchanged model. */
-  protected def modelCarried(s: SparkSession, name: String, src: String,
-      version: Int): Boolean =
-    graft.observe.IndexStore.isChained(s, name, src, version) ||
-      graft.observe.IndexStore.frozenFrom(s, name, src, version).nonEmpty
 
   /** Trained centroid model, persisted as the `ivf_centroids` artifact:
     * the quantizer is built once per warehouse state and shared by
@@ -201,40 +192,32 @@ trait LlmAnnOps {
     * (see [[ivfDriftRetrain]]) declines the delta and retrains. At
     * 100 TB this is how a trained ANN index actually lives: routing
     * new data is cheap and continuous, retraining is a deliberate,
-    * threshold-gated event. */
-  /** Artifact logic versions — single-sourced so a bump can never
-    * desynchronize a build site from its downstream `isChained`
-    * consistency check (a missed literal would chain codes onto a
-    * retrained model). v2 of the IVF family: stride/nprobe derived
-    * from corpus size. */
-  private[graft] val ivfArtifactVersion = 2
-  private[graft] val sq8ArtifactVersion = 1
-  private[graft] val pqArtifactVersion = 1
-
-  private[graft] def ivfCentroids(s: SparkSession, dir: String): DataFrame = {
-    // deletion lifecycle: a sub-drift pure takedown FREEZES the
-    // trained quantizer at the surviving state (zero recompute — the
-    // model is centroid-table-sized), so downstream code chains can
-    // excise; past the drift bound the carry declines and the full
-    // build below retrains (the cascade)
-    graft.observe.IndexStore.carryOnDelete(
-      s, "ivf_centroids", Llm.embsSrc(dir), ivfArtifactVersion)(
-      modelCarryAccept(s, Llm.embsSrc(dir)))
-    graft.observe.IndexStore.readOrBuildIncremental(
-      s, "ivf_centroids", Llm.embsSrc(dir),
-      version = ivfArtifactVersion)(
-      {
+    * threshold-gated event.
+    *
+    * Deletion lifecycle: a sub-drift pure takedown FREEZES the trained
+    * quantizer at the surviving state (zero recompute — the model is
+    * centroid-table-sized), so downstream code chains can excise; past
+    * the drift bound the carry declines and the full build retrains
+    * (the cascade). v2 of the IVF family: stride/nprobe derived from
+    * corpus size. */
+  private[graft] val ivfCentroidsSpec: ArtifactSpec = ArtifactSpec(
+    "ivf_centroids", 2, "embeddings", Decomp.Model(
+      (s, dir) => {
         val sess = s
         import sess.implicits._
         computeIvfCentroids(s, dir).toDF("cid", "cv")
-      })(
-      (prev, added) => {
+      },
+      (s, dir) => (prev, added) => {
         val nAdded = s.read.parquet(added: _*).count()
         val nTotal = Llm.embs(s, dir).count() // parquet-metadata count
         if (ivfDriftRetrain(nTotal - nAdded, nAdded)) null // retrain
         else prev.limit(0) // frozen: the chain serves the old model
-      }).withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-  }
+      },
+      modelCarryAccept))
+
+  private[graft] def ivfCentroids(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, ivfCentroidsSpec, dir)
+      .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
 
   /** The coarse-quantizer model, COLLECTED in ascending cid order —
     * the [[collectPqModel]] discipline applied to the centroid
@@ -292,16 +275,14 @@ trait LlmAnnOps {
     * file-decomposable — a sub-drift append routes ONLY the appended
     * vectors into a chained delta, and a sub-drift TAKEDOWN excises
     * only the touched segments (the quantizer carries frozen across
-    * the deletion via [[ivfCentroids]]' `carryOnDelete`). The carry
+    * the deletion via [[ivfCentroids]]' delete-carry). The carry
     * gate declines whenever the quantizer did NOT freeze at this
     * source transition — a drift-sized append or deletion retrains
     * the model and cascades into a full reassignment, because mixing
     * old-model reused segments with new-model rebuilt ones would be
     * silently inconsistent. */
-  private[graft] def ivfClusters(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmentedGated(
-      s, "ivf_clusters", Llm.embsSrc(dir),
-      version = ivfArtifactVersion)(
+  private[graft] val ivfClustersSpec: ArtifactSpec = ArtifactSpec(
+    "ivf_clusters", 2, "embeddings", Decomp.Segmented((s, dir) =>
       // repartition BEFORE the map-only route: the artifact's file
       // count is the read parallelism of every downstream cell-
       // restriction join, and a map-only write over a one-file source
@@ -313,11 +294,11 @@ trait LlmAnnOps {
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v"))
           .withColumn("nrm", sqrt(dot(col("v"), col("v")))),
-        ivfModelOf(s, dir)).drop("cos"))(
-      (_, _) => {
-        ivfCentroids(s, dir) // run the model's lifecycle at this state
-        modelCarried(s, "ivf_centroids", Llm.embsSrc(dir), ivfArtifactVersion)
-      })
+        ivfModelOf(s, dir)).drop("cos"), Decomp.Gate.Model),
+    Seq(ivfCentroidsSpec))
+
+  private[graft] def ivfClusters(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, ivfClustersSpec, dir)
 
   /** Random-hyperplane LSH near-dup (the SimHash construction for
     * vectors) — the second ANN bucketing flavor beside IVF (q39):
@@ -357,8 +338,6 @@ trait LlmAnnOps {
       when(dot(typedlit(p), v) > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  protected val hyperplaneArtifactVersion = 1
-
   /** The bucket-partitioned corpus vectors — the persisted hyperplane
     * LSH index `(bucket, vec_id, v, nrm)` shared by the in-corpus
     * near-dup pairs (q90) and the streaming [[vectorAdmission]] gate.
@@ -373,17 +352,19 @@ trait LlmAnnOps {
     * append that crosses a plane-count boundary declines and re-signs
     * (every bucket id changes width). No drift threshold, no
     * approximation — the freeze check is a pure-function comparison. */
-  private[graft] def hyperplaneBucketsIdx(s: SparkSession, dir: String): DataFrame = {
-    def signed(vecs: DataFrame, nPlanes: Int): DataFrame =
-      vecs.withColumn("bucket",
-        hyperplaneBucket(hyperplanes(nPlanes), col("v")))
-        .select(col("bucket"), col("vec_id"), col("v"), col("nrm"))
-    graft.observe.IndexStore.readOrBuildIncremental(
-      s, "hyperplane_buckets", Llm.embsSrc(dir),
-      version = hyperplaneArtifactVersion)(
+  private[graft] def hyperplaneBucketsIdx(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, hyperplaneBucketsSpec, dir)
+
+  private def signed(vecs: DataFrame, nPlanes: Int): DataFrame =
+    vecs.withColumn("bucket", hyperplaneBucket(hyperplanes(nPlanes), col("v")))
+      .select(col("bucket"), col("vec_id"), col("v"), col("nrm"))
+
+  private[graft] val hyperplaneBucketsSpec: ArtifactSpec = ArtifactSpec(
+    "hyperplane_buckets", 1, "embeddings", Decomp.Append(
       // parquet-metadata count — signature-sizing stat, like ivfStride
-      signed(vectors(s, dir), hyperplaneCount(Llm.embs(s, dir).count())))(
-      (_, added) => {
+      (s, dir) =>
+        signed(vectors(s, dir), hyperplaneCount(Llm.embs(s, dir).count())),
+      (s, dir) => (_, added) => {
         val nTotal = Llm.embs(s, dir).count()
         val nAdded = s.read.parquet(added: _*).count()
         if (hyperplaneCount(nTotal) != hyperplaneCount(nTotal - nAdded))
@@ -394,8 +375,7 @@ trait LlmAnnOps {
               col("embedding").cast("array<double>").as("v"))
             .withColumn("nrm", sqrt(dot(col("v"), col("v")))),
           hyperplaneCount(nTotal))
-      })
-  }
+      }))
 
   def hyperplaneNearDup(s: SparkSession, dir: String): DataFrame = {
     val b = hyperplaneBucketsIdx(s, dir)
@@ -642,12 +622,14 @@ trait LlmAnnOps {
     // SEGMENTED: partial (count, sum) rows merge by addition, so the
     // artifact is file-decomposable under its own SUM fold — appends
     // roll up the added files, deletions excise the touched segments
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "doc_counts_agg", Llm.docsSrc(dir))(
-      files => docCountsOf(s.read.parquet(files: _*)))
+    IndexStore.read(s, docCountsAggSpec, dir)
       .groupBy(col("lang"), col("source"))
       .agg(sum(col("pn")).as("n_docs"), sum(col("pc")).as("sum_chars"))
       .orderBy(col("lang"), col("source"))
+
+  private[graft] val docCountsAggSpec: ArtifactSpec = ArtifactSpec(
+    "doc_counts_agg", 1, "documents", Decomp.Segmented((s, _) =>
+      files => docCountsOf(s.read.parquet(files: _*))))
 
   protected def tokenSketchOf(d: DataFrame): DataFrame =
     d.select(col("source"), explode(split(col("text"), " ")).as("token"))
@@ -676,15 +658,17 @@ trait LlmAnnOps {
     // folds to EXACTLY the one-shot sketch — file-decomposable under
     // the hll_union_agg fold; a takedown excises instead of
     // re-sketching the corpus
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "token_hll", Llm.docsSrc(dir))(
-      files => tokenSketchOf(s.read.parquet(files: _*)
-        .repartition(s.sparkContext.defaultParallelism)))
+    IndexStore.read(s, tokenHllSpec, dir)
       .groupBy(col("source"))
       .agg(hll_union_agg(col("sk")).as("sk"))
       .select(col("source"),
         hll_sketch_estimate(col("sk")).as("approx_tokens"))
       .orderBy(col("source"))
+
+  private[graft] val tokenHllSpec: ArtifactSpec = ArtifactSpec(
+    "token_hll", 1, "documents", Decomp.Segmented((s, _) =>
+      files => tokenSketchOf(s.read.parquet(files: _*)
+        .repartition(s.sparkContext.defaultParallelism))))
 
   /** Streaming face of the distinct-token dashboard (E74): the same
     * projection + HLL aggregation as the persisted view, as ONE plan
@@ -715,34 +699,35 @@ trait LlmAnnOps {
     * frozen model (empty delta) and every existing code stays valid; a
     * new maximum would change every vector's scale, so it declines the
     * delta and rebuilds. max is order-independent, so the frozen check
-    * is exact, not approximate. */
-  private[graft] def sq8Scales(s: SparkSession, dir: String): DataFrame = {
-    val vmax = udaf(graft.functions.VectorAgg.vectorMaxAbs,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
-    // deletion lifecycle: frozen scales stay EXACTLY valid under any
-    // deletion (a per-dim max can only shrink — survivors' codes are
-    // untouched), so a sub-drift takedown carries the model and the
-    // code chain excises; the uniform drift bound still forces a
-    // retrain on mass deletions, reclaiming quantization RESOLUTION
-    // (a loose max wastes code range) rather than correctness
-    graft.observe.IndexStore.carryOnDelete(
-      s, "sq8_scales", Llm.embsSrc(dir), sq8ArtifactVersion)(
-      modelCarryAccept(s, Llm.embsSrc(dir)))
-    graft.observe.IndexStore.readOrBuildIncremental(
-      s, "sq8_scales", Llm.embsSrc(dir), version = sq8ArtifactVersion)(
-      vectors(s, dir).agg(vmax(col("v")).as("m")))(
-      (prev, added) => {
+    * is exact, not approximate.
+    *
+    * Deletion lifecycle: frozen scales stay EXACTLY valid under any
+    * deletion (a per-dim max can only shrink — survivors' codes are
+    * untouched), so a sub-drift takedown carries the model and the
+    * code chain excises; the uniform drift bound still forces a
+    * retrain on mass deletions, reclaiming quantization RESOLUTION (a
+    * loose max wastes code range) rather than correctness. */
+  private[graft] val sq8ScalesSpec: ArtifactSpec = ArtifactSpec(
+    "sq8_scales", 1, "embeddings", Decomp.Model(
+      (s, dir) => vectors(s, dir).agg(vmaxAbs(col("v")).as("m")),
+      (s, _) => (prev, added) => {
         val sess = s
         import sess.implicits._
         val addedMax = s.read.parquet(added: _*)
           .select(col("embedding").cast("array<double>").as("v"))
-          .agg(vmax(col("v")).as("m")).as[Seq[Double]].head()
+          .agg(vmaxAbs(col("v")).as("m")).as[Seq[Double]].head()
         val prevMax = prev.select(col("m")).as[Seq[Double]].head()
         if (addedMax.length != prevMax.length ||
           addedMax.zip(prevMax).exists { case (a, p) => a > p }) null
         else prev.limit(0) // frozen: the chain serves the old model
-      })
-  }
+      },
+      modelCarryAccept))
+
+  private def vmaxAbs = udaf(graft.functions.VectorAgg.vectorMaxAbs,
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
+
+  private[graft] def sq8Scales(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, sq8ScalesSpec, dir)
 
   /** Quantize a (vec_id, v) frame against the scale model: map-only
     * `zip_with` projection, `q_d = round(x_d · 127 / m_d) ∈ [-127,127]`
@@ -766,23 +751,22 @@ trait LlmAnnOps {
     * rebuild` exactly — a sub-drift append quantizes ONLY the
     * appended vectors into a chained delta, and a sub-drift TAKEDOWN
     * excises only the touched segments (the scales carry frozen via
-    * `carryOnDelete`). The gate declines whenever the scales did NOT
+    * delete-carry). The gate declines whenever the scales did NOT
     * freeze at this source transition (a new per-dim maximum on
     * append, a drift-sized deletion): quantizing against rebuilt
     * scales would chain codes from two different quantizers onto one
     * artifact, so the decline cascades into a full re-encode. */
-  private[graft] def sq8Vectors(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmentedGated(
-      s, "sq8_vectors", Llm.embsSrc(dir), version = sq8ArtifactVersion)(
+  private[graft] val sq8VectorsSpec: ArtifactSpec = ArtifactSpec(
+    "sq8_vectors", 1, "embeddings", Decomp.Segmented((s, dir) =>
       files => sq8Quantize(
         s.read.parquet(files: _*)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v")),
-        sq8Scales(s, dir)))(
-      (_, _) => {
-        sq8Scales(s, dir) // run the model's lifecycle at this state
-        modelCarried(s, "sq8_scales", Llm.embsSrc(dir), sq8ArtifactVersion)
-      })
+        sq8Scales(s, dir)), Decomp.Gate.Model),
+    Seq(sq8ScalesSpec))
+
+  private[graft] def sq8Vectors(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, sq8VectorsSpec, dir)
 
   /** Quantize an incoming vector feed into SQ8 codes online — batch
     * frame or `readStream`, the SAME plan: [[sq8Quantize]] is already
@@ -927,21 +911,20 @@ trait LlmAnnOps {
     * [[ivfCentroids]]: a small pure append freezes the codebooks
     * (codes are data-independent given the model), a drift-sized one
     * declines and retrains; a sub-drift TAKEDOWN carries the frozen
-    * model (`carryOnDelete`), letting the code chain excise. */
-  private[graft] def pqCodebooks(s: SparkSession, dir: String): DataFrame = {
-    graft.observe.IndexStore.carryOnDelete(
-      s, "pq_codebooks", Llm.embsSrc(dir), pqArtifactVersion)(
-      modelCarryAccept(s, Llm.embsSrc(dir)))
-    graft.observe.IndexStore.readOrBuildIncremental(
-      s, "pq_codebooks", Llm.embsSrc(dir), version = pqArtifactVersion)(
-      pqCbFrame(s, computePqCodebooks(s, dir)))(
-      (prev, added) => {
+    * model (delete-carry), letting the code chain excise. */
+  private[graft] val pqCodebooksSpec: ArtifactSpec = ArtifactSpec(
+    "pq_codebooks", 1, "embeddings", Decomp.Model(
+      (s, dir) => pqCbFrame(s, computePqCodebooks(s, dir)),
+      (s, dir) => (prev, added) => {
         val nAdded = s.read.parquet(added: _*).count()
         val nTotal = Llm.embs(s, dir).count()
         if (ivfDriftRetrain(nTotal - nAdded, nAdded)) null // retrain
         else prev.limit(0) // frozen: the chain serves the old model
-      })
-  }
+      },
+      modelCarryAccept))
+
+  private[graft] def pqCodebooks(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, pqCodebooksSpec, dir)
 
   /** Collect a codebook frame into the broadcastable model:
     * O(nsub·ksub·dsub) doubles, sorted (j, cid) so fold order — and
@@ -994,18 +977,17 @@ trait LlmAnnOps {
     * EXCISES only the touched segments (the codebooks carry frozen);
     * a codebook retrain — drift-sized append or deletion — declines
     * the gate and cascades into a full re-encode. */
-  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmentedGated(
-      s, "pq_codes", Llm.embsSrc(dir), version = pqArtifactVersion)(
+  private[graft] val pqCodesSpec: ArtifactSpec = ArtifactSpec(
+    "pq_codes", 1, "embeddings", Decomp.Segmented((s, dir) =>
       files => pqEncodeWith(s,
         s.read.parquet(files: _*)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v")),
-        collectPqModel(s, pqCodebooks(s, dir))))(
-      (_, _) => {
-        pqCodebooks(s, dir) // run the model's lifecycle at this state
-        modelCarried(s, "pq_codebooks", Llm.embsSrc(dir), pqArtifactVersion)
-      })
+        collectPqModel(s, pqCodebooks(s, dir))), Decomp.Gate.Model),
+    Seq(pqCodebooksSpec))
+
+  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, pqCodesSpec, dir)
 
   // ---- The compressed-ANN serve pipeline -------------------------------
   //
@@ -1406,40 +1388,37 @@ trait LlmAnnOps {
       .select(col("vec_id"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
 
-  private[graft] val rpqArtifactVersion = 1
-
   /** Residual sub-codebooks, persisted as `rpq_codebooks` — the
     * THREE-artifact consistency dance: residuals are defined BY the
     * coarse quantizer, so a pure append freezes these codebooks only
     * while the quantizer itself froze (its chain check), and a
     * quantizer retrain (drift) cascades into a codebook retrain. */
-  private[graft] def rpqCodebooks(s: SparkSession, dir: String): DataFrame = {
-    // deletion lifecycle: the freeze is valid only while the COARSE
-    // quantizer itself carried across the deletion (residuals are
-    // defined by it) — the three-artifact cascade, delete edition
-    graft.observe.IndexStore.carryOnDelete(
-      s, "rpq_codebooks", Llm.embsSrc(dir), rpqArtifactVersion)(
-      (deleted, added) => modelCarryAccept(s, Llm.embsSrc(dir))(
-        deleted, added) && {
-        ivfCentroids(s, dir) // run the quantizer's lifecycle first
-        modelCarried(s, "ivf_centroids", Llm.embsSrc(dir), ivfArtifactVersion)
-      })
-    graft.observe.IndexStore.readOrBuildIncremental(
-      s, "rpq_codebooks", Llm.embsSrc(dir), version = rpqArtifactVersion)(
-      pqCbFrame(s, computePqCodebooksOf(s,
+  private[graft] val rpqCodebooksSpec: ArtifactSpec = ArtifactSpec(
+    "rpq_codebooks", 1, "embeddings", Decomp.Model(
+      (s, dir) => pqCbFrame(s, computePqCodebooksOf(s,
         pqSubvectors(residualVectors(s, dir)).localCheckpoint(),
-        Llm.embs(s, dir).count())))(
-      (prev, added) => {
+        Llm.embs(s, dir).count())),
+      (s, dir) => (prev, added) => {
         val nAdded = s.read.parquet(added: _*).count()
         val nTotal = Llm.embs(s, dir).count()
         ivfCentroids(s, dir) // resolve/freeze the quantizer at this fp
         if (ivfDriftRetrain(nTotal - nAdded, nAdded)) null // retrain
-        else if (!graft.observe.IndexStore.isChained(
-            s, "ivf_centroids", Llm.embsSrc(dir), ivfArtifactVersion))
+        else if (!IndexStore.isChained(s, ivfCentroidsSpec, dir))
           null // quantizer retrained → residual space moved
         else prev.limit(0) // frozen: the chain serves the old model
-      })
-  }
+      },
+      // deletion: the freeze is valid only while the COARSE quantizer
+      // itself carried across the deletion (residuals are defined by
+      // it) — the three-artifact cascade, delete edition
+      (s, dir) => (deleted, added) =>
+        modelCarryAccept(s, dir)(deleted, added) && {
+          ivfCentroids(s, dir) // run the quantizer's lifecycle first
+          IndexStore.carried(s, ivfCentroidsSpec, dir)
+        }),
+    Seq(ivfCentroidsSpec, ivfClustersSpec))
+
+  private[graft] def rpqCodebooks(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, rpqCodebooksSpec, dir)
 
   /** Residual PQ code table (vec_id, j, code) — SEGMENTED +
     * model-gated (E157): a vector's residual code depends only on the
@@ -1452,8 +1431,10 @@ trait LlmAnnOps {
     * their own lifecycles); any upstream retrain declines the gate
     * and cascades into a full re-encode. */
   private[graft] def rpqCodes(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmentedGated(
-      s, "rpq_codes", Llm.embsSrc(dir), version = rpqArtifactVersion)(
+    IndexStore.read(s, rpqCodesSpec, dir)
+
+  private[graft] val rpqCodesSpec: ArtifactSpec = ArtifactSpec(
+    "rpq_codes", 1, "embeddings", Decomp.Segmented((s, dir) =>
       files => pqEncodeWith(s,
         s.read.parquet(files: _*)
           .select(col("vec_id"),
@@ -1464,11 +1445,8 @@ trait LlmAnnOps {
             "cid")
           .select(col("vec_id"),
             zip_with(col("va"), col("cv"), (a, b) => a - b).as("v")),
-        collectPqModel(s, rpqCodebooks(s, dir))))(
-      (_, _) => {
-        rpqCodebooks(s, dir) // run the model cascade at this state
-        modelCarried(s, "rpq_codebooks", Llm.embsSrc(dir), rpqArtifactVersion)
-      })
+        collectPqModel(s, rpqCodebooks(s, dir))), Decomp.Gate.Model),
+    Seq(rpqCodebooksSpec, ivfClustersSpec, ivfCentroidsSpec))
 
   /** q147: RESIDUAL IVF-ADC + exact rerank — the production IVFADC
     * recipe in full (vs q145's plain-code composition): the query's

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 import graft.Tables
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 import graft.functions.GraftFx
 
 /** The CURATION families of [[Llm]], split along the file's stable
@@ -195,11 +196,13 @@ trait LlmCurationOps extends LlmAnnOps {
     * rows never span source files → file-decomposable → SEGMENTED
     * (E157), so a takedown excises the touched segments instead of
     * re-chunking the corpus. */
-  protected def docChunksIdx(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "doc_chunks", Llm.docsSrc(dir))(
+  private[graft] val docChunksSpec: ArtifactSpec = ArtifactSpec(
+    "doc_chunks", 1, "documents", Decomp.Segmented((s, _) =>
       files => chunksOf(s.read.parquet(files: _*)
-        .repartition(s.sparkContext.defaultParallelism)))
+        .repartition(s.sparkContext.defaultParallelism))))
+
+  protected def docChunksIdx(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, docChunksSpec, dir)
 
   /** Sequence-level (chunk-granular) dedup: the fraction of each
     * document's 64-token chunks whose fingerprint also occurs in some
@@ -330,13 +333,15 @@ trait LlmCurationOps extends LlmAnnOps {
     * chain with one vocab-sized re-aggregation. */
   private[graft] def sourceTokenCountsIdx(
       s: SparkSession, dir: String): DataFrame =
-    // file-decomposable (counts SUM-fold across segments), so the
-    // segmented store also EXCISES on deletion: a source takedown
-    // re-tokenizes only the deleted files' segments, never the corpus
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "source_token_counts", Llm.docsSrc(dir))(
+    IndexStore.read(s, sourceTokenCountsSpec, dir)
+
+  // file-decomposable (counts SUM-fold across segments), so the
+  // segmented store also EXCISES on deletion: a source takedown
+  // re-tokenizes only the deleted files' segments, never the corpus
+  private[graft] val sourceTokenCountsSpec: ArtifactSpec = ArtifactSpec(
+    "source_token_counts", 1, "documents", Decomp.Segmented((s, _) =>
       files => sourceTokenCountsOf(s.read.parquet(files: _*)
-        .repartition(s.sparkContext.defaultParallelism)))
+        .repartition(s.sparkContext.defaultParallelism))))
 
   /** Chain-merged read face of the persisted mix-count artifact: one
     * partial-agg fold of the (vocab × sources)-sized chain — never a
@@ -506,7 +511,15 @@ trait LlmCurationOps extends LlmAnnOps {
   // fingerprint's md5 preimage). v3: the sink moved to the PARTITIONED
   // store layout (`data/source=…` dirs + zero-copy part links) — a v2
   // flat artifact must never be served through the partitioned reader.
-  protected val mixShardsVersion = 3
+  private[graft] val mixShardsSpec: ArtifactSpec = ArtifactSpec(
+    "mix_shards", 3, "documents", shardsOf((s, dir) => Llm.docs(s, dir)
+      .withColumn("n_tok", size(split(col("text"), " ")).cast("bigint"))))
+
+  /** The curated sink: versioned with `mix_shards`, keyed on the
+    * curated-train stage it cuts. */
+  private[graft] val curatedMixShardsSpec: ArtifactSpec = ArtifactSpec(
+    "curated_mix_shards", 3, "documents", shardsOf(curatedTrainSlim),
+    Seq(curatedTrainSlimSpec))
 
   /** q152: the mix-extraction SHARD SINK — q149 reports fills; this
     * persists the admitted documents themselves as a durable,
@@ -538,10 +551,7 @@ trait LlmCurationOps extends LlmAnnOps {
     * appends it last.) */
   private[graft] def mixShardsWith(s: SparkSession, dir: String,
       plan: Seq[(String, Long, Long, Long, Long)]): DataFrame =
-    shardSink(s, "mix_shards", dir,
-      Llm.docs(s, dir)
-        .withColumn("n_tok", size(split(col("text"), " ")).cast("bigint")),
-      plan)
+    shardSink(s, mixShardsSpec, dir, plan)
       .select(col("source"), col("doc_id"), col("n_tok"), col("cum"))
 
   /** Parse a [[shardSink]] plan key back to source → allocation. The
@@ -575,13 +585,23 @@ trait LlmCurationOps extends LlmAnnOps {
       (ma.keySet ++ mb.keySet).filter(s => ma.get(s) != mb.get(s))
 
   /** The sink core shared by [[mixShards]] (raw corpus) and
-    * [[curatedMixShards]] (q151's curated train): cumulative cutoff of
-    * `slim` (source, doc_id, n_tok) at the plan's allocations,
-    * persisted under `name` with the PLAN fingerprint folded into the
-    * content address.
-    *
-    * DELETE-AWARE at SOURCE granularity (r9 verdict task 6, via
-    * [[graft.observe.IndexStore.readOrBuildPartitioned]]): the sink is
+    * [[curatedMixShards]] (q151's curated train): the cumulative
+    * cutoff of `spec`'s slim relation at the plan's allocations, with
+    * the PLAN folded into the content address. Plan identity: the
+    * (source, allocation) pairs are the extraction's entire
+    * parameterization — folded VERBATIM into the store's md5 preimage
+    * (the read's `extra`), not squeezed into a 32-bit hashCode where a
+    * collision would silently serve the PREVIOUS plan's finished
+    * shards. Each source name is length-prefixed so the encoding is
+    * INJECTIVE even for names containing ':' or ','. */
+  protected def shardSink(s: SparkSession, spec: ArtifactSpec, dir: String,
+      plan: Seq[(String, Long, Long, Long, Long)]): DataFrame =
+    IndexStore.read(s, spec, dir,
+      plan.map(p => s"${p._1.length}:${p._1}=${p._4}").mkString(","))
+
+  /** A shard sink over `slimOf`'s (source, doc_id, n_tok) rows,
+    * PARTITIONED by source. DELETE-AWARE at SOURCE granularity (r9
+    * verdict task 6): the sink is
     * not file-decomposable — a source's cumulative cutoff spans every
     * input file carrying it — but it IS source-decomposable: a shard's
     * content depends only on (that source's rows, that source's
@@ -592,32 +612,19 @@ trait LlmCurationOps extends LlmAnnOps {
     * group re-links zero-copy, byte-identical. The cumulative pass of
     * a partial rebuild filters `slim` to the touched sources FIRST —
     * per-source cutoffs are independent, so the recompute scans the
-    * touched sources' rows, not the corpus. */
-  protected def shardSink(s: SparkSession, name: String, dir: String,
-      slim: DataFrame,
-      plan: Seq[(String, Long, Long, Long, Long)]): DataFrame = {
-    val sess = s
-    import sess.implicits._
-    // plan identity: the (source, allocation) pairs are the
-    // extraction's entire parameterization — folded VERBATIM into the
-    // store's md5 preimage (the `extra` component), not squeezed into
-    // a 32-bit hashCode where a collision would silently serve the
-    // PREVIOUS plan's finished shards. Each source name is
-    // length-prefixed so the encoding is INJECTIVE even for names
-    // containing ':' or ',' — an ambiguous preimage is the same
-    // silent-aliasing hole the md5 fold exists to close.
-    val planKey = plan.map(p => s"${p._1.length}:${p._1}=${p._4}")
-      .mkString(",")
-    val pdf = plan
-      .toDF("source", "avail_tokens", "weight_micro", "alloc_tokens",
-        "capped")
-      .select(col("source"), col("alloc_tokens"))
-    graft.observe.IndexStore.readOrBuildPartitioned(s, name, Llm.docsSrc(dir),
-      "source", version = mixShardsVersion, extra = planKey)(
-      parts => {
+    * touched sources' rows, not the corpus. Each source's allocation
+    * is parsed back from the plan key the read was keyed on. */
+  private def shardsOf(slimOf: (SparkSession, String) => DataFrame): Decomp =
+    Decomp.Partitioned("source", (s, dir, planKey) => parts => {
+        val sess = s
+        import sess.implicits._
+        val pdf = parsePlanKey(planKey).getOrElse(Map.empty).toSeq
+          .map { case (src, alloc) => (src, alloc.toLong) }
+          .toDF("source", "alloc_tokens")
         // a partial rebuild scans the TOUCHED sources' rows only —
         // per-source cutoffs are independent, so the filter pushes
         // below the cumulative pass soundly
+        val slim = slimOf(s, dir)
         val slimSel = parts.fold(slim)(ps =>
           slim.filter(col("source").isin(ps.toSeq: _*)))
         cumBySourceOf(slimSel)
@@ -631,8 +638,7 @@ trait LlmCurationOps extends LlmAnnOps {
           // interleaves its map blocks nondeterministically
           .repartition(col("source"))
           .sortWithinPartitions(col("source"), col("doc_id"))
-      })(diffPlanParts)
-  }
+      }, diffPlanParts)
 
   /** The STREAMING face of the mix extraction (q149/q152): gate a
     * crawler feed source-by-source against the waterfill allocation —
@@ -832,12 +838,14 @@ trait LlmCurationOps extends LlmAnnOps {
     * set semantics — `left_anti`/`left_semi` joins and `distinct`
     * folds, never row counts), so appends hash only the added files
     * and a takedown excises only the touched segments (E157). */
+  private[graft] val textHashesSpec: ArtifactSpec = ArtifactSpec(
+    "text_hashes", 1, "documents", Decomp.Segmented((s, _) =>
+      files => s.read.parquet(files: _*)
+        .select(md5(col("text")).as("h")).distinct()))
+
   private[graft] def corpusTextHashesIdx(
       s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "text_hashes", Llm.docsSrc(dir))(
-      files => s.read.parquet(files: _*)
-        .select(md5(col("text")).as("h")).distinct())
+    IndexStore.read(s, textHashesSpec, dir)
 
   /** The ONLINE face of the whole curated pipeline (q151/q154):
     * quality gates + exact-dedup admission + curated-mix admission
@@ -1010,8 +1018,10 @@ trait LlmCurationOps extends LlmAnnOps {
     * is a corpus-wide min, so deltas are not file-local — a changed
     * source rebuilds, exactly like `admitted_baskets`. */
   protected def curatedTrainSlim(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(
-      s, "curated_train_slim", Llm.docsSrc(dir), version = 1) {
+    IndexStore.read(s, curatedTrainSlimSpec, dir)
+
+  private[graft] val curatedTrainSlimSpec: ArtifactSpec = ArtifactSpec(
+    "curated_train_slim", 1, "documents", Decomp.Full { (s, dir) =>
       Llm.gopherStats(
           Llm.docs(s, dir)
             .withColumn("n_words", size(split(col("text"), " ")))
@@ -1027,7 +1037,7 @@ trait LlmCurationOps extends LlmAnnOps {
         .filter(pmod(graft.functions.TopK.knuthHash(col("doc_id")),
           lit(100)) < 80)
         .select(col("source"), col("doc_id"), col("n_tok"))
-    }
+    })
 
   /** q154: the CURATED shard sink — q152's durable-output discipline
     * applied to q151's pipeline: the curated-train documents admitted
@@ -1053,8 +1063,7 @@ trait LlmCurationOps extends LlmAnnOps {
   }
 
   def curatedMixShards(s: SparkSession, dir: String): DataFrame = {
-    val (train, plan) = curatedPlan(s, dir)
-    shardSink(s, "curated_mix_shards", dir, train, plan)
+    shardSink(s, curatedMixShardsSpec, dir, curatedPlan(s, dir)._2)
       .select(col("source"), col("doc_id"), col("n_tok"), col("cum"))
       .orderBy(col("source"), col("doc_id"))
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 
 /** Multimodal column plumbing — SURVEY.md §2.9 X5.
   *
@@ -407,15 +408,17 @@ object Multimodal {
     * a DELETION (media takedown — the likeliest lifecycle event for
     * media at 100 TB) excises only the touched segments, exactly the
     * mix-count/shingle discipline (E157). */
-  private[graft] def mediaBlockPostingsIdx(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "media_block_postings", s"$dir/documents.parquet")(
+  private[graft] val mediaBlockPostingsSpec: ArtifactSpec = ArtifactSpec(
+    "media_block_postings", 1, "documents", Decomp.Segmented((s, _) =>
       files => decodedCorpusOf(s, s.read.parquet(files: _*)
           .repartition(s.sparkContext.defaultParallelism))
         .select(col("media_id"),
           explode(col("block_hashes")).as("block_hash"))
-        .distinct())
+        .distinct()))
+
+  private[graft] def mediaBlockPostingsIdx(
+      s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, mediaBlockPostingsSpec, dir)
 
   /** q156: EXACT media dup detection — keep-first over the payload
     * content hash (the q29 discipline on the binary plane): one row
@@ -789,17 +792,15 @@ object Multimodal {
     * paid once per audio row ever; file-decomposable (a row's
     * fingerprints, including its planted re-masters', derive from one
     * source document file), so an audio takedown excises only the
-    * touched segments (E157/E163 discipline). Version walk — the
-    * co-versioning rule: a DECODE-KERNEL semantics change must bump
-    * every artifact built through the kernel (fps, fp_sets, stops,
-    * gate_audit move together): v5 (sets 4, stops 5) = the E200
-    * canonical-PCM header gate; v6 (sets 5, stops 6, audit 2) = the
-    * codec-seam lift plus the MONO requirement (ADVICE r13 — a
-    * canonical stereo WAV previously decoded its interleave as one
-    * mono stream, the silent-wrong-features class). */
-  private[graft] def audioFpIdx(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "audio_fps", s"$dir/documents.parquet", version = 6)(
+    * touched segments (E157/E163 discipline). v5 = the E200
+    * canonical-PCM header gate; v6 = the codec-seam lift plus the MONO
+    * requirement (ADVICE r13 — a canonical stereo WAV previously
+    * decoded its interleave as one mono stream, the
+    * silent-wrong-features class). The sets, stops and gate ledger
+    * built through the kernel declare this spec upstream, so a bump
+    * here rebuilds them. */
+  private[graft] val audioFpsSpec: ArtifactSpec = ArtifactSpec(
+    "audio_fps", 6, "documents", Decomp.Segmented((s, _) =>
       files => {
         val sess = s
         import sess.implicits._
@@ -807,7 +808,7 @@ object Multimodal {
         // is a function of (source state, version, codec chain) — a
         // session that registers a codec and needs it reflected in
         // the corpus artifacts bumps the artifact version with the
-        // codec registration (the same co-versioning rule)
+        // codec registration
         val codecs = AudioCodecs.registered
         audioVariantCorpusOf(s.read.parquet(files: _*)
             .repartition(s.sparkContext.defaultParallelism))
@@ -818,7 +819,10 @@ object Multimodal {
             audioFpSeqWith(codecs)(r.payload).iterator.map(fp =>
               (r.doc_id, fp))))
           .toDF("media_id", "fp")
-      })
+      }))
+
+  private[graft] def audioFpIdx(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, audioFpsSpec, dir)
 
   /** The audio corpus' media ids ONLY — base + planted re-master ids
     * all derive from doc_id predicates, so this relation never touches
@@ -851,11 +855,13 @@ object Multimodal {
   }
 
   /** The audio set-containment modality: the [[audioFpIdx]] postings,
-    * per-media fingerprint sets persisted as `audio_fp_sets` v5
+    * per-media fingerprint sets persisted as `audio_fp_sets`
     * (`corpus_fps`), gain-invariant fingerprints map-side and
     * containment ≥ 0.6. */
   private[graft] val audioContainment: SetContainment = SetContainment(
-    SigFamilies.audioFps, Gates.audio, "audio_fp_sets", 5, "corpus_fps",
+    SigFamilies.audioFps, Gates.audio,
+    SetContainment.setSpec(audioContainment, "audio_fp_sets", 5, audioFpsSpec),
+    "corpus_fps",
     audioVariantIdsOf,
     // codec chain captured at plan time, shipped in the closure
     () => audioFpSeqWith(AudioCodecs.registered), 600000L)
@@ -925,7 +931,9 @@ object Multimodal {
     * block signatures map-side (the same digest and container parse as
     * the batch decode) and containment ≥ 0.8. */
   private[graft] val mediaContainment: SetContainment = SetContainment(
-    SigFamilies.mediaBlocks, Gates.media, "media_block_sets", 1,
+    SigFamilies.mediaBlocks, Gates.media,
+    SetContainment.setSpec(mediaContainment, "media_block_sets", 1,
+      mediaBlockPostingsSpec),
     "corpus_blocks", df => mediaCorpusOf(df).select(col("media_id")),
     () => p => {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -1713,11 +1721,10 @@ object Multimodal {
     * fixture arms; versions 4-5 = the fixture-entropy fixes (family-C
     * prime moduli, md5-parity planted words)
     * (changed build logic MUST bump, or the store serves the stale
-    * index). */
-  private[graft] def rasterAHashIdx(
-      s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "raster_ahash", s"$dir/documents.parquet", version = 5)(
+    * index; the band stops and the gate ledger declare this spec
+    * upstream, so the bump rebuilds them too). */
+  private[graft] val rasterAHashSpec: ArtifactSpec = ArtifactSpec(
+    "raster_ahash", 5, "documents", Decomp.Segmented((s, _) =>
       files => {
         val sess = s
         import sess.implicits._
@@ -1729,7 +1736,11 @@ object Multimodal {
             rasterAHashAnyOf(r.payload).iterator.map(hsh =>
               (r.doc_id, hsh))))
           .toDF("raster_id", "ahash")
-      })
+      }))
+
+  private[graft] def rasterAHashIdx(
+      s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, rasterAHashSpec, dir)
 
   /** Raster corpus size for the relative band-stop threshold — ONE
     * metadata-cheap count over the persisted signature artifact

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 
 /** Core relational operator inventory — SURVEY.md §2.1-2.5, §2.7, §2.8.
   *
@@ -1022,37 +1023,37 @@ object Relational {
     * not one per q134/q137 run. No incremental rule: an appended file
     * can extend EXISTING orders' baskets, so deltas aren't file-local
     * and a changed source rebuilds. (The q134 adjacency artifact
-    * builds ON TOP of this one — nested readOrBuild, distinct keys.) */
+    * builds ON TOP of this one and declares it upstream.) */
   private[graft] def admittedBaskets(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuild(
-      s, "admitted_baskets", s"$dir/lineitem.parquet", version = 1) {
-    val items = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .distinct() // in-basket repeats don't count
-      .localCheckpoint() // sizing pass + collection pass share it
-    val sz = items.groupBy(col("ok")).agg(count(lit(1)).as("b"))
-    val nAll = sz.agg(count(lit(1)).as("n_all"))
-    val admitted = sz.crossJoin(broadcast(nAll))
-      .filter(col("b") <=
-        greatest(lit(64L), floor(log2(col("n_all"))) * lit(8L)))
-      .select(col("ok"))
-    items.join(admitted, "ok") // co-partitioned on ok with the groupBy
-      .groupBy(col("ok"))
-      .agg(sort_array(collect_list(col("p"))).as("ps")) // ≤cap items
-  }
+    IndexStore.read(s, admittedBasketsSpec, dir)
 
-  def copurchaseTriangles(s: SparkSession, dir: String): DataFrame = {
-    // The oriented co-purchase edge set is a derived INDEX of the
-    // lineitem table — projection + degrees + orientation cost one
-    // build per source state, not one per query, so it persists via
-    // IndexStore (content-addressed: a changed lineitem can never
-    // serve a stale graph; version=2 marks the admission-cap
-    // semantics so no pre-cap artifact is ever served). No incremental
-    // rule: an appended file may extend EXISTING orders' baskets, so
-    // delta pairs are not file-local and a changed source rebuilds the
-    // graph outright.
-    val adj = graft.observe.IndexStore.readOrBuild(
-      s, "copurchase_adjacency", s"$dir/lineitem.parquet", version = 2) {
+  private[graft] val admittedBasketsSpec: ArtifactSpec = ArtifactSpec(
+    "admitted_baskets", 1, "lineitem", Decomp.Full { (s, dir) =>
+      val items = t(s, dir, "lineitem")
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
+        .distinct() // in-basket repeats don't count
+        .localCheckpoint() // sizing pass + collection pass share it
+      val sz = items.groupBy(col("ok")).agg(count(lit(1)).as("b"))
+      val nAll = sz.agg(count(lit(1)).as("n_all"))
+      val admitted = sz.crossJoin(broadcast(nAll))
+        .filter(col("b") <=
+          greatest(lit(64L), floor(log2(col("n_all"))) * lit(8L)))
+        .select(col("ok"))
+      items.join(admitted, "ok") // co-partitioned on ok with the groupBy
+        .groupBy(col("ok"))
+        .agg(sort_array(collect_list(col("p"))).as("ps")) // ≤cap items
+    })
+
+  /** The oriented co-purchase edge set is a derived INDEX of the
+    * lineitem table — projection + degrees + orientation cost one build
+    * per source state, not one per query (content-addressed: a changed
+    * lineitem can never serve a stale graph; version=2 marks the
+    * admission-cap semantics so no pre-cap artifact is ever served).
+    * No incremental rule: an appended file may extend EXISTING orders'
+    * baskets, so delta pairs are not file-local and a changed source
+    * rebuilds the graph outright. */
+  private[graft] val copurchaseAdjacencySpec: ArtifactSpec = ArtifactSpec(
+    "copurchase_adjacency", 2, "lineitem", Decomp.Full { (s, dir) =>
       val baskets = admittedBaskets(s, dir)
       val pairs = baskets
         .select(explode(expr(
@@ -1077,7 +1078,10 @@ object Relational {
           when(lt, col("p2")).otherwise(col("p1")).as("dst"))
         .groupBy(col("src"))
         .agg(sort_array(collect_list(col("dst"))).as("nb"))
-    }
+    }, Seq(admittedBasketsSpec))
+
+  def copurchaseTriangles(s: SparkSession, dir: String): DataFrame = {
+    val adj = IndexStore.read(s, copurchaseAdjacencySpec, dir)
     // per-vertex credit in ONE pass over the triangle relation: u and
     // v get the edge's closed count, each common neighbor gets 1 per
     // triangle it closes. The O(edges) array-carrying tri relation is

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import graft.Tables
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 
 /** Lexical + hybrid retrieval over the document corpus — the search
   * face of the LLM-data toolbox (SURVEY §2.12 extensions). The
@@ -95,11 +96,13 @@ object Retrieval {
     * Document-frequency and corpus totals are NOT persisted — they
     * are vocabulary-sized aggregations of the chain computed at read,
     * so neither an append nor an excision can stale them. */
-  private[graft] def bm25Postings(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, "bm25_postings", docsSrc(dir))(
+  private[graft] val bm25PostingsSpec: ArtifactSpec = ArtifactSpec(
+    "bm25_postings", 1, "documents", Decomp.Segmented((s, _) =>
       files => postingsOf(s.read.parquet(files: _*)
-        .repartition(s.sparkContext.defaultParallelism)))
+        .repartition(s.sparkContext.defaultParallelism))))
+
+  private[graft] def bm25Postings(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, bm25PostingsSpec, dir)
 
   /** Per-(query, doc) BM25 score in integer micro-units, plus the
     * doc's matched-term stats — the shared scoring core of

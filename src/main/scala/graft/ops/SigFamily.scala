@@ -2,17 +2,19 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 
 /** A family's corpus-relative stop list: the signatures whose document
   * frequency (df, the number of corpus items carrying the signature)
-  * passes `threshold(corpusSize)`, PERSISTED as the `artifact`
-  * (`readOrBuild`, content-addressed at the documents fingerprint).
-  * The stop list only changes when the corpus does, which is exactly
-  * what the fingerprint keys, so a pair report or a gate START reads a
-  * tiny parquet instead of re-paying the corpus-sized df fold over the
-  * postings — at 100 TB that fold is the dominant gate-start stage.
-  * The corpus count runs only inside the artifact's build. */
-final case class StopList(artifact: String, version: Int,
+  * passes `threshold(corpusSize)`, PERSISTED as `spec` (a full build,
+  * content-addressed at the documents fingerprint and keyed on the
+  * family's postings artifact). The stop list only changes when the
+  * corpus does, which is exactly what the fingerprint keys, so a pair
+  * report or a gate START reads a tiny parquet instead of re-paying
+  * the corpus-sized df fold over the postings — at 100 TB that fold is
+  * the dominant gate-start stage. The corpus count runs only inside
+  * the artifact's build. */
+final case class StopList(spec: ArtifactSpec,
     corpusSize: (SparkSession, String) => Long, threshold: Long => Long)
 
 /** One fingerprint family: its (item, signature) posting relation,
@@ -29,14 +31,12 @@ final case class SigFamily(name: String,
   def threshold(s: SparkSession, dir: String): Long =
     stop.fold(Long.MaxValue)(p => p.threshold(p.corpusSize(s, dir)))
 
+  def stopSpec: ArtifactSpec =
+    stop.getOrElse(sys.error(s"$name prunes no stop list")).spec
+
   /** The persisted stop relation, one row per stop signature. */
-  def stops(s: SparkSession, dir: String): DataFrame = {
-    val p = stop.getOrElse(sys.error(s"$name prunes no stop list"))
-    graft.observe.IndexStore.readOrBuild(
-      s, p.artifact, Llm.docsSrc(dir), version = p.version)(
-      SigFamily.stopsOf(postings(s, dir), keys, threshold(s, dir)))
-      .select(keys.map(col): _*)
-  }
+  def stops(s: SparkSession, dir: String): DataFrame =
+    IndexStore.read(s, stopSpec, dir).select(keys.map(col): _*)
 
   /** The stop list COLLECTED, for a single-key family: bounded by the
     * relative threshold's construction at any corpus size (the E161
@@ -74,6 +74,14 @@ object SigFamily {
     * formula, so both engines prune identically. */
   def relative(floor: Long)(n: Long): Long = math.max(floor, n / 5)
 
+  /** A family's stop-list spec: the df fold over its postings, keyed
+    * on the postings artifact `over`. */
+  private[ops] def stopSpec(family: => SigFamily, name: String,
+      version: Int, over: => ArtifactSpec): ArtifactSpec =
+    ArtifactSpec(name, version, "documents", Decomp.Full((s, d) =>
+      stopsOf(family.postings(s, d), family.keys, family.threshold(s, d))),
+      Seq(over))
+
   /** The 2 × 32-bit band decomposition of a 64-bit signature — band k
     * is bits [32k, 32k+32). Two bands are pigeonhole-exact at Hamming
     * ≤ 1, and the 32-bit band universe (4.3×10⁹) keeps chance band
@@ -103,7 +111,8 @@ object SigFamilies {
     * row, so ≤ 80 stop blocks. */
   val mediaBlocks: SigFamily = SigFamily("media_blocks",
     (s, d) => Multimodal.mediaBlockPostingsIdx(s, d), Seq("block_hash"),
-    Some(StopList("media_stop_blocks", 1,
+    Some(StopList(SigFamily.stopSpec(mediaBlocks, "media_stop_blocks", 1,
+      Multimodal.mediaBlockPostingsSpec),
       (s, d) => Multimodal.mediaCorpus(s, d).count(),
       SigFamily.relative(64L))))
 
@@ -113,20 +122,17 @@ object SigFamilies {
     * identical shingles digest to identical fingerprints. */
   val audioFps: SigFamily = SigFamily("audio_fps",
     (s, d) => Multimodal.audioFpIdx(s, d), Seq("fp"),
-    Some(StopList("audio_stop_fps", 6,
+    Some(StopList(SigFamily.stopSpec(audioFps, "audio_stop_fps", 6,
+      Multimodal.audioFpsSpec),
       (s, d) => Multimodal.nAudioCorpus(s, d), SigFamily.relative(16L))))
 
   /** Raster perceptual-hash bands (q164/q165): exactly 2 band rows per
-    * raster, so ≤ 10 stop buckets. The stop artifact is CO-VERSIONED
-    * with `raster_ahash` (the stop list derives from the signature
-    * artifact, so every upstream bump moves this version too, or the
-    * store serves stops folded over a stale signature population):
-    * v2 = the container-agnostic AnyOf switch (raster_ahash v3),
-    * v3-v4 = the two E206 fixture-entropy bumps (raster_ahash v4-v5). */
+    * raster, so ≤ 10 stop buckets. */
   val rasterBands: SigFamily = SigFamily("raster_bands",
     (s, d) => SigFamily.bands(Multimodal.rasterAHashIdx(s, d), "ahash"),
     Seq("b", "bh"),
-    Some(StopList("raster_band_stops", 4,
+    Some(StopList(SigFamily.stopSpec(rasterBands, "raster_band_stops", 4,
+      Multimodal.rasterAHashSpec),
       (s, d) => Multimodal.nRasterCorpus(s, d), SigFamily.relative(64L))))
 
   /** Winnowed text fingerprints (q142): the relative threshold capped
@@ -134,7 +140,8 @@ object SigFamilies {
     * is C(256, 2) pairs at any corpus size. */
   val winnowFps: SigFamily = SigFamily("winnow_fps",
     (s, d) => Llm.winnowFpsIdx(s, d), Seq("fp"),
-    Some(StopList("winnow_stop_fps", 1, (s, d) => Llm.docs(s, d).count(),
+    Some(StopList(SigFamily.stopSpec(winnowFps, "winnow_stop_fps", 1,
+      Llm.winnowFpsSpec), (s, d) => Llm.docs(s, d).count(),
       n => math.min(SigFamily.relative(100L)(n), Llm.winnowDfCap))))
 
   /** MinHash LSH bands (q30): no stop list — LSH candidates ride band
@@ -149,15 +156,15 @@ object SigFamilies {
 /** A set-containment modality (media blocks q157/q160, audio
   * fingerprints q162/q163), declared once: its signature `family`
   * (postings keyed by `media_id`), its admission `gate`, its per-item
-  * signature-SET artifact (`setArtifact` v`setVersion`, the set in column
-  * `setCol`; `idsOf` gives a documents frame's media ids), its
+  * signature-SET artifact (`setSpec`, the set in column `setCol`;
+  * `idsOf` gives a documents frame's media ids), its
   * payload → signatures kernel (`sigsOf()`, called at plan time so a
   * captured codec chain ships in the task closure) and its
   * containment threshold in micro units. The pair report, the set
   * artifact and the gate kernel all derive from it; the common-count
   * column is the gate's second evidence column. */
 final case class SetContainment(family: SigFamily, gate: GateSpec,
-    setArtifact: String, setVersion: Int, setCol: String,
+    setSpec: ArtifactSpec, setCol: String,
     idsOf: DataFrame => DataFrame,
     sigsOf: () => Array[Byte] => Seq[String], thresholdMicro: Long) {
 
@@ -214,13 +221,7 @@ final case class SetContainment(family: SigFamily, gate: GateSpec,
     * takedown excises one segment. `sort_array` pins the set's order
     * so excised chains compare byte-stable against rebuilds. */
   def sets(s: SparkSession, dir: String): DataFrame =
-    graft.observe.IndexStore.readOrBuildSegmented(
-      s, setArtifact, Llm.docsSrc(dir), version = setVersion)(
-      files => family.postings(s, dir)
-        .join(idsOf(s.read.parquet(files: _*)), Seq("media_id"),
-          "left_semi")
-        .groupBy(col("media_id"))
-        .agg(sort_array(collect_set(col(key))).as(setCol)))
+    IndexStore.read(s, setSpec, dir)
 
   /** The set-containment kernel on the gate's admission core
     * [[Gates.admit]]: incoming payloads decode MAP-SIDE to signature
@@ -271,4 +272,17 @@ final case class SetContainment(family: SigFamily, gate: GateSpec,
           expr(s"$common * 1000000L div least(n_in, n_corpus)"))
         .filter(col("containment_micro") >= thresholdMicro)))
   }
+}
+
+object SetContainment {
+
+  /** A modality's segmented set spec, keyed on its postings `over`. */
+  def setSpec(m: => SetContainment, name: String, version: Int,
+      over: => ArtifactSpec): ArtifactSpec =
+    ArtifactSpec(name, version, "documents", Decomp.Segmented((s, dir) =>
+      files => m.family.postings(s, dir)
+        .join(m.idsOf(s.read.parquet(files: _*)), Seq("media_id"), "left_semi")
+        .groupBy(col("media_id"))
+        .agg(sort_array(collect_set(col(m.family.keys.head))).as(m.setCol))),
+      Seq(over))
 }

@@ -42,8 +42,8 @@ import org.apache.spark.sql.types.DoubleType
   * a frozen plan would pin the registering session's file index and
   * silently serve pre-append data after the base table changes (the
   * process-global-handle failure mode the IndexStore exists to kill).
-  * Instead the spec stores the ARTIFACT COORDINATES (name, base path,
-  * version), and [[apply]] re-resolves the artifact AT PLAN TIME
+  * Instead the spec stores the ARTIFACT COORDINATES (warehouse dir and
+  * artifact spec), and [[apply]] re-resolves the artifact AT PLAN TIME
   * through [[graft.observe.IndexStore.readIfCurrent]]: the current
   * base fingerprint must have a published, chain-intact artifact or
   * the rule leaves the query on the base table — stale serve is
@@ -73,22 +73,23 @@ import org.apache.spark.sql.types.DoubleType
   */
 object MvRewrite extends Rule[LogicalPlan] {
 
-  /** One registered view: base-table path, the IndexStore artifact
-    * coordinates it is served from (re-resolved per apply — never a
-    * frozen plan), the MV grain, and the base→MV column maps per
-    * aggregate kind. `nonNullCntCols` maps a base column to the MV
-    * column holding its `count(x)` — the denominator `avg` synthesis
-    * needs. */
+  /** One registered view: the warehouse dir, the IndexStore artifact
+    * it is served from (its table is the base table; re-resolved per
+    * apply — never a frozen plan), the MV grain, and the base→MV column
+    * maps per aggregate kind. `nonNullCntCols` maps a base column to
+    * the MV column holding its `count(x)` — the denominator `avg`
+    * synthesis needs. */
   case class Spec(
-      basePath: String,
-      artifact: String,
-      version: Int,
+      dir: String,
+      artifact: graft.observe.ArtifactSpec,
       groupCols: Set[String],
       cntCol: String,
       sumCols: Map[String, String],
       minCols: Map[String, String],
       maxCols: Map[String, String],
-      nonNullCntCols: Map[String, String] = Map.empty)
+      nonNullCntCols: Map[String, String] = Map.empty) {
+    def basePath: String = artifact.source(dir)
+  }
 
   /** Registry keyed by the base table's normalized path. */
   private[plans] val specs = new ConcurrentHashMap[String, Spec]()
@@ -116,8 +117,7 @@ object MvRewrite extends Rule[LogicalPlan] {
     * registry. */
   private def resolveMv(spec: Spec): Option[LogicalPlan] =
     SparkSession.getActiveSession.flatMap { s =>
-      graft.observe.IndexStore
-        .readIfCurrent(s, spec.artifact, spec.basePath, spec.version)
+      graft.observe.IndexStore.readIfCurrent(s, spec.artifact, spec.dir)
         .map(_.queryExecution.analyzed)
     }
 
@@ -252,22 +252,18 @@ object MvCatalog {
 
   /** Artifact version 2: adds `cnt_qty` (non-null count of
     * l_quantity) for avg synthesis — bumping the version retires any
-    * v1 artifact without the column. */
-  private val artifactVersion = 2
-
-  def registerLineitemDaily(s: SparkSession, dir: String): DataFrame = {
-    val basePath = s"$dir/lineitem.parquet"
-    // SEGMENTED (E157 rollout): the MV is PARTIAL aggregates under a
-    // re-aggregation fold — every consumer ([[MvRewrite]]'s rewritten
-    // plans) re-aggregates the artifact anyway (sum of cnt/sums, min
-    // of mins, avg synthesized from sums), so a chain holding one
-    // partial row per (grain, segment) folds to the identical answer:
-    // file-decomposable AS CONSUMED. An append rolls up only the added
-    // files; a base-table DELETE excises only the touched segments —
-    // previously any deletion re-aggregated the whole base.
-    val mv = graft.observe.IndexStore.readOrBuildSegmented(
-      s, "mv_lineitem_daily", basePath, version = artifactVersion)(
-      files => s.read.parquet(files: _*)
+    * v1 artifact without the column.
+    *
+    * SEGMENTED (E157 rollout): the MV is PARTIAL aggregates under a
+    * re-aggregation fold — every consumer ([[MvRewrite]]'s rewritten
+    * plans) re-aggregates the artifact anyway (sum of cnt/sums, min of
+    * mins, avg synthesized from sums), so a chain holding one partial
+    * row per (grain, segment) folds to the identical answer:
+    * file-decomposable AS CONSUMED. An append rolls up only the added
+    * files; a base-table DELETE excises only the touched segments. */
+  private[graft] val lineitemDailySpec: graft.observe.ArtifactSpec =
+    graft.observe.ArtifactSpec("mv_lineitem_daily", 2, "lineitem",
+      graft.observe.Decomp.Segmented((s, _) => files => s.read.parquet(files: _*)
         .groupBy(col("l_returnflag"), col("l_linestatus"),
           to_date(col("l_shipdate")).as("ship_day"))
         .agg(
@@ -275,11 +271,13 @@ object MvCatalog {
           sum(col("l_quantity")).as("sum_qty"),
           count(col("l_quantity")).as("cnt_qty"),
           min(col("l_extendedprice")).as("min_price"),
-          max(col("l_extendedprice")).as("max_price")))
+          max(col("l_extendedprice")).as("max_price"))))
+
+  def registerLineitemDaily(s: SparkSession, dir: String): DataFrame = {
+    val mv = graft.observe.IndexStore.read(s, lineitemDailySpec, dir)
     MvRewrite.register(MvRewrite.Spec(
-      basePath = basePath,
-      artifact = "mv_lineitem_daily",
-      version = artifactVersion,
+      dir = dir,
+      artifact = lineitemDailySpec,
       groupCols = Set("l_returnflag", "l_linestatus"),
       cntCol = "cnt",
       sumCols = Map("l_quantity" -> "sum_qty"),

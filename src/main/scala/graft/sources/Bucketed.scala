@@ -33,11 +33,6 @@ import graft.observe.IndexStore
   */
 object Bucketed {
 
-  /** Same root as [[IndexStore]]: `spark.graft.indexDir` or JVM tmp. */
-  private def root(s: SparkSession): String =
-    s.conf.getOption("spark.graft.indexDir").getOrElse(
-      sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index")
-
   /** Bucket count for a table's bucketed twin, derived from source
     * bytes (pure file metadata — no job): one bucket per ~`targetBytes`
     * of source so buckets stay executor-memory-sized at any corpus
@@ -74,7 +69,7 @@ object Bucketed {
     val fp = IndexStore.fingerprint(s, s"$dir/$name.parquet", version = buckets)
     val ident = s"graft_${name}_b_$fp".take(64)
     if (!s.catalog.tableExists(ident)) {
-      val base = new Path(s"${root(s)}/bucketed_$name")
+      val base = new Path(s"${IndexStore.root(s)}/bucketed_$name")
       val loc = new Path(base, s"fp=$fp")
       val f: FileSystem = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (f.exists(new Path(loc, "_SUCCESS"))) {
@@ -91,24 +86,13 @@ object Bucketed {
           .write.bucketBy(buckets, key).sortBy(key)
           .option("path", loc.toString)
           .saveAsTable(ident)
-        retain(f, base)
+        // keep the newest layouts (IndexStore's retention rule). A
+        // catalog entry in ANOTHER live session pointing at a reclaimed
+        // layout fails at its next scan and recovers by calling [[table]]
+        // again
+        IndexStore.retainNewest(f, base)
       }
     }
     s.table(ident)
   }
-
-  /** Keep the newest layouts per table (IndexStore's retention rule:
-    * enough for several coexisting scale factors, bounded on disk). A
-    * catalog entry in ANOTHER live session pointing at a reclaimed
-    * layout fails at its next scan and recovers by calling [[table]]
-    * again — same tradeoff IndexStore documents for keepFingerprints.
-    */
-  private def retain(f: FileSystem, base: Path, keep: Int = 4): Unit =
-    if (f.exists(base)) {
-      f.listStatus(base).toSeq
-        .filter(_.getPath.getName.startsWith("fp="))
-        .sortBy(-_.getModificationTime)
-        .drop(keep)
-        .foreach(st => f.delete(st.getPath, true))
-    }
 }

@@ -231,17 +231,21 @@ object Layout {
     * parquet-metadata count, no data pages), never a fixture constant.
     *
     * Built once per source state under the IndexStore root, keyed by
-    * the same (files × version) fingerprint — later sessions attach. */
+    * the same (files × version) fingerprint — later sessions attach.
+    * Staged and published by one rename like every artifact, with the
+    * store's retention. Not a registry artifact: its writer sets bloom
+    * options and a fixed file count that publish-time compaction would
+    * undo. */
   def bloomLayout(s: SparkSession, dir: String,
       nFiles: Int = 8): String = bloomLock.synchronized {
     val src = s"$dir/lineitem.parquet"
     val fp = graft.observe.IndexStore.fingerprint(s, src, version = nFiles)
-    val root = s.conf.get("spark.graft.indexDir",
-      sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index")
-    val loc = new Path(s"$root/bloom_lineitem/fp=$fp")
+    val base = new Path(s"${graft.observe.IndexStore.root(s)}/bloom_lineitem")
+    val loc = new Path(base, s"fp=$fp")
     val f = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!f.exists(new Path(loc, "_SUCCESS"))) {
       if (f.exists(loc)) f.delete(loc, true) // torn earlier build
+      val tmp = new Path(base, s".build-$fp-${System.nanoTime()}")
       val rows = s.read.parquet(src).count() // parquet-metadata count
       s.read.parquet(src)
         .repartition(nFiles, col("l_orderkey"))
@@ -257,7 +261,11 @@ object Layout {
         // plain encoding is forced on the key column to exercise the
         // same layout the production regime produces.
         .option("parquet.enable.dictionary#l_orderkey", "false")
-        .parquet(loc.toString)
+        .parquet(tmp.toString)
+      // another process may have published meanwhile: keep its layout
+      if (f.exists(new Path(loc, "_SUCCESS")) || !f.rename(tmp, loc))
+        f.delete(tmp, true)
+      graft.observe.IndexStore.retainNewest(f, base)
     }
     loc.toString
   }

@@ -282,4 +282,25 @@ class BenchSpec extends AnyFunSuite {
         s"$what may appear only in SigFamily.scala")
     }
   }
+
+  test("every artifact is read through its spec, and the index root " +
+    "is spelled only in graft.observe.IndexStore") {
+    val rules = Seq(
+      "a name-keyed build entry point" -> """\b(readOrBuild\w*|carryOnDelete)\(""",
+      "a string-named probe" -> """\b(isChained|frozenFrom)\(\s*\w+,\s*"""",
+      "the index root setting" -> """spark\.graft\.indexDir""")
+    val owners = Set("src/main/scala/graft/observe/IndexStore.scala",
+      "src/main/scala/graft/observe/Artifacts.scala")
+    val files = Files.walk(Paths.get("src/main/scala/graft"))
+    val sources =
+      try files.iterator.asScala.toList
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> Files.readString(p))
+      finally files.close()
+    rules.foreach { case (what, pattern) =>
+      val hits = sources.filter(f => pattern.r.findFirstIn(f._2).nonEmpty)
+      assert(hits.map(_._1).filterNot(owners) === Nil,
+        s"$what may appear only in IndexStore.scala and Artifacts.scala")
+    }
+  }
 }

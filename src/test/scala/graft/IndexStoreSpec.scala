@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.observe.IndexStore
+import org.apache.spark.sql.DataFrame
+
+import graft.observe.{ArtifactSpec, Artifacts, Decomp, IndexStore}
 
 /** Lifecycle properties of the persisted index-artifact store: build
   * once / read thereafter, rebuild on source change (no stale reads),
@@ -25,15 +27,29 @@ class IndexStoreSpec extends SparkSuite {
   private def scratch(tag: String): String =
     tempDir(s"graft-$tag").toString + "/src"
 
+  // Ad-hoc specs over a scratch source dir: the empty table keys them
+  // on the dir a read passes.
+  private def full(name: String, version: Int = 1)(
+      build: => DataFrame): ArtifactSpec =
+    ArtifactSpec(name, version, "", Decomp.Full((_, _) => build))
+
+  private def append(name: String)(full: => DataFrame)(
+      incr: (DataFrame, Seq[String]) => DataFrame): ArtifactSpec =
+    ArtifactSpec(name, 1, "", Decomp.Append((_, _) => full, (_, _) => incr))
+
+  /** A spec for the read-only probes, which never build. */
+  private def probe(name: String): ArtifactSpec =
+    full(name)(sys.error("a probe never builds"))
+
   test("artifact builds once and is read back unchanged thereafter") {
     val name = freshName("once")
     val src = scratch("once")
     writeSource(src, 1L to 10L)
     var builds = 0
-    def get() = IndexStore.readOrBuild(spark, name, src) {
+    def get() = IndexStore.read(spark, full(name) {
       builds += 1
       spark.read.parquet(src).agg(sum(col("x")).as("s"))
-    }
+    }, src)
     val first = get().head().getLong(0)
     val second = get().head().getLong(0)
     assert(builds === 1, "second read must come from the persisted artifact")
@@ -45,10 +61,10 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("stale")
     writeSource(src, 1L to 10L)
     var builds = 0
-    def get() = IndexStore.readOrBuild(spark, name, src) {
+    def get() = IndexStore.read(spark, full(name) {
       builds += 1
       spark.read.parquet(src).agg(sum(col("x")).as("s"))
-    }
+    }, src)
     assert(get().head().getLong(0) === 55L)
     // rewrite the warehouse dir: new files → new fingerprint
     writeSource(src, 1L to 20L)
@@ -62,10 +78,10 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("inval")
     writeSource(src, 1L to 5L)
     var builds = 0
-    def get() = IndexStore.readOrBuild(spark, name, src) {
+    def get() = IndexStore.read(spark, full(name) {
       builds += 1
       spark.read.parquet(src).agg(count(lit(1)).as("n"))
-    }
+    }, src)
     get(); get()
     assert(builds === 1)
     IndexStore.invalidate(spark, name)
@@ -77,12 +93,12 @@ class IndexStoreSpec extends SparkSuite {
     val name = freshName("ver")
     val src = scratch("ver")
     writeSource(src, 1L to 5L)
-    val v1 = IndexStore.readOrBuild(spark, name, src, version = 1) {
+    val v1 = IndexStore.read(spark, full(name, 1) {
       spark.range(1).select(lit("old").as("logic"))
-    }.head().getString(0)
-    val v2 = IndexStore.readOrBuild(spark, name, src, version = 2) {
+    }, src).head().getString(0)
+    val v2 = IndexStore.read(spark, full(name, 2) {
       spark.range(1).select(lit("new").as("logic"))
-    }.head().getString(0)
+    }, src).head().getString(0)
     assert(v1 === "old" && v2 === "new")
   }
 
@@ -91,9 +107,9 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("ret")
     (1 to 6).foreach { i =>
       writeSource(src, 1L to (i * 3).toLong)
-      IndexStore.readOrBuild(spark, name, src) {
+      IndexStore.read(spark, full(name) {
         spark.read.parquet(src).agg(count(lit(1)).as("n"))
-      }
+      }, src)
       // parquet overwrite within the same millisecond can produce an
       // identical (path,len,mtime) fingerprint for same-sized data;
       // distinct row counts above keep lengths distinct, and a small
@@ -113,9 +129,9 @@ class IndexStoreSpec extends SparkSuite {
     import s.implicits._
     var fullBuilds = 0
     var incrBuilds = 0
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       { fullBuilds += 1; s.read.parquet(src) })(
-      { (_, added) => incrBuilds += 1; s.read.parquet(added: _*) })
+      { (_, added) => incrBuilds += 1; s.read.parquet(added: _*) }), src)
     // base corpus
     Seq(1L, 2L, 3L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     assert(get().collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
@@ -146,9 +162,9 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("asof")
     val s = spark
     import s.implicits._
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       s.read.parquet(src))(
-      (_, added) => s.read.parquet(added: _*))
+      (_, added) => s.read.parquet(added: _*)), src)
     Seq(1L, 2L, 3L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().collect()
     val fpBefore = IndexStore.fingerprint(s, src, 1)
@@ -170,9 +186,9 @@ class IndexStoreSpec extends SparkSuite {
     val name = freshName("vac")
     val src = scratch("vac")
     writeSource(src, 1L to 5L)
-    IndexStore.readOrBuild(spark, name, src) {
+    IndexStore.read(spark, full(name) {
       spark.read.parquet(src)
-    }.collect()
+    }, src).collect()
     // a crashed builder's leftovers: one aged stage, one in-flight
     val root = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index"
     val aged = Paths.get(root, name, ".build-dead-1")
@@ -189,9 +205,9 @@ class IndexStoreSpec extends SparkSuite {
     assert(report(0).getLong(2) >= 64L)
     assert(!Files.exists(aged), "aged stage must be reclaimed")
     assert(Files.exists(fresh), "an in-flight stage must survive")
-    assert(IndexStore.readOrBuild(spark, name, src) {
+    assert(IndexStore.read(spark, full(name) {
       fail("published artifact must still serve without a rebuild")
-    }.count() === 5L)
+    }, src).count() === 5L)
   }
 
   test("chain compaction folds the history into one standalone " +
@@ -201,9 +217,9 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("cpt")
     val s = spark
     import s.implicits._
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       s.read.parquet(src))(
-      (_, added) => s.read.parquet(added: _*))
+      (_, added) => s.read.parquet(added: _*)), src)
     def depth() = IndexStore.inventory(s)
       .filter(col("artifact") === name &&
         col("fingerprint") === IndexStore.fingerprint(s, src, 1))
@@ -218,11 +234,11 @@ class IndexStoreSpec extends SparkSuite {
     Seq(4L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().collect()
     assert(depth() === 3)
-    assert(IndexStore.compactChain(s, name, src))
+    assert(IndexStore.compactChain(s, probe(name), src))
     assert(depth() === 1, "compaction must fold the chain")
     assert(get().collect().map(_.getLong(0)).toSet ===
       Set(1L, 2L, 3L, 4L), "content is unchanged by compaction")
-    assert(!IndexStore.compactChain(s, name, src),
+    assert(!IndexStore.compactChain(s, probe(name), src),
       "an already-standalone head has nothing to fold")
     // the ancestor snapshot survives for time travel
     assert(IndexStore.readAsOf(s, name, fpBase)
@@ -243,9 +259,9 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("autofold")
     val s = spark
     import s.implicits._
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       s.read.parquet(src))(
-      (_, added) => s.read.parquet(added: _*))
+      (_, added) => s.read.parquet(added: _*)), src)
     def depth() = IndexStore.inventory(s)
       .filter(col("artifact") === name &&
         col("fingerprint") === IndexStore.fingerprint(s, src, 1))
@@ -279,9 +295,9 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("race")
     val s = spark
     import s.implicits._
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       s.read.parquet(src))(
-      (_, added) => s.read.parquet(added: _*))
+      (_, added) => s.read.parquet(added: _*)), src)
     Seq(1L, 2L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().collect()
     Thread.sleep(5)
@@ -307,7 +323,7 @@ class IndexStoreSpec extends SparkSuite {
     reader.start()
     try {
       Thread.sleep(100) // reads in flight
-      assert(IndexStore.compactChain(s, name, src))
+      assert(IndexStore.compactChain(s, probe(name), src))
       Thread.sleep(300) // post-fold reads through the pointer
     } finally { stop = true; reader.join() }
     assert(errs.isEmpty,
@@ -370,9 +386,9 @@ class IndexStoreSpec extends SparkSuite {
     val name = freshName("vacold")
     val src = scratch("vacold")
     writeSource(src, 1L to 3L)
-    IndexStore.readOrBuild(spark, name, src) {
+    IndexStore.read(spark, full(name) {
       spark.read.parquet(src)
-    }.collect()
+    }, src).collect()
     val root = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index"
     val aged = Paths.get(root, name, ".old-dead-1")
     Files.createDirectories(aged)
@@ -392,8 +408,8 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("inv")
     val s = spark
     import s.implicits._
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
-      s.read.parquet(src))((_, added) => s.read.parquet(added: _*))
+    def get() = IndexStore.read(s, append(name)(
+      s.read.parquet(src))((_, added) => s.read.parquet(added: _*)), src)
     Seq(1L, 2L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().count()
     def row(fp: String) = IndexStore.inventory(s)
@@ -429,16 +445,16 @@ class IndexStoreSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     var fullBuilds = 0
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       { fullBuilds += 1; s.read.parquet(src) })(
-      { (_, _) => null })
+      { (_, _) => null }), src)
     Seq(1L, 2L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().count()
     Thread.sleep(5)
     Seq(3L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     assert(get().collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
     assert(fullBuilds === 2, "declined delta must rebuild from scratch")
-    assert(!IndexStore.isChained(s, name, src),
+    assert(!IndexStore.isChained(s, probe(name), src),
       "a declined delta must publish a standalone full build")
   }
 
@@ -449,9 +465,9 @@ class IndexStoreSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     var fullBuilds = 0
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       { fullBuilds += 1; s.read.parquet(src) })(
-      { (_, added) => s.read.parquet(added: _*) })
+      { (_, added) => s.read.parquet(added: _*) }), src)
     Seq(1L, 2L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().count()
     Thread.sleep(5)
@@ -483,21 +499,21 @@ class IndexStoreSpec extends SparkSuite {
     var outerBuilds = 0
     // Simulate a second PROCESS winning the publication race
     // deterministically: the per-name JVM lock is REENTRANT, so a
-    // nested readOrBuild issued from inside the outer builder's build
+    // nested read issued from inside the outer builder's build
     // thunk exercises exactly the filesystem protocol a concurrent
     // process would — it sees no published artifact, stages, and
     // renames into the final path BEFORE the outer builder reaches its
     // own publish step. The outer builder must then hit the
     // lost-the-race branch: _SUCCESS exists → discard own staging,
     // serve the winner's (by construction equivalent) artifact.
-    val res = IndexStore.readOrBuild(spark, name, src) {
-      IndexStore.readOrBuild(spark, name, src) {
+    val res = IndexStore.read(spark, full(name) {
+      IndexStore.read(spark, full(name) {
         innerBuilds += 1
         spark.read.parquet(src).agg(sum(col("x")).as("s"))
-      }.collect()
+      }, src).collect()
       outerBuilds += 1
       spark.read.parquet(src).agg(sum(col("x")).as("s"))
-    }
+    }, src)
     assert(innerBuilds === 1 && outerBuilds === 1,
       "both builders must have actually built")
     assert(res.head().getLong(0) === 55L)
@@ -511,9 +527,9 @@ class IndexStoreSpec extends SparkSuite {
     assert(heads.length === 1, "exactly one published head")
     assert(new java.io.File(heads.head, "_SUCCESS").exists())
     // the published artifact serves a third reader without any rebuild
-    assert(IndexStore.readOrBuild(spark, name, src) {
+    assert(IndexStore.read(spark, full(name) {
       fail("race aftermath must serve, not rebuild")
-    }.head().getLong(0) === 55L)
+    }, src).head().getLong(0) === 55L)
   }
 
   test("TWO-PROCESS builder race: two JVMs provably inside the build " +
@@ -586,9 +602,9 @@ class IndexStoreSpec extends SparkSuite {
     assert(new java.io.File(heads.head, "_SUCCESS").exists())
     // the parent session (a third process, in effect) serves the
     // winner's artifact without any rebuild
-    assert(IndexStore.readOrBuild(spark, name, src) {
+    assert(IndexStore.read(spark, full(name) {
       fail("race aftermath must serve, not rebuild")
-    }.head().getLong(0) === 55L)
+    }, src).head().getLong(0) === 55L)
   }
 
   test("vacuumStaging reclaims an aged _HEAD.tmp-* pointer file (a " +
@@ -597,9 +613,9 @@ class IndexStoreSpec extends SparkSuite {
     val name = freshName("tmphead")
     val src = scratch("tmphead")
     writeSource(src, 1L to 3L)
-    IndexStore.readOrBuild(spark, name, src) {
+    IndexStore.read(spark, full(name) {
       spark.read.parquet(src)
-    }.collect()
+    }, src).collect()
     val root = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index"
     val fp = IndexStore.fingerprint(spark, src, 1)
     val head = Paths.get(s"$root/$name/fp=$fp")
@@ -616,9 +632,9 @@ class IndexStoreSpec extends SparkSuite {
       report(0).getString(1).endsWith("_HEAD.tmp-123"))
     assert(!Files.exists(aged), "aged tmp pointer must be reclaimed")
     assert(Files.exists(fresh), "an in-flight tmp pointer must survive")
-    assert(IndexStore.readOrBuild(spark, name, src) {
+    assert(IndexStore.read(spark, full(name) {
       fail("artifact must still serve without a rebuild")
-    }.count() === 3L)
+    }, src).count() === 3L)
   }
 
   test("a compacted head that lost BOTH its pointer target's _SUCCESS " +
@@ -630,15 +646,15 @@ class IndexStoreSpec extends SparkSuite {
     import s.implicits._
     var builds = 0
     var deltas = 0
-    def get() = IndexStore.readOrBuildIncremental(s, name, src)(
+    def get() = IndexStore.read(s, append(name)(
       { builds += 1; s.read.parquet(src) })(
-      (_, added) => { deltas += 1; s.read.parquet(added: _*) })
+      (_, added) => { deltas += 1; s.read.parquet(added: _*) }), src)
     Seq(1L, 2L, 3L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().collect()
     Thread.sleep(5)
     Seq(4L, 5L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     get().collect() // chain depth 2
-    assert(IndexStore.compactChain(s, name, src), "fold must happen")
+    assert(IndexStore.compactChain(s, probe(name), src), "fold must happen")
     val root = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index"
     val fp = IndexStore.fingerprint(s, src, 1)
     val head = Paths.get(s"$root/$name/fp=$fp")
@@ -705,8 +721,9 @@ class IndexStoreSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     val calls = scala.collection.mutable.Buffer.empty[Seq[String]]
-    def get() = IndexStore.readOrBuildSegmented(s, name, src)(
-      files => { calls += files.sorted; s.read.parquet(files: _*) })
+    def get() = IndexStore.read(s, ArtifactSpec(name, 1, "",
+      Decomp.Segmented((_, _) =>
+        files => { calls += files.sorted; s.read.parquet(files: _*) })), src)
     def fileSet() = dataFiles(src).map(_.getName).toSet
     // segment 1: one file
     Seq(1L, 2L, 3L).toDF("x").coalesce(1).write.mode("append").parquet(src)
@@ -847,9 +864,11 @@ class IndexStoreSpec extends SparkSuite {
     val gates = scala.collection.mutable
       .Buffer.empty[(Seq[String], Seq[String])]
     var allow = true
-    def get() = IndexStore.readOrBuildSegmentedGated(s, name, src)(
-      files => { calls += files.sorted; s.read.parquet(files: _*) })(
-      (del, add) => { gates += ((del, add)); allow })
+    def get() = IndexStore.read(s, ArtifactSpec(name, 1, "",
+      Decomp.Segmented((_, _) =>
+        files => { calls += files.sorted; s.read.parquet(files: _*) },
+        Decomp.Gate.When((_, _) => (del, add) => {
+          gates += ((del, add)); allow }))), src)
     def fileSet() = dataFiles(src).map(_.getName).toSet
     Seq(1L, 2L).toDF("x").coalesce(1).write.mode("append").parquet(src)
     val seg1File = fileSet().head
@@ -939,7 +958,6 @@ class IndexStoreSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     val wh = tempDir("graft-del-sq8").toString
     val embDir = s"$wh/embeddings.parquet"
-    val src = s"$wh/embeddings.parquet"
     val all = s.read.parquet(s"$sf/embeddings.parquet")
     // state 1: the BULK slice (~80% of rows), AMPLIFIED 2× so its
     // per-dim maxima dominate — later appends then provably freeze
@@ -971,8 +989,7 @@ class IndexStoreSpec extends SparkSuite {
       .collect().map(_.toString).toSet
     // the scale model CARRIED: delete-frozen at the new fingerprint,
     // content identical to the pre-deletion model
-    assert(IndexStore.frozenFrom(s, "sq8_scales", src,
-      graft.ops.Llm.sq8ArtifactVersion).nonEmpty,
+    assert(IndexStore.frozenFrom(s, graft.ops.Llm.sq8ScalesSpec, wh).nonEmpty,
       "a sub-drift takedown must carry the scale model frozen")
     assert(graft.ops.Llm.sq8Scales(s, wh)
       .collect().map(_.toString).toSet === scalesBefore,
@@ -993,8 +1010,7 @@ class IndexStoreSpec extends SparkSuite {
     assert(new java.io.File(embDir, bulkFile).delete())
     val retrained = graft.ops.Llm.sq8Vectors(s, wh)
       .collect().map(_.toString).toSet
-    assert(IndexStore.frozenFrom(s, "sq8_scales", src,
-      graft.ops.Llm.sq8ArtifactVersion).isEmpty,
+    assert(IndexStore.frozenFrom(s, graft.ops.Llm.sq8ScalesSpec, wh).isEmpty,
       "a drift-sized takedown must NOT carry the model")
     assert(graft.ops.Llm.sq8Scales(s, wh)
       .collect().map(_.toString).toSet !== scalesBefore,
@@ -1368,10 +1384,10 @@ class IndexStoreSpec extends SparkSuite {
     val name = freshName("ledger")
     val src = scratch("ledger")
     writeSource(src, 1L to 10L)
-    def get() = IndexStore.readOrBuildIncremental(spark, name, src)(
+    def get() = IndexStore.read(spark, append(name)(
       spark.read.parquet(src).agg(sum(col("x")).as("s")))(
       (prev, added) => spark.read.parquet(added: _*)
-        .agg(sum(col("x")).as("s")))
+        .agg(sum(col("x")).as("s"))), src)
     IndexStore.drainBuildLog() // other suites' noise is not ours
     get().count()
     val first = IndexStore.drainBuildLog().filter(_.artifact == name)
@@ -1401,8 +1417,8 @@ class IndexStoreSpec extends SparkSuite {
       writeSource(d, 1L to (10L * i))
       d
     }
-    def get(src: String) = IndexStore.readOrBuild(spark, name, src)(
-      spark.read.parquet(src).agg(sum(col("x")).as("s")))
+    def get(src: String) = IndexStore.read(spark, full(name)(
+      spark.read.parquet(src).agg(sum(col("x")).as("s"))), src)
     IndexStore.drainBuildLog()
     // pass 1: the four-state working set builds once each (mtimes must
     // be distinct for the retention order — the store sorts heads by
@@ -1541,9 +1557,9 @@ class IndexStoreSpec extends SparkSuite {
     val src = scratch("compact")
     writeSource(src, 1L to 100L)
     // force a fragmented staging write: 16 partitions of a tiny frame
-    val got = IndexStore.readOrBuild(spark, name, src) {
+    val got = IndexStore.read(spark, full(name) {
       spark.read.parquet(src).repartition(16)
-    }.collect().map(_.getLong(0)).sorted
+    }, src).collect().map(_.getLong(0)).sorted
     assert(got.toSeq === (1L to 100L), "content must survive compaction")
     val fpDirs = Option(new java.io.File(s"$storeRoot/$name").listFiles())
       .map(_.toSeq).getOrElse(Seq.empty)
@@ -1554,5 +1570,99 @@ class IndexStoreSpec extends SparkSuite {
     assert(parts.length === 1,
       s"a KB-sized artifact must publish as one file, got " +
         s"${parts.length}: ${parts.map(_.getName).mkString(", ")}")
+  }
+
+  // ---- the artifact registry --------------------------------------------
+
+  test("auto-fold works from the resolved fingerprint: an append chain " +
+    "whose preimage carries an extra block (an upstream identity) folds " +
+    "to one segment once it passes the depth bound, rows unchanged") {
+    val name = freshName("foldextra")
+    val src = scratch("foldextra")
+    val s = spark
+    import s.implicits._
+    val spec = ArtifactSpec(name, 1, "", Decomp.Append(
+      (_, _) => s.read.parquet(src),
+      (_, _) => (_, added) => s.read.parquet(added: _*)),
+      Seq(probe(freshName("foldup"))))
+    def depth() = IndexStore.inventory(s)
+      .filter(col("artifact") === name &&
+        col("fingerprint") === IndexStore.fingerprint(s, spec, src))
+      .select("chain_depth").head().getInt(0)
+    Seq(0L).toDF("x").coalesce(1).write.mode("append").parquet(src)
+    IndexStore.read(s, spec, src).collect()
+    // the base segment plus 8 deltas: the 9-deep chain passes the bound
+    (1 to 8).foreach { i =>
+      Thread.sleep(5)
+      Seq(i.toLong).toDF("x").coalesce(1).write.mode("append").parquet(src)
+      IndexStore.read(s, spec, src).collect()
+    }
+    assert(depth() === 1, "a chain keyed with an extra block must fold")
+    assert(IndexStore.read(s, spec, src).collect().map(_.getLong(0)).toSet ===
+      (0L to 8L).toSet, "the fold must keep every row")
+  }
+
+  test("registry: names are unique, every upstream is registered, and " +
+    "the graph relation lists the declared edges") {
+    val names = Artifacts.all.map(_.name)
+    assert(names.distinct === names, s"duplicate artifact names: $names")
+    Artifacts.all.foreach(a => a.upstreams.foreach(u =>
+      assert(Artifacts.all.exists(_ eq u),
+        s"${a.name}'s upstream ${u.name} is not in Artifacts.all")))
+    val edges = Artifacts.graph(spark)
+      .filter(col("upstream").isNotNull)
+      .select("artifact", "upstream").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSet
+    assert(edges.contains("raster_band_stops" -> "raster_ahash"))
+    assert(edges.contains("pq_codes" -> "pq_codebooks"))
+    assert(Artifacts.graph(spark).select("artifact").distinct().count() ===
+      names.size.toLong, "every artifact is a node of the graph")
+  }
+
+  test("registry: a spec without upstreams keeps the classic " +
+    "(version, manifest) fingerprint; a spec with upstreams moves") {
+    Artifacts.all.foreach { a =>
+      val classic = IndexStore.fingerprint(spark, a.source(sf), a.version)
+      if (a.upstreams.isEmpty)
+        assert(IndexStore.fingerprint(spark, a, sf) === classic,
+          s"${a.name} must keep its fingerprint")
+      else
+        assert(IndexStore.fingerprint(spark, a, sf) !== classic,
+          s"${a.name} must key on its upstreams")
+    }
+  }
+
+  test("registry: bumping one spec's version rebuilds exactly that spec " +
+    "and its transitive dependents") {
+    val wh = tempDir("graft-bump").toString
+    Tables.load(spark, sf, "documents").filter(col("doc_id") < 60)
+      .coalesce(1).write.mode("overwrite").parquet(s"$wh/documents.parquet")
+    val target = graft.ops.Multimodal.rasterAHashSpec
+    // the registry with `target` one version up: every dependent
+    // re-declared over its bumped upstreams, everything else as is
+    val memo = scala.collection.mutable.Map.empty[String, ArtifactSpec]
+    def bumped(a: ArtifactSpec): ArtifactSpec = memo.get(a.name) match {
+      case Some(b) => b
+      case None =>
+        val ups = a.upstreams.map(bumped)
+        val b =
+          if (a eq target) ArtifactSpec(a.name, a.version + 1, a.table, a.decomp, ups)
+          else if (ups.zip(a.upstreams).exists { case (x, y) => x ne y })
+            ArtifactSpec(a.name, a.version, a.table, a.decomp, ups)
+          else a
+        memo(a.name) = b
+        b
+    }
+    val moved = Artifacts.all.filter(a => bumped(a) ne a).map(_.name).toSet
+    assert(moved === Set("raster_ahash", "raster_band_stops",
+      "raster_gate_audit"))
+    val modalities = Artifacts.all.filter(a =>
+      Seq("raster_", "media_", "audio_").exists(a.name.startsWith))
+    modalities.foreach(a => IndexStore.read(spark, a, wh).count())
+    IndexStore.drainBuildLog()
+    modalities.foreach(a => IndexStore.read(spark, bumped(a), wh).count())
+    val built = IndexStore.drainBuildLog().map(_.artifact).toSet
+    assert(built === moved,
+      s"exactly the bumped spec and its dependents rebuild: $built")
   }
 }

@@ -11,6 +11,10 @@ import graft.ops.Llm
   * sketch gets its gate here). */
 class LlmSpec extends SparkSuite {
 
+  /** The fingerprint `spec` serves for warehouse `dir` now. */
+  private def fpOf(spec: graft.observe.ArtifactSpec, dir: String): String =
+    graft.observe.IndexStore.fingerprint(spark, spec, dir)
+
   test("minhash bands: identical shingle sets → identical bands; " +
     "disjoint sets → (whp) different bands") {
     val s = spark
@@ -59,9 +63,9 @@ class LlmSpec extends SparkSuite {
     // append elsewhere in the warehouse must not perturb them
     val fp = graft.observe.IndexStore.fingerprint(spark, tbl, 1)
     val root = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index"
-    assert(new java.io.File(s"$root/neardup_pairs/fp=$fp/_PARENT").exists(),
+    assert(new java.io.File(s"$root/neardup_pairs/fp=${fpOf(Llm.neardupPairsSpec, dir)}/_PARENT").exists(),
       "append must extend the snapshot chain, not rebuild")
-    assert(new java.io.File(s"$root/minhash_bands/fp=$fp/_PARENT").exists())
+    assert(new java.io.File(s"$root/minhash_bands/fp=${fpOf(Llm.minhashBandsSpec, dir)}/_PARENT").exists())
     // correctness: incremental result == full rebuild from scratch
     graft.observe.IndexStore.invalidate(spark, "neardup_pairs")
     graft.observe.IndexStore.invalidate(spark, "minhash_bands")
@@ -111,7 +115,7 @@ class LlmSpec extends SparkSuite {
     assert(new java.io.File(s"$root/ivf_centroids/fp=$fp/_PARENT").exists(),
       "quantizer must freeze via the delta chain")
     val clusAfter = clus()
-    assert(new java.io.File(s"$root/ivf_clusters/fp=$fp/_PARENT").exists(),
+    assert(new java.io.File(s"$root/ivf_clusters/fp=${fpOf(Llm.ivfClustersSpec, dir)}/_PARENT").exists(),
       "assignment must route only the appended vectors into a delta")
     // old assignments are untouched by the append...
     clusBase.foreach { case (id, cid) => assert(clusAfter(id) === cid) }
@@ -131,7 +135,7 @@ class LlmSpec extends SparkSuite {
     val fp2 = graft.observe.IndexStore.fingerprint(spark, tbl, 2)
     assert(!new java.io.File(s"$root/ivf_centroids/fp=$fp2/_PARENT").exists(),
       "a drift-sized append must retrain the quantizer")
-    assert(!new java.io.File(s"$root/ivf_clusters/fp=$fp2/_PARENT").exists(),
+    assert(!new java.io.File(s"$root/ivf_clusters/fp=${fpOf(Llm.ivfClustersSpec, dir)}/_PARENT").exists(),
       "a drift-sized append must reassign from scratch")
     assert(clusRetrained.size === clusAfter.size * 2)
   }
@@ -385,7 +389,7 @@ class LlmSpec extends SparkSuite {
       "a small append must freeze the residual codebooks")
     val root = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index"
     val fp = graft.observe.IndexStore.fingerprint(spark, tbl, 1)
-    assert(new java.io.File(s"$root/rpq_codes/fp=$fp/_PARENT").exists(),
+    assert(new java.io.File(s"$root/rpq_codes/fp=${fpOf(Llm.rpqCodesSpec, dir)}/_PARENT").exists(),
       "append must extend the code chain, not re-encode the corpus")
     codesBase.foreach { case (k, v) =>
       assert(codesAfter(k) === v, s"old code $k must not change") }
@@ -401,9 +405,9 @@ class LlmSpec extends SparkSuite {
     val fp2 = graft.observe.IndexStore.fingerprint(spark, tbl, 1)
     codes() // force the rebuild cascade at the new fingerprint
     assert(!new java.io.File(
-      s"$root/rpq_codebooks/fp=$fp2/_PARENT").exists(),
+      s"$root/rpq_codebooks/fp=${fpOf(Llm.rpqCodebooksSpec, dir)}/_PARENT").exists(),
       "a drift-sized append must retrain the residual codebooks")
-    assert(!new java.io.File(s"$root/rpq_codes/fp=$fp2/_PARENT").exists(),
+    assert(!new java.io.File(s"$root/rpq_codes/fp=${fpOf(Llm.rpqCodesSpec, dir)}/_PARENT").exists(),
       "a drift-sized append must re-encode from scratch")
   }
 
@@ -949,10 +953,10 @@ class LlmSpec extends SparkSuite {
     assert(got() === brute(),
       "post-append join must be exact over the grown corpus")
     val root = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft-index"
-    assert(new java.io.File(s"$root/prefix_index/fp=$fp").exists(),
+    assert(new java.io.File(s"$root/prefix_index/fp=${fpOf(Llm.prefixIndexSpec, dir)}").exists(),
       "append must have produced a fresh per-state index")
     assert(!new java.io.File(
-      s"$root/prefix_index/fp=$fp/_PARENT").exists(),
+      s"$root/prefix_index/fp=${fpOf(Llm.prefixIndexSpec, dir)}/_PARENT").exists(),
       "the prefix index must never chain (df order is append-unstable)")
   }
 
@@ -983,7 +987,7 @@ class LlmSpec extends SparkSuite {
     assert(new java.io.File(s"$root/pq_codebooks/fp=$fp/_PARENT").exists(),
       "codebooks must freeze via the delta chain")
     val codesAfter = codes()
-    assert(new java.io.File(s"$root/pq_codes/fp=$fp/_PARENT").exists(),
+    assert(new java.io.File(s"$root/pq_codes/fp=${fpOf(Llm.pqCodesSpec, dir)}/_PARENT").exists(),
       "codes must extend the chain, not rebuild")
     codesBase.foreach { case (k, c) => assert(codesAfter(k) === c,
       "old codes are untouched by a small append") }
@@ -998,7 +1002,7 @@ class LlmSpec extends SparkSuite {
     val fp2 = graft.observe.IndexStore.fingerprint(s, tbl, 1)
     assert(!new java.io.File(s"$root/pq_codebooks/fp=$fp2/_PARENT").exists(),
       "a drift-sized append must retrain the codebooks")
-    assert(!new java.io.File(s"$root/pq_codes/fp=$fp2/_PARENT").exists(),
+    assert(!new java.io.File(s"$root/pq_codes/fp=${fpOf(Llm.pqCodesSpec, dir)}/_PARENT").exists(),
       "a drift-sized append must re-encode from scratch")
     assert(codesRetrained.size === codesAfter.size * 2)
   }
@@ -1184,7 +1188,7 @@ class LlmSpec extends SparkSuite {
     val fp = graft.observe.IndexStore.fingerprint(s, tbl, 1)
     assert(new java.io.File(s"$root/sq8_scales/fp=$fp/_PARENT").exists(),
       "in-range append must freeze the scale model via the delta chain")
-    assert(new java.io.File(s"$root/sq8_vectors/fp=$fp/_PARENT").exists(),
+    assert(new java.io.File(s"$root/sq8_vectors/fp=${fpOf(Llm.sq8VectorsSpec, dir)}/_PARENT").exists(),
       "in-range append must quantize only the appended vectors")
     base.foreach { case (id, qv) => assert(incr(id) === qv,
       "existing codes are untouched by an in-range append") }
@@ -1205,7 +1209,7 @@ class LlmSpec extends SparkSuite {
     val fp2 = graft.observe.IndexStore.fingerprint(s, tbl, 1)
     assert(!new java.io.File(s"$root/sq8_scales/fp=$fp2/_PARENT").exists(),
       "a range-breaking append must rebuild the scale model")
-    assert(!new java.io.File(s"$root/sq8_vectors/fp=$fp2/_PARENT").exists(),
+    assert(!new java.io.File(s"$root/sq8_vectors/fp=${fpOf(Llm.sq8VectorsSpec, dir)}/_PARENT").exists(),
       "a range-breaking append must requantize every vector")
     assert(rebuilt.size === incr.size + base.size)
     // doubling the scale halves every old code (up to rounding):

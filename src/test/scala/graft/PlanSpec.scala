@@ -632,12 +632,13 @@ class PlanSpec extends SparkSuite {
       .select(col("g"), col("vs").cast("decimal(10,2)").as("v"))
       .write.mode("overwrite").parquet(basePath)
     graft.observe.IndexStore.invalidate(spark, "mv_dec_test")
-    graft.observe.IndexStore.readOrBuild(spark, "mv_dec_test", basePath) {
-      spark.read.parquet(basePath).groupBy(col("g"))
-        .agg(sum(col("v")).as("sum_v"), count(lit(1)).as("cnt"))
-    }
+    val mv = graft.observe.ArtifactSpec("mv_dec_test", 1, "dec",
+      graft.observe.Decomp.Full((_, _) =>
+        spark.read.parquet(basePath).groupBy(col("g"))
+          .agg(sum(col("v")).as("sum_v"), count(lit(1)).as("cnt"))))
+    graft.observe.IndexStore.read(spark, mv, dir)
     graft.plans.MvRewrite.register(graft.plans.MvRewrite.Spec(
-      basePath = basePath, artifact = "mv_dec_test", version = 1,
+      dir = dir, artifact = mv,
       groupCols = Set("g"), cntCol = "cnt",
       sumCols = Map("v" -> "sum_v"), minCols = Map.empty,
       maxCols = Map.empty))
