@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader over a scale-factor directory.
   *
@@ -12,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * 100 TB design note: at scale each logical table would be a partitioned
   * directory (`lineitem/ship_date=YYYY-MM-DD/part-N.parquet`) registered in a real
-  * catalog; the loader API stays identical — `spark.read.parquet(path)` —
-  * and partition pruning replaces file-level pruning automatically.
+  * catalog; the loader API stays identical — one parquet scan per path
+  * ([[scan]]) — and partition pruning replaces file-level pruning
+  * automatically.
   */
 object Tables {
   val tpch: Seq[String] =
@@ -36,11 +40,12 @@ object Tables {
   }
 
   /** The data files of a parquet path, as Spark's file index sees
-    * them: the path itself when it is a file, else its visible
-    * (non-`_`/`.`) files sorted by path; empty when the path is
-    * missing. A table is either form, so every per-file consumer
-    * (footer inventories, schema memo keys, split estimates) lists
-    * through here. */
+    * them: the path itself when it is a file, else every non-empty
+    * file below it — `k=v` partition dirs included — whose name Spark
+    * does not skip (`.`-prefixed, or `_`-prefixed without an `=`),
+    * sorted by path; empty when the path is missing. A table is either
+    * form, so every per-file consumer (footer memo, split estimates,
+    * footer inventories) lists through here. */
   private[graft] def dataFiles(spark: SparkSession, path: String)
       : Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -48,57 +53,102 @@ object Tables {
     val st = try fs.getFileStatus(p) catch {
       case _: java.io.FileNotFoundException => return Nil
     }
+    def skipped(n: String) =
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.filterNot(f => skipped(f.getPath.getName))
+        .flatMap(f => if (f.isDirectory) walk(f.getPath)
+          else if (f.getLen > 0) Seq(f) else Nil)
     if (!st.isDirectory) Seq(st)
-    else fs.listStatus(p)
-      .filter(f => f.isFile && {
-        val n = f.getPath.getName
-        !(n.startsWith("_") || n.startsWith("."))
-      })
-      .sortBy(_.getPath.toString).toSeq
+    else walk(p).sortBy(_.getPath.toString)
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir) else
-      readParquetCachedSchema(spark, Seq(s"$dir/$name.parquet"))
+      scan(spark, Seq(s"$dir/$name.parquet"))
 
-  /** Catalog-style SCHEMA memo (r15, guide §1/§6 — the role a
-    * metastore plays at 100 TB): every bare `spark.read.parquet(path)`
-    * runs a schema-inference pass per CALL (a footer-reading job,
-    * ~25–40 ms of driver/scheduler latency), and a bench invocation
-    * re-pays it for every table of every query run. The memo caches
-    * the inferred StructType — METADATA only, never rows — keyed by
-    * the (path, length, mtime) manifest of every data file under the
-    * paths, so any rewrite, append, or deletion changes the key and
-    * re-infers; this is the same staleness identity Spark's own
-    * file-source caches and the IndexStore fingerprint rely on. A
-    * registered catalog table at production scale IS this cache,
-    * persisted. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  /** Per-file FOOTER memo — the role a metastore's table statistics
+    * play at 100 TB: a bare `spark.read.parquet(paths)` runs a
+    * schema-inference job on every call, and a `count()` over a plain
+    * scan runs a job to sum what the footers already hold. The memo
+    * keeps each data file's Spark schema and row count — metadata
+    * only, never rows — keyed by the file's `path|len|mtime` identity
+    * ([[graft.observe.IndexStore.manifestLine]], the artifact
+    * fingerprint's own preimage line), so a rewritten file gets a new
+    * key and is read again, and an append reads only the new files'
+    * footers. Schemas are converted under the reading session's conf
+    * (the converter flags prefix the key: the legacy nanos flag turns
+    * `events.ts` into a long). */
+  private final case class Footer(schema: StructType, rows: Long)
 
-  private[graft] def readParquetCachedSchema(
-      spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val sb = new StringBuilder
-    paths.foreach { p =>
-      val files = dataFiles(spark, p)
-      if (files.isEmpty) sb.append(s"$p<missing>\n")
-      else files.foreach(f => sb.append(
-        s"${f.getPath}|${f.getLen}|${f.getModificationTime}\n"))
-    }
-    val key = sb.toString()
-    val cached = schemaCache.get(key)
-    if (cached != null)
-      spark.read.schema(cached).parquet(paths: _*)
+  private val footers = new java.util.concurrent.ConcurrentHashMap[String, Footer]()
+
+  /** Files in many artifacts share one schema: one instance each. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[StructType, StructType]()
+
+  /** Leak guard for a long-lived process over many source states. */
+  private val maxFooters = 1 << 16
+
+  /** Footers read from storage since the process started: the memo's
+    * miss traffic. */
+  private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong()
+
+  private def footersOf(spark: SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Footer] = {
+    val conf = spark.sessionState.conf
+    val conv = Seq(conf.isParquetBinaryAsString, conf.isParquetINT96AsTimestamp,
+      conf.caseSensitiveAnalysis, conf.parquetInferTimestampNTZEnabled,
+      conf.legacyParquetNanosAsLong, conf.parquetIgnoreVariantAnnotation)
+      .map(b => if (b) '1' else '0').mkString
+    val keys = files.map(f => s"$conv|${graft.observe.IndexStore.manifestLine(f)}")
+    val hits = keys.map(footers.get)
+    val missing = files.indices.filter(hits(_) == null)
+    if (missing.isEmpty) hits
     else {
-      val df = spark.read.parquet(paths: _*)
-      schemaCache.put(key, df.schema)
-      // bound the memo: keys grow with file counts, and a long-lived
-      // session over many fixtures should not hold every historical
-      // manifest (entries are small; the bound is a leak guard)
-      if (schemaCache.size() > 256) schemaCache.clear()
-      df
+      if (footers.size > maxFooters) { footers.clear(); schemas.clear() }
+      val metas = GraftBridge.readFooters(
+        spark.sessionState.newHadoopConf(), missing.map(files))
+      footerReads.addAndGet(metas.size)
+      val read = missing.zip(metas).map { case (i, meta) =>
+        val schema = GraftBridge.footerSchema(conf, files(i).getPath, meta)
+        val ft = Footer(schemas.computeIfAbsent(schema, identity[StructType]),
+          meta.getBlocks.asScala.map(_.getRowCount).sum)
+        footers.put(keys(i), ft)
+        i -> ft
+      }.toMap
+      hits.indices.map(i => read.getOrElse(i, hits(i)))
     }
   }
+
+  /** The one parquet scan entry for source tables and artifact
+    * segments: `spark.read.parquet(paths)` with the schema inference
+    * answered from the footer memo. Like inference, the schema is the
+    * first data file's (by path; partition columns under `k=v` dirs
+    * are still discovered from the paths). Paths without any data
+    * file read bare, so Spark reports them as it always has. */
+  private[graft] def scan(spark: SparkSession, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    val files = paths.flatMap(dataFiles(spark, _))
+    if (files.isEmpty) reader.parquet(paths: _*)
+    else reader.schema(footersOf(spark, Seq(files.minBy(_.getPath.toString)))
+      .head.schema).parquet(paths: _*)
+  }
+
+  /** `scan(paths).count()` summed from the footers, no job: a
+    * steady-state call reads only the footers of files it has not
+    * seen. Paths without any data file count through the scan, which
+    * fails the way the bare read does. */
+  def rowCount(spark: SparkSession, paths: Seq[String]): Long = {
+    val files = paths.flatMap(dataFiles(spark, _))
+    if (files.isEmpty) scan(spark, paths).count()
+    else footersOf(spark, files).map(_.rows).sum
+  }
+
+  /** [[rowCount]] of warehouse table `name`. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    rowCount(spark, Seq(s"$dir/$name.parquet"))
 
   /** Load + spread: round-robin repartition to the cluster's core count
     * before CPU-heavy per-row transforms (shingling, hashing, JSON
@@ -199,7 +249,7 @@ object Tables {
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTs(
-      readParquetCachedSchema(spark, Seq(s"$dir/events.parquet")))
+      scan(spark, Seq(s"$dir/events.parquet")))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 }

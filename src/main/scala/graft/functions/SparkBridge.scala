@@ -58,4 +58,32 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** The footers of parquet `files` with their row-group metadata (so
+    * a footer yields the file's row count as well as its schema): one
+    * file is read inline, several on the footer-reader pool Spark's own
+    * schema inference uses (`ThreadUtils.parmap`, 8 threads). The pool
+    * is spark-private. */
+  def readFooters(conf: org.apache.hadoop.conf.Configuration,
+      files: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    def one(st: org.apache.hadoop.fs.FileStatus) =
+      execution.datasources.parquet.ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    if (files.size <= 1) files.map(one)
+    else org.apache.spark.util.ThreadUtils.parmap(files, "readingParquetFooters", 8)(one)
+  }
+
+  /** A footer's Spark schema, as schema inference derives it: the
+    * schema Spark wrote into the file's metadata when present, else the
+    * parquet schema converted under the session's conf. */
+  def footerSchema(conf: internal.SQLConf, path: org.apache.hadoop.fs.Path,
+      meta: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : types.StructType = {
+    import execution.datasources.parquet._
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, meta),
+      new ParquetToSparkSchemaConverter(conf))
+  }
 }

@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.Tables
+
 /** Persisted index-artifact lifecycle — build / persist / invalidate,
   * with INCREMENTAL maintenance on corpus append and deletion.
   *
@@ -306,13 +308,11 @@ object IndexStore {
   private def chainIntact(f: FileSystem, base: Path, fp: String): Boolean =
     chainPaths(f, base, fp).forall(p => f.exists(new Path(p, "_SUCCESS")))
 
-  /** One multi-path parquet scan over the chain's segments — through
-    * the schema memo ([[graft.Tables.readParquetCachedSchema]]): the
-    * bare read re-ran footer schema inference on every artifact access
-    * (r15; a serve-path query touches several artifacts per run). */
+  /** One multi-path parquet scan over the chain's segments, through
+    * the footer memo ([[Tables.scan]]): a bare read re-ran
+    * schema inference on every artifact access. */
   private def readChain(s: SparkSession, base: Path, fp: String): DataFrame =
-    graft.Tables.readParquetCachedSchema(
-      s, chainPaths(fs(s, base), base, fp).map(_.toString))
+    Tables.scan(s, chainPaths(fs(s, base), base, fp).map(_.toString))
 
   /** Publish-time segment compaction (guide §6 — small files hurt
     * twice): a staged segment inherits the BUILD plan's partitioning,
@@ -337,7 +337,7 @@ object IndexStore {
       val tmp2 = new Path(tmp.getParent, tmp.getName + "-compact")
       // the listed files, not the dot-prefixed staging root: Spark
       // ignores a hidden root path and warns "All paths were ignored"
-      s.read.parquet(data.map(_.getPath.toString).toSeq: _*).coalesce(want)
+      Tables.scan(s, data.map(_.getPath.toString)).coalesce(want)
         .write.mode("overwrite").parquet(tmp2.toString)
       f.delete(tmp, true)
       if (!f.rename(tmp2, tmp)) f.delete(tmp2, true)
@@ -395,6 +395,16 @@ object IndexStore {
       case p: Decomp.Partitioned => readPartitioned(s, r.base, r.fp, p.partCol)
       case _ => readChain(s, r.base, r.fp)
     }
+  }
+
+  /** [[read]]'s row count, summed from the segments' footers
+    * ([[Tables.rowCount]]) instead of a count job. */
+  def rowCount(s: SparkSession, spec: ArtifactSpec, dir: String): Long = {
+    require(!spec.decomp.isInstanceOf[Decomp.Partitioned],
+      s"${spec.name}: rowCount reads segment chains, not partitioned sinks")
+    val r = resolve(s, spec, dir)
+    lockOf(spec.name).synchronized(maintain(s, r))
+    Tables.rowCount(s, chainPaths(fs(s, r.base), r.base, r.fp).map(_.toString))
   }
 
   /** Run `r`'s lifecycle under its artifact lock: nothing when the
@@ -675,7 +685,7 @@ object IndexStore {
                 // schema as a zero-row file cloned from the donor
                 publish(s, f, r, fpNew, "excise-empty", t0,
                   if (hasDataFiles(f, donorData))
-                    parquetTo(s.read.parquet(donorData.toString).limit(0))
+                    parquetTo(Tables.scan(s, Seq(donorData.toString)).limit(0))
                   else markerDir(f), markers: _*)
               else
                 publish(s, f, r, fpNew, "excise-rebuild", t0,
@@ -848,7 +858,7 @@ object IndexStore {
     val ownHasParts = f.exists(own) && f.listStatus(own)
       .exists(st => st.isDirectory && st.getPath.getName.contains("="))
     val ownDf =
-      if (ownHasParts) Some(s.read.parquet(own.toString)) else None
+      if (ownHasParts) Some(Tables.scan(s, Seq(own.toString))) else None
     val linkDf =
       if (links.isEmpty) None
       else {
@@ -856,8 +866,8 @@ object IndexStore {
         // column that lives in the dir names
         val donorData = new Path(base,
           links.head.split('/').take(2).mkString("/"))
-        Some(s.read.option("basePath", donorData.toString)
-          .parquet(links.map(l => new Path(base, l).toString): _*))
+        Some(Tables.scan(s, links.map(l => new Path(base, l).toString),
+          Some(donorData.toString)))
       }
     (ownDf, linkDf) match {
       case (Some(a), Some(b)) => a.unionByName(b)
@@ -875,7 +885,7 @@ object IndexStore {
   private def partMapOf(s: SparkSession, files: Seq[String],
       partCol: String): Map[String, Set[String]] =
     if (files.isEmpty) Map.empty
-    else s.read.parquet(files: _*)
+    else Tables.scan(s, files)
       .select(org.apache.spark.sql.functions.input_file_name().as("f"),
         col(partCol).cast("string").as("v"))
       .distinct().collect()
@@ -1105,7 +1115,7 @@ object IndexStore {
       val tBuild = System.nanoTime()
       // the committer writes _SUCCESS last, so a half-written segment
       // is never resolvable even if a pointer somehow named it
-      s.read.parquet(chain.map(_.toString): _*)
+      Tables.scan(s, chain.map(_.toString))
         .write.mode("overwrite").parquet(seg.toString)
       compactStaged(s, f, seg)
       writeSmall(f, new Path(seg, "_MANIFEST"), manifest)
@@ -1226,11 +1236,11 @@ object IndexStore {
     val upTo = fold.map(_._1).getOrElse(Long.MinValue)
     val segs = epochSegs(f, base, upTo)
     val foldDf = fold.map { case (_, d) =>
-      s.read.parquet(new Path(base, d).toString) }
+      Tables.scan(s, Seq(new Path(base, d).toString)) }
     val segDf =
       if (segs.isEmpty) None
-      else Some(s.read.option("basePath", base.toString)
-        .parquet(segs.map(_._2.toString): _*)
+      else Some(Tables.scan(s, segs.map(_._2.toString),
+          Some(base.toString))
         .withColumn("epoch", col("epoch").cast("long")))
     (foldDf, segDf) match {
       case (Some(a), Some(b)) => Some(a.unionByName(b))

@@ -162,7 +162,7 @@ object Gates {
   private def ledgerOf(gate: => GateSpec, name: String, version: Int,
       table: String, deps: => Seq[ArtifactSpec]): ArtifactSpec =
     ArtifactSpec(name, version, table, Decomp.Segmented((s, dir) => files =>
-      gate.kernel(s, dir, gate.incomingOf(s.read.parquet(files: _*)), false)),
+      gate.kernel(s, dir, gate.incomingOf(Tables.scan(s, files)), false)),
       deps)
 
   val text: GateSpec = GateSpec("text",

@@ -234,7 +234,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     "greatest(100, (SELECT count(*) // 5 FROM documents))"
 
   private def computeSizedPostings(s: SparkSession, dir: String): DataFrame = {
-    val nDocs = docs(s, dir).count() // parquet-metadata count: index-build stat
+    val nDocs = Tables.rowCount(s, dir, "documents") // index-build stat
     val inv = corpusShinglesIdx(s, dir) // shared artifact, not a re-tokenize
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
     val stops =
@@ -336,7 +336,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
   // corpus (the near-dup family's takedown path)
   private[graft] val shingleSetsSpec: ArtifactSpec = ArtifactSpec(
     "shingle_sets", 1, "documents", Decomp.Segmented((s, _) =>
-      files => shingledOf(s.read.parquet(files: _*)
+      files => shingledOf(Tables.scan(s, files)
         .repartition(s.sparkContext.defaultParallelism))))
 
   private[graft] def corpusShinglesIdx(s: SparkSession, dir: String): DataFrame =
@@ -355,7 +355,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
   private[graft] val minhashBandsSpec: ArtifactSpec = ArtifactSpec(
     "minhash_bands", 1, "documents", Decomp.Segmented((s, dir) =>
       files => bandsOf(corpusShinglesIdx(s, dir).join(
-        s.read.parquet(files: _*).select(col("doc_id")),
+        Tables.scan(s, files).select(col("doc_id")),
         Seq("doc_id"), "left_semi"))), Seq(shingleSetsSpec))
 
   private[graft] def minhashBandsIdx(s: SparkSession, dir: String): DataFrame =
@@ -386,7 +386,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
         val bands = minhashBandsIdx(s, dir) // chain incl. the new segment
         // no broadcast hint: an appended batch can itself be huge; let
         // AQE pick the strategy from the delta's actual size
-        val newIds = s.read.parquet(added: _*).select(col("doc_id"))
+        val newIds = Tables.scan(s, added).select(col("doc_id"))
         val newBands = bands.join(newIds, Seq("doc_id"), "left_semi")
         // new×all candidates, normalized to d1 < d2 (covers new×new once)
         val cand = newBands.as("a")
@@ -730,7 +730,7 @@ object Llm extends LlmCurationOps with LlmAnnOps {
     * touched segments instead of re-fingerprinting the corpus. */
   private[graft] val winnowFpsSpec: ArtifactSpec = ArtifactSpec(
     "winnow_fps", 1, "documents", Decomp.Segmented((s, _) =>
-      files => winnowFpsOf(s.read.parquet(files: _*)
+      files => winnowFpsOf(Tables.scan(s, files)
         .repartition(s.sparkContext.defaultParallelism))))
 
   private[graft] def winnowFpsIdx(s: SparkSession, dir: String): DataFrame =

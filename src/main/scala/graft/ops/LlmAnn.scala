@@ -106,7 +106,7 @@ trait LlmAnnOps {
   /** Deterministic k-means init: every [[ivfStride]]-th vector. */
   private[graft] def initCentroids(s: SparkSession, dir: String): Seq[(Long, Seq[Double])] = {
     import s.implicits._
-    val stride = ivfStride(Llm.embs(s, dir).count())
+    val stride = ivfStride(Tables.rowCount(s, dir, "embeddings"))
     vectors(s, dir).filter(col("vec_id") % stride === 0)
       .select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
       .collect().sortBy(_._1).toSeq
@@ -208,8 +208,8 @@ trait LlmAnnOps {
         computeIvfCentroids(s, dir).toDF("cid", "cv")
       },
       (s, dir) => (prev, added) => {
-        val nAdded = s.read.parquet(added: _*).count()
-        val nTotal = Llm.embs(s, dir).count() // parquet-metadata count
+        val nAdded = Tables.rowCount(s, added)
+        val nTotal = Tables.rowCount(s, dir, "embeddings")
         if (ivfDriftRetrain(nTotal - nAdded, nAdded)) null // retrain
         else prev.limit(0) // frozen: the chain serves the old model
       },
@@ -289,7 +289,7 @@ trait LlmAnnOps {
       // would produce a one-file artifact (the shuffled window build
       // it replaced left 32)
       files => routeFrozen(s,
-        s.read.parquet(files: _*)
+        Tables.scan(s, files)
           .repartition(s.sparkContext.defaultParallelism)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v"))
@@ -361,16 +361,16 @@ trait LlmAnnOps {
 
   private[graft] val hyperplaneBucketsSpec: ArtifactSpec = ArtifactSpec(
     "hyperplane_buckets", 1, "embeddings", Decomp.Append(
-      // parquet-metadata count — signature-sizing stat, like ivfStride
-      (s, dir) =>
-        signed(vectors(s, dir), hyperplaneCount(Llm.embs(s, dir).count())),
+      // footer count — signature-sizing stat, like ivfStride
+      (s, dir) => signed(vectors(s, dir),
+        hyperplaneCount(Tables.rowCount(s, dir, "embeddings"))),
       (s, dir) => (_, added) => {
-        val nTotal = Llm.embs(s, dir).count()
-        val nAdded = s.read.parquet(added: _*).count()
+        val nTotal = Tables.rowCount(s, dir, "embeddings")
+        val nAdded = Tables.rowCount(s, added)
         if (hyperplaneCount(nTotal) != hyperplaneCount(nTotal - nAdded))
           null // boundary crossed: every signature re-derives
         else signed(
-          s.read.parquet(added: _*)
+          Tables.scan(s, added)
             .select(col("vec_id"),
               col("embedding").cast("array<double>").as("v"))
             .withColumn("nrm", sqrt(dot(col("v"), col("v")))),
@@ -403,7 +403,7 @@ trait LlmAnnOps {
     * state, so the audit face carries zero streaming state at all. */
   def vectorAdmission(s: SparkSession, dir: String, incoming: DataFrame,
       decision: Boolean = false): DataFrame = {
-    val nPlanes = hyperplaneCount(Llm.embs(s, dir).count())
+    val nPlanes = hyperplaneCount(Tables.rowCount(s, dir, "embeddings"))
     val corpus = hyperplaneBucketsIdx(s, dir)
     Gates.vector.admit(incoming, decision)(
       stage = _.select(col("vec_id").as("in_id"),
@@ -448,7 +448,7 @@ trait LlmAnnOps {
   private[graft] def probeTopK(s: SparkSession, dir: String,
       nProbes: Int): DataFrame = {
     val idx = hyperplaneBucketsIdx(s, dir) // (bucket, vec_id, v, nrm)
-    val nPlanes = hyperplaneCount(Llm.embs(s, dir).count())
+    val nPlanes = hyperplaneCount(Tables.rowCount(s, dir, "embeddings"))
     val planes = hyperplanes(nPlanes)
     val margins = array(planes.zipWithIndex.map { case (p, j) =>
       struct(abs(dot(typedlit(p), col("qv"))).as("a"),
@@ -597,7 +597,7 @@ trait LlmAnnOps {
     * verify — the LlmSpec gate asserts the JL direction (distortion
     * falls as k grows) rather than a data-dependent recall. */
   def randomProjection(s: SparkSession, dir: String): DataFrame =
-    projectionError(s, dir, projDims(Llm.embs(s, dir).count()))
+    projectionError(s, dir, projDims(Tables.rowCount(s, dir, "embeddings")))
 
   // ---- incremental aggregate maintenance (q114) ------------------------
 
@@ -629,7 +629,7 @@ trait LlmAnnOps {
 
   private[graft] val docCountsAggSpec: ArtifactSpec = ArtifactSpec(
     "doc_counts_agg", 1, "documents", Decomp.Segmented((s, _) =>
-      files => docCountsOf(s.read.parquet(files: _*))))
+      files => docCountsOf(Tables.scan(s, files))))
 
   protected def tokenSketchOf(d: DataFrame): DataFrame =
     d.select(col("source"), explode(split(col("text"), " ")).as("token"))
@@ -667,7 +667,7 @@ trait LlmAnnOps {
 
   private[graft] val tokenHllSpec: ArtifactSpec = ArtifactSpec(
     "token_hll", 1, "documents", Decomp.Segmented((s, _) =>
-      files => tokenSketchOf(s.read.parquet(files: _*)
+      files => tokenSketchOf(Tables.scan(s, files)
         .repartition(s.sparkContext.defaultParallelism))))
 
   /** Streaming face of the distinct-token dashboard (E74): the same
@@ -713,7 +713,7 @@ trait LlmAnnOps {
       (s, _) => (prev, added) => {
         val sess = s
         import sess.implicits._
-        val addedMax = s.read.parquet(added: _*)
+        val addedMax = Tables.scan(s, added)
           .select(col("embedding").cast("array<double>").as("v"))
           .agg(vmaxAbs(col("v")).as("m")).as[Seq[Double]].head()
         val prevMax = prev.select(col("m")).as[Seq[Double]].head()
@@ -759,7 +759,7 @@ trait LlmAnnOps {
   private[graft] val sq8VectorsSpec: ArtifactSpec = ArtifactSpec(
     "sq8_vectors", 1, "embeddings", Decomp.Segmented((s, dir) =>
       files => sq8Quantize(
-        s.read.parquet(files: _*)
+        Tables.scan(s, files)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v")),
         sq8Scales(s, dir)), Decomp.Gate.Model),
@@ -875,7 +875,7 @@ trait LlmAnnOps {
     computePqCodebooksOf(s,
       pqSubvectors(vectors(s, dir).select(col("vec_id"), col("v")))
         .localCheckpoint(),
-      Llm.embs(s, dir).count()) // parquet-metadata count
+      Tables.rowCount(s, dir, "embeddings"))
 
   /** The trainer body over an ARBITRARY (vec_id, j, x) subvector frame
     * (already checkpointed) — shared by the raw-vector codebooks
@@ -916,8 +916,8 @@ trait LlmAnnOps {
     "pq_codebooks", 1, "embeddings", Decomp.Model(
       (s, dir) => pqCbFrame(s, computePqCodebooks(s, dir)),
       (s, dir) => (prev, added) => {
-        val nAdded = s.read.parquet(added: _*).count()
-        val nTotal = Llm.embs(s, dir).count()
+        val nAdded = Tables.rowCount(s, added)
+        val nTotal = Tables.rowCount(s, dir, "embeddings")
         if (ivfDriftRetrain(nTotal - nAdded, nAdded)) null // retrain
         else prev.limit(0) // frozen: the chain serves the old model
       },
@@ -980,7 +980,7 @@ trait LlmAnnOps {
   private[graft] val pqCodesSpec: ArtifactSpec = ArtifactSpec(
     "pq_codes", 1, "embeddings", Decomp.Segmented((s, dir) =>
       files => pqEncodeWith(s,
-        s.read.parquet(files: _*)
+        Tables.scan(s, files)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v")),
         collectPqModel(s, pqCodebooks(s, dir))), Decomp.Gate.Model),
@@ -1397,10 +1397,10 @@ trait LlmAnnOps {
     "rpq_codebooks", 1, "embeddings", Decomp.Model(
       (s, dir) => pqCbFrame(s, computePqCodebooksOf(s,
         pqSubvectors(residualVectors(s, dir)).localCheckpoint(),
-        Llm.embs(s, dir).count())),
+        Tables.rowCount(s, dir, "embeddings"))),
       (s, dir) => (prev, added) => {
-        val nAdded = s.read.parquet(added: _*).count()
-        val nTotal = Llm.embs(s, dir).count()
+        val nAdded = Tables.rowCount(s, added)
+        val nTotal = Tables.rowCount(s, dir, "embeddings")
         ivfCentroids(s, dir) // resolve/freeze the quantizer at this fp
         if (ivfDriftRetrain(nTotal - nAdded, nAdded)) null // retrain
         else if (!IndexStore.isChained(s, ivfCentroidsSpec, dir))
@@ -1436,7 +1436,7 @@ trait LlmAnnOps {
   private[graft] val rpqCodesSpec: ArtifactSpec = ArtifactSpec(
     "rpq_codes", 1, "embeddings", Decomp.Segmented((s, dir) =>
       files => pqEncodeWith(s,
-        s.read.parquet(files: _*)
+        Tables.scan(s, files)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("va"))
           .join(ivfClusters(s, dir).select(col("vec_id"), col("cid")),

@@ -198,7 +198,7 @@ trait LlmCurationOps extends LlmAnnOps {
     * re-chunking the corpus. */
   private[graft] val docChunksSpec: ArtifactSpec = ArtifactSpec(
     "doc_chunks", 1, "documents", Decomp.Segmented((s, _) =>
-      files => chunksOf(s.read.parquet(files: _*)
+      files => chunksOf(Tables.scan(s, files)
         .repartition(s.sparkContext.defaultParallelism))))
 
   protected def docChunksIdx(s: SparkSession, dir: String): DataFrame =
@@ -340,7 +340,7 @@ trait LlmCurationOps extends LlmAnnOps {
   // re-tokenizes only the deleted files' segments, never the corpus
   private[graft] val sourceTokenCountsSpec: ArtifactSpec = ArtifactSpec(
     "source_token_counts", 1, "documents", Decomp.Segmented((s, _) =>
-      files => sourceTokenCountsOf(s.read.parquet(files: _*)
+      files => sourceTokenCountsOf(Tables.scan(s, files)
         .repartition(s.sparkContext.defaultParallelism))))
 
   /** Chain-merged read face of the persisted mix-count artifact: one
@@ -840,7 +840,7 @@ trait LlmCurationOps extends LlmAnnOps {
     * and a takedown excises only the touched segments (E157). */
   private[graft] val textHashesSpec: ArtifactSpec = ArtifactSpec(
     "text_hashes", 1, "documents", Decomp.Segmented((s, _) =>
-      files => s.read.parquet(files: _*)
+      files => Tables.scan(s, files)
         .select(md5(col("text")).as("h")).distinct()))
 
   private[graft] def corpusTextHashesIdx(

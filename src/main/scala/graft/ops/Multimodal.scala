@@ -410,7 +410,7 @@ object Multimodal {
     * mix-count/shingle discipline (E157). */
   private[graft] val mediaBlockPostingsSpec: ArtifactSpec = ArtifactSpec(
     "media_block_postings", 1, "documents", Decomp.Segmented((s, _) =>
-      files => decodedCorpusOf(s, s.read.parquet(files: _*)
+      files => decodedCorpusOf(s, Tables.scan(s, files)
           .repartition(s.sparkContext.defaultParallelism))
         .select(col("media_id"),
           explode(col("block_hashes")).as("block_hash"))
@@ -810,7 +810,7 @@ object Multimodal {
         // the corpus artifacts bumps the artifact version with the
         // codec registration
         val codecs = AudioCodecs.registered
-        audioVariantCorpusOf(s.read.parquet(files: _*)
+        audioVariantCorpusOf(Tables.scan(s, files)
             .repartition(s.sparkContext.defaultParallelism))
           .withColumnRenamed("media_id", "doc_id")
           .withColumn("modality", lit("audio"))
@@ -846,10 +846,8 @@ object Multimodal {
     val cnt = Tables.load(s, dir, "documents")
       .filter(pmod(col("doc_id"), lit(3)) === 1)
       .agg(count(lit(1)).as("n"),
-        sum(when(pmod(col("doc_id"), lit(5)) === 0, 1L)
-          .otherwise(0L)).as("n5"),
-        sum(when(pmod(col("doc_id"), lit(7)) === 0, 1L)
-          .otherwise(0L)).as("n7"))
+        count(when(pmod(col("doc_id"), lit(5)) === 0, lit(1))).as("n5"),
+        count(when(pmod(col("doc_id"), lit(7)) === 0, lit(1))).as("n7"))
       .head()
     cnt.getLong(0) + cnt.getLong(1) + cnt.getLong(2)
   }
@@ -1728,7 +1726,7 @@ object Multimodal {
       files => {
         val sess = s
         import sess.implicits._
-        rasterVariantTableOf(s.read.parquet(files: _*)
+        rasterVariantTableOf(Tables.scan(s, files)
             .repartition(s.sparkContext.defaultParallelism))
           .withColumnRenamed("raster_id", "doc_id")
           .as[RasterRow]
@@ -1743,7 +1741,7 @@ object Multimodal {
     IndexStore.read(s, rasterAHashSpec, dir)
 
   /** Raster corpus size for the relative band-stop threshold — ONE
-    * metadata-cheap count over the persisted signature artifact
+    * footer count over the persisted signature artifact
     * (shared by q164, the q165 gate, and the df probe). The threshold
     * is SIGNATURE-relative by definition (band df is a property of
     * the signature relation), so counting the artifact tracks
@@ -1752,7 +1750,7 @@ object Multimodal {
     * is popcount-restricted, which arithmetic over `documents` alone
     * cannot see without re-deriving the word). */
   private[graft] def nRasterCorpus(s: SparkSession, dir: String): Long =
-    rasterAHashIdx(s, dir).count()
+    IndexStore.rowCount(s, rasterAHashSpec, dir)
 
   /** q164: perceptual near-dup over the REAL raster pixels — pairs
     * whose 8×8 average-hash signatures sit within Hamming distance 1

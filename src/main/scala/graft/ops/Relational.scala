@@ -1372,7 +1372,7 @@ object Relational {
     val fp = graft.observe.IndexStore
       .fingerprint(s, s"$dir/events.parquet", 1)
     val nEv = funnelCapBasis.getOrElseUpdate(fp,
-      math.max(1L, t(s, dir, "events").count())) // footer-count job
+      math.max(1L, Tables.rowCount(s, dir, "events"))) // footer count
     val cap = math.max(1024L,
       32L * (63 - java.lang.Long.numberOfLeadingZeros(nEv)))
     val firstK = udaf(graft.functions.TopK.earliestKAggOf(cap.toInt),

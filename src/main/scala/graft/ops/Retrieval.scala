@@ -98,7 +98,7 @@ object Retrieval {
     * so neither an append nor an excision can stale them. */
   private[graft] val bm25PostingsSpec: ArtifactSpec = ArtifactSpec(
     "bm25_postings", 1, "documents", Decomp.Segmented((s, _) =>
-      files => postingsOf(s.read.parquet(files: _*)
+      files => postingsOf(Tables.scan(s, files)
         .repartition(s.sparkContext.defaultParallelism))))
 
   private[graft] def bm25Postings(s: SparkSession, dir: String): DataFrame =

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.observe.{ArtifactSpec, Decomp, IndexStore}
 
 /** A family's corpus-relative stop list: the signatures whose document
@@ -141,7 +142,7 @@ object SigFamilies {
   val winnowFps: SigFamily = SigFamily("winnow_fps",
     (s, d) => Llm.winnowFpsIdx(s, d), Seq("fp"),
     Some(StopList(SigFamily.stopSpec(winnowFps, "winnow_stop_fps", 1,
-      Llm.winnowFpsSpec), (s, d) => Llm.docs(s, d).count(),
+      Llm.winnowFpsSpec), (s, d) => Tables.rowCount(s, d, "documents"),
       n => math.min(SigFamily.relative(100L)(n), Llm.winnowDfCap))))
 
   /** MinHash LSH bands (q30): no stop list — LSH candidates ride band
@@ -281,7 +282,7 @@ object SetContainment {
       over: => ArtifactSpec): ArtifactSpec =
     ArtifactSpec(name, version, "documents", Decomp.Segmented((s, dir) =>
       files => m.family.postings(s, dir)
-        .join(m.idsOf(s.read.parquet(files: _*)), Seq("media_id"), "left_semi")
+        .join(m.idsOf(Tables.scan(s, files)), Seq("media_id"), "left_semi")
         .groupBy(col("media_id"))
         .agg(sort_array(collect_set(col(m.family.keys.head))).as(m.setCol))),
       Seq(over))

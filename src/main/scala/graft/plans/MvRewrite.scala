@@ -263,7 +263,7 @@ object MvCatalog {
     * files; a base-table DELETE excises only the touched segments. */
   private[graft] val lineitemDailySpec: graft.observe.ArtifactSpec =
     graft.observe.ArtifactSpec("mv_lineitem_daily", 2, "lineitem",
-      graft.observe.Decomp.Segmented((s, _) => files => s.read.parquet(files: _*)
+      graft.observe.Decomp.Segmented((s, _) => files => graft.Tables.scan(s, files)
         .groupBy(col("l_returnflag"), col("l_linestatus"),
           to_date(col("l_shipdate")).as("ship_day"))
         .agg(

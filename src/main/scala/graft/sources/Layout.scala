@@ -246,8 +246,8 @@ object Layout {
     if (!f.exists(new Path(loc, "_SUCCESS"))) {
       if (f.exists(loc)) f.delete(loc, true) // torn earlier build
       val tmp = new Path(base, s".build-$fp-${System.nanoTime()}")
-      val rows = s.read.parquet(src).count() // parquet-metadata count
-      s.read.parquet(src)
+      val rows = graft.Tables.rowCount(s, Seq(src)) // footer count
+      graft.Tables.scan(s, Seq(src))
         .repartition(nFiles, col("l_orderkey"))
         .write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#l_orderkey", "true")

@@ -303,4 +303,22 @@ class BenchSpec extends AnyFunSuite {
         s"$what may appear only in IndexStore.scala and Artifacts.scala")
     }
   }
+
+  test("only graft.Tables reads parquet in ops, IndexStore and MvRewrite") {
+    val bare = """\bread(\s*\.\w+\([^)]*\))*\s*\.parquet\(""".r
+    val roots = Seq("src/main/scala/graft/ops",
+      "src/main/scala/graft/observe/IndexStore.scala",
+      "src/main/scala/graft/plans/MvRewrite.scala").map(Paths.get(_))
+    assert(roots.forall(Files.exists(_)))
+    val hits = roots.flatMap { root =>
+      val files = Files.walk(root)
+      try files.iterator.asScala.toList
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => bare.findFirstIn(Files.readString(p)).nonEmpty)
+      finally files.close()
+    }
+    assert(hits.map(_.toString) === Nil,
+      "read parquet through Tables.scan, which answers schema inference " +
+        "from the footer memo")
+  }
 }
